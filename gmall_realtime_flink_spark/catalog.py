@@ -58,21 +58,67 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
+
+
+def ensure_nanos_as_long(spark: SparkSession) -> None:
+    """Read parquet TIMESTAMP(NANOS) as a nanosecond long, which Spark 4
+    otherwise rejects. ``get_spark`` sets this once; a session built
+    elsewhere (one handed to ``__spark_entry__.entry``) gets it on first
+    use. Only a session that lacks it is mutated, so concurrent
+    readers of a configured session never write its conf."""
+    if spark.conf.get(NANOS_AS_LONG, "false") != "true":
+        spark.conf.set(NANOS_AS_LONG, "true")
+
+
+# abs path -> ((size, mtime_ns, nanosAsLong, inferTimestampNTZ), footer
+# schema): a rewritten file or a session that maps timestamps
+# differently gets a fresh probe, which replaces the path's entry
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, probed once per
+    file version. A probe is a Spark job that lists the path and reads
+    a footer (~100 ms); publisher reads load the same files over and
+    over. Directories are probed every time: their file set changes
+    without their own stat changing."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path).schema
+    st = os.stat(path)
+    key = os.path.abspath(path)
+    stamp = (
+        st.st_size,
+        st.st_mtime_ns,
+        spark.conf.get(NANOS_AS_LONG, "false"),
+        spark.conf.get(INFER_NTZ, "true"),
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[key] = (stamp, schema)
+    return schema
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table as a DataFrame (lazy scan, schema from footer).
+    """Load one table as a DataFrame (lazy scan, cached footer schema).
 
     `events.ts` has been observed in two physical layouts across driver
     testdata generations: parquet TIMESTAMP(NANOS) (which Spark 4
-    rejects unless read as a nanosecond long — `get_spark` sets the
-    legacy nanos-as-long conf; we truncate ns → µs to match DuckDB's
+    rejects unless read as a nanosecond long — see
+    ensure_nanos_as_long; we truncate ns → µs to match DuckDB's
     TIMESTAMP_NS → TIMESTAMP semantics) and plain TIMESTAMP(MICROS)
     with isAdjustedToUTC=false (TIMESTAMP_NTZ under Spark 4 inference —
     normalized below). Both normalize to the same UTC microsecond
     instants either way.
     """
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        ensure_nanos_as_long(spark)
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    if name == "events":
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         # Measure quarantine: a non-finite `value` becomes NULL at the
@@ -94,13 +140,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ).otherwise(F.col("value")),
             )
         )
-    return normalize_timestamps(spark.read.parquet(table_path(sf_dir, name)))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for `spark.sql` queries."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    return normalize_timestamps(df)
 
 
 def bucketed_table(

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gmall_realtime_flink_spark.catalog import load, register_views
+from gmall_realtime_flink_spark.catalog import load
 from gmall_realtime_flink_spark.functions.compat import (
     cents_sum,
     dec_round,
@@ -702,7 +702,6 @@ def visitor_stats_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "window", "agg", "distinct"),
 )
 def province_stats_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT date_format(window.start, 'yyyy-MM-dd HH:mm:ss') AS stt,
@@ -711,12 +710,28 @@ def province_stats_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
                count(DISTINCT o.o_orderkey) AS order_count,
                CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(28,4))), 2)
                     AS DOUBLE) AS order_amount
-        FROM orders o
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
+        FROM {orders} o
+        JOIN {customer} c ON o.o_custkey = c.c_custkey
+        JOIN {nation} n ON c.c_nationkey = n.n_nationkey
         GROUP BY window(CAST(o.o_orderdate AS TIMESTAMP), '1 day'), n.n_name
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
+        customer=load(spark, sf_dir, "customer"),
+        nation=load(spark, sf_dir, "nation"),
     )
+
+
+def doc_keywords(docs: DataFrame) -> DataFrame:
+    """(doc_id, keyword) per token of length >= 2 in each document's
+    lower-cased text, split on non-letters: the F2 tokenizer
+    (RT/app/func/KeywordUDTF.java:16-26). Tokenizing the documents
+    before a join to the view events runs the explode once per
+    document, not once per joined event; the (event, keyword) multiset
+    is the same."""
+    return docs.select(
+        "doc_id",
+        F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("keyword"),
+    ).filter(F.length("keyword") >= 2)
 
 
 @register(
@@ -742,30 +757,31 @@ def province_stats_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="A5+P11+X10+F2/F4 full form: KeywordStatsApp re-expressed through "
     "spark.sql — MAP<STRING,STRING> access on the parsed props "
-    "(page['item'] analogue), LATERAL VIEW explode tokenizer UDTF "
-    "surface, and a real 10 s TUMBLE window "
-    "(RT/app/dws/KeywordStatsApp.java:56-88). The search text comes "
-    "from the documents table keyed by the event's item reference — "
-    "the same search-log⋈query-text shape as the reference.",
+    "(page['item'] analogue), the explode tokenizer (doc_keywords, "
+    "run once per document before the join) and a real 10 s TUMBLE "
+    "window (RT/app/dws/KeywordStatsApp.java:56-88). The search text "
+    "comes from the documents table keyed by the event's item "
+    "reference — the same search-log⋈query-text shape as the "
+    "reference.",
     tags=("sql", "window", "udtf", "explode"),
 )
 def keyword_stats_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT date_format(window.start, 'yyyy-MM-dd HH:mm:ss') AS stt,
                date_format(window.end, 'yyyy-MM-dd HH:mm:ss') AS edt,
-               word AS keyword,
+               d.keyword,
                count(*) AS ct,
                'SEARCH' AS source
-        FROM events e
-        JOIN documents d
+        FROM {events} e
+        JOIN {doc_keywords} d
           ON CAST(from_json(e.props, 'map<string,string>')['k'] AS BIGINT)
              = d.doc_id
-        LATERAL VIEW explode(split(lower(d.text), '[^a-z]+')) t AS word
-        WHERE e.event_type = 'view' AND length(word) >= 2
-        GROUP BY window(e.ts, '10 seconds'), word
-        """
+        WHERE e.event_type = 'view'
+        GROUP BY window(e.ts, '10 seconds'), d.keyword
+        """,
+        events=load(spark, sf_dir, "events"),
+        doc_keywords=doc_keywords(load(spark, sf_dir, "documents")),
     )
 
 
@@ -797,7 +813,6 @@ def keyword_stats_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "udtf", "explode", "unpivot"),
 )
 def keyword_product_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT word AS keyword, m.ct AS ct, m.source AS source
@@ -806,7 +821,7 @@ def keyword_product_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
                  sum(CASE WHEN l.l_returnflag = 'N' THEN 1 ELSE 0 END) AS click_ct,
                  sum(CASE WHEN l.l_returnflag = 'A' THEN 1 ELSE 0 END) AS cart_ct,
                  sum(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END) AS order_ct
-          FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+          FROM {lineitem} l JOIN {part} p ON l.l_partkey = p.p_partkey
           GROUP BY p.p_brand
         ) agg
         LATERAL VIEW explode(split(lower(p_brand), '[^a-z0-9]+')) t1 AS word
@@ -816,7 +831,9 @@ def keyword_product_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
             named_struct('ct', order_ct, 'source', 'ORDER')
           ), x -> x.ct > 0)) t2 AS m
         WHERE length(word) >= 2
-        """
+        """,
+        lineitem=load(spark, sf_dir, "lineitem"),
+        part=load(spark, sf_dir, "part"),
     )
 
 
@@ -843,10 +860,7 @@ def keyword_product_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("udtf", "explode", "agg"),
 )
 def keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    tokens = d.select(
-        F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("keyword")
-    ).filter(F.length("keyword") >= 2)
+    tokens = doc_keywords(load(spark, sf_dir, "documents"))
     return tokens.groupBy("keyword").agg(
         F.count(F.lit(1)).alias("ct"), F.lit("SEARCH").alias("source")
     )
@@ -2231,8 +2245,7 @@ def revenue_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"]).join(
         F.broadcast(n), c["c_nationkey"] == n["n_nationkey"]
     )
-    j.createOrReplaceTempView("rev_src")
-    return j.sparkSession.sql(
+    return spark.sql(
         """
         SELECT date_format(o_orderdate, 'yyyy') AS yr,
                n_name AS nation,
@@ -2240,11 +2253,12 @@ def revenue_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                  + CAST(grouping(n_name) AS INT) AS gid,
                CAST(round(sum(CAST(o_totalprice AS DECIMAL(28,4))), 2)
                     AS DOUBLE) AS revenue
-        FROM rev_src
+        FROM {rev_src}
         GROUP BY GROUPING SETS ((date_format(o_orderdate, 'yyyy'), n_name),
                                 (date_format(o_orderdate, 'yyyy')),
                                 (n_name), ())
-        """
+        """,
+        rev_src=j,
     )
 
 
@@ -2545,7 +2559,6 @@ def dirty_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def keyword_stats_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_realtime_flink_spark.functions.udtf import register_keyword_udtf
 
-    register_views(spark, sf_dir)
     register_keyword_udtf(spark)
     # REPARTITION hint inside the subquery block (guide §2.5): the
     # docs table is one unsplittable split at bench SFs, so the
@@ -2556,10 +2569,11 @@ def keyword_stats_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         SELECT t.keyword, count(*) AS ct, 'SEARCH' AS source
-        FROM (SELECT /*+ REPARTITION({par}) */ text FROM documents) d,
+        FROM (SELECT /*+ REPARTITION({par}) */ text FROM {{documents}}) d,
              LATERAL ik_analyze(d.text) AS t
         GROUP BY t.keyword
-        """
+        """,
+        documents=load(spark, sf_dir, "documents"),
     )
 
 

@@ -18,6 +18,7 @@ Scale notes (100 TB / 1000-executor design):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -35,6 +36,43 @@ STATE_STORE_PROVIDERS = {
 }
 
 
+_MB_PER_UNIT = {"": 1, "k": 2**-10, "m": 1, "g": 2**10, "t": 2**20, "p": 2**30}
+
+
+def heap_mb(memory: str) -> float | None:
+    """A ``spark.driver.memory`` value in MB ("16g", "1024m", "2gb"; a
+    bare number is MB, as Spark reads it), or None if unparseable."""
+    m = re.fullmatch(r"(\d+)\s*([kmgtp]?)(b?)", memory.strip().lower())
+    if not m:
+        return None
+    n, unit, b = m.groups()
+    if not unit and b:
+        return int(n) / 2**20
+    return int(n) * _MB_PER_UNIT[unit]
+
+
+def g1_region_option(memory: str) -> str | None:
+    """The driver JVM flag that sets 4 MB G1 regions, for a heap under
+    8 GB only; None otherwise.
+
+    G1 allocates an object of half a region or more as humongous, in
+    regions of its own outside the young generation, and sizes regions
+    from the heap (JDK 17: 1 MB at a 1 GB heap, 2 MB at 3-4 GB, 4 MB at
+    8 GB, 8 MB at 16 GB). Every task result is serialized into a fresh
+    1 MB chunk, and in local[*] tasks run in this JVM, so on a small
+    heap a stream of short reads was a stream of humongous allocations
+    that grew the committed heap (measured at a 1 GB heap). From 8 GB
+    on, G1's own regions are 4 MB or larger; forcing 4 MB there would
+    make more objects humongous, not fewer, so the default is left
+    alone. ``get_spark`` adds the flag only when no override sets
+    ``spark.driver.extraJavaOptions`` itself.
+    """
+    mb = heap_mb(memory)
+    if mb is None or mb >= 8 * 1024:
+        return None
+    return "-XX:G1HeapRegionSize=4m"
+
+
 def get_spark(
     app_name: str = "gmall_realtime_flink_spark",
     cpus: str | int | None = None,
@@ -47,6 +85,7 @@ def get_spark(
     gmall-realtime BaseLogAPP.java:43-45) as one shared factory.
     """
     cpus = str(cpus or DEFAULT_CPUS)
+    memory = os.environ.get("SPARK_DRIVER_MEM", "16g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -68,8 +107,15 @@ def get_spark(
         # 16g, not larger: an oversized heap in single-JVM local mode
         # produced multi-second G1 pauses that dwarfed sub-second plans
         # (measured: product_stats 2s steady at 16g, 3-17s jitter at 48g)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
+        # Every broadcast (task binaries, each parquet scan's Hadoop
+        # conf, broadcast joins) is chunked into blocks of this size,
+        # and G1 allocates each block of the 4 MB default as a
+        # humongous object; under concurrent dashboard reads those
+        # allocations grew the JVM's committed heap. In local[*]
+        # no block crosses a network, so small blocks cost nothing.
+        .config("spark.broadcast.blockSize", "256k")
         .config("spark.sql.parquet.filterPushdown", "true")
         # InferFiltersFromGenerate synthesizes `size(e)>0 AND
         # isnotnull(e)` for every explode and pushes it below the
@@ -118,6 +164,7 @@ def get_spark(
     # bounds that to one query's working set. Never set by the driver's
     # sf0.1 gate.
     # (values containing ';' cannot be expressed in this format)
+    overrides = {}
     for pair in filter(None, os.environ.get("SPARK_GRAFT_CONF", "").split(";")):
         k, sep, v = pair.partition("=")
         if not sep:
@@ -125,8 +172,12 @@ def get_spark(
                 f"SPARK_GRAFT_CONF pair {pair!r} has no '='; "
                 "expected ';'-separated key=value pairs"
             )
-        builder = builder.config(k.strip(), v.strip())
-    for k, v in (extra_conf or {}).items():
+        overrides[k.strip()] = v.strip()
+    overrides.update(extra_conf or {})
+    region = g1_region_option(overrides.get("spark.driver.memory", memory))
+    if region:
+        overrides.setdefault("spark.driver.extraJavaOptions", region)
+    for k, v in overrides.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

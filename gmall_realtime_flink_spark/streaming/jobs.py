@@ -18,13 +18,16 @@ fires the timers before the query stops.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gmall_realtime_flink_spark.catalog import load, parquet_schema, table_path
 from gmall_realtime_flink_spark.streaming.source import stream_events
 from gmall_realtime_flink_spark.streaming.state import (
     jump_detect_stream,
@@ -34,25 +37,39 @@ from gmall_realtime_flink_spark.streaming.state import (
 
 
 def run_bounded(
-    stream_df: DataFrame, spark: SparkSession, output_mode: str = "append"
+    stream_df: DataFrame,
+    spark: SparkSession,
+    output_mode: str = "append",
+    inputs: Iterable[str] = (),
 ) -> DataFrame:
     """Run a streaming DataFrame to completion into a memory sink.
 
     `output_mode="complete"` is for unwatermarked streaming aggregates
     (e.g. the incremental dedup state), where the final emission IS the
-    full result."""
+    full result.
+
+    Only the returned frame outlives the call: it holds the sink's rows
+    itself, so the sink's session-wide temp view is dropped, and the
+    checkpoint dir and the staged input dirs (`inputs`) are removed
+    once the query has stopped. A repeated read leaves no table, dir or
+    file behind."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    try:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+        for d in (ckpt, *inputs):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def events_path(sf_dir: str) -> str:
@@ -185,14 +202,20 @@ def events_with_sentinel(
 
 def streaming_visitor_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST1 under Structured Streaming (rows-equal to the batch form)."""
-    events = stream_events(spark, events_path(sf_dir))
-    return run_bounded(repair_is_new_stream(events, key="user_id"), spark)
+    path = events_path(sf_dir)
+    events = stream_events(spark, path)
+    return run_bounded(
+        repair_is_new_stream(events, key="user_id"), spark, inputs=[path]
+    )
 
 
 def streaming_unique_visit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST2 under Structured Streaming."""
-    events = stream_events(spark, events_path(sf_dir))
-    return run_bounded(uv_dedup_stream(events, key="user_id"), spark)
+    path = events_path(sf_dir)
+    events = stream_events(spark, path)
+    return run_bounded(
+        uv_dedup_stream(events, key="user_id"), spark, inputs=[path]
+    )
 
 
 def streaming_user_jump(
@@ -202,7 +225,9 @@ def streaming_user_jump(
     path = events_with_sentinel(spark, sf_dir, gap_ms)
     events = stream_events(spark, path)
     out = run_bounded(
-        jump_detect_stream(events, key="user_id", gap_ms=gap_ms), spark
+        jump_detect_stream(events, key="user_id", gap_ms=gap_ms),
+        spark,
+        inputs=[path],
     )
     # drop ONLY the sentinel key (-1). A plain `>= 0` also swallows
     # NULL user_ids (NULL comparison -> NULL -> filtered), silently
@@ -214,13 +239,14 @@ def streaming_user_jump(
 def warehouse_stream_schema(
     spark: SparkSession, sf_dir: str, table: str
 ) -> T.StructType:
-    """readStream needs an explicit schema; probe the real footer
-    (metadata-only batch read) instead of hardcoding one, so whichever
-    physical timestamp layout the testdata generation used is the one
-    declared — a hardcoded TimestampNTZ schema breaks the day the
-    generator flips back to nanos or adjusted-UTC micros (exactly how
-    the events source broke in round 4)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet")).schema
+    """readStream needs an explicit schema; take the real footer's
+    (catalog.parquet_schema: probed once per file version) instead of
+    hardcoding one, so whichever physical timestamp layout the testdata
+    generation used is the one declared — a hardcoded TimestampNTZ
+    schema breaks the day the generator flips back to nanos or
+    adjusted-UTC micros (exactly how the events source broke in
+    round 4)."""
+    return parquet_schema(spark, table_path(sf_dir, table))
 
 
 def ts_as_timestamp(raw_schema: T.StructType, name: str):
@@ -321,16 +347,18 @@ def streaming_order_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     form of the batch `order_wide` query (same oracle)."""
     orders_schema = warehouse_stream_schema(spark, sf_dir, "orders")
     lineitem_schema = warehouse_stream_schema(spark, sf_dir, "lineitem")
+    o_dir = stage_table_dir(sf_dir, "orders")
+    l_dir = stage_table_dir(sf_dir, "lineitem")
     o = (
         spark.readStream.schema(orders_schema)
-        .parquet(stage_table_dir(sf_dir, "orders"))
+        .parquet(o_dir)
         .withColumn("o_ts", ts_as_timestamp(orders_schema, "o_orderdate"))
         .withWatermark("o_ts", "0 seconds")
         .alias("o")
     )
     l = (
         spark.readStream.schema(lineitem_schema)
-        .parquet(stage_table_dir(sf_dir, "lineitem"))
+        .parquet(l_dir)
         .withColumn("l_ts", ts_as_timestamp(lineitem_schema, "l_shipdate"))
         .withWatermark("l_ts", "0 seconds")
         .alias("l")
@@ -355,6 +383,7 @@ def streaming_order_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("l.l_extendedprice", 2).alias("split_amount"),
         ),
         spark,
+        inputs=[o_dir, l_dir],
     )
 
 
@@ -440,16 +469,18 @@ def streaming_payment_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides' join state from the band automatically."""
     orders_schema = warehouse_stream_schema(spark, sf_dir, "orders")
     lineitem_schema = warehouse_stream_schema(spark, sf_dir, "lineitem")
+    o_dir = stage_table_dir(sf_dir, "orders")
+    l_dir = stage_table_dir(sf_dir, "lineitem")
     o = (
         spark.readStream.schema(orders_schema)
-        .parquet(stage_table_dir(sf_dir, "orders"))
+        .parquet(o_dir)
         .withColumn("o_ts", ts_as_timestamp(orders_schema, "o_orderdate"))
         .withWatermark("o_ts", "0 seconds")
         .alias("o")
     )
     l = (
         spark.readStream.schema(lineitem_schema)
-        .parquet(stage_table_dir(sf_dir, "lineitem"))
+        .parquet(l_dir)
         .withColumn("l_ts", ts_as_timestamp(lineitem_schema, "l_shipdate"))
         .withWatermark("l_ts", "0 seconds")
         .alias("l")
@@ -475,6 +506,7 @@ def streaming_payment_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("payment_amount"),
         ),
         spark,
+        inputs=[o_dir, l_dir],
     )
 
 
@@ -486,7 +518,7 @@ def streaming_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = events_with_sentinel(spark, sf_dir, gap_ms=0)
     events = stream_events(spark, path)
-    out = run_bounded(product_stats_union_core(events), spark)
+    out = run_bounded(product_stats_union_core(events), spark, inputs=[path])
     # sentinel rows land only in far-future windows — the stt cutoff
     # alone removes them; real NULL-sku groups (props without '$.k')
     # must survive, matching the oracle's NULL-group semantics
@@ -517,7 +549,7 @@ def streaming_product_stats_enriched(
         F.col("s_name").alias("sku_name"),
         "click_ct", "order_ct", "order_amount",
     )
-    out = run_bounded(enriched, spark)
+    out = run_bounded(enriched, spark, inputs=[path])
     # stt cutoff alone: keeps real NULL-sku groups (oracle keeps them too)
     return out.filter(F.col("stt") < SENTINEL_CUTOFF)
 
@@ -552,7 +584,7 @@ def streaming_visitor_stats(
             ).cast("double").alias("dur_sum"),
         ],
     )
-    out = run_bounded(agg, spark)
+    out = run_bounded(agg, spark, inputs=[path])
     return out.filter(F.col("stt") < SENTINEL_CUTOFF).select(
         "stt", "edt", "event_type", "pv_ct", "uv_ct", "dur_sum"
     )
@@ -592,7 +624,7 @@ def streaming_visitor_stats_sliding(
             "uv_ct",
         )
     )
-    out = run_bounded(agg, spark)
+    out = run_bounded(agg, spark, inputs=[path])
     return out.filter(F.col("stt") < SENTINEL_CUTOFF)
 
 
@@ -668,6 +700,7 @@ def streaming_view_click_join(
             F.date_format("c_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
         ),
         spark,
+        inputs=[path],
     )
     return out
 
@@ -695,7 +728,6 @@ def streaming_stats_sql(
         )
     path = events_with_sentinel(spark, sf_dir, gap_ms=0)
     events = stream_events(spark, path, watermark="2 seconds")
-    events.createOrReplaceTempView("events_stream")
     agg = spark.sql(
         f"""
         SELECT date_format(window.start, 'yyyy-MM-dd HH:mm:ss') AS stt,
@@ -705,36 +737,33 @@ def streaming_stats_sql(
                {uv_expr} AS uv_ct,
                CAST(round(sum(CAST(value AS DECIMAL(28,4))), 2) AS DOUBLE)
                  AS amount
-        FROM events_stream
+        FROM {{events_stream}}
         GROUP BY window(ts, '10 seconds'), event_type
-        """
+        """,
+        events_stream=events,
     )
-    out = run_bounded(agg, spark)
+    out = run_bounded(agg, spark, inputs=[path])
     return out.filter(F.col("stt") < SENTINEL_CUTOFF)
 
 
 def streaming_keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KeywordStatsApp under streaming (A5+F2 with the UDTF in the
-    stream): view events stream-static-broadcast-joined to the
-    documents text, tokenizer explode ON THE STREAM, then a 10 s
-    tumble count per keyword — the full search-keyword DWS path
-    (RT/app/dws/KeywordStatsApp.java:56-88) with the explode running
-    inside the streaming micro-batch plan."""
+    """KeywordStatsApp under streaming (A5+F2): view events
+    stream-static-broadcast-joined to the documents' keywords (the
+    tokenizer explode runs once per document, doc_keywords), then a
+    10 s tumble count per keyword — the full search-keyword DWS path
+    (RT/app/dws/KeywordStatsApp.java:56-88)."""
     from gmall_realtime_flink_spark.operators.windows import tumble_agg
+    from gmall_realtime_flink_spark.plans.gmall import doc_keywords
 
     path = events_with_sentinel(spark, sf_dir, gap_ms=0)
     events = stream_events(spark, path)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
+    kw = doc_keywords(load(spark, sf_dir, "documents"))
     views = events.filter(F.col("event_type") == "view").withColumn(
         "k", F.get_json_object("props", "$.k").cast("bigint")
     )
-    joined = views.join(F.broadcast(docs), views["k"] == docs["doc_id"])
-    words = joined.select(
-        "ts",
-        F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("keyword"),
-    ).filter(F.length("keyword") >= 2)
+    words = views.join(F.broadcast(kw), views["k"] == kw["doc_id"]).select(
+        "ts", "keyword"
+    )
     agg = tumble_agg(
         words,
         ts_col="ts",
@@ -742,7 +771,7 @@ def streaming_keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["keyword"],
         aggs=[F.count(F.lit(1)).alias("ct")],
     )
-    out = run_bounded(agg, spark)
+    out = run_bounded(agg, spark, inputs=[path])
     return out.filter(F.col("stt") < SENTINEL_CUTOFF).select(
         "stt", "edt", "keyword", "ct", F.lit("SEARCH").alias("source")
     )
@@ -769,7 +798,7 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_ct",
         )
     )
-    out = run_bounded(agg, spark)
+    out = run_bounded(agg, spark, inputs=[path])
     # sentinel rows (user_id = -1) all land in one far-future session —
     # the stt cutoff drops exactly that
     return out.filter(F.col("stt") < SENTINEL_CUTOFF)
@@ -791,7 +820,7 @@ def streaming_uv_dropdup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup = pairs.dropDuplicates(["user_id", "visit_date"]).select(
         "user_id", "visit_date"
     )
-    out = run_bounded(dedup, spark)
+    out = run_bounded(dedup, spark, inputs=[path])
     return out.filter(F.col("visit_date") < SENTINEL_CUTOFF)
 
 
@@ -812,7 +841,7 @@ def streaming_uv_dropdup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup = events.dropDuplicatesWithinWatermark(["user_id"]).select(
         "user_id"
     )
-    out = run_bounded(dedup, spark)
+    out = run_bounded(dedup, spark, inputs=[path])
     # null-safe sentinel drop: NULL is a real dedup key (one NULL-user
     # row emits, matching batch DISTINCT); `>= 0` would swallow it
     return out.filter(~F.col("user_id").eqNullSafe(-1))
@@ -848,16 +877,18 @@ def streaming_order_wide_left(spark: SparkSession, sf_dir: str) -> DataFrame:
         row["l_orderkey"] = -2
         row["l_shipdate"] = _far_for(lineitem_schema, "l_shipdate")
 
+    o_dir = stage_table_with_sentinel(sf_dir, "orders", _mut_o)
+    l_dir = stage_table_with_sentinel(sf_dir, "lineitem", _mut_l)
     o = (
         spark.readStream.schema(orders_schema)
-        .parquet(stage_table_with_sentinel(sf_dir, "orders", _mut_o))
+        .parquet(o_dir)
         .withColumn("o_ts", ts_as_timestamp(orders_schema, "o_orderdate"))
         .withWatermark("o_ts", "0 seconds")
         .alias("o")
     )
     l = (
         spark.readStream.schema(lineitem_schema)
-        .parquet(stage_table_with_sentinel(sf_dir, "lineitem", _mut_l))
+        .parquet(l_dir)
         .withColumn("l_ts", ts_as_timestamp(lineitem_schema, "l_shipdate"))
         .withWatermark("l_ts", "0 seconds")
         .alias("l")
@@ -883,6 +914,7 @@ def streaming_order_wide_left(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("l.l_extendedprice", 2).alias("split_amount"),
         ),
         spark,
+        inputs=[o_dir, l_dir],
     )
     return out.filter(F.col("o_orderkey") >= 0)
 
@@ -905,17 +937,20 @@ def streaming_token_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         countmin_probe,
     )
 
-    docs_schema = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).schema
+    docs_dir = stage_table_dir(sf_dir, "documents")
     stream = (
-        spark.readStream.schema(docs_schema)
+        spark.readStream.schema(
+            warehouse_stream_schema(spark, sf_dir, "documents")
+        )
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage_table_dir(sf_dir, "documents"))
+        .parquet(docs_dir)
     )
     toks = stream.select(F.explode(tokenize(F.col("text"))).alias("item"))
     cells = run_bounded(
-        countmin_cells(toks, item_col="item"), spark, output_mode="complete"
+        countmin_cells(toks, item_col="item"),
+        spark,
+        output_mode="complete",
+        inputs=[docs_dir],
     )
     # probe selection + truth: the batch accuracy audit over the same
     # corpus (production drops this — the grid IS the answer); shares
@@ -1264,20 +1299,21 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-hash set — at 100 TB this runs keyed on a uniform
     128-bit hash (skew-free) with RocksDB state off-heap.
     """
+    docs_dir = stage_table_dir(sf_dir, "documents")
     stream = (
         spark.readStream.schema(
-            spark.read.parquet(
-                os.path.join(sf_dir, "documents.parquet")
-            ).schema
+            warehouse_stream_schema(spark, sf_dir, "documents")
         )
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage_table_dir(sf_dir, "documents"))
+        .parquet(docs_dir)
     )
     agg = stream.groupBy(F.md5("text").alias("content_hash")).agg(
         F.min("doc_id").alias("keep_doc_id"),
         F.count(F.lit(1)).alias("dup_ct"),
     )
-    return run_bounded(agg, spark, output_mode="complete")
+    return run_bounded(
+        agg, spark, output_mode="complete", inputs=[docs_dir]
+    )
 
 
 def streaming_route_config_reload(
@@ -1343,16 +1379,17 @@ def streaming_multimodal_features(
         extract_features,
     )
 
+    docs_dir = stage_table_dir(sf_dir, "documents")
     stream = (
         spark.readStream.schema(
-            spark.read.parquet(
-                os.path.join(sf_dir, "documents.parquet")
-            ).schema
+            warehouse_stream_schema(spark, sf_dir, "documents")
         )
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage_table_dir(sf_dir, "documents"))
+        .parquet(docs_dir)
     )
-    return run_bounded(extract_features(attach_payload(stream)), spark)
+    return run_bounded(
+        extract_features(attach_payload(stream)), spark, inputs=[docs_dir]
+    )
 
 
 def streaming_multimodal_decode(
@@ -1370,17 +1407,18 @@ def streaming_multimodal_decode(
         decode_media_stats,
     )
 
+    docs_dir = stage_table_dir(sf_dir, "documents")
     stream = (
         spark.readStream.schema(
-            spark.read.parquet(
-                os.path.join(sf_dir, "documents.parquet")
-            ).schema
+            warehouse_stream_schema(spark, sf_dir, "documents")
         )
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage_table_dir(sf_dir, "documents"))
+        .parquet(docs_dir)
     )
     return run_bounded(
-        decode_media_stats(attach_png_payload(stream)), spark
+        decode_media_stats(attach_png_payload(stream)),
+        spark,
+        inputs=[docs_dir],
     )
 
 
@@ -1396,15 +1434,14 @@ def streaming_purchase_dim_temporal(
     batch purchase_dim_temporal_join SQL."""
     from pyspark.sql import Window
 
-    events = stream_events(spark, events_path(sf_dir))
+    path = events_path(sf_dir)
+    events = stream_events(spark, path)
     # Load the static side through the catalog, which normalizes BOTH
     # observed physical layouts of events.ts (TIMESTAMP(NANOS)-as-long
     # and TIMESTAMP_NTZ micros) to session TIMESTAMP — a raw
     # spark.read.parquet would leave bigint nanos under the legacy
     # layout and the band predicate would fail to resolve.
-    from gmall_realtime_flink_spark import catalog
-
-    batch_events = catalog.load(spark, sf_dir, "events")
+    batch_events = load(spark, sf_dir, "events")
     signup = batch_events.filter(F.col("event_type") == "signup")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     scd = signup.select(
@@ -1427,7 +1464,7 @@ def streaming_purchase_dim_temporal(
             "version_from"
         ),
     )
-    return run_bounded(joined, spark)
+    return run_bounded(joined, spark, inputs=[path])
 
 
 def streaming_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1444,15 +1481,16 @@ def streaming_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_main_text,
     )
 
+    docs_dir = stage_table_dir(sf_dir, "documents")
     stream = (
         spark.readStream.schema(
-            spark.read.parquet(
-                os.path.join(sf_dir, "documents.parquet")
-            ).schema
+            warehouse_stream_schema(spark, sf_dir, "documents")
         )
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage_table_dir(sf_dir, "documents"))
+        .parquet(docs_dir)
     )
     return run_bounded(
-        extract_main_text(attach_html_payload(stream)), spark
+        extract_main_text(attach_html_payload(stream)),
+        spark,
+        inputs=[docs_dir],
     )

@@ -14,9 +14,10 @@ Kafka.
 testdata generations: TIMESTAMP(NANOS) — surfaced as a nanosecond long
 under `spark.sql.legacy.parquet.nanosAsLong` and truncated to µs — and
 TIMESTAMP(MICROS) with isAdjustedToUTC=false (TIMESTAMP_NTZ under
-Spark 4 inference). The file stream needs an explicit schema, so we
-probe the footer with a one-off batch read (metadata only, no data
-scan) and normalize `ts` to a session-UTC TIMESTAMP either way —
+Spark 4 inference). The file stream needs an explicit schema: the
+caller passes the source file's (catalog.parquet_schema, cached), or
+we probe the footer with a one-off batch read (metadata only, no data
+scan). `ts` is normalized to a session-UTC TIMESTAMP either way —
 identical to the batch path in catalog.load.
 """
 
@@ -26,18 +27,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gmall_realtime_flink_spark.catalog import ensure_nanos_as_long
+
 
 def stream_events(
     spark: SparkSession,
     path: str,
     watermark: str = "0 seconds",
     max_files_per_trigger: int | None = None,
+    raw_schema: T.StructType | None = None,
 ) -> DataFrame:
     """S1/S4: event stream from a parquet file/dir with an event-time
     watermark (W1-W5: the reference uses 0-3 s bounded delays).
+    `raw_schema` is the files' physical schema; probed when omitted.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+    ensure_nanos_as_long(spark)
+    if raw_schema is None:
+        raw_schema = spark.read.parquet(path).schema
     reader = spark.readStream.schema(raw_schema).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gmall_realtime_flink_spark.catalog import load, parquet_schema, table_path
 from gmall_realtime_flink_spark.streaming.jobs import (
     SENTINEL_CUTOFF,
     events_with_sentinel,
@@ -468,13 +469,20 @@ def _reader(spark: SparkSession, schema, path: str):
 
 
 def _layer_stream(
-    spark: SparkSession, layer_dir: str, ts_col: str | None = None
+    spark: SparkSession,
+    layer_dir: str,
+    schema: T.StructType,
+    ts_col: str | None = None,
 ) -> DataFrame:
     """readStream over a previously-written layer directory (the
-    'consume the upstream job's topic' step). Schema probed from the
-    written footers, event-time column re-derived where the layer
-    stores it as a formatted string."""
-    schema = spark.read.parquet(layer_dir).schema
+    'consume the upstream job's topic' step). `schema` is the one its
+    producer wrote — known without probing the footers, like a topic's
+    registered schema — plus the batch_id partition column; the
+    event-time column is re-derived where the layer stores it as a
+    formatted string."""
+    schema = T.StructType(
+        [*schema.fields, T.StructField("batch_id", T.LongType())]
+    )
     df = _reader(spark, schema, layer_dir).drop("batch_id")
     if ts_col is not None:
         df = df.withColumn("ts", F.to_timestamp(ts_col)).withWatermark(
@@ -626,7 +634,13 @@ def _build_warehouse_layers_impl(
     # side outputs.
     # ------------------------------------------------------------------
     ods_log = ods["log"]
-    events = stream_events(spark, ods_log, max_files_per_trigger=1)
+    events = stream_events(
+        spark,
+        ods_log,
+        max_files_per_trigger=1,
+        raw_schema=parquet_schema(spark, table_path(sf_dir, "events")),
+    )
+    page_schema = events.schema
 
     def split_log(batch_df: DataFrame, batch_id: int) -> None:
         _write_batch_many(
@@ -724,14 +738,11 @@ def _build_warehouse_layers_impl(
     # The sentinel user's UV row (visit 2030) flows into the layer and
     # becomes the DWS watermark driver.
     # ------------------------------------------------------------------
-    page = _layer_stream(spark, layers["dwd_page_log"]).withWatermark(
-        "ts", "0 seconds"
-    )
-    _run(
-        uv_dedup_stream(page, key="user_id"),
-        layers["dwm_unique_visit"],
-        ckpt("unique_visit_app"),
-    )
+    page = _layer_stream(
+        spark, layers["dwd_page_log"], page_schema
+    ).withWatermark("ts", "0 seconds")
+    uv_stream = uv_dedup_stream(page, key="user_id")
+    _run(uv_stream, layers["dwm_unique_visit"], ckpt("unique_visit_app"))
 
     # ------------------------------------------------------------------
     # DWM job 4 — UserJumpApp: CEP bounce with event-time timeout. The
@@ -740,14 +751,11 @@ def _build_warehouse_layers_impl(
     # row that cannot (nothing follows it), so the layer gets an
     # explicit far-future row appended instead.
     # ------------------------------------------------------------------
-    page = _layer_stream(spark, layers["dwd_page_log"]).withWatermark(
-        "ts", "0 seconds"
-    )
-    _run(
-        jump_detect_stream(page, key="user_id", gap_ms=JUMP_GAP_MS),
-        layers["dwm_user_jump"],
-        ckpt("user_jump_app"),
-    )
+    page = _layer_stream(
+        spark, layers["dwd_page_log"], page_schema
+    ).withWatermark("ts", "0 seconds")
+    jump_stream = jump_detect_stream(page, key="user_id", gap_ms=JUMP_GAP_MS)
+    _run(jump_stream, layers["dwm_user_jump"], ckpt("user_jump_app"))
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -783,10 +791,9 @@ def _build_warehouse_layers_impl(
     # keeps the layer's event-time horizon at 2030.
     # ------------------------------------------------------------------
     def fact_stream(table: str, key_ts: str, alias: str) -> DataFrame:
-        schema = spark.read.parquet(layers[f"dwd_{table}"]).schema
+        schema = table_schemas[table]
         return (
-            _reader(spark, schema, layers[f"dwd_{table}"])
-            .drop("batch_id")
+            _layer_stream(spark, layers[f"dwd_{table}"], schema)
             .withColumn(f"{alias}_ts", ts_as_timestamp(schema, key_ts))
             .withWatermark(f"{alias}_ts", "0 seconds")
             .alias(alias)
@@ -867,9 +874,9 @@ def _build_warehouse_layers_impl(
         }
         return project_to_skeleton(df, skeleton)
 
-    page = _layer_stream(spark, layers["dwd_page_log"]).withWatermark(
-        "ts", "0 seconds"
-    )
+    page = _layer_stream(
+        spark, layers["dwd_page_log"], page_schema
+    ).withWatermark("ts", "0 seconds")
     pv = skel(
         page.filter(F.col("event_type") == "view"),
         pv_ct=F.lit(1),
@@ -879,11 +886,21 @@ def _build_warehouse_layers_impl(
         page.filter(F.col("event_type") == "signup"), sv_ct=F.lit(1)
     )
     uv = skel(
-        _layer_stream(spark, layers["dwm_unique_visit"], ts_col="first_ts"),
+        _layer_stream(
+            spark,
+            layers["dwm_unique_visit"],
+            uv_stream.schema,
+            ts_col="first_ts",
+        ),
         uv_ct=F.lit(1),
     )
     uj = skel(
-        _layer_stream(spark, layers["dwm_user_jump"], ts_col="jump_ts"),
+        _layer_stream(
+            spark,
+            layers["dwm_user_jump"],
+            jump_stream.schema,
+            ts_col="jump_ts",
+        ),
         uj_ct=F.lit(1),
     )
     vs = tumble_agg(
@@ -909,9 +926,9 @@ def _build_warehouse_layers_impl(
         product_stats_union_core,
     )
 
-    page = _layer_stream(spark, layers["dwd_page_log"]).withWatermark(
-        "ts", "0 seconds"
-    )
+    page = _layer_stream(
+        spark, layers["dwd_page_log"], page_schema
+    ).withWatermark("ts", "0 seconds")
     _run(
         product_stats_union_core(page),
         layers["dws_product_stats"],
@@ -924,18 +941,11 @@ def _build_warehouse_layers_impl(
     # watermarked stream registered as a view, day-tumble SQL agg with
     # streaming-safe exact distinct, static dims broadcast-joined.
     # ------------------------------------------------------------------
-    oi_schema = spark.read.parquet(layers["dwd_order_info"]).schema
     oi = (
-        _reader(spark, oi_schema, layers["dwd_order_info"])
-        .drop("batch_id")
-        .withColumn("o_ts", ts_as_timestamp(oi_schema, "o_orderdate"))
+        _layer_stream(spark, layers["dwd_order_info"], orders_schema)
+        .withColumn("o_ts", ts_as_timestamp(orders_schema, "o_orderdate"))
         .withWatermark("o_ts", "0 seconds")
     )
-    oi.createOrReplaceTempView("dwd_order_info_stream")
-    from gmall_realtime_flink_spark.catalog import load
-
-    load(spark, sf_dir, "customer").createOrReplaceTempView("dim_customer")
-    load(spark, sf_dir, "nation").createOrReplaceTempView("dim_nation")
     province = spark.sql(
         """
         SELECT date_format(window.start, 'yyyy-MM-dd HH:mm:ss') AS stt,
@@ -945,36 +955,34 @@ def _build_warehouse_layers_impl(
                  AS order_count,
                CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(28,4))), 2)
                     AS DOUBLE) AS order_amount
-        FROM dwd_order_info_stream o
-        JOIN dim_customer c ON o.o_custkey = c.c_custkey
-        JOIN dim_nation n ON c.c_nationkey = n.n_nationkey
+        FROM {dwd_order_info} o
+        JOIN {dim_customer} c ON o.o_custkey = c.c_custkey
+        JOIN {dim_nation} n ON c.c_nationkey = n.n_nationkey
         GROUP BY window(o_ts, '1 day'), n.n_name
-        """
+        """,
+        dwd_order_info=oi,
+        dim_customer=load(spark, sf_dir, "customer"),
+        dim_nation=load(spark, sf_dir, "nation"),
     )
     _run(province, layers["dws_province_stats"], ckpt("province_stats_app"))
 
     # ------------------------------------------------------------------
     # DWS job 10 — KeywordStatsApp: view events from the page_log layer
-    # joined to the search text, tokenizer explode ON THE STREAM, 10 s
-    # tumble per keyword (KeywordStatsApp.java:56-88).
+    # joined to the search text's keywords (tokenized once per document,
+    # doc_keywords), 10 s tumble per keyword (KeywordStatsApp.java:56-88).
     # ------------------------------------------------------------------
-    page = _layer_stream(spark, layers["dwd_page_log"]).withWatermark(
-        "ts", "0 seconds"
-    )
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).select("doc_id", "text")
+    page = _layer_stream(
+        spark, layers["dwd_page_log"], page_schema
+    ).withWatermark("ts", "0 seconds")
+    from gmall_realtime_flink_spark.plans.gmall import doc_keywords
+
+    doc_kw = doc_keywords(load(spark, sf_dir, "documents"))
     views = page.filter(F.col("event_type") == "view").withColumn(
         "k", F.get_json_object("props", "$.k").cast("bigint")
     )
-    words = (
-        views.join(F.broadcast(docs), views["k"] == docs["doc_id"])
-        .select(
-            "ts",
-            F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("keyword"),
-        )
-        .filter(F.length("keyword") >= 2)
-    )
+    words = views.join(
+        F.broadcast(doc_kw), views["k"] == doc_kw["doc_id"]
+    ).select("ts", "keyword")
     kw = tumble_agg(
         words,
         ts_col="ts",

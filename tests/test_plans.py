@@ -425,10 +425,14 @@ def test_aqe_skew_join_split_engages(spark):
             "spark.sql.autoBroadcastJoinThreshold",
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+            "spark.sql.shuffle.partitions",
         )
     }
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        # the premise below is 8 reduce partitions; pin it, since the
+        # session's default follows SPARK_GRAFT_CPUS
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         spark.conf.set(
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
             "64k",
@@ -439,7 +443,7 @@ def test_aqe_skew_join_split_engages(spark):
         # 50% of 400k fact rows on key 0, rest uniform over 20k keys;
         # multiple range partitions = multiple mapper blocks, which is
         # what AQE splits a skewed reduce partition by. 50% (not 30%):
-        # the test session shuffles into 8 partitions, so the hot
+        # the test shuffles into 8 partitions, so the hot
         # partition must clear 5x the median with only 8 buckets of
         # uniform residue around it
         big = spark.range(0, 400_000, 1, 8).selectExpr(

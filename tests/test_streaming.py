@@ -77,6 +77,11 @@ def split_events_dir(sf_dir):
         max_ns + 2 * 86_400_000_000_000,  # +2 days
         ts_type=ts_type,
     )
+    # the file source takes files oldest-first by mtime; back-to-back
+    # writes can share a millisecond, and then listing order (hash
+    # order here) decides, so stamp the chronological order explicitly
+    for i, f in enumerate(sorted(os.listdir(tmp))):
+        os.utime(os.path.join(tmp, f), (1_700_000_000 + i * 10,) * 2)
     cutoff = pd.Timestamp(max_ns + 3_600_000_000_000, unit="ns").strftime(
         "%Y-%m-%d %H:%M:%S"
     )
