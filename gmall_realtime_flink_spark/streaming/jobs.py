@@ -20,14 +20,21 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import time
 import uuid
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall_realtime_flink_spark.catalog import load, parquet_schema, table_path
+from gmall_realtime_flink_spark.operators.joins import interval_join
+from gmall_realtime_flink_spark.streaming.sinks import idempotent_batch_writer
 from gmall_realtime_flink_spark.streaming.source import stream_events
 from gmall_realtime_flink_spark.streaming.state import (
     jump_detect_stream,
@@ -68,8 +75,12 @@ def run_bounded(
         return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)
-        for d in (ckpt, *inputs):
-            shutil.rmtree(d, ignore_errors=True)
+        _remove(ckpt, *inputs)
+
+
+def _remove(*dirs: str) -> None:
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def events_path(sf_dir: str) -> str:
@@ -116,9 +127,6 @@ def write_sentinel_file(path: str, ts_ns: int, ts_type=None) -> None:
     sentinel must match it exactly (int64 nanos for the legacy
     TIMESTAMP(NANOS) layout, timestamp[us] for the current one) or the
     file stream's single fixed schema rejects one of the two files."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     n = len(SENTINEL_TYPES)
     if ts_type is not None and pa.types.is_timestamp(ts_type):
         unit_div = {"s": 10**9, "ms": 10**6, "us": 10**3, "ns": 1}[ts_type.unit]
@@ -151,9 +159,6 @@ def events_with_sentinel(
     far past the max event time, so every real ST3 timer fires and
     every real window closes.
     """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     ts_col = pq.read_table(src, columns=["ts"])["ts"]
     ts_type = ts_col.type
@@ -167,33 +172,9 @@ def events_with_sentinel(
     else:
         max_ns = raw_max  # legacy layout: already nanos
     tmp = tempfile.mkdtemp(prefix="events_stream_")
-    # Steady-flow replay (topology latency measurement): stage the
-    # table as K TIME-ORDERED slices instead of one file, so a
-    # file-per-trigger consumer sees the arrival pattern a live topic
-    # gives — monotone event time across batches, which is the
-    # contract the 0-second watermarks encode. events.parquet is
-    # ts-sorted by construction, so row-slices are time-slices.
-    # mtimes are spaced so the file source's oldest-first order equals
-    # slice order even on coarse filesystem clocks.
-    slices = int(os.environ.get("SPARK_GRAFT_TOPOLOGY_EVENT_SLICES", "0"))
-    if slices > 1:
-        import time as _time
-
-        tbl = pq.read_table(src)
-        n = tbl.num_rows
-        now = _time.time()
-        for i in range(slices):
-            lo = i * n // slices
-            hi = (i + 1) * n // slices
-            p = os.path.join(tmp, f"part-{i:03d}.parquet")
-            pq.write_table(tbl.slice(lo, hi - lo), p)
-            os.utime(p, (now - 2 * (slices - i) - 2,) * 2)
-        last = slices
-    else:
-        os.symlink(src, os.path.join(tmp, "part-000.parquet"))
-        last = 1
+    os.symlink(src, os.path.join(tmp, "part-000.parquet"))
     write_sentinel_file(
-        os.path.join(tmp, f"part-{last:03d}-sentinel.parquet"),
+        os.path.join(tmp, "part-001-sentinel.parquet"),
         max(max_ns + 2 * gap_ms * 1_000_000, SENTINEL_TS_NS),
         ts_type=ts_type,
     )
@@ -268,59 +249,67 @@ def stage_table_dir(sf_dir: str, table: str) -> str:
     return tmp
 
 
-def stage_table_with_sentinel(sf_dir: str, table: str, mutate) -> str:
-    """stage_table_dir + one far-future sentinel row (schema-identical
-    to the source file) so outer-join / timer state flushes before the
-    bounded stream stops. `mutate(df)` stamps the sentinel's keys/ts on
-    a one-row pandas copy of the first source row."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+# the two columns of an ODS fact table its far-future sentinel row
+# restamps: the order key and the event date
+FACT_SENTINEL_COLS = {
+    "orders": ("o_orderkey", "o_orderdate"),
+    "lineitem": ("l_orderkey", "l_shipdate"),
+}
 
-    tmp = stage_table_dir(sf_dir, table)
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    # read ONE row group, not the table — the sentinel needs a single
-    # schema-true row, and lineitem at real SFs is GBs of Arrow
-    pf = pq.ParquetFile(src)
-    first = pf.read_row_group(0).slice(0, 1)
-    row = first.to_pandas()
-    mutate(row)
+
+def _write_fact_sentinel(sf_dir: str, table: str, key: int, path: str) -> None:
+    """Write one far-future sentinel row of an ODS fact table: a
+    schema-true copy of its first row keyed `key` and dated 2030-01-01
+    (as int64 nanos when the file stores the date as an integer). Key
+    -1 on both sides makes the two sentinels join each other; a
+    different key on one side keeps them apart. Reads ONE row group,
+    not the table — lineitem at real SFs is GBs of Arrow."""
+    pf = pq.ParquetFile(os.path.join(sf_dir, f"{table}.parquet"))
+    row = pf.read_row_group(0).slice(0, 1).to_pandas()
+    key_col, ts_col = FACT_SENTINEL_COLS[table]
+    far = pd.Timestamp("2030-01-01")
+    row[key_col] = key
+    int_ts = pa.types.is_integer(pf.schema_arrow.field(ts_col).type)
+    row[ts_col] = int(far.value) if int_ts else far
     pq.write_table(
         pa.Table.from_pandas(row, schema=pf.schema_arrow, preserve_index=False),
-        os.path.join(tmp, "part-001-sentinel.parquet"),
+        path,
+    )
+
+
+def stage_table_with_sentinel(sf_dir: str, table: str, key: int = -1) -> str:
+    """stage_table_dir + one far-future sentinel row
+    (_write_fact_sentinel) so outer-join / timer state flushes before
+    the bounded stream stops."""
+    tmp = stage_table_dir(sf_dir, table)
+    _write_fact_sentinel(
+        sf_dir, table, key, os.path.join(tmp, "part-001-sentinel.parquet")
     )
     return tmp
 
 
 def stage_table_sorted_split(
-    sf_dir: str, table: str, ts_col: str, n_files: int, mutate
+    sf_dir: str, table: str, n_files: int, key: int = -1
 ) -> str:
     """stage_table_with_sentinel's ORDERED form: the table is written
     as `n_files` event-time-sorted parquet slices (strictly increasing
     mtimes, so the file source consumes them in time order) plus the
     far-future sentinel last. This is the monotone-event-time contract
-    a per-key-ordered Kafka topic provides; JOIN_LATENCY_r09 measured
-    it as the 23x per-batch-p95 lever for the stream-stream join
-    layers (watermark advances every batch -> state evicts
-    continuously instead of ballooning toward the whole corpus).
+    a per-key-ordered Kafka topic provides: a stream-stream join's
+    watermark advances every batch, so its state evicts continuously
+    instead of ballooning toward the whole corpus.
 
     Slice/sentinel ordering is enforced with EXPLICIT os.utime stamps
     (strictly increasing whole seconds, all in the past), not write
     timing: on filesystems with coarse (1 s) mtime granularity,
     back-to-back writes can tie and replay out of order, silently
-    voiding the monotone-event-time contract (ADVICE r9)."""
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
+    voiding the monotone-event-time contract."""
+    ts_col = FACT_SENTINEL_COLS[table][1]
     out = tempfile.mkdtemp(prefix=f"{table}_ordered_")
-    t = pq.read_table(src)
+    t = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
     t = t.take(pc.sort_indices(t, sort_keys=[(ts_col, "ascending")]))
-    n = t.num_rows
-    per = (n + n_files - 1) // n_files
-    base = _time.time() - n_files - 10  # past, 1 s apart, sentinel last
+    per = (t.num_rows + n_files - 1) // n_files
+    base = time.time() - n_files - 10  # past, 1 s apart, sentinel last
     for k in range(n_files):
         sl = t.slice(k * per, per)
         if sl.num_rows == 0:
@@ -328,62 +317,119 @@ def stage_table_sorted_split(
         p = os.path.join(out, f"part-{k:03d}.parquet")
         pq.write_table(sl, p)
         os.utime(p, (base + k,) * 2)
-    pf = pq.ParquetFile(src)
-    row = pf.read_row_group(0).slice(0, 1).to_pandas()
-    mutate(row)
     sp = os.path.join(out, "part-999-sentinel.parquet")
-    pq.write_table(
-        pa.Table.from_pandas(row, schema=pf.schema_arrow,
-                             preserve_index=False),
-        sp,
-    )
+    _write_fact_sentinel(sf_dir, table, key, sp)
     os.utime(sp, (base + n_files + 1,) * 2)
     return out
+
+
+def fact_streams(
+    spark: SparkSession, sf_dir: str, o_dir: str, l_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The orders and lineitem file streams over two staged dirs."""
+    return tuple(
+        spark.readStream.schema(warehouse_stream_schema(spark, sf_dir, t))
+        .parquet(d)
+        for t, d in (("orders", o_dir), ("lineitem", l_dir))
+    )
+
+
+def _fact_join(
+    orders: DataFrame, lineitem: DataFrame, lower: str, upper: str,
+    how: str = "inner",
+) -> DataFrame:
+    """orders ⋈ lineitem on the order key within an event-time band
+    (operators.joins.interval_join). Under streaming both sides carry
+    0 s watermarks, and Spark bounds the join state to watermark + band
+    width — the Flink intervalJoin's keyed buffering state
+    (OrderWideApp.java:144-152) for free."""
+
+    def timed(df: DataFrame, ts_col: str, alias: str) -> DataFrame:
+        return (
+            df.withColumn(f"{alias}_ts", ts_as_timestamp(df.schema, ts_col))
+            .withWatermark(f"{alias}_ts", "0 seconds")
+            .alias(alias)
+        )
+
+    return interval_join(
+        timed(orders, "o_orderdate", "o"),
+        timed(lineitem, "l_shipdate", "l"),
+        on=F.col("o.o_orderkey") == F.col("l.l_orderkey"),
+        left_ts=F.col("o_ts"),
+        right_ts=F.col("l_ts"),
+        lower=lower,
+        upper=upper,
+        how=how,
+    )
+
+
+def order_wide(
+    orders: DataFrame, lineitem: DataFrame, how: str = "inner"
+) -> DataFrame:
+    """J1/ST4, OrderWideApp (OrderWideApp.java:140-152): orders ⋈
+    lineitem within [0, 30d] of the order date, projected to the wide
+    row. The chain's DWM order-wide job and `streaming_order_wide(_left)`
+    run this one body."""
+    return _fact_join(orders, lineitem, "0 seconds", "30 days", how).select(
+        "o.o_orderkey",
+        "l.l_linenumber",
+        "l.l_partkey",
+        F.date_format("o_ts", "yyyy-MM-dd").alias("order_date"),
+        F.date_format("l_ts", "yyyy-MM-dd").alias("ship_date"),
+        F.round("o.o_totalprice", 2).alias("total_amount"),
+        F.round("l.l_extendedprice", 2).alias("split_amount"),
+    )
+
+
+def payment_wide(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """J2, PaymentWideApp (PaymentWideApp.java:116-131, ±30 min there):
+    the asymmetric band [-7d, +90d] — the right side buffers events up
+    to 7 days *before* a matching left event. The chain's DWM
+    payment-wide job and `streaming_payment_wide` run this one body."""
+    from gmall_realtime_flink_spark.functions.compat import dec_round
+
+    return _fact_join(orders, lineitem, "-7 days", "90 days").select(
+        "o.o_orderkey",
+        "l.l_linenumber",
+        F.date_format("l_ts", "yyyy-MM-dd").alias("callback_date"),
+        dec_round(
+            F.col("l.l_extendedprice") * (1 - F.col("l.l_discount")), 2
+        ).alias("payment_amount"),
+    )
+
+
+def keyword_stats(events: DataFrame, documents: DataFrame) -> DataFrame:
+    """KeywordStatsApp (KeywordStatsApp.java:56-88): view events
+    broadcast-joined to the documents' keywords (the tokenizer explode
+    runs once per document, doc_keywords), then a 10 s tumble count per
+    keyword. The chain's DWS keyword job and `streaming_keyword_stats`
+    run this one body."""
+    from gmall_realtime_flink_spark.operators.windows import tumble_agg
+    from gmall_realtime_flink_spark.plans.gmall import doc_keywords
+
+    kw = doc_keywords(documents)
+    views = events.filter(F.col("event_type") == "view").withColumn(
+        "k", F.get_json_object("props", "$.k").cast("bigint")
+    )
+    words = views.join(F.broadcast(kw), views["k"] == kw["doc_id"]).select(
+        "ts", "keyword"
+    )
+    return tumble_agg(
+        words,
+        ts_col="ts",
+        duration="10 seconds",
+        keys=["keyword"],
+        aggs=[F.count(F.lit(1)).alias("ct")],
+    ).select("stt", "edt", "keyword", "ct", F.lit("SEARCH").alias("source"))
 
 
 def streaming_order_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/ST4 on the real warehouse tables: orders ⋈ lineitem as two
     file streams, equi-key + [0, 30d] event-time band — the streaming
     form of the batch `order_wide` query (same oracle)."""
-    orders_schema = warehouse_stream_schema(spark, sf_dir, "orders")
-    lineitem_schema = warehouse_stream_schema(spark, sf_dir, "lineitem")
-    o_dir = stage_table_dir(sf_dir, "orders")
-    l_dir = stage_table_dir(sf_dir, "lineitem")
-    o = (
-        spark.readStream.schema(orders_schema)
-        .parquet(o_dir)
-        .withColumn("o_ts", ts_as_timestamp(orders_schema, "o_orderdate"))
-        .withWatermark("o_ts", "0 seconds")
-        .alias("o")
-    )
-    l = (
-        spark.readStream.schema(lineitem_schema)
-        .parquet(l_dir)
-        .withColumn("l_ts", ts_as_timestamp(lineitem_schema, "l_shipdate"))
-        .withWatermark("l_ts", "0 seconds")
-        .alias("l")
-    )
-    joined = interval_join_stream(
-        o,
-        l,
-        on=F.col("o.o_orderkey") == F.col("l.l_orderkey"),
-        left_ts=F.col("o_ts"),
-        right_ts=F.col("l_ts"),
-        lower="0 seconds",
-        upper="30 days",
-    )
+    dirs = [stage_table_dir(sf_dir, "orders"), stage_table_dir(sf_dir, "lineitem")]
     return run_bounded(
-        joined.select(
-            "o.o_orderkey",
-            "l.l_linenumber",
-            "l.l_partkey",
-            F.date_format("o_ts", "yyyy-MM-dd").alias("order_date"),
-            F.date_format("l_ts", "yyyy-MM-dd").alias("ship_date"),
-            F.round("o.o_totalprice", 2).alias("total_amount"),
-            F.round("l.l_extendedprice", 2).alias("split_amount"),
-        ),
-        spark,
-        inputs=[o_dir, l_dir],
+        order_wide(*fact_streams(spark, sf_dir, *dirs)), spark, inputs=dirs
     )
 
 
@@ -411,7 +457,8 @@ def streaming_cdc_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         ["source_table", "operate_type", "sink_table", "sink_columns"],
     )
-    events = stream_events(spark, events_path(sf_dir))
+    path = events_path(sf_dir)
+    events = stream_events(spark, path)
     src = etl_filter(
         events, required=["props"], min_len_col="props", min_len=3
     ).withColumn(
@@ -433,80 +480,47 @@ def streaming_cdc_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("op").alias("cdc_type"),
         "sink_table",
     )
-    fact_dir = os.path.join(tempfile.mkdtemp(prefix="cdc_route_"), "facts")
+    base = tempfile.mkdtemp(prefix="cdc_route_")
+    fact_dir = os.path.join(base, "facts")
     q = (
         routed.filter(~F.col("sink_table").startswith("dim_"))
         .writeStream.foreachBatch(route_writer(fact_dir))
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    # empty input -> route_writer never fired -> no parquet to infer a
-    # schema from; an empty route run is still a valid (empty) result
-    if not any(
-        f.endswith(".parquet")
-        for _, _, fs in os.walk(fact_dir)
-        for f in fs
-    ):
-        return spark.createDataFrame(
-            [],
-            "event_id long, event_type string, cdc_type string, "
-            "sink_table string",
+    try:
+        q.awaitTermination()
+        # empty input -> route_writer never fired -> no parquet to infer
+        # a schema from; an empty route run is still a valid (empty)
+        # result
+        if not any(
+            f.endswith(".parquet")
+            for _, _, fs in os.walk(fact_dir)
+            for f in fs
+        ):
+            return spark.createDataFrame(
+                [],
+                "event_id long, event_type string, cdc_type string, "
+                "sink_table string",
+            )
+        # held in the block store: the dirs go before the frame is read
+        return (
+            spark.read.parquet(fact_dir)
+            .select("event_id", "event_type", "cdc_type", "sink_table")
+            .localCheckpoint(eager=True)
         )
-    return spark.read.parquet(fact_dir).select(
-        "event_id", "event_type", "cdc_type", "sink_table"
-    )
+    finally:
+        _remove(base, path)
 
 
 def streaming_payment_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2/ST4 streaming: the PaymentWideApp asymmetric-band interval
-    join (RT/app/dwm/PaymentWideApp.java:116-131, ±30 min there;
-    [-7d, +90d] on the warehouse tables) as a stream-stream join —
-    the streaming form of the batch `payment_wide` query (same
-    oracle). The negative lower bound means the right stream buffers
-    events up to 7 days *before* a matching left event; Spark sizes
-    both sides' join state from the band automatically."""
-    orders_schema = warehouse_stream_schema(spark, sf_dir, "orders")
-    lineitem_schema = warehouse_stream_schema(spark, sf_dir, "lineitem")
-    o_dir = stage_table_dir(sf_dir, "orders")
-    l_dir = stage_table_dir(sf_dir, "lineitem")
-    o = (
-        spark.readStream.schema(orders_schema)
-        .parquet(o_dir)
-        .withColumn("o_ts", ts_as_timestamp(orders_schema, "o_orderdate"))
-        .withWatermark("o_ts", "0 seconds")
-        .alias("o")
-    )
-    l = (
-        spark.readStream.schema(lineitem_schema)
-        .parquet(l_dir)
-        .withColumn("l_ts", ts_as_timestamp(lineitem_schema, "l_shipdate"))
-        .withWatermark("l_ts", "0 seconds")
-        .alias("l")
-    )
-    joined = interval_join_stream(
-        o,
-        l,
-        on=F.col("o.o_orderkey") == F.col("l.l_orderkey"),
-        left_ts=F.col("o_ts"),
-        right_ts=F.col("l_ts"),
-        lower="-7 days",
-        upper="90 days",
-    )
-    from gmall_realtime_flink_spark.functions.compat import dec_round
-
+    join on the warehouse tables as a stream-stream join — the
+    streaming form of the batch `payment_wide` query (same oracle)."""
+    dirs = [stage_table_dir(sf_dir, "orders"), stage_table_dir(sf_dir, "lineitem")]
     return run_bounded(
-        joined.select(
-            "o.o_orderkey",
-            "l.l_linenumber",
-            F.date_format("l_ts", "yyyy-MM-dd").alias("callback_date"),
-            dec_round(
-                F.col("l.l_extendedprice") * (1 - F.col("l.l_discount")), 2
-            ).alias("payment_amount"),
-        ),
-        spark,
-        inputs=[o_dir, l_dir],
+        payment_wide(*fact_streams(spark, sf_dir, *dirs)), spark, inputs=dirs
     )
 
 
@@ -628,35 +642,6 @@ def streaming_visitor_stats_sliding(
     return out.filter(F.col("stt") < SENTINEL_CUTOFF)
 
 
-def interval_join_stream(
-    left: DataFrame,
-    right: DataFrame,
-    on,
-    left_ts,
-    right_ts,
-    lower: str,
-    upper: str,
-    how: str = "inner",
-) -> DataFrame:
-    """J1/J2 + ST4: stream-stream interval join.
-
-    Identical predicate shape to operators.joins.interval_join — the
-    equi-key carries the shuffle, the band is a residual predicate.
-    Under streaming, both sides must carry watermarks; Spark bounds the
-    join state to watermark + band width (the Flink intervalJoin's
-    keyed buffering state, OrderWideApp.java:144-152, for free).
-
-    how="left_outer" is a capability Flink's intervalJoin does NOT
-    have (inner-only; the reference would need a coProcess + timer):
-    unmatched left rows emit null-padded once the watermark passes
-    left_ts + upper, i.e. once no in-band match can still arrive.
-    """
-    band = (right_ts >= left_ts + F.expr(f"INTERVAL {lower}")) & (
-        right_ts <= left_ts + F.expr(f"INTERVAL {upper}")
-    )
-    return left.join(right, on & band, how)
-
-
 def streaming_view_click_join(
     spark: SparkSession, sf_dir: str, window: str = "2 days"
 ) -> DataFrame:
@@ -682,7 +667,7 @@ def streaming_view_click_join(
             F.col("ts").alias("c_ts"),
         )
     )
-    joined = interval_join_stream(
+    joined = interval_join(
         views,
         clicks,
         on=F.col("v_user") == F.col("c_user"),
@@ -747,34 +732,16 @@ def streaming_stats_sql(
 
 
 def streaming_keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KeywordStatsApp under streaming (A5+F2): view events
-    stream-static-broadcast-joined to the documents' keywords (the
-    tokenizer explode runs once per document, doc_keywords), then a
-    10 s tumble count per keyword — the full search-keyword DWS path
-    (RT/app/dws/KeywordStatsApp.java:56-88)."""
-    from gmall_realtime_flink_spark.operators.windows import tumble_agg
-    from gmall_realtime_flink_spark.plans.gmall import doc_keywords
-
+    """KeywordStatsApp under streaming (A5+F2): `keyword_stats` over the
+    event stream — the full search-keyword DWS path."""
     path = events_with_sentinel(spark, sf_dir, gap_ms=0)
     events = stream_events(spark, path)
-    kw = doc_keywords(load(spark, sf_dir, "documents"))
-    views = events.filter(F.col("event_type") == "view").withColumn(
-        "k", F.get_json_object("props", "$.k").cast("bigint")
+    out = run_bounded(
+        keyword_stats(events, load(spark, sf_dir, "documents")),
+        spark,
+        inputs=[path],
     )
-    words = views.join(F.broadcast(kw), views["k"] == kw["doc_id"]).select(
-        "ts", "keyword"
-    )
-    agg = tumble_agg(
-        words,
-        ts_col="ts",
-        duration="10 seconds",
-        keys=["keyword"],
-        aggs=[F.count(F.lit(1)).alias("ct")],
-    )
-    out = run_bounded(agg, spark, inputs=[path])
-    return out.filter(F.col("stt") < SENTINEL_CUTOFF).select(
-        "stt", "edt", "keyword", "ct", F.lit("SEARCH").alias("source")
-    )
+    return out.filter(F.col("stt") < SENTINEL_CUTOFF)
 
 
 def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -855,66 +822,16 @@ def streaming_order_wide_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     `o_ts + upper`, bounding state the same way. A far-future sentinel
     row per stream pushes the final watermark past every real order so
     the last unmatched rows flush on bounded input (the outer-join
-    analogue of the ST3 timer sentinel)."""
-    import pandas as pd
-
-    orders_schema = warehouse_stream_schema(spark, sf_dir, "orders")
-    lineitem_schema = warehouse_stream_schema(spark, sf_dir, "lineitem")
-    far = pd.Timestamp("2030-01-01")
-
-    def _far_for(schema, name):
-        # match the SOURCE's physical type: the legacy nanos layout
-        # stores the ts column as int64 ns, so the sentinel must too
-        if isinstance(schema[name].dataType, T.LongType):
-            return int(far.value)
-        return far
-
-    def _mut_o(row):
-        row["o_orderkey"] = -1
-        row["o_orderdate"] = _far_for(orders_schema, "o_orderdate")
-
-    def _mut_l(row):
-        row["l_orderkey"] = -2
-        row["l_shipdate"] = _far_for(lineitem_schema, "l_shipdate")
-
-    o_dir = stage_table_with_sentinel(sf_dir, "orders", _mut_o)
-    l_dir = stage_table_with_sentinel(sf_dir, "lineitem", _mut_l)
-    o = (
-        spark.readStream.schema(orders_schema)
-        .parquet(o_dir)
-        .withColumn("o_ts", ts_as_timestamp(orders_schema, "o_orderdate"))
-        .withWatermark("o_ts", "0 seconds")
-        .alias("o")
-    )
-    l = (
-        spark.readStream.schema(lineitem_schema)
-        .parquet(l_dir)
-        .withColumn("l_ts", ts_as_timestamp(lineitem_schema, "l_shipdate"))
-        .withWatermark("l_ts", "0 seconds")
-        .alias("l")
-    )
-    joined = interval_join_stream(
-        o,
-        l,
-        on=F.col("o.o_orderkey") == F.col("l.l_orderkey"),
-        left_ts=F.col("o_ts"),
-        right_ts=F.col("l_ts"),
-        lower="0 seconds",
-        upper="30 days",
-        how="left_outer",
-    )
+    analogue of the ST3 timer sentinel); the lineitem sentinel is keyed
+    -2 so it never joins the orders sentinel (-1)."""
+    dirs = [
+        stage_table_with_sentinel(sf_dir, "orders", key=-1),
+        stage_table_with_sentinel(sf_dir, "lineitem", key=-2),
+    ]
     out = run_bounded(
-        joined.select(
-            "o.o_orderkey",
-            "l.l_linenumber",
-            "l.l_partkey",
-            F.date_format("o_ts", "yyyy-MM-dd").alias("order_date"),
-            F.date_format("l_ts", "yyyy-MM-dd").alias("ship_date"),
-            F.round("o.o_totalprice", 2).alias("total_amount"),
-            F.round("l.l_extendedprice", 2).alias("split_amount"),
-        ),
+        order_wide(*fact_streams(spark, sf_dir, *dirs), how="left_outer"),
         spark,
-        inputs=[o_dir, l_dir],
+        inputs=dirs,
     )
     return out.filter(F.col("o_orderkey") >= 0)
 
@@ -962,12 +879,68 @@ def streaming_token_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return countmin_probe(cells, batch_toks, item_col="item")
 
 
-# Crash-injection seam for the admission sink, same contract as
-# topology.FAULT_AFTER_WRITE: when set, called with (out_dir,
-# batch_id) AFTER the batch's parquet commit and BEFORE foreachBatch
-# returns — the at-least-once window where data is durable but the
-# source offset is not. Never set outside tests.
-ADMISSION_FAULT = None
+def _run_admission(
+    spark: SparkSession,
+    sf_dir: str,
+    base: str | None,
+    table: str,
+    sink: str,
+    admit: Callable[[DataFrame], DataFrame],
+    out_fields: list[T.StructField],
+) -> DataFrame:
+    """One admission job: `table` arrives as a file stream (one file per
+    trigger) and each micro-batch's `admit(batch)` lands in
+    `<base>/<sink>` through the idempotent batch writer — a retried
+    micro-batch replaces its OWN `batch_id=N` dir (foreachBatch is
+    at-least-once; this makes the sink effectively-once).
+
+    `base` (tests): stable sink/checkpoint/staging dirs, so a crashed
+    run can RESTART and resume from its committed offsets — the
+    crash-replay path the batch_id overwrite exists for. Default: a
+    fresh dir, removed once the result is held in the block store."""
+    owned = base is None
+    if owned:
+        base = tempfile.mkdtemp(prefix=f"{sink}_stream_")
+    out_dir = os.path.join(base, sink)
+    src_dir = os.path.join(base, "src")
+    if not os.path.isdir(src_dir):
+        os.makedirs(src_dir)
+        os.symlink(
+            os.path.abspath(table_path(sf_dir, table)),
+            os.path.join(src_dir, "part-000.parquet"),
+        )
+    # pre-create so the final read succeeds (as typed-empty) even if no
+    # micro-batch admitted anything
+    os.makedirs(out_dir, exist_ok=True)
+    writer = idempotent_batch_writer(out_dir)
+    try:
+        q = (
+            spark.readStream.schema(warehouse_stream_schema(spark, sf_dir, table))
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
+            .writeStream.foreachBatch(lambda b, bid: writer(admit(b), bid))
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        # Explicit schema: if nothing was written, schema inference
+        # would fail — an empty typed result is the correct answer.
+        # batch_id is LongType: foreachBatch epoch ids exceed 2^31 on
+        # long-lived streams.
+        out = (
+            spark.read.schema(
+                T.StructType(
+                    [*out_fields, T.StructField("batch_id", T.LongType())]
+                )
+            )
+            .parquet(out_dir)
+            .select(*[f.name for f in out_fields])
+        )
+        return out.localCheckpoint(eager=True) if owned else out
+    finally:
+        if owned:
+            _remove(base)
 
 
 def streaming_dedup_minhash(
@@ -993,11 +966,9 @@ def streaming_dedup_minhash(
         minhash_signatures,
     )
 
-    docs_schema = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).schema
+    docs_schema = warehouse_stream_schema(spark, sf_dir, "documents")
     corpus = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        spark.read.parquet(table_path(sf_dir, "documents"))
         .filter(F.col("source") != "src0")
         .select("doc_id", "text")
         .persist()
@@ -1006,26 +977,8 @@ def streaming_dedup_minhash(
     # re-executes the md5-heavy signature lineage over the whole
     # corpus (N re-signings for N micro-batches)
     corpus_sigs = minhash_signatures(corpus).persist()
-    # `base` (tests): stable out/checkpoint/staging dirs so a crashed
-    # run can RESTART and resume from its committed offsets — the
-    # crash-replay path the batch_id overwrite exists for. Default:
-    # fresh dirs per call (a normal bounded run).
-    if base is None:
-        base = tempfile.mkdtemp(prefix="dedup_minhash_stream_")
-    out_dir = os.path.join(base, "admitted")
-    ckpt_dir = os.path.join(base, "ckpt")
-    src_dir = os.path.join(base, "src")
-    if not os.path.isdir(src_dir):
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.abspath(os.path.join(sf_dir, "documents.parquet")),
-            os.path.join(src_dir, "part-000.parquet"),
-        )
-    # pre-create so the final read succeeds (as typed-empty) even if
-    # no micro-batch contained any src0 doc
-    os.makedirs(out_dir, exist_ok=True)
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
+    def admit(batch_df: DataFrame) -> DataFrame:
         new = batch_df.filter(F.col("source") == "src0")
         cand = lsh_candidates_cross(
             minhash_signatures(new), corpus_sigs
@@ -1040,53 +993,16 @@ def streaming_dedup_minhash(
             .select(F.col("doc_a").alias("doc_id"))
             .distinct()
         )
-        # Idempotent sink: partition by batch_id and dynamically
-        # overwrite — a retried micro-batch replaces its OWN partition
-        # instead of appending duplicates (foreachBatch is
-        # at-least-once; this makes the sink effectively-once).
-        new.select("doc_id").join(
-            rejected, "doc_id", "left_anti"
-        ).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).write.mode(
-            "overwrite"
-        ).option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(
-            "batch_id"
-        ).parquet(
-            out_dir
-        )
-        if ADMISSION_FAULT is not None:
-            ADMISSION_FAULT(out_dir, batch_id)
+        return new.select("doc_id").join(rejected, "doc_id", "left_anti")
 
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(write)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
+        return _run_admission(
+            spark, sf_dir, base, "documents", "admitted", admit,
+            [docs_schema["doc_id"]],
+        )
     finally:
         corpus_sigs.unpersist()
         corpus.unpersist()
-    # Explicit schema (doc_id's type taken from the source table): if
-    # no micro-batch contained src0 docs nothing was written, and
-    # schema inference would fail — an empty typed result is the
-    # correct answer in that case.
-    out_schema = T.StructType(
-        # LongType to match the lit().cast("long") on the write side:
-        # foreachBatch epoch ids exceed 2^31 on long-lived streams, and
-        # a bare lit(int) would silently flip Integer->Long mid-stream.
-        [docs_schema["doc_id"], T.StructField("batch_id", T.LongType())]
-    )
-    return spark.read.schema(out_schema).parquet(out_dir).select("doc_id")
 
 
 def streaming_dedup_semantic(
@@ -1118,10 +1034,7 @@ def streaming_dedup_semantic(
         semantic_admit,
     )
 
-    emb_schema = spark.read.parquet(
-        os.path.join(sf_dir, "embeddings.parquet")
-    ).schema
-    full = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    full = spark.read.parquet(table_path(sf_dir, "embeddings"))
     split, cent, surv = semantic_admission_state(
         full, threshold=0.4, split_frac=0.9
     )
@@ -1130,68 +1043,29 @@ def streaming_dedup_semantic(
     # Materialize EAGERLY (count) before the stream starts: lazily,
     # the first micro-batch pays the whole prefix kmeans + survivor
     # build inside its trigger (measured at skew-sf1/8 slices: 25 s
-    # first trigger vs 0.9 s steady-state p50 — SEMANTIC_LATENCY) and
-    # the latency SLA story starts with an outlier that isn't
-    # admission cost at all.
+    # first trigger vs 0.9 s steady-state p50) and the latency story
+    # starts with an outlier that isn't admission cost at all.
     cent = cent.persist()
     surv = surv.persist()
     cent.count()
     surv.count()
-
-    if base is None:
-        base = tempfile.mkdtemp(prefix="dedup_semantic_stream_")
-    out_dir = os.path.join(base, "verdicts")
-    ckpt_dir = os.path.join(base, "ckpt")
-    src_dir = os.path.join(base, "src")
-    if not os.path.isdir(src_dir):
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.abspath(os.path.join(sf_dir, "embeddings.parquet")),
-            os.path.join(src_dir, "part-000.parquet"),
-        )
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        new = batch_df.filter(F.col("vec_id") >= F.lit(split))
-        verdicts = semantic_admit(
-            new, cent, surv, threshold=0.4, own_batch=False
-        )
-        # idempotent sink: a retried micro-batch replaces its OWN
-        # partition (foreachBatch is at-least-once)
-        verdicts.withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_dir)
-
-    stream = (
-        spark.readStream.schema(emb_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(write)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
+        return _run_admission(
+            spark, sf_dir, base, "embeddings", "verdicts",
+            lambda b: semantic_admit(
+                b.filter(F.col("vec_id") >= F.lit(split)),
+                cent, surv, threshold=0.4, own_batch=False,
+            ),
+            [
+                T.StructField("vec_id", T.LongType()),
+                T.StructField("cell", T.LongType()),
+                T.StructField("max_lower_sim", T.DoubleType()),
+                T.StructField("kept", T.BooleanType()),
+            ],
+        )
     finally:
         cent.unpersist()
         surv.unpersist()
-    out_schema = T.StructType([
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("cell", T.LongType()),
-        T.StructField("max_lower_sim", T.DoubleType()),
-        T.StructField("kept", T.BooleanType()),
-        T.StructField("batch_id", T.LongType()),
-    ])
-    return (
-        spark.read.schema(out_schema)
-        .parquet(out_dir)
-        .select("vec_id", "cell", "max_lower_sim", "kept")
-    )
 
 
 def streaming_dedup_substring(
@@ -1223,11 +1097,9 @@ def streaming_dedup_substring(
         substring_gram_occurrences,
     )
 
-    docs_schema = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).schema
+    docs_schema = warehouse_stream_schema(spark, sf_dir, "documents")
     corpus = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        spark.read.parquet(table_path(sf_dir, "documents"))
         .filter(F.col("source") != "src0")
         .select("doc_id", "text")
     )
@@ -1235,57 +1107,26 @@ def streaming_dedup_substring(
         substring_gram_occurrences(corpus, k=k).select("gh").distinct()
         .persist()
     )
-    if base is None:
-        base = tempfile.mkdtemp(prefix="dedup_substring_stream_")
-    out_dir = os.path.join(base, "spans")
-    ckpt_dir = os.path.join(base, "ckpt")
-    src_dir = os.path.join(base, "src")
-    if not os.path.isdir(src_dir):
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.abspath(os.path.join(sf_dir, "documents.parquet")),
-            os.path.join(src_dir, "part-000.parquet"),
-        )
-    os.makedirs(out_dir, exist_ok=True)
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
+    def admit(batch_df: DataFrame) -> DataFrame:
         new = batch_df.filter(F.col("source") == "src0")
-        occ = substring_gram_occurrences(new, k=k)
-        hits = occ.join(corpus_ghs, "gh", "left_semi").select(
-            "doc_id", "pos"
-        )
-        spans_from_hits(hits, k).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_dir)
+        hits = substring_gram_occurrences(new, k=k).join(
+            corpus_ghs, "gh", "left_semi"
+        ).select("doc_id", "pos")
+        return spans_from_hits(hits, k)
 
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(write)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
+        return _run_admission(
+            spark, sf_dir, base, "documents", "spans", admit,
+            [
+                docs_schema["doc_id"],
+                T.StructField("span_start", T.LongType()),
+                T.StructField("span_end", T.LongType()),
+                T.StructField("span_len", T.LongType()),
+            ],
+        )
     finally:
         corpus_ghs.unpersist()
-    out_schema = T.StructType([
-        docs_schema["doc_id"],
-        T.StructField("span_start", T.LongType()),
-        T.StructField("span_end", T.LongType()),
-        T.StructField("span_len", T.LongType()),
-        T.StructField("batch_id", T.LongType()),
-    ])
-    return (
-        spark.read.schema(out_schema).parquet(out_dir)
-        .select("doc_id", "span_start", "span_end", "span_len")
-    )
 
 
 def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1340,6 +1181,7 @@ def streaming_route_config_reload(
     )
 
     events = stream_events(spark, events_dir, max_files_per_trigger=1)
+    writer = idempotent_batch_writer(out_dir)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         config = spark.read.parquet(config_path)
@@ -1349,19 +1191,17 @@ def streaming_route_config_reload(
             source_col="event_type",
             type_col="op",
         ).select("event_id", "event_type", "sink_table")
-        routed.withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).write.mode("append").parquet(out_dir)
+        writer(routed, batch_id)
         if after_batch is not None:
             after_batch(batch_id)
 
-    q = (
-        events.writeStream.foreachBatch(write)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    try:
+        events.writeStream.foreachBatch(write).option(
+            "checkpointLocation", ckpt
+        ).trigger(availableNow=True).start().awaitTermination()
+    finally:
+        _remove(ckpt)
 
 
 def streaming_multimodal_features(

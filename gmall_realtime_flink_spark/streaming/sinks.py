@@ -134,9 +134,19 @@ def dim_upsert_writer(
     return write
 
 
+# Crash-injection seam of every idempotent_batch_writer sink: when set,
+# called with (base_dir, batch_id) AFTER the batch's parquet commit and
+# BEFORE the writer returns — inside the at-least-once window where the
+# data is durable but the source offset is not yet committed. Raising
+# here is exactly the crash the batch_id overwrite exists for. Never
+# set outside tests.
+FAULT_AFTER_WRITE = None
+
+
 def idempotent_batch_writer(base_dir: str) -> BatchSink:
     """Exactly-once file sink: each micro-batch lands in its own
-    `batch_id=<n>` directory with mode("overwrite").
+    `batch_id=<n>` directory with mode("overwrite"), so a reader of
+    `base_dir` sees `batch_id` as a hive partition column.
 
     This is the Spark EOS recipe for foreachBatch (the analogue of the
     reference's transactional dynamic-topic producer,
@@ -152,6 +162,8 @@ def idempotent_batch_writer(base_dir: str) -> BatchSink:
         batch_df.write.mode("overwrite").parquet(
             os.path.join(base_dir, f"batch_id={batch_id}")
         )
+        if FAULT_AFTER_WRITE is not None:
+            FAULT_AFTER_WRITE(base_dir, batch_id)
 
     return write
 

@@ -49,23 +49,23 @@ except the sentinel staging.
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
+import time
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall_realtime_flink_spark.catalog import load, parquet_schema, table_path
-from gmall_realtime_flink_spark.streaming.jobs import (
-    SENTINEL_CUTOFF,
-    events_with_sentinel,
-    interval_join_stream,
-    stage_table_with_sentinel,
-    ts_as_timestamp,
-    warehouse_stream_schema,
-)
+from gmall_realtime_flink_spark.streaming import jobs
+from gmall_realtime_flink_spark.streaming.jobs import SENTINEL_CUTOFF
+from gmall_realtime_flink_spark.streaming.sinks import idempotent_batch_writer
 from gmall_realtime_flink_spark.streaming.source import stream_events
 from gmall_realtime_flink_spark.streaming.state import (
     jump_detect_stream,
@@ -75,194 +75,12 @@ from gmall_realtime_flink_spark.streaming.state import (
 JUMP_GAP_MS = 600_000
 
 
-# Crash-injection seam: when set, called with (out_dir, batch_id)
-# AFTER a layer's parquet commit and BEFORE foreachBatch returns —
-# i.e. inside the at-least-once window where the data is durable but
-# the source offset is NOT yet committed. Raising here is exactly the
-# crash the batch_id-partition overwrite exists for;
-# tests/test_topology.py::test_topology_crash_between_write_and_commit
-# detonates it once and asserts the restarted DAG's DWS outputs are
-# identical to a clean run's. Never set outside tests.
-FAULT_AFTER_WRITE = None
-
-
-def _write_batch_many(
-    batch_df: DataFrame,
-    batch_id: int,
-    sinks: list[tuple],
-    rebalance: bool = False,
-) -> None:
-    """Persist one micro-batch and run its per-sink writes as
-    CONCURRENT Spark jobs (one thread each). `sinks` is a list of
-    (transform_fn, out_dir); each transform derives its sink's rows
-    from the SHARED persisted batch.
-
-    Why concurrent: the DWD fan-out jobs write 2-3 independent layer
-    sinks per batch; serially, each write's tail is a single-task
-    parquet encode (the ordered-replay one-file-per-batch contract),
-    during which 31 cores idle — measured at sf1 ordered
-    (PROFILE_BASE_DB_SF1): per-trigger cost is ~98% addBatch, and the
-    sinks' compute+encode phases simply sum. Submitting the jobs from
-    threads lets sink B's parallel compute overlap sink A's
-    single-task encode — same jobs, same outputs, wall = max not sum.
-    Thread-per-job is the standard Spark concurrent-job pattern
-    (scheduler is thread-safe; FIFO pool). Exceptions re-raise in the
-    caller (future.result), so the crash-injection seam and
-    foreachBatch failure semantics are unchanged.
-
-    Why rebalance: in ordered replay each micro-batch is ONE staged
-    slice file, so the scan yields only a handful of byte-range
-    splits (measured: 5-6 tasks on 32 cores) and every derived
-    sink's compute — the CDC envelope's from_json parse, the costly
-    part — inherits that parallelism. `rebalance=True` repartitions
-    the batch to the session's shuffle parallelism BEFORE the persist
-    (one exchange, shared by all sinks), exactly the
-    rebalance-before-the-compute-bound-cross rule the kmeans path
-    documents. Only applied in steady-flow mode — a production giant
-    batch has plenty of scan splits and the exchange would be pure
-    cost."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    src = batch_df
-    if rebalance and os.environ.get("SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER"):
-        src = src.repartition(
-            int(src.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        )
-    src.persist()
-    try:
-        with ThreadPoolExecutor(max_workers=len(sinks)) as ex:
-            futs = [
-                ex.submit(_write_batch, fn(src), batch_id, out)
-                for fn, out in sinks
-            ]
-            for f in futs:
-                f.result()
-    finally:
-        src.unpersist()
-
-
-def _manifest_mode() -> bool:
-    """Ordered replay with PARALLEL writers (VERDICT r12 item 3): when
-    SPARK_GRAFT_TOPOLOGY_MANIFESTS is set (alongside the steady-flow
-    FILES_PER_TRIGGER knob), every layer batch is written with full
-    task parallelism and followed by a per-batch ordered MANIFEST; the
-    downstream consumers trigger on manifests (one batch per trigger,
-    in batch order) and expand them to the batch's files inside the
-    trigger — so the single-task parquet-encode tail the writer-tasks
-    A/B isolated (r12: base_db_app 157.8 s at sf10) is gone while the
-    whole-batch-in-order replay contract is preserved."""
-    return bool(os.environ.get("SPARK_GRAFT_TOPOLOGY_MANIFESTS"))
-
-
-# per-layer monotone manifest mtimes: the consumer's file source
-# orders by modification time, so adjacent batches must never tie
-# (sub-ms batches happen on empty flushes). foreachBatch is
-# sequential per query, so per-out_dir updates are single-threaded.
-_LAST_MANIFEST_NS: dict[str, int] = {}
-
-
-def _write_manifest(out_dir: str, batch_id: int) -> None:
-    """Atomically publish the ordered manifest for one batch: a single
-    JSON-lines file naming every parquet file of the batch partition.
-    Written AFTER the data commit (a consumer triggering on the
-    manifest can never see a half-written batch) and rewritten on
-    crash-replay (same name — the dynamic partition overwrite makes
-    the content identical, and a consumer that already took the
-    manifest ignores the rewrite by path). The mtime is bumped to be
-    strictly greater than this layer's previous manifest so the
-    consumer's mtime-ordered listing replays batches in order even
-    when two batches finish within one clock tick."""
-    import json as _json
-    import time as _time
-
-    part_dir = os.path.join(out_dir, f"batch_id={batch_id}")
-    files = sorted(
-        os.path.join(part_dir, f)
-        for f in (os.listdir(part_dir) if os.path.isdir(part_dir) else [])
-        if f.endswith(".parquet")
-    )
-    mdir = os.path.join(out_dir, "_manifests")
-    os.makedirs(mdir, exist_ok=True)
-    path = os.path.join(mdir, f"batch-{batch_id}.json")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        for p in files:
-            f.write(_json.dumps({"batch_id": batch_id, "path": p}) + "\n")
-    t = max(_time.time_ns(), _LAST_MANIFEST_NS.get(out_dir, 0) + 2_000_000)
-    _LAST_MANIFEST_NS[out_dir] = t
-    os.utime(tmp, ns=(t, t))
-    os.replace(tmp, path)
-
-
-def _write_batch(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
-    """Effectively-once layer write: foreachBatch is at-least-once (a
-    crash between the parquet write and the offset commit replays the
-    micro-batch), so every layer partition is keyed by batch_id and
-    dynamically overwritten — a replayed batch replaces its OWN
-    partition instead of appending duplicates. Same pattern as
-    streaming_dedup_minhash's admission sink (streaming/jobs.py)."""
-    out = batch_df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-    if os.environ.get("SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER"):
-        if _manifest_mode():
-            # manifest contract: writes keep real parallelism (the
-            # manifest, not the file count, carries batch atomicity
-            # and order to the consumer). WRITER_TASKS sizes the
-            # encode fan-out — enough tasks to hide the encode, not
-            # so many that every batch sprays tiny files.
-            out = out.repartition(
-                int(os.environ.get("SPARK_GRAFT_TOPOLOGY_WRITER_TASKS", "8"))
-            )
-        else:
-            # legacy steady-flow contract: ONE file per batch
-            # partition, so a downstream file-per-trigger consumer
-            # replays batches whole and in order. Splitting a
-            # multi-file batch partition across micro-batches hands a
-            # 0 s-watermark consumer files in arbitrary sub-order —
-            # rows older than the already-advanced watermark are
-            # dropped (W6 doing its job on input that broke the
-            # ordered-arrival contract; measured: chained
-            # visitor/province stats lose rows under
-            # maxFilesPerTrigger=4 without this).
-            #
-            # repartition(1), NOT coalesce(1): coalesce is a narrow
-            # dependency, so it pulls every upstream partition into
-            # the single writer task — the stateful join /
-            # applyInPandasWithState computation over all 32 state
-            # partitions then executes SERIALLY inside one task
-            # (measured at sf10 ordered replay: 1 of 32 cores busy,
-            # ~7 min per join batch). repartition inserts an
-            # exchange, so the stateful compute keeps its 32-way
-            # parallelism and only the file write is single-task.
-            #
-            # In THIS mode WRITER_TASKS>1 is profiling-only
-            # (tools/profile_base_db --writer-tasks): it breaks the
-            # one-file-per-batch contract; the manifest mode above is
-            # the production answer.
-            out = out.repartition(
-                int(os.environ.get("SPARK_GRAFT_TOPOLOGY_WRITER_TASKS", "1"))
-            )
-    out.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("batch_id").parquet(out_dir)
-    if _manifest_mode():
-        _write_manifest(out_dir, batch_id)
-    if FAULT_AFTER_WRITE is not None:
-        FAULT_AFTER_WRITE(out_dir, batch_id)
-
-
-# Wall-clock seconds per topology job from the most recent
-# build_warehouse_layers run (job name -> sec) — the per-layer cost
-# record the scale artifacts report; populated as each job completes.
-LAYER_SECONDS: dict[str, float] = {}
-
 # Per-batch trigger latency percentiles per topology job from the most
-# recent run (job name -> {n, p50_ms, p95_ms, max_ms}). Wall seconds
-# say what a layer COSTS; batch percentiles say what a consumer WAITS
-# — the reference's whole point is sub-window-latency continuous
-# results, so the 10 s-tumble SLA story needs the batch distribution,
-# not the total. Captured by a StreamingQueryListener
-# (onQueryProgress.durationMs.triggerExecution), the same numbers the
-# Spark UI's structured-streaming page reports.
+# recent run (job name -> {n, p50_ms, p95_ms, max_ms, components,
+# dropped_by_watermark}). Wall seconds say what a layer COSTS; batch
+# percentiles say what a consumer WAITS. Captured by a
+# StreamingQueryListener (onQueryProgress), the same numbers the Spark
+# UI's structured-streaming page reports.
 LAYER_BATCH_MS: dict[str, dict] = {}
 
 
@@ -278,7 +96,8 @@ def _percentiles(samples: list[float]) -> dict:
 
 
 class _BatchLatencyListener:
-    """Collects per-query trigger-execution durations. Defined without
+    """Collects per-query trigger-execution durations and the rows each
+    query's stateful operators dropped as late. Defined without
     inheriting StreamingQueryListener at import time so importing this
     module never requires an active Spark context; `attach` builds the
     real listener lazily."""
@@ -289,8 +108,11 @@ class _BatchLatencyListener:
         # (queryPlanning / addBatch / walCommit / latestOffset /
         # commitOffsets / getBatch) — the breakdown that says whether
         # a slow micro-batch is COMPUTE (addBatch) or per-trigger
-        # FIXED cost (everything else); see tools/profile_base_db.py
+        # FIXED cost (everything else)
         self.components: dict[str, dict[str, list[float]]] = {}
+        # stateOperators[].numRowsDroppedByWatermark summed per query:
+        # a row behind its operator's watermark is lost silently
+        self.dropped: dict[str, int] = {}
         self._listener = None
 
     def attach(self, spark: SparkSession) -> None:
@@ -312,6 +134,9 @@ class _BatchLatencyListener:
                     comp = outer.components.setdefault(name, {})
                     for k, v in dur.items():
                         comp.setdefault(k, []).append(float(v))
+                    outer.dropped[name] = outer.dropped.get(name, 0) + sum(
+                        op.numRowsDroppedByWatermark for op in p.stateOperators
+                    )
 
             def onQueryIdle(self, event) -> None:
                 pass
@@ -323,8 +148,6 @@ class _BatchLatencyListener:
         spark.streams.addListener(self._listener)
 
     def detach_into(self, spark: SparkSession, out: dict) -> None:
-        import time as _time
-
         # listener delivery is async — wait for the event stream to
         # drain (stable sample count across one poll interval)
         prev = -1
@@ -333,7 +156,7 @@ class _BatchLatencyListener:
             if cur == prev:
                 break
             prev = cur
-            _time.sleep(0.25)
+            time.sleep(0.25)
         if self._listener is not None:
             spark.streams.removeListener(self._listener)
         # merge per job (latest run wins per key) rather than clear:
@@ -346,607 +169,362 @@ class _BatchLatencyListener:
                     # where each trigger spent its time: addBatch is
                     # the batch's actual compute+write; the rest is
                     # per-trigger fixed cost (planning, offset WAL,
-                    # source listing) — the split that says whether a
-                    # slow ordered replay needs a faster PLAN or
-                    # fewer TRIGGERS
+                    # source listing)
                     "components": {
                         k: _percentiles(v)
                         for k, v in self.components.get(name, {}).items()
                     },
+                    "dropped_by_watermark": self.dropped.get(name, 0),
                 }
                 for name, ms in self.durations.items()
             }
         )
 
 
-def _run(stream_df: DataFrame, out_dir: str, ckpt: str) -> None:
-    """One checkpointed job writing a layer directory (effectively-once
-    via per-batch dynamic partition overwrite, _write_batch)."""
-    import time as _time
+# ----------------------------------------------------------------------
+# One run of the chain: where its layers live, the schema each
+# producer wrote, and its replay posture.
+# ----------------------------------------------------------------------
 
-    t0 = _time.time()
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, bid: _write_batch(b, bid, out_dir)
-        )
-        .queryName(os.path.basename(out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _seed_empty_layer(stream_df.sparkSession, stream_df.schema, out_dir)
-    LAYER_SECONDS[os.path.basename(out_dir)] = round(_time.time() - t0, 1)
+# The event time a layer's consumers watermark on (the fact layers'
+# consumers derive theirs in the transform, jobs.order_wide & co.)
+_EVENT_TIME = {
+    "dwd_page_log": "ts",
+    "dwm_unique_visit": "first_ts",
+    "dwm_user_jump": "jump_ts",
+}
 
 
-def _seed_empty_layer(spark: SparkSession, schema, out_dir: str) -> None:
-    """A layer that saw ZERO batches (empty upstream) must still be
-    schema-probeable by its consumers — a Kafka topic with no messages
-    still has a schema. Leave one zero-row footer-only file under a
-    reserved `batch_id=-2` hive partition, the SAME layout
-    _write_batch's partitionBy produces (a root-level bare file would
-    conflict with partition discovery the moment any batch_id=N dir
-    appears, e.g. the user_jump sentinel partition)."""
-    if any(
-        f.endswith(".parquet")
-        for _, _, fs in os.walk(out_dir)
-        for f in fs
-    ):
-        return
-    (
-        spark.createDataFrame([], schema)
-        .repartition(1)
-        .write.mode("append")
-        .parquet(os.path.join(out_dir, "batch_id=-2"))
-    )
-    if _manifest_mode():
-        # manifest consumers see only manifested batches — publish
-        # the seed partition too (zero data rows; order irrelevant)
-        _write_manifest(out_dir, -2)
+class _Run:
+    """Per-run state of build_warehouse_layers.
 
-
-def _manifest_stream(spark: SparkSession, schema, path: str) -> DataFrame:
-    """Consume a layer through its ordered per-batch manifests: the
-    streamed 'topic' is the tiny _manifests directory (one JSON file
-    per upstream batch, mtime-ordered), taken ONE PER TRIGGER so each
-    micro-batch is exactly one whole upstream batch in order — the
-    watermark can never strand part of a batch behind a trigger
-    boundary. The manifest rows expand to the batch's parquet files
-    inside the trigger via mapInArrow (pyarrow reads the files
-    executor-side; repartition on path spreads the W files across W
-    tasks, restoring the read parallelism the parallel writer
-    produced). The Arrow batches are cast to the layer's exact Spark
-    schema so types round-trip bit-identically."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    data_schema = T.StructType(
-        [f for f in schema.fields if f.name != "batch_id"]
-    )
-    target = to_arrow_schema(data_schema)
-    mf = (
-        spark.readStream.schema("batch_id LONG, path STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(os.path.join(path, "_manifests"))
-    )
-    w = int(os.environ.get("SPARK_GRAFT_TOPOLOGY_WRITER_TASKS", "8"))
-
-    def expand(batches):
-        import pyarrow.parquet as _pq
-
-        for rb in batches:
-            for row in rb.to_pylist():
-                tbl = _pq.read_table(row["path"])
-                tbl = tbl.select(target.names).cast(target)
-                yield from tbl.to_batches()
-
-    return mf.repartition(w, "path").mapInArrow(expand, schema=data_schema)
-
-
-def _reader(spark: SparkSession, schema, path: str):
-    """readStream with the optional steady-flow knob: when
-    SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER is set, every layer/fact
-    consumer processes at most that many files per micro-batch —
-    availableNow then replays the backlog as a SEQUENCE of small
-    batches instead of 1-2 giant ones, which is what makes the
-    per-batch latency percentiles (LAYER_BATCH_MS) a real steady-state
-    distribution rather than one sample. Unset (production default):
-    fewest, largest batches — lowest total cost.
-
-    Under the manifest contract (_manifest_mode), a directory that
-    carries per-batch manifests (i.e. a LAYER written by
-    _write_batch; the pre-staged ODS dirs don't) is consumed through
-    them instead — whole ordered batches per trigger with parallel
-    file reads. ODS dirs keep the plain file source: their staged
-    slice files are each internally time-sorted, so file-per-trigger
-    already IS the ordered contract there."""
-    if _manifest_mode() and os.path.isdir(os.path.join(path, "_manifests")):
-        return _manifest_stream(spark, schema, path)
-    r = spark.readStream.schema(schema)
-    mft = os.environ.get("SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER")
-    if mft:
-        r = r.option("maxFilesPerTrigger", int(mft))
-    return r.parquet(path)
-
-
-def _layer_stream(
-    spark: SparkSession,
-    layer_dir: str,
-    schema: T.StructType,
-    ts_col: str | None = None,
-) -> DataFrame:
-    """readStream over a previously-written layer directory (the
-    'consume the upstream job's topic' step). `schema` is the one its
-    producer wrote — known without probing the footers, like a topic's
-    registered schema — plus the batch_id partition column; the
-    event-time column is re-derived where the layer stores it as a
-    formatted string."""
-    schema = T.StructType(
-        [*schema.fields, T.StructField("batch_id", T.LongType())]
-    )
-    df = _reader(spark, schema, layer_dir).drop("batch_id")
-    if ts_col is not None:
-        df = df.withColumn("ts", F.to_timestamp(ts_col)).withWatermark(
-            "ts", "0 seconds"
-        )
-    return df
-
-
-def build_warehouse_layers(
-    spark: SparkSession, sf_dir: str, base: str | None = None
-) -> dict[str, str]:
-    """Run the full 10-job chained topology; returns layer name -> dir.
-
-    See _build_warehouse_layers_impl for the layer DAG semantics. This
-    wrapper owns the latency listener's lifecycle: detach runs in a
-    finally so a crash mid-DAG (e.g. the crash-injection test) can't
-    leave the listener registered on the shared SparkSession, where it
-    would accumulate durations and pay dispatch on every later query.
+    Two replay postures:
+    - bulk (`ordered_slices` 0, the default): each ODS fact table is one
+      file plus its sentinel, and every consumer takes whatever its
+      input holds — fewest, largest micro-batches, lowest total cost.
+    - ordered manifest replay (`ordered_slices` N): the ODS fact tables
+      are staged as N event-time-sorted slices, read one slice per
+      trigger (the monotone-ingest contract of a per-key-ordered Kafka
+      topic), so the join layers' watermarks advance every batch and
+      their state evicts continuously. Layer writers keep
+      `defaultParallelism` tasks and publish a per-batch ordered
+      manifest after each write; consumers trigger on manifests, one
+      whole upstream batch at a time in batch order, so a 0 s
+      watermark never strands part of a batch behind a trigger
+      boundary. The DWD CDC envelope is rebalanced to the same task
+      count: a one-slice batch scans as only a handful of splits, and
+      its from_json parse is the batch's costly phase.
     """
-    _latency = _BatchLatencyListener()
-    _latency.attach(spark)
-    try:
-        return _build_warehouse_layers_impl(spark, sf_dir, base)
-    finally:
-        _latency.detach_into(spark, LAYER_BATCH_MS)
 
-
-def _build_warehouse_layers_impl(
-    spark: SparkSession, sf_dir: str, base: str | None = None
-) -> dict[str, str]:
-    """The 10-job chained topology body (listener managed by caller).
-
-    Execution order follows the layer DAG; every job has its own
-    checkpoint directory, so any job can restart from its offsets
-    exactly as the independent reference jobs do. Re-invoking with the
-    SAME `base` is a full-warehouse restart: every job resumes from
-    its committed offsets, finds no new input, and writes nothing —
-    restart idempotency of the whole DAG, pinned by
-    tests/test_topology.py::test_topology_rerun_is_idempotent. A
-    CRASHED run is also safe to restart: every layer sink is a
-    batch_id-partitioned dynamic overwrite (_write_batch), so a
-    micro-batch replayed after a crash-between-write-and-offset-commit
-    replaces its own partition instead of duplicating it, and the ODS
-    manifest is staged atomically before any job starts (an absent
-    manifest proves no job ever ran, so re-staging is safe).
-    (The ODS staging dirs and the user_jump sentinel row are created
-    once per base; on restart the recorded dirs are reused.)
-    """
-    if base is None:
-        base = tempfile.mkdtemp(prefix="warehouse_")
-    layers = {
-        name: os.path.join(base, name)
-        for name in (
-            "dwd_page_log",
-            "dwd_start_log",
-            "dwd_display_log",
-            "dwd_order_info",
-            "dwd_order_detail",
-            "dwm_unique_visit",
-            "dwm_user_jump",
-            "dwm_order_wide",
-            "dwm_payment_wide",
-            "dws_visitor_stats",
-            "dws_product_stats",
-            "dws_province_stats",
-            "dws_keyword_stats",
-        )
-    }
-
-    def ckpt(job: str) -> str:
-        return os.path.join(base, "ckpt", job)
-
-    # ODS staging dirs must be STABLE across restarts: the file-source
-    # checkpoints record which files were consumed, so a restart must
-    # see the SAME source directories (a fresh staging dir would look
-    # like all-new data and replay everything). ALL ODS dirs are staged
-    # and the manifest written atomically BEFORE any streaming job
-    # starts, so an absent manifest proves no job has ever run against
-    # this base — re-staging is then always safe (the fallback path a
-    # crash during staging itself takes).
-    import json as _json
-
-    orders_schema = warehouse_stream_schema(spark, sf_dir, "orders")
-    lineitem_schema = warehouse_stream_schema(spark, sf_dir, "lineitem")
-    far = pd.Timestamp("2030-01-01")
-
-    def _far_for(schema: T.StructType, name: str):
-        if isinstance(schema[name].dataType, T.LongType):
-            return int(far.value)
-        return far
-
-    def _mut_o(row) -> None:
-        row["o_orderkey"] = -1
-        row["o_orderdate"] = _far_for(orders_schema, "o_orderdate")
-
-    def _mut_l(row) -> None:
-        row["l_orderkey"] = -1
-        row["l_shipdate"] = _far_for(lineitem_schema, "l_shipdate")
-
-    ods_manifest = os.path.join(base, "ods.json")
-    if not os.path.exists(ods_manifest):
-        # SPARK_GRAFT_TOPOLOGY_ORDERED_SLICES=N stages the two fact
-        # tables as N event-time-sorted slices instead of one file —
-        # the monotone-ingest contract of a per-key-ordered Kafka
-        # topic. Combined with SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER
-        # this keeps the dwm join layers' watermark advancing every
-        # micro-batch, so join state evicts continuously (the 23x
-        # per-batch-p95 lever measured by JOIN_LATENCY_r09). Results
-        # are slicing-invariant: slices are time-sorted, so no row is
-        # ever behind the watermark (nothing drops). Default (unset):
-        # single-file staging, fewest/largest batches.
-        n_slices = os.environ.get("SPARK_GRAFT_TOPOLOGY_ORDERED_SLICES")
-        if n_slices:
-            from gmall_realtime_flink_spark.streaming.jobs import (
-                stage_table_sorted_split,
+    def __init__(
+        self, spark: SparkSession, sf_dir: str, base: str, ordered_slices: int
+    ) -> None:
+        self.spark, self.sf_dir, self.base = spark, sf_dir, base
+        self.ordered = ordered_slices
+        self.tasks = spark.sparkContext.defaultParallelism
+        self.schemas = {
+            f"ods_{topic}": jobs.warehouse_stream_schema(spark, sf_dir, table)
+            for topic, table in (
+                ("order_info", "orders"),
+                ("order_detail", "lineitem"),
             )
-
-            stage_o = lambda: stage_table_sorted_split(  # noqa: E731
-                sf_dir, "orders", "o_orderdate", int(n_slices), _mut_o
-            )
-            stage_l = lambda: stage_table_sorted_split(  # noqa: E731
-                sf_dir, "lineitem", "l_shipdate", int(n_slices), _mut_l
-            )
-        else:
-            stage_o = lambda: stage_table_with_sentinel(  # noqa: E731
-                sf_dir, "orders", _mut_o
-            )
-            stage_l = lambda: stage_table_with_sentinel(  # noqa: E731
-                sf_dir, "lineitem", _mut_l
-            )
-        ods = {
-            "log": events_with_sentinel(spark, sf_dir, gap_ms=JUMP_GAP_MS),
-            "order_info": stage_o(),
-            "order_detail": stage_l(),
         }
-        tmp = ods_manifest + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(ods, f)
-        os.replace(tmp, ods_manifest)
-    else:
-        with open(ods_manifest) as f:
-            ods = _json.load(f)
+        # last manifest mtime per layer: the consumer's file source
+        # orders by modification time, so adjacent batches must never
+        # tie (sub-ms batches happen on empty flushes)
+        self.manifest_ns: dict[str, int] = {}
+        self.ods = self._stage_ods()
 
-    # ------------------------------------------------------------------
-    # DWD job 1 — BaseLogAPP: one scan of the ODS log stream, 3-way
-    # split (side outputs, BaseLogAPP.java:141-188). page_log carries
-    # the full event rows (the reference's page topic is the firehose
-    # every DWM/DWS log consumer reads); start/display are the filtered
-    # side outputs.
-    # ------------------------------------------------------------------
-    ods_log = ods["log"]
-    events = stream_events(
-        spark,
-        ods_log,
-        max_files_per_trigger=1,
-        raw_schema=parquet_schema(spark, table_path(sf_dir, "events")),
-    )
-    page_schema = events.schema
+    def dir(self, layer: str) -> str:
+        return os.path.join(self.base, layer)
 
-    def split_log(batch_df: DataFrame, batch_id: int) -> None:
-        _write_batch_many(
-            batch_df,
-            batch_id,
-            [
-                (lambda d: d, layers["dwd_page_log"]),
-                (
-                    lambda d: d.filter(F.col("event_type") == "signup"),
-                    layers["dwd_start_log"],
+    def _stage_ods(self) -> dict[str, str]:
+        """ODS staging dirs must be STABLE across restarts: the
+        file-source checkpoints record which files were consumed, so a
+        restart must see the SAME source directories (a fresh staging
+        dir would look like all-new data and replay everything). ALL
+        ODS dirs are staged and recorded in `ods.json` atomically
+        BEFORE any streaming job starts, so an absent record proves no
+        job has ever run against this base — re-staging is then always
+        safe. Sentinel key -1 on both fact tables: the two sentinels
+        join into one far-future wide row that keeps the DWM layers'
+        event-time horizon at 2030."""
+        record = os.path.join(self.base, "ods.json")
+        if os.path.exists(record):
+            with open(record) as f:
+                return json.load(f)
+        stage = (
+            partial(jobs.stage_table_sorted_split, n_files=self.ordered)
+            if self.ordered
+            else jobs.stage_table_with_sentinel
+        )
+        ods = {
+            "log": jobs.events_with_sentinel(
+                self.spark, self.sf_dir, gap_ms=JUMP_GAP_MS
+            ),
+            "order_info": stage(self.sf_dir, "orders"),
+            "order_detail": stage(self.sf_dir, "lineitem"),
+        }
+        with open(record + ".tmp", "w") as f:
+            json.dump(ods, f)
+        os.replace(record + ".tmp", record)
+        return ods
+
+    def stream(self, name: str) -> DataFrame:
+        """A job's input as a stream: an ODS topic (`ods_*`) or an
+        upstream layer, read with the schema its producer wrote —
+        known without probing footers, like a topic's registered
+        schema."""
+        spark = self.spark
+        if name == "ods_log":
+            return stream_events(
+                spark,
+                self.ods["log"],
+                max_files_per_trigger=1,
+                raw_schema=parquet_schema(
+                    spark, table_path(self.sf_dir, "events")
                 ),
-                (
-                    lambda d: d.filter(F.col("event_type") == "click"),
-                    layers["dwd_display_log"],
-                ),
-            ],
+            )
+        if name.startswith("ods_"):
+            reader = spark.readStream.schema(self.schemas[name])
+            if self.ordered:
+                reader = reader.option("maxFilesPerTrigger", 1)
+            return reader.parquet(self.ods[name[len("ods_"):]])
+        if self.ordered:
+            df = self._manifest_stream(name)
+        else:
+            df = (
+                spark.readStream.schema(
+                    T.StructType(
+                        [
+                            *self.schemas[name].fields,
+                            T.StructField("batch_id", T.LongType()),
+                        ]
+                    )
+                )
+                .parquet(self.dir(name))
+                .drop("batch_id")
+            )
+        ts = _EVENT_TIME.get(name)
+        if ts is not None and ts != "ts":
+            df = df.withColumn("ts", F.to_timestamp(ts))
+        return df if ts is None else df.withWatermark("ts", "0 seconds")
+
+    def _manifest_stream(self, layer: str) -> DataFrame:
+        """Consume a layer through its ordered per-batch manifests: the
+        streamed 'topic' is the tiny _manifests directory (one JSON
+        file per upstream batch, mtime-ordered), taken ONE PER TRIGGER.
+        The manifest rows expand to the batch's parquet files inside
+        the trigger via mapInArrow (pyarrow reads the files
+        executor-side; repartition on path spreads them across tasks,
+        restoring the read parallelism the parallel writer produced).
+        The Arrow batches are cast to the layer's exact Spark schema so
+        types round-trip bit-identically."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = self.schemas[layer]
+        target = to_arrow_schema(schema)
+
+        def expand(batches):
+            import pyarrow.parquet as pq
+
+            for rb in batches:
+                for row in rb.to_pylist():
+                    tbl = pq.read_table(row["path"]).select(target.names)
+                    yield from tbl.cast(target).to_batches()
+
+        return (
+            self.spark.readStream.schema("batch_id LONG, path STRING")
+            .option("maxFilesPerTrigger", 1)
+            .json(os.path.join(self.dir(layer), "_manifests"))
+            .repartition(self.tasks, "path")
+            .mapInArrow(expand, schema=schema)
         )
 
-    import time as _time
+    def write(self, layer: str, df: DataFrame, batch_id: int) -> None:
+        """Effectively-once layer write through the idempotent batch
+        writer: foreachBatch is at-least-once (a crash between the
+        parquet write and the offset commit replays the micro-batch),
+        so a replayed batch overwrites its OWN `batch_id=N` dir instead
+        of appending duplicates. Under the ordered posture the batch's
+        ordered manifest is published AFTER the data commit, so a
+        consumer triggering on it never sees a half-written batch."""
+        if self.ordered:
+            df = df.repartition(self.tasks)
+        idempotent_batch_writer(self.dir(layer))(df, batch_id)
+        if self.ordered:
+            self.publish_manifest(layer, batch_id)
 
-    _t0 = _time.time()
-    q = (
-        events.writeStream.foreachBatch(split_log)
-        .queryName("base_log_app")
-        .option("checkpointLocation", ckpt("base_log_app"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    for lyr in ("dwd_page_log", "dwd_start_log", "dwd_display_log"):
-        _seed_empty_layer(spark, events.schema, layers[lyr])
-    LAYER_SECONDS["base_log_app"] = round(_time.time() - _t0, 1)
-    if os.environ.get("SPARK_GRAFT_TOPOLOGY_STOP_AFTER") == "base_log_app":
-        return layers  # profiling knob: isolate one DWD job's cost
+    def publish_manifest(self, layer: str, batch_id: int) -> None:
+        """Atomically publish one batch's manifest: a JSON-lines file
+        naming every parquet file of the batch dir. A crash-replay
+        rewrites it under the same name; a consumer that already took
+        it ignores the rewrite by path. Its mtime is strictly greater
+        than this layer's previous manifest, so the consumer's
+        mtime-ordered listing replays batches in order even when two
+        batches finish within one clock tick."""
+        part = os.path.join(self.dir(layer), f"batch_id={batch_id}")
+        mdir = os.path.join(self.dir(layer), "_manifests")
+        os.makedirs(mdir, exist_ok=True)
+        path = os.path.join(mdir, f"batch-{batch_id}.json")
+        with open(path + ".tmp", "w") as f:
+            for name in sorted(os.listdir(part)):
+                if name.endswith(".parquet"):
+                    entry = {"batch_id": batch_id, "path": os.path.join(part, name)}
+                    f.write(json.dumps(entry) + "\n")
+        t = max(time.time_ns(), self.manifest_ns.get(layer, 0) + 2_000_000)
+        self.manifest_ns[layer] = t
+        os.utime(path + ".tmp", ns=(t, t))
+        os.replace(path + ".tmp", path)
 
-    # ------------------------------------------------------------------
-    # DWD job 2 — BaseDBApp: the CDC stream arrives as ONE envelope
-    # topic ({table, data-as-JSON}, exactly Maxwell's ods_base_db_m
-    # shape, BaseDBApp.java:63) and is routed per-table to fact
-    # directories (dynamic topic sink, :96-113).
-    # ------------------------------------------------------------------
-    def envelope(topic: str, schema: T.StructType) -> DataFrame:
-        raw = _reader(spark, schema, ods[topic])
-        return raw.select(
-            F.lit(topic).alias("table"),
+    def seed(self, layer: str) -> None:
+        """A layer that saw ZERO batches (empty upstream) must still be
+        schema-probeable by its consumers — a Kafka topic with no
+        messages still has a schema. Leave one zero-row footer-only
+        file under a reserved `batch_id=-2` dir, the layout every batch
+        write produces (a root-level bare file would conflict with
+        partition discovery)."""
+        d = self.dir(layer)
+        if not any(f.endswith(".parquet") for _, _, fs in os.walk(d) for f in fs):
+            empty = self.spark.createDataFrame([], self.schemas[layer])
+            self.write(layer, empty.repartition(1), -2)
+
+
+# ----------------------------------------------------------------------
+# The job table. Each job is one checkpointed Structured Streaming
+# query: its inputs are read as streams (_Run.stream), `transform`
+# builds the query, and each micro-batch lands in every output layer —
+# through `route(run, batch, layer)` for a fan-out job (the reference's
+# side outputs and dynamic topic sink), as-is otherwise.
+# ----------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Job:
+    query: str  # the streaming query's name
+    ckpt: str  # checkpoint dir under <base>/ckpt
+    inputs: tuple[str, ...]
+    transform: Callable[..., DataFrame]  # (run, *input streams)
+    outputs: tuple[str, ...]
+    route: Callable[[_Run, DataFrame, str], DataFrame] | None = None
+    finish: Callable[[_Run], None] | None = None  # after the query stops
+
+
+# DWD BaseLogAPP side outputs (BaseLogAPP.java:141-188): page_log
+# carries the full event rows (the firehose every DWM/DWS log consumer
+# reads); start/display are filtered splits.
+_LOG_SPLITS = {"dwd_start_log": "signup", "dwd_display_log": "click"}
+
+
+def _split_log(run: _Run, batch: DataFrame, layer: str) -> DataFrame:
+    etype = _LOG_SPLITS.get(layer)
+    return batch if etype is None else batch.filter(F.col("event_type") == etype)
+
+
+def _cdc_envelope(run: _Run, order_info: DataFrame, order_detail: DataFrame):
+    """DWD BaseDBApp: the CDC stream arrives as ONE envelope topic
+    ({table, data-as-JSON}, exactly Maxwell's ods_base_db_m shape,
+    BaseDBApp.java:63)."""
+    cdc = order_info.select(
+        F.lit("order_info").alias("table"), F.to_json(F.struct("*")).alias("data")
+    ).unionByName(
+        order_detail.select(
+            F.lit("order_detail").alias("table"),
             F.to_json(F.struct("*")).alias("data"),
         )
-
-    cdc = envelope("order_info", orders_schema).unionByName(
-        envelope("order_detail", lineitem_schema)
     )
-    table_schemas = {
-        "order_info": orders_schema,
-        "order_detail": lineitem_schema,
-    }
+    return cdc.repartition(run.tasks) if run.ordered else cdc
 
-    def route_db(batch_df: DataFrame, batch_id: int) -> None:
-        _write_batch_many(
-            batch_df,
-            batch_id,
-            [
-                (
-                    lambda d, t=table, s=schema: d.filter(
-                        F.col("table") == t
-                    )
-                    .select(F.from_json("data", s).alias("d"))
-                    .select("d.*"),
-                    layers[f"dwd_{table}"],
-                )
-                for table, schema in table_schemas.items()
-            ],
-            # the envelope's from_json is the batch's costly phase and
-            # a one-slice batch scans as only ~5 splits — rebalance
-            rebalance=True,
-        )
 
-    _t0 = _time.time()
-    q = (
-        cdc.writeStream.foreachBatch(route_db)
-        .queryName("base_db_app")
-        .option("checkpointLocation", ckpt("base_db_app"))
-        .trigger(availableNow=True)
-        .start()
+def _route_cdc(run: _Run, batch: DataFrame, layer: str) -> DataFrame:
+    """... routed per table to the fact layers (the dynamic topic sink,
+    BaseDBApp.java:96-113)."""
+    table = layer[len("dwd_"):]
+    schema = run.schemas[f"ods_{table}"]
+    return (
+        batch.filter(F.col("table") == table)
+        .select(F.from_json("data", schema).alias("d"))
+        .select("d.*")
     )
-    q.awaitTermination()
-    for table, schema in table_schemas.items():
-        _seed_empty_layer(spark, schema, layers[f"dwd_{table}"])
-    LAYER_SECONDS["base_db_app"] = round(_time.time() - _t0, 1)
-    if os.environ.get("SPARK_GRAFT_TOPOLOGY_STOP_AFTER") == "base_db_app":
-        return layers  # profiling knob: isolate the DWD jobs' cost
 
-    # ------------------------------------------------------------------
-    # DWM job 3 — UniqueVisitApp: consumes dwd_page_log (the layer
-    # boundary of UniqueVisitApp.java:56-58), ST2 keyed dedup state.
-    # The sentinel user's UV row (visit 2030) flows into the layer and
-    # becomes the DWS watermark driver.
-    # ------------------------------------------------------------------
-    page = _layer_stream(
-        spark, layers["dwd_page_log"], page_schema
-    ).withWatermark("ts", "0 seconds")
-    uv_stream = uv_dedup_stream(page, key="user_id")
-    _run(uv_stream, layers["dwm_unique_visit"], ckpt("unique_visit_app"))
 
-    # ------------------------------------------------------------------
-    # DWM job 4 — UserJumpApp: CEP bounce with event-time timeout. The
-    # sentinel advances the watermark so every REAL user's pending
-    # event times out; the sentinel user's own pending event is the one
-    # row that cannot (nothing follows it), so the layer gets an
-    # explicit far-future row appended instead.
-    # ------------------------------------------------------------------
-    page = _layer_stream(
-        spark, layers["dwd_page_log"], page_schema
-    ).withWatermark("ts", "0 seconds")
-    jump_stream = jump_detect_stream(page, key="user_id", gap_ms=JUMP_GAP_MS)
-    _run(jump_stream, layers["dwm_user_jump"], ckpt("user_jump_app"))
+def _seal_user_jump(run: _Run) -> None:
+    """UserJumpApp's sentinel user's final pending event can never time
+    out (nothing follows it), so the layer gets an explicit far-future
+    row of its own under the reserved batch_id=-1, written after every
+    real batch (in the ordered posture, its manifest replays last —
+    exactly its watermark-driver role). A one-row pyarrow file: a Spark
+    job here would cost the chain ~2 s."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    # The sentinel row lives under its own reserved batch_id=-1
-    # partition: the layer is batch_id-partitioned now, and a bare
-    # file at the directory root would break partition discovery.
-    jump_sentinel_dir = os.path.join(
-        layers["dwm_user_jump"], "batch_id=-1"
-    )
-    jump_sentinel = os.path.join(jump_sentinel_dir, "part-sentinel.parquet")
-    if not os.path.exists(jump_sentinel):
-        os.makedirs(jump_sentinel_dir, exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array([-1], pa.int64()),
-                    "user_id": pa.array([-1], pa.int64()),
-                    "jump_ts": pa.array(["2030-01-01 00:00:00"], pa.string()),
-                }
-            ),
-            jump_sentinel,
-        )
-        if _manifest_mode():
-            # published AFTER every user_jump batch manifest, so the
-            # far-future sentinel is the LAST batch consumers replay
-            # (mtime-ordered) — exactly its watermark-driver role
-            _write_manifest(layers["dwm_user_jump"], -1)
+    part = os.path.join(run.dir("dwm_user_jump"), "batch_id=-1")
+    path = os.path.join(part, "part-sentinel.parquet")
+    if os.path.exists(path):
+        return
+    os.makedirs(part, exist_ok=True)
+    row = {"event_id": -1, "user_id": -1, "jump_ts": "2030-01-01 00:00:00"}
+    schema = to_arrow_schema(run.schemas["dwm_user_jump"])
+    pq.write_table(pa.Table.from_pylist([row], schema=schema), path)
+    if run.ordered:
+        run.publish_manifest("dwm_user_jump", -1)
 
-    # ------------------------------------------------------------------
-    # DWM job 5 — OrderWideApp: stream-stream interval join of the two
-    # DWD fact layers (J1, band [0, 30d]). The DB sentinels (-1 keys,
-    # 2030 dates) join each other into one far-future wide row that
-    # keeps the layer's event-time horizon at 2030.
-    # ------------------------------------------------------------------
-    def fact_stream(table: str, key_ts: str, alias: str) -> DataFrame:
-        schema = table_schemas[table]
-        return (
-            _layer_stream(spark, layers[f"dwd_{table}"], schema)
-            .withColumn(f"{alias}_ts", ts_as_timestamp(schema, key_ts))
-            .withWatermark(f"{alias}_ts", "0 seconds")
-            .alias(alias)
-        )
 
-    o = fact_stream("order_info", "o_orderdate", "o")
-    l = fact_stream("order_detail", "l_shipdate", "l")
-    wide = interval_join_stream(
-        o,
-        l,
-        on=F.col("o.o_orderkey") == F.col("l.l_orderkey"),
-        left_ts=F.col("o_ts"),
-        right_ts=F.col("l_ts"),
-        lower="0 seconds",
-        upper="30 days",
-    ).select(
-        "o.o_orderkey",
-        "l.l_linenumber",
-        "l.l_partkey",
-        F.date_format("o_ts", "yyyy-MM-dd").alias("order_date"),
-        F.date_format("l_ts", "yyyy-MM-dd").alias("ship_date"),
-        F.round("o.o_totalprice", 2).alias("total_amount"),
-        F.round("l.l_extendedprice", 2).alias("split_amount"),
-    )
-    _run(wide, layers["dwm_order_wide"], ckpt("order_wide_app"))
-
-    # ------------------------------------------------------------------
-    # DWM job 6 — PaymentWideApp: asymmetric band [-7d, +90d] (J2) over
-    # the same DWD fact layers (the reference joins the payment DWD
-    # topic to order_wide; the J2 operator slot is identical).
-    # ------------------------------------------------------------------
-    from gmall_realtime_flink_spark.functions.compat import dec_round
-
-    o = fact_stream("order_info", "o_orderdate", "o")
-    l = fact_stream("order_detail", "l_shipdate", "l")
-    pay = interval_join_stream(
-        o,
-        l,
-        on=F.col("o.o_orderkey") == F.col("l.l_orderkey"),
-        left_ts=F.col("o_ts"),
-        right_ts=F.col("l_ts"),
-        lower="-7 days",
-        upper="90 days",
-    ).select(
-        "o.o_orderkey",
-        "l.l_linenumber",
-        F.date_format("l_ts", "yyyy-MM-dd").alias("callback_date"),
-        dec_round(
-            F.col("l.l_extendedprice") * (1 - F.col("l.l_discount")), 2
-        ).alias("payment_amount"),
-    )
-    _run(pay, layers["dwm_payment_wide"], ckpt("payment_wide_app"))
-
-    # ------------------------------------------------------------------
-    # DWS job 7 — VisitorStatsApp: the U2 4-stream union consumed FROM
-    # THE LAYERS — pv/sv from dwd_page_log, uv from dwm_unique_visit,
-    # uj from dwm_user_jump (VisitorStatsApp.java:80-141) — then the
-    # 10 s keyed tumble (:156-196). Watermark = min over the four
-    # inputs; every input's sentinel rides at 2030 so it never stalls.
-    # ------------------------------------------------------------------
+def _visitor_stats(run: _Run, page, uv, uj) -> DataFrame:
+    """DWS VisitorStatsApp: the U2 4-stream union consumed FROM THE
+    LAYERS — pv/sv from dwd_page_log, uv from dwm_unique_visit, uj from
+    dwm_user_jump (VisitorStatsApp.java:80-141) — then the 10 s keyed
+    tumble (:156-196). Watermark = min over the four inputs; every
+    input's sentinel rides at 2030 so it never stalls."""
+    from gmall_realtime_flink_spark.functions.compat import dec_sum
     from gmall_realtime_flink_spark.operators.union import (
         project_to_skeleton,
         union_streams,
     )
     from gmall_realtime_flink_spark.operators.windows import tumble_agg
-    from gmall_realtime_flink_spark.functions.compat import dec_sum
-
-    zero, zerod = F.lit(0), F.lit(0.0)
 
     def skel(df: DataFrame, **slots) -> DataFrame:
-        skeleton = {
-            "ts": F.col("ts"),
-            "pv_ct": slots.get("pv_ct", zero),
-            "uv_ct": slots.get("uv_ct", zero),
-            "sv_ct": slots.get("sv_ct", zero),
-            "uj_ct": slots.get("uj_ct", zero),
-            "dur": slots.get("dur", zerod),
-        }
+        skeleton = {"ts": F.col("ts")}
+        for c in ("pv_ct", "uv_ct", "sv_ct", "uj_ct"):
+            skeleton[c] = slots.get(c, F.lit(0))
+        skeleton["dur"] = slots.get("dur", F.lit(0.0))
         return project_to_skeleton(df, skeleton)
 
-    page = _layer_stream(
-        spark, layers["dwd_page_log"], page_schema
-    ).withWatermark("ts", "0 seconds")
-    pv = skel(
-        page.filter(F.col("event_type") == "view"),
-        pv_ct=F.lit(1),
-        dur=F.col("value"),
-    )
-    sv = skel(
-        page.filter(F.col("event_type") == "signup"), sv_ct=F.lit(1)
-    )
-    uv = skel(
-        _layer_stream(
-            spark,
-            layers["dwm_unique_visit"],
-            uv_stream.schema,
-            ts_col="first_ts",
-        ),
-        uv_ct=F.lit(1),
-    )
-    uj = skel(
-        _layer_stream(
-            spark,
-            layers["dwm_user_jump"],
-            jump_stream.schema,
-            ts_col="jump_ts",
-        ),
-        uj_ct=F.lit(1),
-    )
-    vs = tumble_agg(
-        union_streams([pv, uv, sv, uj]),
+    one = F.lit(1)
+    branches = [
+        skel(page.filter(F.col("event_type") == "view"), pv_ct=one, dur=F.col("value")),
+        skel(uv, uv_ct=one),
+        skel(page.filter(F.col("event_type") == "signup"), sv_ct=one),
+        skel(uj, uj_ct=one),
+    ]
+    counts = [F.sum(c).alias(c) for c in ("pv_ct", "uv_ct", "sv_ct", "uj_ct")]
+    return tumble_agg(
+        union_streams(branches),
         ts_col="ts",
         duration="10 seconds",
         keys=[],
-        aggs=[
-            F.sum("pv_ct").alias("pv_ct"),
-            F.sum("uv_ct").alias("uv_ct"),
-            F.sum("sv_ct").alias("sv_ct"),
-            F.sum("uj_ct").alias("uj_ct"),
-            dec_sum("dur").alias("dur_sum"),
-        ],
+        aggs=[*counts, dec_sum("dur").alias("dur_sum")],
     ).select("stt", "edt", "pv_ct", "uv_ct", "sv_ct", "uj_ct", "dur_sum")
-    _run(vs, layers["dws_visitor_stats"], ckpt("visitor_stats_app"))
 
-    # ------------------------------------------------------------------
-    # DWS job 8 — ProductStatsApp: the U1 7-branch union pipeline over
-    # the page_log layer (ProductStatsApp.java:241-316).
-    # ------------------------------------------------------------------
-    from gmall_realtime_flink_spark.plans.gmall import (
-        product_stats_union_core,
-    )
 
-    page = _layer_stream(
-        spark, layers["dwd_page_log"], page_schema
-    ).withWatermark("ts", "0 seconds")
-    _run(
-        product_stats_union_core(page),
-        layers["dws_product_stats"],
-        ckpt("product_stats_app"),
-    )
+def _product_stats(run: _Run, page: DataFrame) -> DataFrame:
+    """DWS ProductStatsApp: the U1 7-branch union pipeline over the
+    page_log layer (ProductStatsApp.java:241-316)."""
+    from gmall_realtime_flink_spark.plans.gmall import product_stats_union_core
 
-    # ------------------------------------------------------------------
-    # DWS job 9 — ProvinceStatsSqlApp: the Flink-SQL app shape over the
-    # dwd_order_info layer (ProvinceStatsSqlApp.java:45-61) — a
-    # watermarked stream registered as a view, day-tumble SQL agg with
-    # streaming-safe exact distinct, static dims broadcast-joined.
-    # ------------------------------------------------------------------
-    oi = (
-        _layer_stream(spark, layers["dwd_order_info"], orders_schema)
-        .withColumn("o_ts", ts_as_timestamp(orders_schema, "o_orderdate"))
-        .withWatermark("o_ts", "0 seconds")
-    )
-    province = spark.sql(
+    return product_stats_union_core(page)
+
+
+def _province_stats(run: _Run, order_info: DataFrame) -> DataFrame:
+    """DWS ProvinceStatsSqlApp: the Flink-SQL app shape over the
+    dwd_order_info layer (ProvinceStatsSqlApp.java:45-61) — a
+    watermarked stream bound as a view, day-tumble SQL agg with
+    streaming-safe exact distinct, static dims broadcast-joined."""
+    oi = order_info.withColumn(
+        "o_ts", jobs.ts_as_timestamp(order_info.schema, "o_orderdate")
+    ).withWatermark("o_ts", "0 seconds")
+    return run.spark.sql(
         """
         SELECT date_format(window.start, 'yyyy-MM-dd HH:mm:ss') AS stt,
                date_format(window.end, 'yyyy-MM-dd HH:mm:ss') AS edt,
@@ -961,38 +539,148 @@ def _build_warehouse_layers_impl(
         GROUP BY window(o_ts, '1 day'), n.n_name
         """,
         dwd_order_info=oi,
-        dim_customer=load(spark, sf_dir, "customer"),
-        dim_nation=load(spark, sf_dir, "nation"),
+        dim_customer=load(run.spark, run.sf_dir, "customer"),
+        dim_nation=load(run.spark, run.sf_dir, "nation"),
     )
-    _run(province, layers["dws_province_stats"], ckpt("province_stats_app"))
 
-    # ------------------------------------------------------------------
-    # DWS job 10 — KeywordStatsApp: view events from the page_log layer
-    # joined to the search text's keywords (tokenized once per document,
-    # doc_keywords), 10 s tumble per keyword (KeywordStatsApp.java:56-88).
-    # ------------------------------------------------------------------
-    page = _layer_stream(
-        spark, layers["dwd_page_log"], page_schema
-    ).withWatermark("ts", "0 seconds")
-    from gmall_realtime_flink_spark.plans.gmall import doc_keywords
 
-    doc_kw = doc_keywords(load(spark, sf_dir, "documents"))
-    views = page.filter(F.col("event_type") == "view").withColumn(
-        "k", F.get_json_object("props", "$.k").cast("bigint")
+_FACTS = ("dwd_order_info", "dwd_order_detail")
+_PAGE = ("dwd_page_log",)
+
+# The 10 jobs in layer-DAG order (reference app in the comment). The
+# query names key every `topology.<job>.*` perfbench metric and the
+# checkpoint names are what a restart on an existing base resumes
+# from: neither may change.
+JOBS = (
+    # DWD BaseLogAPP (RT/app/dwd/BaseLogAPP.java:61-193): 3-way split
+    Job("base_log_app", "base_log_app", ("ods_log",), lambda run, ev: ev,
+        ("dwd_page_log", "dwd_start_log", "dwd_display_log"), _split_log),
+    # DWD BaseDBApp (RT/app/dwd/BaseDBApp.java:63-113): CDC routing
+    Job("base_db_app", "base_db_app", ("ods_order_info", "ods_order_detail"),
+        _cdc_envelope, _FACTS, _route_cdc),
+    # DWM UniqueVisitApp (UniqueVisitApp.java:56-124): ST2 keyed dedup
+    # state; the sentinel user's UV row (visit 2030) drives DWS
+    Job("dwm_unique_visit", "unique_visit_app", _PAGE,
+        lambda run, page: uv_dedup_stream(page, key="user_id"),
+        ("dwm_unique_visit",)),
+    # DWM UserJumpApp (UserJumpApp.java:88-158): CEP bounce with
+    # event-time timeout
+    Job("dwm_user_jump", "user_jump_app", _PAGE,
+        lambda run, page: jump_detect_stream(
+            page, key="user_id", gap_ms=JUMP_GAP_MS
+        ),
+        ("dwm_user_jump",), finish=_seal_user_jump),
+    # DWM OrderWideApp (OrderWideApp.java:140-152): J1 band [0, 30d]
+    Job("dwm_order_wide", "order_wide_app", _FACTS,
+        lambda run, o, l: jobs.order_wide(o, l), ("dwm_order_wide",)),
+    # DWM PaymentWideApp (PaymentWideApp.java:116-131): J2 band
+    # [-7d, +90d] over the same DWD fact layers
+    Job("dwm_payment_wide", "payment_wide_app", _FACTS,
+        lambda run, o, l: jobs.payment_wide(o, l), ("dwm_payment_wide",)),
+    Job("dws_visitor_stats", "visitor_stats_app",
+        ("dwd_page_log", "dwm_unique_visit", "dwm_user_jump"),
+        _visitor_stats, ("dws_visitor_stats",)),
+    Job("dws_product_stats", "product_stats_app", _PAGE, _product_stats,
+        ("dws_product_stats",)),
+    Job("dws_province_stats", "province_stats_app", ("dwd_order_info",),
+        _province_stats, ("dws_province_stats",)),
+    # DWS KeywordStatsApp (KeywordStatsApp.java:56-88)
+    Job("dws_keyword_stats", "keyword_stats_app", _PAGE,
+        lambda run, page: jobs.keyword_stats(
+            page, load(run.spark, run.sf_dir, "documents")
+        ),
+        ("dws_keyword_stats",)),
+)
+
+
+def _write_batch(run: _Run, job: Job, batch: DataFrame, batch_id: int) -> None:
+    """Write one micro-batch to every output layer of `job`. A fan-out
+    job persists the batch once and runs its per-layer writes as
+    CONCURRENT Spark jobs (one thread each): serially, each write's
+    single-task tail (a small batch's parquet encode) leaves the other
+    cores idle, and the writes' compute+encode phases simply sum;
+    from threads, layer B's compute overlaps layer A's encode — same
+    jobs, same outputs, wall = max not sum. Exceptions re-raise in the
+    caller (future.result), so foreachBatch failure semantics hold."""
+    if job.route is None:
+        run.write(job.outputs[0], batch, batch_id)
+        return
+    batch.persist()
+    try:
+        with ThreadPoolExecutor(max_workers=len(job.outputs)) as ex:
+            futs = [
+                ex.submit(run.write, layer, job.route(run, batch, layer), batch_id)
+                for layer in job.outputs
+            ]
+            for f in futs:
+                f.result()
+    finally:
+        batch.unpersist()
+
+
+def _run_job(run: _Run, job: Job) -> None:
+    """Start one job's query, run it over everything available, then
+    seed its empty output layers and finish it."""
+    stream = job.transform(run, *[run.stream(name) for name in job.inputs])
+    for layer in job.outputs:
+        out = stream if job.route is None else job.route(run, stream, layer)
+        run.schemas[layer] = out.schema
+    (
+        stream.writeStream.foreachBatch(
+            lambda batch, batch_id: _write_batch(run, job, batch, batch_id)
+        )
+        .queryName(job.query)
+        .option("checkpointLocation", os.path.join(run.base, "ckpt", job.ckpt))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
-    words = views.join(
-        F.broadcast(doc_kw), views["k"] == doc_kw["doc_id"]
-    ).select("ts", "keyword")
-    kw = tumble_agg(
-        words,
-        ts_col="ts",
-        duration="10 seconds",
-        keys=["keyword"],
-        aggs=[F.count(F.lit(1)).alias("ct")],
-    ).select("stt", "edt", "keyword", "ct", F.lit("SEARCH").alias("source"))
-    _run(kw, layers["dws_keyword_stats"], ckpt("keyword_stats_app"))
+    for layer in job.outputs:
+        run.seed(layer)
+    if job.finish is not None:
+        job.finish(run)
 
-    return layers
+
+def build_warehouse_layers(
+    spark: SparkSession,
+    sf_dir: str,
+    base: str | None = None,
+    ordered_slices: int = 0,
+) -> dict[str, str]:
+    """Run the full 10-job chained topology; returns layer name -> dir.
+
+    `ordered_slices` selects the replay posture: 0 (default) is bulk,
+    N > 0 is ordered manifest replay over N ODS slices (_Run).
+
+    Execution order follows the layer DAG; every job has its own
+    checkpoint directory, so any job can restart from its offsets
+    exactly as the independent reference jobs do. Re-invoking with the
+    SAME `base` is a full-warehouse restart: every job resumes from
+    its committed offsets, finds no new input, and writes nothing —
+    restart idempotency of the whole DAG, pinned by
+    tests/test_topology.py::test_topology_rerun_is_idempotent. A
+    CRASHED run is also safe to restart: every layer sink overwrites
+    its own batch_id dir (_Run.write), so a micro-batch replayed after
+    a crash-between-write-and-offset-commit replaces its own output
+    instead of duplicating it.
+
+    The latency listener's detach runs in a finally so a crash mid-DAG
+    (e.g. the crash-injection test) can't leave it registered on the
+    shared SparkSession.
+    """
+    if ordered_slices < 0:
+        raise ValueError(f"ordered_slices must be >= 0, got {ordered_slices}")
+    if base is None:
+        base = tempfile.mkdtemp(prefix="warehouse_")
+    latency = _BatchLatencyListener()
+    latency.attach(spark)
+    try:
+        run = _Run(spark, sf_dir, base, ordered_slices)
+        for job in JOBS:
+            _run_job(run, job)
+    finally:
+        latency.detach_into(spark, LAYER_BATCH_MS)
+    return {layer: run.dir(layer) for job in JOBS for layer in job.outputs}
 
 
 # One topology run serves all four chained DWS registry entries (the

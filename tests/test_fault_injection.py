@@ -117,15 +117,17 @@ def test_results_identical_under_task_retry(sf_dir):
     assert "injected failure" in (proc.stderr + proc.stdout)
 
 
-def test_admission_sink_crash_between_write_and_commit(spark, sf_dir, tmp_path):
+def test_admission_sink_crash_between_write_and_commit(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """The streaming near-dup admission sink claims effectively-once
-    via batch_id-partitioned dynamic overwrite. Detonate the claim:
+    via its batch_id dir overwrite. Detonate the claim:
     crash AFTER the batch's parquet commit but BEFORE the source
     offset commits (the at-least-once window), restart against the
     SAME checkpoint/sink dirs, and require the final admitted set to
     equal a clean run's — the replayed batch must REPLACE its own
     partition, not append duplicates."""
-    from gmall_realtime_flink_spark.streaming import jobs
+    from gmall_realtime_flink_spark.streaming import jobs, sinks
     from pyspark.errors import StreamingQueryException
 
     clean = sorted(
@@ -141,12 +143,10 @@ def test_admission_sink_crash_between_write_and_commit(spark, sf_dir, tmp_path):
         detonated["n"] += 1
         raise RuntimeError("injected crash between write and commit")
 
-    jobs.ADMISSION_FAULT = bomb
-    try:
-        with pytest.raises(StreamingQueryException):
-            jobs.streaming_dedup_minhash(spark, sf_dir, base=base)
-    finally:
-        jobs.ADMISSION_FAULT = None
+    monkeypatch.setattr(sinks, "FAULT_AFTER_WRITE", bomb)
+    with pytest.raises(StreamingQueryException):
+        jobs.streaming_dedup_minhash(spark, sf_dir, base=base)
+    monkeypatch.undo()
     assert detonated["n"] == 1
     # data IS on disk from the crashed attempt (that's the hazard)
     import glob
@@ -154,14 +154,14 @@ def test_admission_sink_crash_between_write_and_commit(spark, sf_dir, tmp_path):
     assert glob.glob(os.path.join(base, "admitted", "batch_id=*/*.parquet"))
 
     # restart: offsets were never committed, the batch REPLAYS, and
-    # dynamic overwrite replaces its own partition
+    # the overwrite replaces its own batch_id dir
     out = jobs.streaming_dedup_minhash(spark, sf_dir, base=base)
     replayed = sorted(r["doc_id"] for r in out.collect())
     assert replayed == clean
 
 
 def test_substring_stream_restart_is_idempotent(spark, sf_dir, tmp_path):
-    """streaming_dedup_substring's sink uses the same batch_id dynamic
+    """streaming_dedup_substring's sink uses the same batch_id dir
     overwrite as the admission sink; a rerun against the SAME base
     (checkpoint + sink dirs) must find nothing new to process and
     leave the span set byte-identical — restart idempotency."""

@@ -11,9 +11,11 @@ import io
 import os
 import tempfile
 import threading
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql.conf import RuntimeConfig
 
 from gmall_realtime_flink_spark import catalog, session
@@ -134,19 +136,64 @@ def test_concurrent_sql_reads_resolve_their_own_corpus(spark, tmp_path):
             assert r == want[key], f"{key} resolved another corpus's tables"
 
 
+def _route_config_reload(spark, sf_dir, tmp_path) -> int:
+    """streaming_route_config_reload over events and a config kept
+    outside the watched temp dir; returns the routed row count."""
+    from gmall_realtime_flink_spark.streaming import jobs
+
+    inputs = tmp_path / "route_inputs"
+    if not inputs.exists():
+        (inputs / "events").mkdir(parents=True)
+        os.symlink(
+            os.path.abspath(os.path.join(sf_dir, "events.parquet")),
+            inputs / "events" / "part-000.parquet",
+        )
+        spark.createDataFrame(
+            [("view", "insert", "dwd_page_log", "k")],
+            ["source_table", "operate_type", "sink_table", "sink_columns"],
+        ).write.parquet(str(inputs / "config"))
+    out = str(tmp_path / "routed" / uuid.uuid4().hex)
+    jobs.streaming_route_config_reload(
+        spark, str(inputs / "events"), str(inputs / "config"), out
+    )
+    return spark.read.parquet(out).count()
+
+
+def _reader(entry: str):
+    if entry == "streaming_route_config_reload":
+        return _route_config_reload
+    return lambda spark, sf_dir, _: REGISTRY[entry].builder(spark, sf_dir).count()
+
+
+@pytest.mark.parametrize(
+    "entries, reads",
+    [
+        (("streaming_unique_visit", "streaming_uv_dropdup"), 200),
+        (
+            (
+                "streaming_cdc_route",
+                "streaming_dedup_minhash",
+                "streaming_dedup_semantic",
+                "streaming_dedup_substring",
+                "streaming_route_config_reload",
+            ),
+            10,
+        ),
+    ],
+    ids=["memory_sink", "file_sinks"],
+)
 def test_repeated_streaming_reads_leave_no_tables_or_temp_dirs(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, tmp_path, monkeypatch, entries, reads
 ):
-    """200 streaming_* reads: each stages its input, checkpoints and
-    fills a memory sink, and none of it may outlive the read — the
-    session's table list and the temp-dir count stay flat."""
+    """Repeated streaming_* reads: each stages its input, checkpoints
+    and fills a memory or file sink, and none of it may outlive the
+    read — the session's table list and the temp-dir count stay flat."""
     tmp = tmp_path / "tmp"
     tmp.mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(tmp))
-    entries = ("streaming_unique_visit", "streaming_uv_dropdup")
     tables = {t.name for t in spark.catalog.listTables()}
-    for i in range(200):
+    for i in range(reads):
         entry = entries[i % len(entries)]
-        assert REGISTRY[entry].builder(spark, sf_dir).count() > 0
+        assert _reader(entry)(spark, sf_dir, tmp_path) > 0
         assert os.listdir(tmp) == [], (i, entry)
         assert {t.name for t in spark.catalog.listTables()} == tables

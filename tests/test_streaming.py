@@ -856,9 +856,7 @@ def test_sorted_split_mtimes_strictly_increase(sf_dir):
         stage_table_sorted_split,
     )
 
-    out = stage_table_sorted_split(
-        sf_dir, "orders", "o_orderdate", 8, lambda row: None
-    )
+    out = stage_table_sorted_split(sf_dir, "orders", 8)
     try:
         slices = sorted(glob.glob(os.path.join(out, "part-[0-9][0-9][0-9].parquet")))
         sentinel = [p for p in slices if p.endswith("999-sentinel.parquet")]

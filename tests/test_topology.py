@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from gmall_realtime_flink_spark.catalog import load
 from gmall_realtime_flink_spark.plans.registry import REGISTRY
+from gmall_realtime_flink_spark.streaming import sinks
 from gmall_realtime_flink_spark.streaming import topology as tp
 
 
@@ -173,12 +174,14 @@ def test_topology_rerun_is_idempotent(spark, sf_dir, layers):
     assert after == before
 
 
-def test_topology_crash_between_write_and_commit(spark, sf_dir, layers):
+def test_topology_crash_between_write_and_commit(
+    spark, sf_dir, layers, monkeypatch
+):
     """Crash-inject the WHOLE DAG at its weakest point: a layer job is
     killed after its parquet data committed but before the streaming
     checkpoint committed the source offset (the at-least-once window).
-    On restart the micro-batch is replayed; the batch_id-partition
-    dynamic overwrite must replace the orphaned data instead of
+    On restart the micro-batch is replayed; the batch_id dir overwrite
+    must replace the orphaned data instead of
     appending a duplicate, and every downstream layer must come out
     identical to a clean run — the whole-topology effectively-once
     claim, previously only tested per-sink and for clean restarts."""
@@ -219,12 +222,10 @@ def test_topology_crash_between_write_and_commit(spark, sf_dir, layers):
                 "injected crash between parquet write and offset commit"
             )
 
-    tp.FAULT_AFTER_WRITE = bomb
-    try:
-        with pytest.raises(Exception):
-            tp.build_warehouse_layers(spark, sf_dir, base=base)
-    finally:
-        tp.FAULT_AFTER_WRITE = None
+    monkeypatch.setattr(sinks, "FAULT_AFTER_WRITE", bomb)
+    with pytest.raises(Exception):
+        tp.build_warehouse_layers(spark, sf_dir, base=base)
+    monkeypatch.undo()
     assert state["detonated"], "fault hook never fired"
 
     # restart the DAG against the same base: completed jobs find no new
@@ -238,7 +239,9 @@ def test_layer_batch_latency_percentiles_captured(spark, sf_dir, layers):
     """Every topology job reports its per-batch trigger latency
     distribution (p50/p95/max ms) via the StreamingQueryListener —
     wall seconds say what a layer costs, batch percentiles say what a
-    consumer waits, and the 10 s-tumble SLA claim needs the latter."""
+    consumer waits, and the 10 s-tumble SLA claim needs the latter.
+    No job's stateful operators drop a row behind their watermark: in
+    the bulk posture every input arrives whole or in event-time order."""
     stats = tp.LAYER_BATCH_MS
     expected = {
         "base_log_app",
@@ -257,33 +260,31 @@ def test_layer_batch_latency_percentiles_captured(spark, sf_dir, layers):
         s = stats[job]
         assert s["n"] >= 1, (job, s)
         assert 0 < s["p50_ms"] <= s["p95_ms"] <= s["max_ms"], (job, s)
+        assert s["dropped_by_watermark"] == 0, (job, s)
 
 
-def test_topology_ordered_manifest_mode_matches_batch(
-    spark, sf_dir, monkeypatch, tmp_path
-):
+def test_topology_ordered_manifest_mode_matches_batch(spark, sf_dir, tmp_path):
     """The ordered-manifest contract (VERDICT r12 item 3): writers keep
     full task parallelism (multi-file batch partitions) and publish
     per-batch ordered manifests; consumers trigger one whole batch at
     a time in batch order. The DWS outputs must equal the batch
-    registry forms bit-for-bit — the same equality the legacy
-    one-file-per-batch contract guaranteed, now without the
-    single-task parquet-encode tail."""
+    registry forms bit-for-bit, and no job may drop a row behind its
+    watermark — the silent loss an unordered replay of multi-file
+    batches would cause."""
     import os
 
     from gmall_realtime_flink_spark.streaming.jobs import SENTINEL_CUTOFF
 
-    monkeypatch.setenv("SPARK_GRAFT_TOPOLOGY_FILES_PER_TRIGGER", "1")
-    monkeypatch.setenv("SPARK_GRAFT_TOPOLOGY_ORDERED_SLICES", "4")
-    monkeypatch.setenv("SPARK_GRAFT_TOPOLOGY_MANIFESTS", "1")
-    monkeypatch.setenv("SPARK_GRAFT_TOPOLOGY_WRITER_TASKS", "4")
     base = tmp_path / "wh"
     base.mkdir()
-    layers = tp.build_warehouse_layers(spark, sf_dir, base=str(base))
+    layers = tp.build_warehouse_layers(
+        spark, sf_dir, base=str(base), ordered_slices=4
+    )
+    for job, stats in tp.LAYER_BATCH_MS.items():
+        assert stats["dropped_by_watermark"] == 0, (job, stats)
 
     # every layer carries manifests, and at least one batch partition
-    # really is multi-file (the parallelism the manifest unlocks —
-    # under the legacy contract this would corrupt the replay)
+    # really is multi-file (the parallelism the manifest unlocks)
     multi = 0
     for d in layers.values():
         assert os.path.isdir(os.path.join(d, "_manifests")), d

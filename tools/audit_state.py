@@ -106,31 +106,13 @@ def main() -> None:
     audits.append(summarize("tumble_agg_10s", run_audited(agg, spark)))
 
     # ST4: stream-stream interval join state (orders x lineitem)
-    orders_schema = jobs.warehouse_stream_schema(spark, sf_dir, "orders")
-    lineitem_schema = jobs.warehouse_stream_schema(spark, sf_dir, "lineitem")
-    o = (
-        spark.readStream.schema(orders_schema)
-        .parquet(jobs.stage_table_dir(sf_dir, "orders"))
-        .withColumn("o_ts", jobs.ts_as_timestamp(orders_schema, "o_orderdate"))
-        .withWatermark("o_ts", "0 seconds")
-        .alias("o")
+    dirs = [
+        jobs.stage_table_dir(sf_dir, "orders"),
+        jobs.stage_table_dir(sf_dir, "lineitem"),
+    ]
+    joined = jobs.order_wide(*jobs.fact_streams(spark, sf_dir, *dirs)).select(
+        "o_orderkey", "l_linenumber"
     )
-    l = (
-        spark.readStream.schema(lineitem_schema)
-        .parquet(jobs.stage_table_dir(sf_dir, "lineitem"))
-        .withColumn("l_ts", jobs.ts_as_timestamp(lineitem_schema, "l_shipdate"))
-        .withWatermark("l_ts", "0 seconds")
-        .alias("l")
-    )
-    joined = jobs.interval_join_stream(
-        o,
-        l,
-        on=F.col("o.o_orderkey") == F.col("l.l_orderkey"),
-        left_ts=F.col("o_ts"),
-        right_ts=F.col("l_ts"),
-        lower="0 seconds",
-        upper="30 days",
-    ).select("o.o_orderkey", "l.l_linenumber")
     audits.append(summarize("interval_join_30d", run_audited(joined, spark)))
 
     for a in audits:
