@@ -44,9 +44,10 @@ def streaming_visitor_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id, strftime(ts, '%Y-%m-%d')
     """,
-    doc="ST2 streaming: per-key seen-dates state dedup "
-    "(RT/app/dwm/UniqueVisitApp.java:66-124), run bounded; emits the "
-    "first event per (user, day).",
+    doc="ST2 streaming: watermarked 1-day window keeping min(ts, event_id) "
+    "per user (RT/app/dwm/UniqueVisitApp.java:66-124), run bounded with a "
+    "sentinel that closes the last day; emits the first event per "
+    "(user, day).",
     tags=("streaming", "stateful", "dedup"),
 )
 def streaming_unique_visit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,9 +66,10 @@ def streaming_unique_visit(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE next_ts IS NULL
        OR date_diff('millisecond', ts, next_ts) > 600000
     """,
-    doc="ST3 streaming: CEP bounce detection via event-time timers "
-    "(applyInPandasWithState + EventTimeTimeout, "
-    "RT/app/dwm/UserJumpApp.java:88-158), run bounded with a sentinel "
+    doc="ST3 streaming: CEP bounce detection as a session window per user "
+    "keeping each session's last event — the events with no follow-up "
+    "within the gap, emitted once the watermark passes ts + gap "
+    "(RT/app/dwm/UserJumpApp.java:88-158), run bounded with a sentinel "
     "watermark-advancer; oracle = the lead() batch form.",
     tags=("streaming", "stateful", "cep"),
 )

@@ -6,13 +6,13 @@ returns the collected result as a batch DataFrame — the streaming
 analogue of running the batch operator, used by both the driver
 correctness gate and the parity tests.
 
-A stream, by definition, never ends — so ST3's event-time timers for
-the final pending event per key would never fire on bounded input.
-`events_with_sentinel` appends one far-future event (user_id = -1) so
-the watermark passes every real timer; the sentinel's own pending
-state is filtered from the result. Spark's no-data micro-batch
-(`spark.sql.streaming.noDataMicroBatches.enabled`, default on) then
-fires the timers before the query stops.
+A stream, by definition, never ends — so ST3's timeout for the final
+event per key would never fire, and ST2's last day window never close,
+on bounded input. `events_with_sentinel` appends one far-future event
+(user_id = -1) so the watermark passes every real timeout and day; the
+sentinel's own rows are filtered from the result. Spark's no-data
+micro-batch (`spark.sql.streaming.noDataMicroBatches.enabled`, default
+on) then emits them before the query stops.
 """
 
 from __future__ import annotations
@@ -152,13 +152,10 @@ SENTINEL_TS_NS = 1_893_456_000_000_000_000  # 2030-01-01 UTC
 SENTINEL_CUTOFF = "2029-01-01"
 
 
-def events_with_sentinel(
-    spark: SparkSession, sf_dir: str, gap_ms: int
-) -> str:
-    """Stage an input dir = events.parquet (symlinked) + sentinel events
-    far past the max event time, so every real ST3 timer fires and
-    every real window closes.
-    """
+def fill_events_dir(out: str, sf_dir: str, gap_ms: int) -> None:
+    """Stage events.parquet (symlinked) + sentinel events far past the
+    max event time into the existing dir `out`, so every real ST3
+    timeout fires and every real window closes."""
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     ts_col = pq.read_table(src, columns=["ts"])["ts"]
     ts_type = ts_col.type
@@ -171,13 +168,20 @@ def events_with_sentinel(
         max_ns = raw_max * unit_mul
     else:
         max_ns = raw_max  # legacy layout: already nanos
-    tmp = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(src, os.path.join(tmp, "part-000.parquet"))
+    os.symlink(src, os.path.join(out, "part-000.parquet"))
     write_sentinel_file(
-        os.path.join(tmp, "part-001-sentinel.parquet"),
+        os.path.join(out, "part-001-sentinel.parquet"),
         max(max_ns + 2 * gap_ms * 1_000_000, SENTINEL_TS_NS),
         ts_type=ts_type,
     )
+
+
+def events_with_sentinel(
+    spark: SparkSession, sf_dir: str, gap_ms: int
+) -> str:
+    """fill_events_dir into a fresh temp dir (the caller removes it)."""
+    tmp = tempfile.mkdtemp(prefix="events_stream_")
+    fill_events_dir(tmp, sf_dir, gap_ms)
     return tmp
 
 
@@ -191,12 +195,13 @@ def streaming_visitor_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def streaming_unique_visit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST2 under Structured Streaming."""
-    path = events_path(sf_dir)
+    """ST2 under Structured Streaming; the sentinel closes the last day."""
+    path = events_with_sentinel(spark, sf_dir, gap_ms=0)
     events = stream_events(spark, path)
-    return run_bounded(
+    out = run_bounded(
         uv_dedup_stream(events, key="user_id"), spark, inputs=[path]
     )
+    return out.filter(~F.col("user_id").eqNullSafe(-1))
 
 
 def streaming_user_jump(
@@ -239,13 +244,17 @@ def ts_as_timestamp(raw_schema: T.StructType, name: str):
     return F.col(name).cast("timestamp")
 
 
+def _link_table(out: str, sf_dir: str, table: str) -> None:
+    os.symlink(
+        os.path.abspath(os.path.join(sf_dir, f"{table}.parquet")),
+        os.path.join(out, "part-000.parquet"),
+    )
+
+
 def stage_table_dir(sf_dir: str, table: str) -> str:
     """Symlink one parquet table into a fresh streaming input dir."""
     tmp = tempfile.mkdtemp(prefix=f"{table}_stream_")
-    os.symlink(
-        os.path.abspath(os.path.join(sf_dir, f"{table}.parquet")),
-        os.path.join(tmp, "part-000.parquet"),
-    )
+    _link_table(tmp, sf_dir, table)
     return tmp
 
 
@@ -277,22 +286,28 @@ def _write_fact_sentinel(sf_dir: str, table: str, key: int, path: str) -> None:
     )
 
 
-def stage_table_with_sentinel(sf_dir: str, table: str, key: int = -1) -> str:
-    """stage_table_dir + one far-future sentinel row
-    (_write_fact_sentinel) so outer-join / timer state flushes before
-    the bounded stream stops."""
-    tmp = stage_table_dir(sf_dir, table)
+def fill_table_dir(out: str, sf_dir: str, table: str, key: int = -1) -> None:
+    """Stage one table (symlinked) + one far-future sentinel row
+    (_write_fact_sentinel) into the existing dir `out`, so outer-join /
+    timer state flushes before the bounded stream stops."""
+    _link_table(out, sf_dir, table)
     _write_fact_sentinel(
-        sf_dir, table, key, os.path.join(tmp, "part-001-sentinel.parquet")
+        sf_dir, table, key, os.path.join(out, "part-001-sentinel.parquet")
     )
+
+
+def stage_table_with_sentinel(sf_dir: str, table: str, key: int = -1) -> str:
+    """fill_table_dir into a fresh temp dir (the caller removes it)."""
+    tmp = tempfile.mkdtemp(prefix=f"{table}_stream_")
+    fill_table_dir(tmp, sf_dir, table, key)
     return tmp
 
 
-def stage_table_sorted_split(
-    sf_dir: str, table: str, n_files: int, key: int = -1
-) -> str:
-    """stage_table_with_sentinel's ORDERED form: the table is written
-    as `n_files` event-time-sorted parquet slices (strictly increasing
+def fill_sorted_split_dir(
+    out: str, sf_dir: str, table: str, n_files: int, key: int = -1
+) -> None:
+    """fill_table_dir's ORDERED form: the table is written into `out` as
+    `n_files` event-time-sorted parquet slices (strictly increasing
     mtimes, so the file source consumes them in time order) plus the
     far-future sentinel last. This is the monotone-event-time contract
     a per-key-ordered Kafka topic provides: a stream-stream join's
@@ -305,7 +320,6 @@ def stage_table_sorted_split(
     back-to-back writes can tie and replay out of order, silently
     voiding the monotone-event-time contract."""
     ts_col = FACT_SENTINEL_COLS[table][1]
-    out = tempfile.mkdtemp(prefix=f"{table}_ordered_")
     t = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
     t = t.take(pc.sort_indices(t, sort_keys=[(ts_col, "ascending")]))
     per = (t.num_rows + n_files - 1) // n_files
@@ -320,7 +334,6 @@ def stage_table_sorted_split(
     sp = os.path.join(out, "part-999-sentinel.parquet")
     _write_fact_sentinel(sf_dir, table, key, sp)
     os.utime(sp, (base + n_files + 1,) * 2)
-    return out
 
 
 def fact_streams(
@@ -774,13 +787,15 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_uv_dropdup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST2 via the built-in streaming dedup operator: dropDuplicates on
     (user_id, visit_date) — the idiomatic Spark form SURVEY §2.8 names
-    next to the exact-TTL applyInPandasWithState version
-    (`state.uv_dedup_stream`). Output is the distinct key set (which
-    physical row is kept is arrival-order-dependent, so only the keys
-    are emitted — deterministic under any partitioning). State
-    eviction note: built-in dedup state evicts only when the
-    watermarked event-time column is part of the key; the exact-TTL
-    variant is the production path for day-bucketed keys."""
+    next to the day-window aggregation (`state.uv_dedup_stream`).
+    Output is the distinct key set (which physical row is kept is
+    arrival-order-dependent, so only the keys are emitted —
+    deterministic under any partitioning). State eviction note:
+    built-in dedup state evicts only when the watermarked event-time
+    column is part of the key; the day-window aggregation, which keeps
+    the exact first (ts, event_id) and evicts each day once the
+    watermark passes it, is the production path for day-bucketed
+    keys."""
     path = events_with_sentinel(spark, sf_dir, gap_ms=0)
     events = stream_events(spark, path)
     pairs = events.withColumn("visit_date", F.date_format("ts", "yyyy-MM-dd"))

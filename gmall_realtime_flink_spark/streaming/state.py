@@ -1,21 +1,32 @@
 """Keyed-state streaming operators (SURVEY §2.8 ST1/ST2/ST3).
 
-`applyInPandasWithState` re-expressions of the reference's Flink
-RichFunction/CEP operators. Each has a batch-exact window-function
-analogue in operators/stateful.py; tests/test_streaming.py asserts the
-two produce identical results on bounded input (the equality the
-reference never tests — SURVEY §5).
+Streaming re-expressions of the reference's Flink RichFunction/CEP
+operators. Each has a batch-exact window-function analogue in
+operators/stateful.py; tests/test_streaming.py asserts the two produce
+identical results on bounded input (the equality the reference never
+tests — SURVEY §5).
+
+- ST1 visitor repair: `applyInPandasWithState` with the first visit
+  date as per-key state (no warehouse chain job uses it).
+- ST2 daily UV dedup: a watermarked 1-day tumble per key keeping the
+  first (ts, event_id) — a built-in JVM aggregation.
+- ST3 bounce detection: a session window per key (sessions split at
+  every gap wider than the CEP `within`) keeping each session's last
+  event — a built-in JVM aggregation.
+
+The two warehouse-chain operators (ST2, ST3) are declarative, so the
+engine makes them incremental and no Python worker runs them.
 
 Scale notes:
-- grouping key = the entity id (user/mid), so state is hash-partitioned
-  exactly like Flink's keyBy; the RocksDB state-store provider
-  (session.py) keeps it off-heap and spillable at 100 TB key counts;
-- per-key state is O(1): a first-visit date (ST1), a bounded set of
-  visit dates (ST2 — the reference's 1-day TTL bounds it to ~1 entry;
-  eviction of dates older than the watermark keeps it bounded here),
-  one pending event (ST3);
-- rows cross the Python boundary as Arrow batches (vectorized), not
-  pickled rows.
+- grouping key = the entity id (user/mid), so state is
+  hash-partitioned exactly like Flink's keyBy; the RocksDB state-store
+  provider (session.py) keeps it off-heap and spillable at 100 TB key
+  counts;
+- state is bounded by the watermark: one first-visit date per key
+  (ST1), one (ts, event_id) per key and open day (ST2 — the
+  reference's 1-day TTL is the window's eviction), one row per
+  session the watermark has not closed yet (ST3; one per key in a
+  steady stream).
 """
 
 from __future__ import annotations
@@ -24,9 +35,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-TS_FMT = "%Y-%m-%d %H:%M:%S"
+TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
 def _concat_sorted(pdfs: Iterator[pd.DataFrame], by: list[str]) -> pd.DataFrame:
@@ -83,50 +95,24 @@ def repair_is_new_stream(events: DataFrame, key: str = "user_id") -> DataFrame:
 # ST2: daily UV dedup (RT/app/dwm/UniqueVisitApp.java:66-124)
 # ---------------------------------------------------------------------------
 
-UV_OUT = "user_id long, visit_date string, first_ts string"
-UV_STATE = "seen_dates array<string>"
-
-
-def _uv_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    rows = _concat_sorted(pdfs, by=["ts", "event_id"])
-    if rows.empty:
-        return
-    seen: set[str] = set(state.get[0]) if state.exists else set()
-    keep: list[bool] = []
-    for d in rows["ts"].dt.strftime("%Y-%m-%d"):
-        fresh = d not in seen
-        keep.append(fresh)
-        if fresh:
-            seen.add(d)
-    out = rows[pd.Series(keep, index=rows.index)]
-    # TTL eviction (the reference's 1-day StateTtlConfig, :85-89): once
-    # the key's event time has advanced past a date by more than a day,
-    # that date can never be claimed again by in-watermark data — drop
-    # it so per-key state stays O(1) instead of O(distinct days)
-    horizon = max(seen)  # latest date seen for this key
-    cutoff = (pd.Timestamp(horizon) - pd.Timedelta(days=1)).strftime(
-        "%Y-%m-%d"
-    )
-    state.update((sorted(d for d in seen if d >= cutoff),))
-    yield pd.DataFrame(
-        {
-            "user_id": out["user_id"],
-            "visit_date": out["ts"].dt.strftime("%Y-%m-%d"),
-            "first_ts": out["ts"].dt.strftime(TS_FMT),
-        }
-    )
-
 
 def uv_dedup_stream(events: DataFrame, key: str = "user_id") -> DataFrame:
-    """ST2 streaming form; parity target = first event per (key, day)."""
-    return events.groupBy(key).applyInPandasWithState(
-        _uv_fn,
-        outputStructType=UV_OUT,
-        stateStructType=UV_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    """ST2 streaming form; parity target = first event per (key, day).
+
+    A watermarked 1-day tumble per key keeping `min(struct(ts,
+    event_id))`: the exact first event, ties broken by event_id. A
+    (key, day) row is emitted once the watermark passes the end of the
+    day — the reference's 1-day state TTL (UniqueVisitApp.java:85-89)
+    as the window's eviction — so a bounded stream needs a far-future
+    event to close its last day, as ST3 needs one to fire its last
+    timeout. Day windows are UTC days, the session time zone."""
+    first = events.groupBy(
+        F.col(key).alias("user_id"), F.window("ts", "1 day")
+    ).agg(F.min(F.struct("ts", "event_id")).alias("first"))
+    return first.select(
+        "user_id",
+        F.date_format("first.ts", "yyyy-MM-dd").alias("visit_date"),
+        F.date_format("first.ts", TS_FMT).alias("first_ts"),
     )
 
 
@@ -135,86 +121,45 @@ def uv_dedup_stream(events: DataFrame, key: str = "user_id") -> DataFrame:
 # (RT/app/dwm/UserJumpApp.java:88-158)
 # ---------------------------------------------------------------------------
 
-JUMP_OUT = "event_id long, user_id long, jump_ts string"
-JUMP_STATE = "pending_micros long, pending_event_id long"
-
-
-def make_jump_fn(gap_ms: int):
-    """The CEP pattern `begin(entry).next(any).within(gap)` with the
-    timeout side-output as the *match*: an event is a jump iff no
-    follow-up event for the same key arrives within `gap_ms`.
-
-    State = the key's latest undecided event. Decided either by the
-    next event in sequence (gap compare) or by the event-time timer
-    firing when the watermark passes ts+gap — exactly Flink CEP's
-    `within` timeout (UserJumpApp.java:137-156).
-    """
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        user_id = key[0]
-        rows = _concat_sorted(pdfs, by=["ts", "event_id"])
-        if rows.empty:
-            # timer fired: the pending event was never followed -> jump
-            if state.hasTimedOut and state.exists:
-                micros, event_id = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    {
-                        "event_id": [event_id],
-                        "user_id": [user_id],
-                        "jump_ts": [
-                            pd.Timestamp(micros, unit="us").strftime(TS_FMT)
-                        ],
-                    }
-                )
-            return
-        seq = list(
-            zip(
-                rows["ts"].astype("datetime64[us]").astype("int64"),
-                rows["event_id"],
-            )
-        )
-        if state.exists:
-            seq.insert(0, tuple(state.get))
-        # compare at millisecond precision: the batch form
-        # (operators/stateful.py unix_millis diff) and the DuckDB oracle
-        # (date_diff('millisecond')) both truncate to ms before the gap
-        # test — sub-ms components near the boundary must not diverge
-        jumps = [
-            (eid, user_id, pd.Timestamp(us, unit="us").strftime(TS_FMT))
-            for (us, eid), (nxt_us, _) in zip(seq, seq[1:])
-            if (nxt_us // 1000) - (us // 1000) > gap_ms
-        ]
-        last_us, last_eid = seq[-1]
-        state.update((int(last_us), int(last_eid)))
-        state.setTimeoutTimestamp(last_us // 1000 + gap_ms)
-        if jumps:
-            yield pd.DataFrame(
-                jumps, columns=["event_id", "user_id", "jump_ts"]
-            )
-
-    return fn
-
 
 def jump_detect_stream(
     events: DataFrame, key: str = "user_id", gap_ms: int = 600_000
 ) -> DataFrame:
     """ST3 streaming form; parity target = operators.stateful.jump_detect.
 
-    Requires a watermark on the input (event-time timers fire when the
-    watermark passes pending_ts + gap). On a bounded stream the last
-    pending event per key only times out if something advances the
-    watermark past it — tests append a far-future sentinel event file
-    for exactly that purpose (a stream, by definition, never ends).
+    The CEP pattern `begin(entry).next(any).within(gap)` with the
+    timeout side-output as the match: an event is a jump iff no later
+    event of its key (by (ts, event_id)) follows within `gap_ms`. So the
+    key's events split into sessions at every gap wider than `gap_ms`,
+    and each session's last event is a jump: a session window per key
+    keeping `max(struct(ts, event_id))`, emitted once the watermark
+    passes the session's end — Flink CEP's `within` timeout
+    (UserJumpApp.java:137-156). State is one row per session the
+    watermark has not closed yet.
+
+    The gap is compared in milliseconds, as the batch form (unix_millis)
+    and the DuckDB oracle (date_diff('millisecond')) do: each event's
+    session reaches to 1 µs before the millisecond `gap_ms + 1` after
+    its own millisecond, and Spark merges sessions that touch, so the
+    next event joins the session iff it is at most `gap_ms` ms later.
+
+    Requires a watermark on `ts`. On a bounded stream the last session
+    per key only closes once something advances the watermark past it —
+    tests append a far-future sentinel event file for exactly that
+    purpose (a stream, by definition, never ends).
     """
-    return events.groupBy(key).applyInPandasWithState(
-        make_jump_fn(gap_ms),
-        outputStructType=JUMP_OUT,
-        stateStructType=JUMP_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    reach_us = (gap_ms + 1) * 1000 - 1
+    gap = F.expr(
+        f"make_interval(0, 0, 0, 0, 0, 0, CAST(({reach_us} "
+        "- pmod(unix_micros(ts), 1000)) AS DECIMAL(18, 0)) / 1000000)"
+    )
+    last = events.groupBy(
+        F.col(key).alias("user_id"), F.session_window("ts", gap)
+    ).agg(F.max(F.struct("ts", "event_id")).alias("last"))
+    return last.select(
+        F.col("last.event_id").alias("event_id"),
+        "user_id",
+        F.date_format("last.ts", TS_FMT).alias("jump_ts"),
     )
 
 
@@ -284,8 +229,6 @@ def pack_stream(
     pack ids. At 100 TB: bucket = state partition key; state is two
     longs per bucket.
     """
-    from pyspark.sql import functions as F
-
     from gmall_realtime_flink_spark.operators.packing import _ws_tokens
     from gmall_realtime_flink_spark.operators.sampling import hash_bucket
 

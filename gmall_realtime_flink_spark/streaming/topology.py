@@ -27,12 +27,20 @@ Boundedness: the ODS sources carry far-future sentinel rows
 (streaming/jobs.py events_with_sentinel) which FLOW THROUGH the layers
 — a sentinel event in dwd_page_log advances the DWM consumers'
 watermarks, the sentinel user's UV row advances the DWS consumers' —
-so every real window closes and every real timer fires in each layer
-without reaching around the layer boundary. The one operator that
-swallows its sentinel (UserJumpApp: the sentinel user's final pending
-event can never time out) gets an explicit sentinel row appended to
-its output layer, the same pattern a production deployment expresses
-with watermark idleness timeouts.
+so every real window closes and every real timeout fires in each layer
+without reaching around the layer boundary. The two operators that
+swallow their sentinel — UserJumpApp (the sentinel user's last event is
+never followed, so its timeout never fires) and UniqueVisitApp (the
+sentinel's day window never closes) — get an explicit sentinel row
+appended to their output layer (_seal), the same pattern a production
+deployment expresses with watermark idleness timeouts.
+
+Execution: like the reference's independently deployed jobs, the
+queries run concurrently in one application. A job's query starts
+once every job producing one of its inputs has finished, at most
+MAX_RUNNING at once and only one of them in its first micro-batch
+(_run_jobs). Every operator is a JVM one — no job of the bulk posture
+starts a Python worker.
 
 Every layer is oracle-checked: the pytest topology test asserts each
 DWD/DWM layer row-equals its batch operator and each DWS output
@@ -49,9 +57,13 @@ except the sentinel staging.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
+import socket
 import tempfile
+import threading
 import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
@@ -61,6 +73,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from gmall_realtime_flink_spark.catalog import load, parquet_schema, table_path
 from gmall_realtime_flink_spark.streaming import jobs
@@ -73,6 +86,12 @@ from gmall_realtime_flink_spark.streaming.state import (
 )
 
 JUMP_GAP_MS = 600_000
+
+# At most this many of one run's queries run at once, and only one of
+# them in its first micro-batch (_run_jobs). Chosen by measurement;
+# README "Warehouse chain" has the numbers.
+MAX_RUNNING = 2
+_POLL_S = 0.05  # how often the driver loop polls the run's queries
 
 
 # Per-batch trigger latency percentiles per topology job from the most
@@ -113,16 +132,25 @@ class _BatchLatencyListener:
         # stateOperators[].numRowsDroppedByWatermark summed per query:
         # a row behind its operator's watermark is lost silently
         self.dropped: dict[str, int] = {}
+        # query id -> (Python thread, gateway connection) its
+        # onQueryStarted ran on: Spark calls it on the query's own
+        # execution thread, whose foreachBatch calls share the
+        # connection (_release_query_thread)
+        self.query_threads: dict[str, tuple] = {}
         self._listener = None
 
     def attach(self, spark: SparkSession) -> None:
         from pyspark.sql.streaming import StreamingQueryListener
 
         outer = self
+        client = spark.sparkContext._gateway._gateway_client
+        connection = getattr(client, "get_thread_connection", lambda: None)
 
         class L(StreamingQueryListener):
             def onQueryStarted(self, event) -> None:
-                pass
+                outer.query_threads[str(event.id)] = (
+                    threading.current_thread(), connection()
+                )
 
             def onQueryProgress(self, event) -> None:
                 p = event.progress
@@ -233,6 +261,7 @@ class _Run:
         # orders by modification time, so adjacent batches must never
         # tie (sub-ms batches happen on empty flushes)
         self.manifest_ns: dict[str, int] = {}
+        self.stopping = threading.Event()  # set once _run_jobs winds down
         self.ods = self._stage_ods()
 
     def dir(self, layer: str) -> str:
@@ -243,28 +272,33 @@ class _Run:
         file-source checkpoints record which files were consumed, so a
         restart must see the SAME source directories (a fresh staging
         dir would look like all-new data and replay everything). ALL
-        ODS dirs are staged and recorded in `ods.json` atomically
-        BEFORE any streaming job starts, so an absent record proves no
-        job has ever run against this base — re-staging is then always
-        safe. Sentinel key -1 on both fact tables: the two sentinels
-        join into one far-future wide row that keeps the DWM layers'
-        event-time horizon at 2030."""
+        ODS dirs are staged under `<base>/ods/` and recorded in
+        `ods.json` atomically BEFORE any streaming job starts, so an
+        absent record proves no job has ever run against this base —
+        re-staging from scratch is then always safe. Deleting the base
+        deletes the whole warehouse. Sentinel key -1 on both fact
+        tables: the two sentinels join into one far-future wide row
+        that keeps the DWM layers' event-time horizon at 2030."""
         record = os.path.join(self.base, "ods.json")
         if os.path.exists(record):
             with open(record) as f:
                 return json.load(f)
-        stage = (
-            partial(jobs.stage_table_sorted_split, n_files=self.ordered)
-            if self.ordered
-            else jobs.stage_table_with_sentinel
-        )
+        root = os.path.join(self.base, "ods")
+        shutil.rmtree(root, ignore_errors=True)
         ods = {
-            "log": jobs.events_with_sentinel(
-                self.spark, self.sf_dir, gap_ms=JUMP_GAP_MS
-            ),
-            "order_info": stage(self.sf_dir, "orders"),
-            "order_detail": stage(self.sf_dir, "lineitem"),
+            topic: os.path.join(root, topic)
+            for topic in ("log", "order_info", "order_detail")
         }
+        for d in ods.values():
+            os.makedirs(d)
+        jobs.fill_events_dir(ods["log"], self.sf_dir, gap_ms=JUMP_GAP_MS)
+        for topic, table in (("order_info", "orders"), ("order_detail", "lineitem")):
+            if self.ordered:
+                jobs.fill_sorted_split_dir(
+                    ods[topic], self.sf_dir, table, self.ordered
+                )
+            else:
+                jobs.fill_table_dir(ods[topic], self.sf_dir, table)
         with open(record + ".tmp", "w") as f:
             json.dump(ods, f)
         os.replace(record + ".tmp", record)
@@ -448,27 +482,30 @@ def _route_cdc(run: _Run, batch: DataFrame, layer: str) -> DataFrame:
     )
 
 
-def _seal_user_jump(run: _Run) -> None:
-    """UserJumpApp's sentinel user's final pending event can never time
-    out (nothing follows it), so the layer gets an explicit far-future
-    row of its own under the reserved batch_id=-1, written after every
-    real batch (in the ordered posture, its manifest replays last —
-    exactly its watermark-driver role). A one-row pyarrow file: a Spark
-    job here would cost the chain ~2 s."""
+def _seal(layer: str, row: dict, run: _Run) -> None:
+    """A job whose operator swallows its sentinel gets an explicit
+    far-future row of its own under the reserved batch_id=-1, written
+    after every real batch (in the ordered posture, its manifest replays
+    last — exactly its watermark-driver role). UserJumpApp: the sentinel
+    user's last event is never followed, so no watermark ever passes its
+    timeout. UniqueVisitApp: the sentinel's day window never closes. A
+    one-row pyarrow file: a Spark job here would cost the chain ~2 s."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    part = os.path.join(run.dir("dwm_user_jump"), "batch_id=-1")
+    part = os.path.join(run.dir(layer), "batch_id=-1")
     path = os.path.join(part, "part-sentinel.parquet")
     if os.path.exists(path):
         return
     os.makedirs(part, exist_ok=True)
-    row = {"event_id": -1, "user_id": -1, "jump_ts": "2030-01-01 00:00:00"}
-    schema = to_arrow_schema(run.schemas["dwm_user_jump"])
+    schema = to_arrow_schema(run.schemas[layer])
     pq.write_table(pa.Table.from_pylist([row], schema=schema), path)
     if run.ordered:
-        run.publish_manifest("dwm_user_jump", -1)
+        run.publish_manifest(layer, -1)
+
+
+_SENTINEL_TS = "2030-01-01 00:00:00"
 
 
 def _visitor_stats(run: _Run, page, uv, uj) -> DataFrame:
@@ -558,18 +595,25 @@ JOBS = (
     # DWD BaseDBApp (RT/app/dwd/BaseDBApp.java:63-113): CDC routing
     Job("base_db_app", "base_db_app", ("ods_order_info", "ods_order_detail"),
         _cdc_envelope, _FACTS, _route_cdc),
-    # DWM UniqueVisitApp (UniqueVisitApp.java:56-124): ST2 keyed dedup
-    # state; the sentinel user's UV row (visit 2030) drives DWS
+    # DWM UniqueVisitApp (UniqueVisitApp.java:56-124): ST2 day-window
+    # dedup; the sealed sentinel UV row (visit 2030) drives DWS
     Job("dwm_unique_visit", "unique_visit_app", _PAGE,
         lambda run, page: uv_dedup_stream(page, key="user_id"),
-        ("dwm_unique_visit",)),
+        ("dwm_unique_visit",),
+        finish=partial(_seal, "dwm_unique_visit", {
+            "user_id": -1, "visit_date": _SENTINEL_TS[:10],
+            "first_ts": _SENTINEL_TS,
+        })),
     # DWM UserJumpApp (UserJumpApp.java:88-158): CEP bounce with
-    # event-time timeout
+    # event-time timeout, as a session window per user
     Job("dwm_user_jump", "user_jump_app", _PAGE,
         lambda run, page: jump_detect_stream(
             page, key="user_id", gap_ms=JUMP_GAP_MS
         ),
-        ("dwm_user_jump",), finish=_seal_user_jump),
+        ("dwm_user_jump",),
+        finish=partial(_seal, "dwm_user_jump", {
+            "event_id": -1, "user_id": -1, "jump_ts": _SENTINEL_TS,
+        })),
     # DWM OrderWideApp (OrderWideApp.java:140-152): J1 band [0, 30d]
     Job("dwm_order_wide", "order_wide_app", _FACTS,
         lambda run, o, l: jobs.order_wide(o, l), ("dwm_order_wide",)),
@@ -618,27 +662,101 @@ def _write_batch(run: _Run, job: Job, batch: DataFrame, batch_id: int) -> None:
         batch.unpersist()
 
 
-def _run_job(run: _Run, job: Job) -> None:
-    """Start one job's query, run it over everything available, then
-    seed its empty output layers and finish it."""
+def _start(run: _Run, job: Job) -> StreamingQuery:
+    """Build one job's query over its input streams and start it with
+    `availableNow`: it runs over everything its inputs hold, then
+    stops. start() returns at once."""
     stream = job.transform(run, *[run.stream(name) for name in job.inputs])
     for layer in job.outputs:
         out = stream if job.route is None else job.route(run, stream, layer)
         run.schemas[layer] = out.schema
-    (
-        stream.writeStream.foreachBatch(
-            lambda batch, batch_id: _write_batch(run, job, batch, batch_id)
-        )
+
+    def write(batch: DataFrame, batch_id: int) -> None:
+        try:
+            _write_batch(run, job, batch, batch_id)
+        except Exception:
+            if not run.stopping.is_set():
+                raise
+            # stop() interrupted this batch. Spark matches the error text
+            # against a backtracking regex to tell a stop from a failure,
+            # and a Java stack trace in the text overflows its stack.
+            raise RuntimeError(f"{job.query} stopped") from None
+
+    return (
+        stream.writeStream.foreachBatch(write)
         .queryName(job.query)
         .option("checkpointLocation", os.path.join(run.base, "ckpt", job.ckpt))
         .trigger(availableNow=True)
         .start()
-        .awaitTermination()
     )
-    for layer in job.outputs:
-        run.seed(layer)
-    if job.finish is not None:
-        job.finish(run)
+
+
+def _release_query_thread(query_threads: dict, q: StreamingQuery) -> None:
+    """Spark's calls into Python from a query's execution thread (the
+    listeners' onQueryStarted, each foreachBatch) run in one Python
+    thread serving a gateway connection pinned to that JVM thread. Once
+    the query has ended nothing calls it again, yet it stays open: one
+    thread and socket pair per query for the life of the session. Shut
+    its socket (the thread then reads end-of-stream and exits) and join
+    the thread."""
+    thread, conn = query_threads.pop(str(q.id), (None, None))
+    sock = getattr(conn, "socket", None)
+    if sock is not None:
+        with contextlib.suppress(OSError):
+            sock.shutdown(socket.SHUT_RDWR)
+        thread.join(timeout=10)
+
+
+def _run_jobs(run: _Run, query_threads: dict) -> None:
+    """Run the job table as a DAG from this one driver thread. A job's
+    query starts once every job producing one of its inputs has
+    finished — its query, its seeded empty layers and its `finish` —
+    whatever the table order, and the ready jobs start in table order.
+    At most MAX_RUNNING queries run at once, and a query starts only
+    when no running query is still in its first micro-batch: that batch
+    carries a query's start-up and its whole bulk input, so two of them
+    at once contend for every task slot (each stateful stage has one
+    task per slot) and both triggers stretch, while a head overlapping
+    another query's light tail (its no-data batch, stop, seeding)
+    hides that tail. The loop polls only this run's own queries. If one
+    fails (or fails to start), every other running query of the run is
+    stopped and waited for before the first error propagates, so no
+    query of the run, and no thread it ran on (_release_query_thread),
+    outlives the call."""
+    done: set[str] = set()  # layers whose producer has finished
+    waiting = list(JOBS)
+    running: dict[str, tuple[Job, StreamingQuery]] = {}
+    try:
+        while waiting or running:
+            for job in list(waiting):
+                ready = all(n.startswith("ods_") or n in done for n in job.inputs)
+                if ready and len(running) < MAX_RUNNING and not any(
+                    q.lastProgress is None for _, q in running.values()
+                ):
+                    waiting.remove(job)
+                    running[job.query] = (job, _start(run, job))
+            if not running:
+                raise RuntimeError(f"no producer for {[j.query for j in waiting]}")
+            for name, (job, q) in list(running.items()):
+                if not q.isActive:
+                    del running[name]
+                    _release_query_thread(query_threads, q)
+                    q.awaitTermination()  # re-raises the query's error
+                    for layer in job.outputs:
+                        run.seed(layer)
+                    if job.finish is not None:
+                        job.finish(run)
+                    done.update(job.outputs)
+            if running:
+                time.sleep(_POLL_S)
+    finally:
+        run.stopping.set()
+        for _, q in running.values():
+            # the first error is what propagates; stop() blocks until
+            # the query's execution thread has ended
+            with contextlib.suppress(Exception):
+                q.stop()
+            _release_query_thread(query_threads, q)
 
 
 def build_warehouse_layers(
@@ -652,17 +770,20 @@ def build_warehouse_layers(
     `ordered_slices` selects the replay posture: 0 (default) is bulk,
     N > 0 is ordered manifest replay over N ODS slices (_Run).
 
-    Execution order follows the layer DAG; every job has its own
-    checkpoint directory, so any job can restart from its offsets
-    exactly as the independent reference jobs do. Re-invoking with the
-    SAME `base` is a full-warehouse restart: every job resumes from
-    its committed offsets, finds no new input, and writes nothing —
-    restart idempotency of the whole DAG, pinned by
+    The jobs run as a DAG of concurrent queries (_run_jobs): each starts
+    once the producers of its inputs have finished, up to MAX_RUNNING at
+    once with one in its first micro-batch, in both postures. Every job has its own checkpoint directory,
+    so any job can restart from its offsets exactly as the independent
+    reference jobs do. Re-invoking with the SAME `base` is a
+    full-warehouse restart: every job resumes from its committed
+    offsets, finds no new input, and writes nothing — restart
+    idempotency of the whole DAG, pinned by
     tests/test_topology.py::test_topology_rerun_is_idempotent. A
     CRASHED run is also safe to restart: every layer sink overwrites
     its own batch_id dir (_Run.write), so a micro-batch replayed after
     a crash-between-write-and-offset-commit replaces its own output
-    instead of duplicating it.
+    instead of duplicating it. A failing job stops the run's other
+    queries before its error propagates.
 
     The latency listener's detach runs in a finally so a crash mid-DAG
     (e.g. the crash-injection test) can't leave it registered on the
@@ -676,8 +797,7 @@ def build_warehouse_layers(
     latency.attach(spark)
     try:
         run = _Run(spark, sf_dir, base, ordered_slices)
-        for job in JOBS:
-            _run_job(run, job)
+        _run_jobs(run, latency.query_threads)
     finally:
         latency.detach_into(spark, LAYER_BATCH_MS)
     return {layer: run.dir(layer) for job in JOBS for layer in job.outputs}

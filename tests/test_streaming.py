@@ -281,9 +281,11 @@ def test_layer_chained_streaming_dag(spark, sf_dir):
     from gmall_realtime_flink_spark.streaming.sinks import append_writer
     from gmall_realtime_flink_spark.streaming.state import uv_dedup_stream
 
-    # stage 1: events stream -> ST2 dedup -> DWM parquet layer
+    # stage 1: events stream -> ST2 dedup -> DWM parquet layer; the
+    # stream ends in the far-future sentinel that closes the last day
+    # (the sentinel's own day never closes, so it emits no row)
     dwm = os.path.join(tempfile.mkdtemp(prefix="dwm_"), "dwm_unique_visit")
-    events = stream_events(spark, jobs.events_path(sf_dir))
+    events = stream_events(spark, jobs.events_with_sentinel(spark, sf_dir, 0))
     q1 = (
         uv_dedup_stream(events, key="user_id")
         .writeStream.foreachBatch(append_writer(dwm))
@@ -793,6 +795,11 @@ def test_stateful_checkpoint_recovery_across_restarts(
         p1 = os.path.join(src, "part-001.parquet")
         pq.write_table(t.slice(n // 2), p1)
         os.utime(p1, (1_700_000_100, 1_700_000_100))
+        # the stream's end: a far-future sentinel closes the last day
+        # (its own day never closes, so it emits no row)
+        p2 = os.path.join(src, "part-002-sentinel.parquet")
+        jobs.write_sentinel_file(p2, jobs.SENTINEL_TS_NS, ts_type=_ts_type)
+        os.utime(p2, (1_700_000_200, 1_700_000_200))
         run()
     finally:
         spark.conf.set(conf_key, orig_provider)
@@ -842,7 +849,7 @@ def test_streaming_distinct_modes_agree(spark, sf_dir, job_name, key):
         assert abs(av - ev) <= max(2, 0.15 * ev), (k, ev, av)
 
 
-def test_sorted_split_mtimes_strictly_increase(sf_dir):
+def test_sorted_split_mtimes_strictly_increase(sf_dir, tmp_path):
     """The ordered-ingestion contract is the mtime order of the staged
     slices (FileStreamSource replays oldest-first); ADVICE r9: a
     coarse-mtime filesystem can tie back-to-back writes, so the stamps
@@ -850,25 +857,21 @@ def test_sorted_split_mtimes_strictly_increase(sf_dir):
     strictly last, regardless of write speed or fs granularity."""
     import glob
     import os
-    import shutil
 
     from gmall_realtime_flink_spark.streaming.jobs import (
-        stage_table_sorted_split,
+        fill_sorted_split_dir,
     )
 
-    out = stage_table_sorted_split(sf_dir, "orders", 8)
-    try:
-        slices = sorted(glob.glob(os.path.join(out, "part-[0-9][0-9][0-9].parquet")))
-        sentinel = [p for p in slices if p.endswith("999-sentinel.parquet")]
-        slices = [p for p in slices if not p.endswith("sentinel.parquet")]
-        sentinel = os.path.join(out, "part-999-sentinel.parquet")
-        assert os.path.exists(sentinel)
-        assert len(slices) >= 2
-        mtimes = [os.path.getmtime(p) for p in slices]
-        assert all(b - a >= 1.0 for a, b in zip(mtimes, mtimes[1:])), mtimes
-        assert os.path.getmtime(sentinel) >= mtimes[-1] + 1.0
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    out = str(tmp_path)
+    fill_sorted_split_dir(out, sf_dir, "orders", 8)
+    slices = sorted(glob.glob(os.path.join(out, "part-[0-9][0-9][0-9].parquet")))
+    slices = [p for p in slices if not p.endswith("sentinel.parquet")]
+    sentinel = os.path.join(out, "part-999-sentinel.parquet")
+    assert os.path.exists(sentinel)
+    assert len(slices) >= 2
+    mtimes = [os.path.getmtime(p) for p in slices]
+    assert all(b - a >= 1.0 for a, b in zip(mtimes, mtimes[1:])), mtimes
+    assert os.path.getmtime(sentinel) >= mtimes[-1] + 1.0
 
 
 def test_semantic_admission_streaming_vs_incremental(spark, sf_dir):

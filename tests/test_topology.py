@@ -12,6 +12,13 @@ streaming warehouse computes exactly what one batch pass would.
 
 from __future__ import annotations
 
+import json
+import os
+import re
+import tempfile
+import threading
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,6 +35,81 @@ def layers(spark, sf_dir):
 
 def _rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def _ms(iso: str) -> float:
+    from datetime import datetime
+
+    return datetime.fromisoformat(iso.replace("Z", "+00:00")).timestamp() * 1000
+
+
+class _QueryLog:
+    """Per streaming query: its start time and the end time of each of
+    its micro-batches, as the JVM stamped them (the listener delivers
+    onQueryStarted on the query's own thread and the rest later from
+    the listener bus, so arrival order is not event order)."""
+
+    def __init__(self, spark):
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        self.starts: dict[str, float] = {}
+        self.batch_ends: dict[str, list[float]] = {}
+        self.ended = 0
+        log = self
+
+        class L(StreamingQueryListener):
+            def onQueryStarted(self, e):
+                log.starts[e.name] = _ms(e.timestamp)
+
+            def onQueryProgress(self, e):
+                p = e.progress
+                end = _ms(p.timestamp) + p.durationMs["triggerExecution"]
+                log.batch_ends.setdefault(p.name, []).append(end)
+
+            def onQueryIdle(self, e):
+                pass
+
+            def onQueryTerminated(self, e):
+                log.ended += 1
+
+        self.spark = spark
+        self._listener = L()
+        spark.streams.addListener(self._listener)
+
+    def close(self) -> "_QueryLog":
+        """Wait until every started query's end has arrived."""
+        deadline = time.monotonic() + 60
+        while self.ended < len(self.starts) and time.monotonic() < deadline:
+            time.sleep(0.1)
+        self.spark.streams.removeListener(self._listener)
+        return self
+
+
+def _assert_producer_ordered(log: _QueryLog):
+    """Each job's query starts after every query producing one of its
+    inputs has run its last micro-batch; at least two queries overlap;
+    never more than MAX_RUNNING run at once, and a query starts only
+    once every query still running has finished its first micro-batch.
+    A query counts as running from its start to its last batch's end —
+    inside its real lifetime, so overlaps seen here are real ones."""
+    span = {
+        job.query: (log.starts[job.query], max(log.batch_ends[job.query]))
+        for job in tp.JOBS
+    }
+    for job in tp.JOBS:
+        for p in tp.JOBS:
+            if set(p.outputs) & set(job.inputs):
+                assert span[p.query][1] < span[job.query][0], (
+                    p.query, job.query, span,
+                )
+    peak = 0
+    for name, (start, _) in span.items():
+        running = [q for q, (s, e) in span.items() if s <= start < e]
+        peak = max(peak, len(running))
+        for q in running:
+            if q != name:
+                assert min(log.batch_ends[q]) <= start, (name, q, span)
+    assert 2 <= peak <= tp.MAX_RUNNING, (peak, span)
 
 
 def test_dwd_page_log_layer_is_the_event_firehose(spark, sf_dir, layers):
@@ -131,8 +213,6 @@ def test_dws_outputs_match_batch_forms(
 
 
 def test_every_topology_job_is_checkpointed(layers):
-    import os
-
     base = os.path.dirname(layers["dwd_page_log"])
     jobs = sorted(os.listdir(os.path.join(base, "ckpt")))
     assert jobs == sorted(
@@ -160,8 +240,6 @@ def test_topology_rerun_is_idempotent(spark, sf_dir, layers):
     NOTHING — each query resumes from its committed offsets, finds no
     new input, and the layers stay byte-identical in row count. This
     is the crash-restart story of the whole deployment, not one job."""
-    import os
-
     base = os.path.dirname(layers["dwd_page_log"])
     before = {
         name: spark.read.parquet(d).count() for name, d in layers.items()
@@ -185,8 +263,6 @@ def test_topology_crash_between_write_and_commit(
     appending a duplicate, and every downstream layer must come out
     identical to a clean run — the whole-topology effectively-once
     claim, previously only tested per-sink and for clean restarts."""
-    import tempfile
-
     dws = (
         "dws_visitor_stats",
         "dws_product_stats",
@@ -222,11 +298,16 @@ def test_topology_crash_between_write_and_commit(
                 "injected crash between parquet write and offset commit"
             )
 
+    threads = set(threading.enumerate())
     monkeypatch.setattr(sinks, "FAULT_AFTER_WRITE", bomb)
     with pytest.raises(Exception):
         tp.build_warehouse_layers(spark, sf_dir, base=base)
     monkeypatch.undo()
     assert state["detonated"], "fault hook never fired"
+    # the build stopped whatever else of the run was running: neither a
+    # query nor a thread of the failed run is left
+    assert not {j.query for j in tp.JOBS} & {q.name for q in spark.streams.active}
+    assert set(threading.enumerate()) == threads
 
     # restart the DAG against the same base: completed jobs find no new
     # input; the killed job replays its uncommitted batch over its own
@@ -270,16 +351,19 @@ def test_topology_ordered_manifest_mode_matches_batch(spark, sf_dir, tmp_path):
     a time in batch order. The DWS outputs must equal the batch
     registry forms bit-for-bit, and no job may drop a row behind its
     watermark — the silent loss an unordered replay of multi-file
-    batches would cause."""
-    import os
-
+    batches would cause. The jobs run producer-ordered, as in bulk."""
     from gmall_realtime_flink_spark.streaming.jobs import SENTINEL_CUTOFF
 
     base = tmp_path / "wh"
     base.mkdir()
-    layers = tp.build_warehouse_layers(
-        spark, sf_dir, base=str(base), ordered_slices=4
-    )
+    log = _QueryLog(spark)
+    try:
+        layers = tp.build_warehouse_layers(
+            spark, sf_dir, base=str(base), ordered_slices=4
+        )
+    finally:
+        log.close()
+    _assert_producer_ordered(log)
     for job, stats in tp.LAYER_BATCH_MS.items():
         assert stats["dropped_by_watermark"] == 0, (job, stats)
 
@@ -311,3 +395,51 @@ def test_topology_ordered_manifest_mode_matches_batch(spark, sf_dir, tmp_path):
         want = REGISTRY[batch_name].builder(spark, sf_dir)
         cols = want.columns
         assert _rows(got, cols) == _rows(want, cols), layer
+
+
+def test_bulk_chain_is_producer_ordered_and_stays_in_its_base(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The bulk chain runs as a DAG of concurrent queries: a job starts
+    once its inputs' producers have finished, more than one query runs
+    at a time, never more than MAX_RUNNING, one of them in its first
+    micro-batch. Everything a build writes
+    lives under its base — the staged ODS topics included — so a build
+    leaves nothing in the temp dir and deleting the base deletes the
+    whole warehouse."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    base = tmp_path / "wh"
+    log = _QueryLog(spark)
+    try:
+        tp.build_warehouse_layers(spark, sf_dir, base=str(base))
+    finally:
+        log.close()
+    assert os.listdir(tempfile.gettempdir()) == []
+    with open(base / "ods.json") as f:
+        ods = json.load(f)
+    assert all(p.startswith(str(base / "ods") + os.sep) for p in ods.values())
+    _assert_producer_ordered(log)
+
+
+def test_bulk_chain_plans_have_no_python_node(spark, sf_dir, tmp_path):
+    """In the bulk posture no job's query — its transform and each
+    output layer's route — has a Python-evaluated node, so the chain
+    starts no Python worker."""
+    python = re.compile(
+        r"FlatMapGroupsInPandasWithState|MapInArrow|MapInPandas"
+        r"|ArrowEvalPython|BatchEvalPython"
+    )
+    run = tp._Run(spark, sf_dir, str(tmp_path), 0)
+    for job in tp.JOBS:
+        stream = job.transform(run, *[run.stream(n) for n in job.inputs])
+        for layer in job.outputs:
+            out = stream if job.route is None else job.route(run, stream, layer)
+            run.schemas[layer] = out.schema
+            os.makedirs(run.dir(layer), exist_ok=True)
+            plan = out._sc._jvm.PythonSQLUtils.explainString(
+                out._jdf.queryExecution(), "extended"
+            )
+            assert "Physical Plan" in plan, plan
+            assert not python.search(plan), (job.query, layer, plan)

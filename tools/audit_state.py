@@ -78,7 +78,8 @@ def main() -> None:
 
     audits = []
 
-    # ST1/ST2/ST3: the keyed applyInPandasWithState trio
+    # ST1/ST2/ST3: visitor repair (applyInPandasWithState), the UV
+    # day-window aggregation and the jump session window
     for name, build in (
         ("uv_dedup", lambda e: uv_dedup_stream(e, key="user_id")),
         ("visitor_repair", lambda e: repair_is_new_stream(e, key="user_id")),
