@@ -35,6 +35,12 @@ STATE_STORE_PROVIDERS = {
     ),
 }
 
+# The checkpoint file manager every session uses (get_spark says why)
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 _MB_PER_UNIT = {"": 1, "k": 2**-10, "m": 1, "g": 2**10, "t": 2**20, "p": 2**30}
 
@@ -141,17 +147,44 @@ def get_spark(
         # default; read as long once here (catalog.load truncates ns → µs)
         # instead of mutating session conf inside a loader
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # streaming state: RocksDB provider (default) keeps large keyed
-        # state (UV dedup at 100 TB scale) off-heap and spillable;
-        # SPARK_GRAFT_STATE_STORE=hdfs flips to the in-memory
-        # HDFS-backed default provider (both pass the checkpoint
-        # recovery suite — tests/test_streaming.py parametrizes over
-        # the two).
+        # streaming state: the RocksDB provider keeps large keyed state
+        # (UV dedup at 100 TB scale) off-heap and spillable
+        # (STATE_STORE_PROVIDERS also names the HDFS-backed one, which
+        # the checkpoint recovery test runs too)
         .config(
             "spark.sql.streaming.stateStore.providerClass",
-            STATE_STORE_PROVIDERS[
-                os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb")
-            ],
+            STATE_STORE_PROVIDERS["rocksdb"],
+        )
+        # Checkpoint commits. Every micro-batch writes an offset and a
+        # commit log entry, and every stateful task commits its state
+        # store; in the warehouse chain that durability cost outweighed
+        # the compute. Two settings cut it:
+        # - changelog checkpointing: a RocksDB commit writes one
+        #   changelog file per store instead of uploading a metadata
+        #   zip plus the new SST files (snapshots are uploaded by the
+        #   background maintenance task);
+        # - the FileSystem-based checkpoint file manager: the default
+        #   FileContext one pays several Hadoop calls per atomic file,
+        #   and Hadoop's local filesystem runs without its native
+        #   library here, so each setPermission forks /usr/bin/chmod.
+        # Measured on 4 vCPU: one warehouse chain (sf0.002) summed 29.0 s
+        # of state-commit time with neither and 1.7 s with both, and
+        # walCommit + commitOffsets + latestOffset 5.0 s -> 1.5 s; on a
+        # 12-trigger aggregation over 500 keys the manager swap alone
+        # took commits from 9.5-10.7 s to 3.7-5.1 s, both to 0.3-0.5 s.
+        # The swap is sound because every session here is local[N] with
+        # local checkpoint dirs: rename(2) is atomic, and on a local
+        # filesystem the FileContext manager's no-overwrite rename is
+        # itself check-then-rename (AbstractFileSystem.renameInternal),
+        # the same guarantee the FileSystem manager gives.
+        .config(
+            "spark.sql.streaming.stateStore.rocksdb."
+            "changelogCheckpointing.enabled",
+            "true",
+        )
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER,
         )
     )
     # Generic env-gated conf for scale-tier runs, ';'-separated k=v.

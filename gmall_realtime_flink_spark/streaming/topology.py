@@ -96,8 +96,8 @@ _POLL_S = 0.05  # how often the driver loop polls the run's queries
 
 # Per-batch trigger latency percentiles per topology job from the most
 # recent run (job name -> {n, p50_ms, p95_ms, max_ms, components,
-# dropped_by_watermark}). Wall seconds say what a layer COSTS; batch
-# percentiles say what a consumer WAITS. Captured by a
+# dropped_by_watermark, commit_ms}). Wall seconds say what a layer
+# COSTS; batch percentiles say what a consumer WAITS. Captured by a
 # StreamingQueryListener (onQueryProgress), the same numbers the Spark
 # UI's structured-streaming page reports.
 LAYER_BATCH_MS: dict[str, dict] = {}
@@ -115,8 +115,9 @@ def _percentiles(samples: list[float]) -> dict:
 
 
 class _BatchLatencyListener:
-    """Collects per-query trigger-execution durations and the rows each
-    query's stateful operators dropped as late. Defined without
+    """Collects per-query trigger-execution durations, the rows each
+    query's stateful operators dropped as late and the time they took
+    to commit their state stores. Defined without
     inheriting StreamingQueryListener at import time so importing this
     module never requires an active Spark context; `attach` builds the
     real listener lazily."""
@@ -132,6 +133,9 @@ class _BatchLatencyListener:
         # stateOperators[].numRowsDroppedByWatermark summed per query:
         # a row behind its operator's watermark is lost silently
         self.dropped: dict[str, int] = {}
+        # stateOperators[].commitTimeMs summed per query: the time its
+        # stateful tasks spent committing their state stores
+        self.commit_ms: dict[str, float] = {}
         # query id -> (Python thread, gateway connection) its
         # onQueryStarted ran on: Spark calls it on the query's own
         # execution thread, whose foreachBatch calls share the
@@ -164,6 +168,9 @@ class _BatchLatencyListener:
                         comp.setdefault(k, []).append(float(v))
                     outer.dropped[name] = outer.dropped.get(name, 0) + sum(
                         op.numRowsDroppedByWatermark for op in p.stateOperators
+                    )
+                    outer.commit_ms[name] = outer.commit_ms.get(name, 0) + sum(
+                        op.commitTimeMs for op in p.stateOperators
                     )
 
             def onQueryIdle(self, event) -> None:
@@ -203,6 +210,7 @@ class _BatchLatencyListener:
                         for k, v in self.components.get(name, {}).items()
                     },
                     "dropped_by_watermark": self.dropped.get(name, 0),
+                    "commit_ms": self.commit_ms.get(name, 0),
                 }
                 for name, ms in self.durations.items()
             }

@@ -743,6 +743,24 @@ def test_pack_stream_first_fit_across_batches(spark, sf_dir):
         assert ids == list(range(len(ids)))
 
 
+def test_session_checkpoint_commit_confs(spark):
+    """get_spark checkpoints RocksDB state as changelogs and writes
+    checkpoint files through the FileSystem-based manager, a class this
+    Spark build has (a misspelt name would fail only at query start)."""
+    from gmall_realtime_flink_spark.session import CHECKPOINT_FILE_MANAGER
+
+    assert spark.conf.get(
+        "spark.sql.streaming.stateStore.rocksdb."
+        "changelogCheckpointing.enabled"
+    ) == "true"
+    assert spark.conf.get(
+        "spark.sql.streaming.checkpointFileManagerClass"
+    ) == CHECKPOINT_FILE_MANAGER
+    spark._jvm.org.apache.spark.util.Utils.classForName(
+        CHECKPOINT_FILE_MANAGER, True, False
+    )
+
+
 @pytest.mark.parametrize("provider", ["rocksdb", "hdfs"])
 def test_stateful_checkpoint_recovery_across_restarts(
     spark, sf_dir, provider
@@ -758,7 +776,9 @@ def test_stateful_checkpoint_recovery_across_restarts(
     STATE_STORE_PROVIDERS): RocksDB — the engine default, off-heap
     spillable state — and the HDFS-backed in-memory default. The
     providerClass conf binds at query start, so flipping it per-run
-    on the shared session is exactly how a deployment would."""
+    on the shared session is exactly how a deployment would. On
+    RocksDB the first run leaves changelog files only, so the restart
+    replays changelogs, not a snapshot."""
     from gmall_realtime_flink_spark.session import STATE_STORE_PROVIDERS
     from gmall_realtime_flink_spark.streaming.state import uv_dedup_stream
 
@@ -791,6 +811,15 @@ def test_stateful_checkpoint_recovery_across_restarts(
         pq.write_table(t.slice(0, n // 2), p0)
         os.utime(p0, (1_700_000_000, 1_700_000_000))
         run()
+        if provider == "rocksdb":
+            # the session checkpoints RocksDB state as changelogs: the
+            # restart below recovers from them alone, no snapshot zip
+            names = [
+                f for _, _, fs in os.walk(os.path.join(ckpt, "state"))
+                for f in fs
+            ]
+            assert any(f.endswith(".changelog") for f in names), names
+            assert not any(f.endswith(".zip") for f in names), names
 
         p1 = os.path.join(src, "part-001.parquet")
         pq.write_table(t.slice(n // 2), p1)
@@ -984,8 +1013,7 @@ def test_state_bytes_per_key_regression_gate(spark, tmp_path):
         op = summarize(name, run_audited(build(ev), spark))["operators"][0]
         rows, sst = op["state_rows"], op["rocksdb_sst_bytes"]
         assert rows >= n_users, (name, op)
-        if not sst:
-            pytest.skip("state provider reports no SST metric")
+        assert sst, f"{name}: the RocksDB provider reported no SST bytes ({op})"
         bpr = sst / rows
         assert bpr <= CEILINGS[name], (
             f"{name}: {bpr:.1f} SST B/row exceeds the {CEILINGS[name]} B "

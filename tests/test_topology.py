@@ -322,11 +322,12 @@ def test_layer_batch_latency_percentiles_captured(spark, sf_dir, layers):
     wall seconds say what a layer costs, batch percentiles say what a
     consumer waits, and the 10 s-tumble SLA claim needs the latter.
     No job's stateful operators drop a row behind their watermark: in
-    the bulk posture every input arrives whole or in event-time order."""
+    the bulk posture every input arrives whole or in event-time order.
+    Each of the 8 stateful jobs reports the time its state stores took
+    to commit; the 2 stateless DWD jobs have no store and report 0."""
     stats = tp.LAYER_BATCH_MS
-    expected = {
-        "base_log_app",
-        "base_db_app",
+    stateless = {"base_log_app", "base_db_app"}
+    expected = stateless | {
         "dwm_unique_visit",
         "dwm_user_jump",
         "dwm_order_wide",
@@ -342,6 +343,10 @@ def test_layer_batch_latency_percentiles_captured(spark, sf_dir, layers):
         assert s["n"] >= 1, (job, s)
         assert 0 < s["p50_ms"] <= s["p95_ms"] <= s["max_ms"], (job, s)
         assert s["dropped_by_watermark"] == 0, (job, s)
+        if job in stateless:
+            assert s["commit_ms"] == 0, (job, s)
+        else:
+            assert s["commit_ms"] > 0, (job, s)
 
 
 def test_topology_ordered_manifest_mode_matches_batch(spark, sf_dir, tmp_path):

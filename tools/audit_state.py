@@ -25,18 +25,34 @@ from pyspark.sql import functions as F  # noqa: E402
 from gmall_realtime_flink_spark.session import get_spark  # noqa: E402
 
 
+CHANGELOG_CONF = (
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+)
+
+
 def run_audited(stream_df, spark) -> list[dict]:
-    """Run bounded; return the union of stateOperators entries seen."""
+    """Run bounded; return the union of stateOperators entries seen.
+
+    The query runs with RocksDB changelog checkpointing off (the
+    session's setting is restored afterwards): a changelog commit does
+    not flush the memtable, so rocksdbSstFileSize would read 0; a
+    snapshot commit flushes every batch's state into SST files, which
+    is what the bytes-per-row figures measure."""
     name = f"audit_{uuid.uuid4().hex[:10]}"
-    q = (
-        stream_df.writeStream.format("noop")
-        .outputMode("append")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    saved = spark.conf.get(CHANGELOG_CONF)
+    spark.conf.set(CHANGELOG_CONF, "false")
+    try:
+        q = (
+            stream_df.writeStream.format("noop")
+            .outputMode("append")
+            .queryName(name)
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        spark.conf.set(CHANGELOG_CONF, saved)
     ops: dict[int, dict] = {}
     for p in q.recentProgress:
         for i, so in enumerate(p.get("stateOperators", []) or []):
