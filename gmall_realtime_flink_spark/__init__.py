@@ -1,10 +1,12 @@
 """gmall_realtime_flink_spark — a PySpark-native analytics engine.
 
-A from-scratch re-expression of the query and data-processing
-capabilities of the reference real-time warehouse
-(codejiwei/gmall-realtime-flink, a DAG of 8 Flink streaming jobs) as an
-idiomatic Apache Spark engine:
+A from-scratch re-expression of the reference real-time warehouse
+(codejiwei/gmall-realtime-flink, a DAG of 8 Flink streaming jobs plus a
+dashboard publisher) as an idiomatic Apache Spark engine:
 
+- the warehouse chain (streaming/topology.py) runs the ODS -> DWD ->
+  DWM -> DWS jobs as Structured Streaming queries over durable layer
+  directories, and the publisher's reads (plans/) query its tables;
 - batch + streaming share one set of pure ``DataFrame -> DataFrame``
   transformation functions (operators/), so every pipeline is testable
   against a SQL oracle in batch mode and runnable under Structured
@@ -12,17 +14,19 @@ idiomatic Apache Spark engine:
 - dimension stores (HBase/Phoenix/Redis in the reference) are replaced
   by parquet dim tables + broadcast hash joins;
 - the Flink keyed-state trio (visitor repair / UV dedup / CEP bounce)
-  is implemented twice: as window-function batch analogues
-  (operators/stateful.py) and as ``applyInPandasWithState`` streaming
-  operators (streaming/state.py), with pytest parity asserts between
-  the two on bounded input;
-- beyond the reference surface, large-scale training-data pipeline
-  operators are first-class: dedup (exact / MinHash-LSH banded /
-  SimHash / n-gram Jaccard — operators/dedup.py, textstats.py),
-  similarity search (brute-force cosine top-k + sign-bucketed ANN —
-  operators/similarity.py), multimodal binary columns with
-  Arrow-batched feature extraction (operators/multimodal.py), and
-  text analysis (language ID, quality scoring, token stats).
+  has window-function batch analogues (operators/stateful.py) and
+  streaming forms (streaming/state.py): UV dedup and bounce detection
+  are built-in JVM aggregations (a watermarked day window, a session
+  window), visitor repair is ``applyInPandasWithState``; pytest parity
+  asserts hold the two forms equal on bounded input;
+- beyond the reference surface, batch training-data curation reads
+  (plans/datapipe.py) are registry entries too: dedup (exact /
+  MinHash-LSH banded / SimHash / n-gram Jaccard — operators/dedup.py,
+  textstats.py), similarity search (brute-force cosine top-k +
+  sign-bucketed ANN — operators/similarity.py), multimodal binary
+  columns with Arrow-batched feature extraction
+  (operators/multimodal.py), and text analysis (language ID, quality
+  scoring, token stats).
 
 Scale design notes live in docstrings next to each operator and in
 ``SCALE.md`` at the repo root.

@@ -138,6 +138,16 @@ def synthetic_dictionary(n: int, seed: int = 11) -> tuple[str, ...]:
     return out
 
 
+def tokenize_mixed(col: Column) -> Column:
+    """X11 without a dictionary: ASCII word runs plus single CJK
+    characters — what IK smart mode degrades to for out-of-dictionary
+    text (RT/utils/KeywordUtil.java:17-41). Deterministic and
+    dependency-free; `tokenize_cjk_dict` is the dictionary-grade form."""
+    return F.regexp_extract_all(
+        F.lower(col), F.lit(f"{_ASCII_RUN}|{_UNIGRAM}"), 0
+    )
+
+
 def tokenize_cjk_dict(col: Column) -> Column:
     """Segment mixed Chinese/ASCII text: longest dictionary word at
     each position, ASCII letter runs, unigrams for OOV CJK. JVM-side

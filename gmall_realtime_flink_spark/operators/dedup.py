@@ -45,18 +45,6 @@ def tokenize(col: Column) -> Column:
     return F.filter(F.split(F.lower(col), "[^a-z]+"), lambda x: F.length(x) > 0)
 
 
-def tokenize_mixed(col: Column) -> Column:
-    """X11: mixed-script tokenizer — ASCII word runs plus single CJK
-    characters (the public analogue of the reference's IK smart-mode
-    Chinese segmentation, RT/utils/KeywordUtil.java:17-41: a real
-    dictionary segmenter emits multi-char words; unigram CJK is the
-    deterministic, dependency-free fallback and is what IK degrades to
-    for out-of-dictionary text)."""
-    return F.regexp_extract_all(
-        F.lower(col), F.lit("[a-z]+|[一-鿿]"), 0
-    )
-
-
 def shingles(toks_col: str, n: int = 2) -> Column:
     """Word n-gram shingles via a 1-based sequence/element_at transform
     (the same 1-based indexing DuckDB lists use, so the oracle SQL is a

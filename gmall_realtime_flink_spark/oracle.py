@@ -74,13 +74,7 @@ def compare_query(
     if spec.oracle is None:
         # Anti-padding guard, intentionally stricter than "ran without
         # error": an oracle-less query must produce at least one row so
-        # a no-op plan can't pass the gate silently. A query whose
-        # correct result is legitimately empty should set
-        # spec.expect_empty=True to opt out.
-        if getattr(spec, "expect_empty", False):
-            return CompareResult(
-                spec.name, True, f"rows-only check (expect_empty): {len(got)} rows"
-            )
+        # a no-op plan can't pass the gate silently.
         ok = len(got) > 0
         return CompareResult(
             spec.name,

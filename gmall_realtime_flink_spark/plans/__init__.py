@@ -1,10 +1,12 @@
 """Query plan registry.
 
-Every operator family from SURVEY.md §2 (plus the large-scale data
-pipeline extensions) is exposed as a named `QuerySpec`: a PySpark
-builder `(spark, sf_dir) -> DataFrame` and, where SQL-expressible, an
-equivalent DuckDB oracle SQL string over the same parquet tables.
-The driver contract (`__spark_entry__.py`) and the local test harness
+Every warehouse read — the publisher's reads over the DWS layer
+(gmall), the TPC-H-style OLAP reads (olap) and the streaming jobs run
+to completion (streaming_jobs) — and every batch curation read
+(datapipe: dedup, similarity, text and media) is exposed as a named
+`QuerySpec`: a PySpark builder `(spark, sf_dir) -> DataFrame` and an
+equivalent DuckDB oracle SQL string over the same parquet tables. The driver contract
+(`__spark_entry__.py`) and the local test harness
 (`tests/test_oracle.py`) both consume this registry.
 """
 
@@ -17,105 +19,5 @@ from gmall_realtime_flink_spark.plans import gmall  # noqa: E402,F401
 from gmall_realtime_flink_spark.plans import datapipe  # noqa: E402,F401
 from gmall_realtime_flink_spark.plans import streaming_jobs  # noqa: E402,F401
 from gmall_realtime_flink_spark.plans import olap  # noqa: E402,F401
-
-# Driver-visible ordering. The round driver samples the FIRST 50
-# registry entries for its cross-engine CORRECTNESS check (observed:
-# CORRECTNESS_r02/r03 each contain exactly the registry head in
-# iteration order), so the head is curated to cover every operator
-# family end-to-end: the reference's gmall pipeline (S/P/F/R/J/U/A/
-# ST/X rows of SURVEY §2), the LLM-data-pipeline suite (dedup/
-# similarity/text/multimodal), and one streaming representative per
-# stateful-operator family (ST1-ST5, J1/J2 stream-stream, S3/R2
-# routing, S4 SQL-over-stream). Everything NOT in the head is still
-# oracle-gated locally: tests/test_oracle.py runs ALL registry
-# entries dtype-strict against DuckDB.
-# ROUND-11 HEAD ROTATION (VERDICT r10 item 8): the never-checked
-# backlog reached ZERO in r10 (DRIVER_COVERAGE_r11.json:
-# never_checked = []), so beyond this round's 3 NEW entries
-# (dedup_semantic_capped / dedup_semantic_incremental /
-# streaming_dedup_semantic -- in the head so their first driver check
-# lands this round) every free slot burns down STALENESS, oldest tier
-# first: the 3 entries last driver-checked in r03 (user_sessions,
-# visitor_stats_sliding, volume_shipping -- queued since the r10
-# rotation) plus 23 of the 27 r06-stale entries. The 4 r06 entries
-# that didn't fit (streaming_unique_visit, streaming_visitor_stats,
-# visitor_repair, visitor_stats_union -- all visitor-family with
-# multi-round green history and a headline relative in the head)
-# queue for r12. The 10 macro-family representatives test_registry
-# pins keep their per-round independent check.
-# 11 headline + 8 new + 21 staleness + 10 reps = 50.
-# Everything rotated OUT retains multi-round driver-green history and
-# stays oracle-gated locally every test run (tests/test_oracle.py
-# full registry, plus the standing adversarial/empty gates pinned by
-# test_registry.py).
-_DRIVER_PRIORITY = [
-    # headline bench set (bench.py tracks these per round)
-    "visitor_stats", "order_wide", "order_enriched", "product_stats",
-    "province_stats", "product_stats_union", "keyword_stats",
-    "dedup_exact", "dedup_minhash_lsh", "similarity_topk",
-    "pricing_summary",
-    # round-13 new entries (never driver-checked yet): iterative BPE
-    # training, classifier quality scoring, URL/domain curation, and
-    # the MP4/MJPEG container decode — each hash-green under the
-    # plain-session emulation before entering here
-    "bpe_train_merges", "bpe_segment", "doc_quality_model_score",
-    "doc_domain_budget", "multimodal_decode_video",
-    "multimodal_decode_jpeg_progressive",
-    # round-13 session-2 additions (never driver-checked): DSIR
-    # importance weighting, BM25 retrieval, winnowing fingerprints,
-    # and the MP3 frame-header walk — each hash-green under the
-    # plain-session emulation before entering here. Displaced to
-    # make room: basket_part_pairs (r8 evidence, least stale of the
-    # burn-down cohort), token_heavy_hitters / unique_visit /
-    # dedup_jaccard_complete (r7 evidence; their families stay
-    # represented in-head by streaming_token_countmin,
-    # streaming_unique_visit and dedup_jaccard_complete_capped),
-    # and contrastive_hard_negatives (r7; the similarity family is
-    # triply covered in-head by similarity_topk + knn_graph +
-    # dedup_minhash_lsh) for the IMA-ADPCM codec entry, and
-    # streaming_view_click_join (r7; eight other streaming reps stay
-    # in-head) for the FLAC codec entry, and serving_gmv /
-    # streaming_user_sessions (r7; standing-gate-covered every round)
-    # for the Gopher-rules and HTML-extraction entries, and
-    # streaming_stats_sql (r7; its batch SQL siblings province/keyword
-    # _stats_sql stay in-head) for the tokenizer-eval entry — with which
-    # EVERY never-driver-checked entry sits in this head, zeroing the
-    # backlog once the r13 driver artifact lands.
-    "doc_dsir_select", "bm25_topk", "doc_winnow_fingerprint",
-    "multimodal_mp3_headers", "multimodal_audio_adpcm",
-    "multimodal_audio_flac", "doc_gopher_rules", "doc_html_extract",
-    "bpe_compression_eval", "multimodal_audio_flac_stereo",
-    # staleness burn-down (r13): the 23 stalest entries by
-    # last_checked_round over ALL driver artifacts including r12 —
-    # the four r06-era entries, the full r07 chained cohort (one
-    # shared topology build serves all four), and the oldest r07/r08
-    # tiers. Everything displaced from the r12 head carries fresh
-    # r12 driver evidence (CORRECTNESS_r12.json, 50/50 green).
-    "streaming_unique_visit", "streaming_visitor_stats",
-    "visitor_repair", "visitor_stats_union",
-    "chained_keyword_stats", "chained_product_stats",
-    "chained_province_stats", "chained_visitor_stats",
-    "dedup_minhash_lsh_capped", "dedup_pagerank_capped", "knn_graph",
-    "streaming_dedup_exact",
-    "streaming_uv_dropdup_wm",
-    # macro-family representatives (pinned by test_registry)
-    "streaming_product_stats_enriched", "streaming_uv_dropdup",
-    "streaming_dedup_minhash", "streaming_token_countmin",
-    "dedup_simhash_hamming", "dedup_pagerank",
-    "dedup_jaccard_complete_capped", "doc_lm_surprisal",
-    "doc_hll_cardinality", "market_share",
-]
-
-
-def _reorder_registry() -> None:
-    missing = [n for n in _DRIVER_PRIORITY if n not in REGISTRY]
-    assert not missing, f"driver-priority names not registered: {missing}"
-    tail = [n for n in REGISTRY if n not in set(_DRIVER_PRIORITY)]
-    ordered = {n: REGISTRY[n] for n in (*_DRIVER_PRIORITY, *tail)}
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_reorder_registry()
 
 __all__ = ["REGISTRY", "QuerySpec", "register"]

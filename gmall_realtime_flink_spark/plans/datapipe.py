@@ -119,7 +119,6 @@ _MINHASH_CTES = """
     doc="Exact dedup: hash-groupBy on content, keep lowest doc_id as "
     "representative. At 100 TB: single shuffle on a 128-bit hash — "
     "uniformly distributed, skew-free by construction.",
-    headline=True,
     tags=("dedup",),
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -400,7 +399,6 @@ def doc_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle keyed by a uniform 128-bit hash, never an all-pairs "
     "cross product. 100 TB path: band buckets are the join key; "
     "output is |colliding pairs|.",
-    headline=True,
     tags=("dedup", "minhash", "lsh"),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -451,8 +449,8 @@ def dedup_minhash_lsh_xxh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     the registry's every-entry-has-an-oracle invariant is worth more
     than one more rows-only entry); correctness is pinned by the
     oracle-exact md5 twin (dedup_minhash_lsh_capped) plus
-    test_minhash_xxhash64_fast_path, and RUNTIME is regression-gated
-    by bench.py's production section.
+    test_minhash_xxhash64_fast_path; tools/bench_registry.py times it
+    with every other entry.
     """
     d = load(spark, sf_dir, "documents")
     return lsh_candidates(
@@ -720,7 +718,6 @@ def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "baseline for ANN. Query vector broadcast-cross-joined (no "
     "collect); dot/norm as JVM aggregate/zip_with folds; "
     "TakeOrderedAndProject top-k (no global sort).",
-    headline=True,
     tags=("similarity", "ann"),
 )
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4751,8 +4748,7 @@ def dedup_jaccard_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     "capped semantics (not just the ideal ones) are implemented "
     "exactly. Positional filter deliberately disabled under the cap "
     "(its first-common-token bound may reference a dropped token — "
-    "operators/dedup.prefix_filter_candidates). Regression-gated in "
-    "bench.py's production section.",
+    "operators/dedup.prefix_filter_candidates).",
     tags=("datapipe", "dedup", "jaccard", "scale", "production"),
 )
 def dedup_jaccard_complete_capped(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -58,7 +58,6 @@ from gmall_realtime_flink_spark.plans.registry import register
     """,
     doc="A1/A2: keyed 10 s tumbling window agg with stt/edt stamping "
     "(RT/app/dws/VisitorStatsApp.java:156-196).",
-    headline=True,
     tags=("window", "agg"),
 )
 def visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,7 +196,6 @@ def session_entry_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="J1: event-time interval join, band [t, t+30d] relative to the left "
     "side, inclusive both ends (RT/app/dwm/OrderWideApp.java:140-152).",
-    headline=True,
     tags=("join", "interval"),
 )
 def order_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,7 +275,6 @@ def payment_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="J3: chained broadcast dim enrichment with a derived attribute, "
     "replacing the ×6 async Phoenix/Redis lookups "
     "(RT/app/dwm/OrderWideApp.java:156-281; derived col ≈ age calc X4).",
-    headline=True,
     tags=("join", "broadcast"),
 )
 def order_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -331,7 +328,6 @@ def order_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="A3+J4: per-sku windowed agg with exact distinct order count, dims "
     "joined AFTER aggregation as in the reference "
     "(RT/app/dws/ProductStatsApp.java:263-397).",
-    headline=True,
     tags=("agg", "distinct", "join"),
 )
 def product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -433,7 +429,6 @@ def product_stats_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="A4: SQL tumble + COUNT(DISTINCT) per province "
     "(RT/app/dws/ProvinceStatsSqlApp.java:53-61), nation as province.",
-    headline=True,
     tags=("agg", "distinct", "sql"),
 )
 def province_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,7 +504,6 @@ def province_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "synthetic testdata has 5 event types) — shape real, counts 0. "
     "The union is a zero-shuffle plan node; the single downstream shuffle "
     "is on (window, sku).",
-    headline=True,
     tags=("union", "window", "agg"),
 )
 def product_stats_union(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -856,7 +850,6 @@ def keyword_product_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="F2+A5: tokenize → explode → keyword frequency, tagged SEARCH "
     "(RT/app/func/KeywordUDTF.java:16-26, KeywordStatsApp.java:68-88). "
     "Tokenizer = deterministic regex segmentation (public analogue of IK).",
-    headline=True,
     tags=("udtf", "explode", "agg"),
 )
 def keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -878,13 +871,13 @@ def keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY keyword
     """,
     doc="F2/X11 mixed-script form: the CJK-aware tokenizer "
-    "(operators/dedup.tokenize_mixed — ASCII word runs + CJK unigrams, "
+    "(functions/cjk.tokenize_mixed — ASCII word runs + CJK unigrams, "
     "the IK out-of-dictionary degradation) feeding keyword frequency; "
     "oracle uses the identical regex in DuckDB.",
     tags=("udtf", "explode", "text"),
 )
 def keyword_stats_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.dedup import tokenize_mixed
+    from gmall_realtime_flink_spark.functions.cjk import tokenize_mixed
 
     d = load(spark, sf_dir, "documents")
     tokens = d.select(
@@ -1312,7 +1305,6 @@ def serving_gmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bit-for-bit (a long->double/100 shortcut would round twice and "
     "diverge past 2^53). Quantity sums stay double: integral values, "
     "exact to 2^53. Verified hash-green vs DuckDB at sf0.01/0.1/10.",
-    headline=True,
     tags=("agg", "olap"),
 )
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

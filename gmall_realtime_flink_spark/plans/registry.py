@@ -32,11 +32,7 @@ class QuerySpec:
     builder: BuilderFn
     oracle: str | None  # DuckDB SQL over the same parquet views; None → rows-only check
     doc: str = ""
-    headline: bool = False  # include in bench.py
     tags: tuple[str, ...] = field(default_factory=tuple)
-    # rows-only checks require >0 rows (anti-padding guard); a query
-    # whose correct result is legitimately empty opts out with this
-    expect_empty: bool = False
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -46,16 +42,14 @@ def register(
     name: str,
     oracle: str | None,
     doc: str = "",
-    headline: bool = False,
     tags: tuple[str, ...] = (),
-    expect_empty: bool = False,
 ) -> Callable[[BuilderFn], BuilderFn]:
     def deco(fn: BuilderFn) -> BuilderFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
         REGISTRY[name] = QuerySpec(
             name=name, builder=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""),
-            headline=headline, tags=tags, expect_empty=expect_empty,
+            tags=tags,
         )
         return fn
 

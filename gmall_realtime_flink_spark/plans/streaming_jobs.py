@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from gmall_realtime_flink_spark.plans import datapipe
 from gmall_realtime_flink_spark.plans.registry import REGISTRY, register
 from gmall_realtime_flink_spark.streaming import jobs
 
@@ -476,252 +475,6 @@ def streaming_order_wide_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "streaming_token_countmin",
-    # the batch entry registered earlier in the import order IS the
-    # oracle: bounded streaming == batch under any batch slicing
-    oracle=REGISTRY["token_countmin"].oracle,
-    doc="Count-Min sketch as streaming state: the d×w counter grid is "
-    "a streaming groupBy (r, bucket) — constant-memory no matter how "
-    "long the stream runs — run to completion on the bounded stream "
-    "(counters merge across micro-batches; sums are associative), "
-    "then probed exactly like the batch token_countmin. Same oracle: "
-    "the finished grid is batch-identical under any batch slicing "
-    "(streaming/jobs.py streaming_token_countmin).",
-    tags=("streaming", "datapipe", "sketch"),
-)
-def streaming_token_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jobs.streaming_token_countmin(spark, sf_dir)
-
-
-@register(
-    "streaming_dedup_minhash",
-    oracle=f"""
-    WITH {datapipe._MINHASH_CTES},
-    src AS (SELECT doc_id, source FROM documents),
-    xc AS (
-      SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS old_id
-      FROM bands a
-      JOIN src sa ON a.doc_id = sa.doc_id AND sa.source = 'src0'
-      JOIN bands b ON a.band = b.band AND a.bh = b.bh
-      JOIN src sb ON b.doc_id = sb.doc_id AND sb.source <> 'src0'),
-    sets AS (SELECT doc_id, list_distinct(sh) AS sset FROM s),
-    rejected AS (
-      SELECT DISTINCT xc.new_id
-      FROM xc
-      JOIN sets x ON xc.new_id = x.doc_id
-      JOIN sets y ON xc.old_id = y.doc_id
-      WHERE round(len(list_intersect(x.sset, y.sset))::DOUBLE
-                  / len(list_distinct(x.sset || y.sset)), 6) >= 0.5)
-    SELECT d.doc_id FROM documents d
-    WHERE d.source = 'src0'
-      AND d.doc_id NOT IN (SELECT new_id FROM rejected)
-    """,
-    doc="Incremental near-dup admission under Structured Streaming: "
-    "new docs stream in, each micro-batch MinHash-bands against the "
-    "static corpus and Jaccard-verifies the cross candidates "
-    "(stream-static shape, shared operator body with the batch "
-    "dedup_incremental_minhash — same oracle: the verdict depends "
-    "only on the doc and the static corpus, so bounded streaming == "
-    "batch under any batch slicing) "
-    "(streaming/jobs.py streaming_dedup_minhash).",
-    tags=("streaming", "datapipe", "dedup", "minhash"),
-)
-def streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jobs.streaming_dedup_minhash(spark, sf_dir)
-
-
-# streaming substring admission oracle: new-doc (src0) grams probed
-# against the STATIC corpus's distinct gram set — dup = "present in
-# the old corpus", hits = src0 occurrences only (see the job
-# docstring for why new x new repeats are out of scope here)
-_SUBSTR_STREAM_CTES = datapipe._SUBSTR_SPANS_CTES.replace(
-    "dup AS (SELECT gh FROM occ GROUP BY gh HAVING count(*) >= 2),",
-    "dup AS (SELECT DISTINCT o.gh FROM occ o\n"
-    "      JOIN documents dc ON o.doc_id = dc.doc_id\n"
-    "      WHERE dc.source <> 'src0'),",
-).replace(
-    "hits AS (SELECT o.doc_id, o.pos FROM occ o JOIN dup USING (gh)),",
-    "hits AS (SELECT o.doc_id, o.pos FROM occ o JOIN dup USING (gh)\n"
-    "      JOIN documents dd ON o.doc_id = dd.doc_id\n"
-    "      WHERE dd.source = 'src0'),",
-)
-assert _SUBSTR_STREAM_CTES.count("src0") == 2  # both replaces anchored
-
-
-@register(
-    "streaming_dedup_substring",
-    oracle=f"""
-    WITH {_SUBSTR_STREAM_CTES}
-    SELECT doc_id, span_start, span_end, span_len FROM spans
-    """,
-    doc="Exact-substring admission marking under Structured "
-    "Streaming: new docs stream in, each micro-batch's k-gram "
-    "occurrences probe the static corpus's distinct gram-digest "
-    "index (LEFT SEMI), covered positions merge into maximal spans "
-    "per batch. Verdict depends only on (doc, static corpus), so "
-    "bounded streaming == batch under any slicing — new x new "
-    "repeats are the batch layer's dedup_substring_incremental "
-    "(streaming/jobs.py streaming_dedup_substring).",
-    tags=("streaming", "datapipe", "dedup", "text"),
-)
-def streaming_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jobs.streaming_dedup_substring(spark, sf_dir)
-
-
-@register(
-    "streaming_dedup_semantic",
-    oracle=f"""
-    WITH split AS (
-      SELECT CAST(ceil(0.9 * count(*)) AS BIGINT) AS s FROM embeddings),
-    {datapipe._kmeans_dyn_ctes("vec_id < (SELECT s FROM split)")},
-    pmls AS (
-      SELECT b.vec_id,
-             max(round(list_dot_product(a.emb, b.emb) /
-                   (sqrt(list_dot_product(a.emb, a.emb)) *
-                    sqrt(list_dot_product(b.emb, b.emb))), 6) + 0.0) AS mls
-      FROM assign a JOIN assign b
-        ON a.cell = b.cell AND a.vec_id < b.vec_id
-      GROUP BY b.vec_id),
-    surv AS (
-      SELECT p.vec_id, p.cell, p.emb
-      FROM assign p LEFT JOIN pmls m ON p.vec_id = m.vec_id
-      WHERE coalesce(m.mls < 0.4, TRUE)),
-    enew AS (
-      SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb
-      FROM embeddings
-      WHERE len(list_filter(embedding,
-        x -> x IS NULL OR isnan(x) OR isinf(x))) = 0
-        AND vec_id >= (SELECT s FROM split)),
-    nra AS (
-      SELECT vec_id, cid AS cell FROM (
-        SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY s DESC NULLS LAST, cid) AS rn
-        FROM (SELECT e.vec_id, c.cid,
-                     round(list_dot_product(e.emb, c.cvec) /
-                       (sqrt(list_dot_product(e.emb, e.emb)) *
-                        sqrt(list_dot_product(c.cvec, c.cvec))), 6) AS s
-              FROM enew e, cent c)) WHERE rn = 1),
-    nassign AS (
-      SELECT e.vec_id, e.emb, r.cell FROM enew e
-      JOIN nra r ON e.vec_id = r.vec_id),
-    -- STREAMING scope: comparators are the stored survivors ONLY
-    -- (new x new pairs are the batch layer's
-    -- dedup_semantic_incremental), so the verdict depends only on
-    -- (vector, static state) and slicing can't change it
-    nmls AS (
-      SELECT b.vec_id,
-             max(round(list_dot_product(a.emb, b.emb) /
-                   (sqrt(list_dot_product(a.emb, a.emb)) *
-                    sqrt(list_dot_product(b.emb, b.emb))), 6) + 0.0)
-               AS max_lower_sim
-      FROM surv a JOIN nassign b ON a.cell = b.cell
-      GROUP BY b.vec_id)
-    SELECT n.vec_id, n.cell, m.max_lower_sim,
-           coalesce(m.max_lower_sim < 0.4, TRUE) AS kept
-    FROM nassign n LEFT JOIN nmls m ON n.vec_id = m.vec_id
-    """,
-    doc="SemDeDup admission under Structured Streaming — the "
-    "embedding-space member of the streaming dedup family: new "
-    "vectors stream in, each micro-batch assigns to FROZEN "
-    "prefix-trained centroids (broadcast-K scan) and verdicts "
-    "against the prefix's stored survivors. Verdict depends only on "
-    "(vector, static state), so bounded streaming == batch under any "
-    "slicing — own-batch pairs are the batch layer's "
-    "dedup_semantic_incremental "
-    "(streaming/jobs.py streaming_dedup_semantic).",
-    tags=("streaming", "datapipe", "dedup", "similarity", "kmeans"),
-)
-def streaming_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jobs.streaming_dedup_semantic(spark, sf_dir)
-
-
-@register(
-    "streaming_dedup_exact",
-    oracle="""
-    SELECT md5(text) AS content_hash,
-           min(doc_id) AS keep_doc_id,
-           count(*) AS dup_ct
-    FROM documents
-    GROUP BY md5(text)
-    """,
-    doc="Exact dedup under Structured Streaming — incremental-ingest "
-    "dedup: documents arrive as a file stream, a streaming groupBy on "
-    "md5(text) maintains (min doc_id, count) state across "
-    "micro-batches (min, not dropDuplicates, so the representative is "
-    "arrival-order-independent). Same oracle as the batch dedup_exact: "
-    "streaming == batch on bounded input "
-    "(streaming/jobs.py streaming_dedup_exact).",
-    tags=("streaming", "datapipe", "dedup"),
-)
-def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jobs.streaming_dedup_exact(spark, sf_dir)
-
-
-@register(
-    "streaming_multimodal_features",
-    oracle="""
-    SELECT doc_id,
-           octet_length(encode(text))::INT AS n_bytes,
-           unicode(text)::INT AS first_cp,
-           md5(text) AS payload_md5
-    FROM documents
-    """,
-    doc="Multimodal plumbing under streaming: binary payload + "
-    "Arrow-batched mapInPandas feature extraction inside the "
-    "micro-batch plan — the continuous-ingest media pipeline, sharing "
-    "the batch transform body and oracle "
-    "(streaming/jobs.py streaming_multimodal_features).",
-    tags=("streaming", "multimodal", "pandas-udf"),
-)
-def streaming_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jobs.streaming_multimodal_features(spark, sf_dir)
-
-
-@register(
-    "streaming_multimodal_decode",
-    oracle="""
-    WITH m AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             length(text) AS len,
-             doc_id % 3 AS k
-      FROM documents),
-    dims AS (
-      SELECT *,
-             (1 + len % 9)::INT AS width,
-             (1 + doc_id % 6)::INT AS height,
-             CASE WHEN k = 0 THEN 1 ELSE 3 END AS ch
-      FROM m)
-    SELECT doc_id,
-           CASE WHEN text IS NULL THEN NULL ELSE 'png' END AS fmt,
-           CASE WHEN text IS NULL THEN NULL ELSE width END AS width,
-           CASE WHEN text IS NULL THEN NULL ELSE height END AS height,
-           CASE WHEN text IS NULL THEN NULL ELSE ch END AS channels,
-           NULL::INT AS sample_rate,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (width * height * ch)::BIGINT END AS n_values,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (p * width * height * ch)::BIGINT END AS value_sum,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE md5(repeat(chr(p), (width * height * ch)::INT))
-                END AS content_md5
-    FROM dims
-    """,
-    doc="REAL PNG decode under streaming: per-doc payloads staged and "
-    "zlib-decoded (chunk walk, CRC verify, five-filter scanline "
-    "reconstruction, PLTE expansion) inside each micro-batch by the "
-    "same Arrow mapInPandas kernels as the batch "
-    "multimodal_decode_png — one codec body, two engines, same "
-    "oracle. Stateless, slicing-invariant by construction "
-    "(streaming/jobs.py streaming_multimodal_decode).",
-    tags=("streaming", "multimodal", "pandas-udf", "decode"),
-)
-def streaming_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jobs.streaming_multimodal_decode(spark, sf_dir)
-
-
-@register(
     "streaming_purchase_dim_temporal",
     oracle="""
     WITH scd AS (
@@ -821,34 +574,3 @@ def chained_province_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def chained_keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topology.chained_keyword_stats(spark, sf_dir)
-
-
-def _html_extract_oracle() -> str:
-    """The batch doc_html_extract oracle verbatim (registered before
-    this module loads): streaming == batch on bounded input."""
-    from gmall_realtime_flink_spark.plans.registry import REGISTRY
-
-    return REGISTRY["doc_html_extract"].oracle
-
-
-@register(
-    "streaming_html_extract",
-    oracle=None,  # replaced below — needs the datapipe oracle
-    doc="HTML boilerplate removal under streaming: staged pages "
-    "parsed and block-classified inside each micro-batch by the same "
-    "Arrow mapInPandas kernels as the batch doc_html_extract — one "
-    "parser body, two engines, same oracle. Stateless, "
-    "slicing-invariant (streaming/jobs.py streaming_html_extract).",
-    tags=("streaming", "datapipe", "pandas-udf", "curation"),
-)
-def streaming_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jobs.streaming_html_extract(spark, sf_dir)
-
-
-# wire the shared oracle in after registration (the decorator takes
-# literals; the oracle lives on the batch entry registered earlier)
-from gmall_realtime_flink_spark.plans.registry import (  # noqa: E402
-    REGISTRY as _REG,
-)
-
-_REG["streaming_html_extract"].oracle = _html_extract_oracle()

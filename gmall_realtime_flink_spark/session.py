@@ -9,8 +9,9 @@ Scale notes (100 TB / 1000-executor design):
 - ``spark.sql.shuffle.partitions`` is a local-mode default only; at
   cluster scale AQE's ``advisoryPartitionSizeInBytes`` governs the
   post-shuffle layout, so the static number matters little.
-- Arrow enabled: every pandas-UDF boundary (dedup sketches, stateful
-  ops, multimodal decode) moves columnar batches, not pickled rows.
+- Arrow enabled: every pandas-UDF boundary (dedup sketches, the ST1
+  visitor-repair state function, multimodal decode) and ``toPandas``
+  (the oracle compare) move columnar batches, not pickled rows.
 - Session timezone pinned to UTC so event-time windows, date_format
   and the DuckDB oracle (UTC-naive timestamps) agree bit-for-bit.
 """
@@ -123,21 +124,22 @@ def get_spark(
         # no block crosses a network, so small blocks cost nothing.
         .config("spark.broadcast.blockSize", "256k")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # InferFiltersFromGenerate synthesizes `size(e)>0 AND
-        # isnotnull(e)` for every explode and pushes it below the
-        # projections, SUBSTITUTING the generator's full expression
-        # tree into the filter. When e is a computed array (tokenize /
-        # shingles / banding — higher-order functions outside
-        # whole-stage codegen), the pushed filter re-evaluates the
-        # whole pipeline per row before the projection computes it
-        # again: measured 3x on the shingle kernel (explode 6.1 s ->
-        # 0.44 s at sf0.1; dedup_jaccard_complete_capped 7.4 s ->
-        # 1.25 s). The inferred filter is redundant by construction —
-        # Generate drops empty/null inputs itself — so excluding the
-        # rule cannot change results, only plans; its only upside
-        # (early pruning of plain stored-column arrays below a join)
-        # doesn't occur in this engine, where every hot explode is
-        # over a computed array.
+        # InferFiltersFromGenerate plants `size(e) > 0 AND
+        # isnotnull(e)` below an explode whose input e is a column, and
+        # predicate pushdown then SUBSTITUTES e's defining expression
+        # into that filter, so a computed array is built twice per row.
+        # display_log_explode explodes the `displays` column of a
+        # from_json envelope: with the rule on, the pushed filter
+        # re-runs the whole to_json/from_json round trip per event
+        # below the projection that computes it (4 vCPU, sf0.1, median
+        # of 5 alternating noop writes: 0.91 s excluded, 2.75 s with
+        # the rule).
+        # The filter is redundant by construction (Generate drops
+        # empty/null inputs itself), so the exclusion changes plans,
+        # never results. The keyword explodes (doc_keywords, read by
+        # keyword_stats_sql and the chain's DWS job) explode a split()
+        # expression, not a column, so the rule leaves them alone today;
+        # tests/test_plans.py pins both shapes.
         .config(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer."

@@ -22,7 +22,7 @@ import shutil
 import tempfile
 import time
 import uuid
-from collections.abc import Callable, Iterable
+from collections.abc import Iterable
 
 import pandas as pd
 import pyarrow as pa
@@ -851,327 +851,6 @@ def streaming_order_wide_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.filter(F.col("o_orderkey") >= 0)
 
 
-def streaming_token_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min sketch as STREAMING STATE: the token stream's d×w
-    counter grid is a streaming groupBy (r, bucket) — exactly the
-    constant-memory accumulation CM was designed for (state is at
-    most d·w counters no matter how long the stream runs, vs
-    |vocabulary| keys for an exact streaming count). The grid runs to
-    completion on the bounded stream (complete mode, counters merge
-    across micro-batches because sums are associative), then the
-    top-10 probe estimates read the finished grid exactly like the
-    batch `token_countmin` — same oracle: the grid's final counts are
-    batch-identical under any batch slicing.
-    """
-    from gmall_realtime_flink_spark.operators.dedup import tokenize
-    from gmall_realtime_flink_spark.operators.sketches import (
-        countmin_cells,
-        countmin_probe,
-    )
-
-    docs_dir = stage_table_dir(sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(
-            warehouse_stream_schema(spark, sf_dir, "documents")
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    toks = stream.select(F.explode(tokenize(F.col("text"))).alias("item"))
-    cells = run_bounded(
-        countmin_cells(toks, item_col="item"),
-        spark,
-        output_mode="complete",
-        inputs=[docs_dir],
-    )
-    # probe selection + truth: the batch accuracy audit over the same
-    # corpus (production drops this — the grid IS the answer); shares
-    # countmin_probe with the batch entry so salt format and
-    # tie-breaks can never drift from the common oracle
-    batch_toks = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).select(F.explode(tokenize(F.col("text"))).alias("item"))
-    return countmin_probe(cells, batch_toks, item_col="item")
-
-
-def _run_admission(
-    spark: SparkSession,
-    sf_dir: str,
-    base: str | None,
-    table: str,
-    sink: str,
-    admit: Callable[[DataFrame], DataFrame],
-    out_fields: list[T.StructField],
-) -> DataFrame:
-    """One admission job: `table` arrives as a file stream (one file per
-    trigger) and each micro-batch's `admit(batch)` lands in
-    `<base>/<sink>` through the idempotent batch writer — a retried
-    micro-batch replaces its OWN `batch_id=N` dir (foreachBatch is
-    at-least-once; this makes the sink effectively-once).
-
-    `base` (tests): stable sink/checkpoint/staging dirs, so a crashed
-    run can RESTART and resume from its committed offsets — the
-    crash-replay path the batch_id overwrite exists for. Default: a
-    fresh dir, removed once the result is held in the block store."""
-    owned = base is None
-    if owned:
-        base = tempfile.mkdtemp(prefix=f"{sink}_stream_")
-    out_dir = os.path.join(base, sink)
-    src_dir = os.path.join(base, "src")
-    if not os.path.isdir(src_dir):
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.abspath(table_path(sf_dir, table)),
-            os.path.join(src_dir, "part-000.parquet"),
-        )
-    # pre-create so the final read succeeds (as typed-empty) even if no
-    # micro-batch admitted anything
-    os.makedirs(out_dir, exist_ok=True)
-    writer = idempotent_batch_writer(out_dir)
-    try:
-        q = (
-            spark.readStream.schema(warehouse_stream_schema(spark, sf_dir, table))
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(lambda b, bid: writer(admit(b), bid))
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # Explicit schema: if nothing was written, schema inference
-        # would fail — an empty typed result is the correct answer.
-        # batch_id is LongType: foreachBatch epoch ids exceed 2^31 on
-        # long-lived streams.
-        out = (
-            spark.read.schema(
-                T.StructType(
-                    [*out_fields, T.StructField("batch_id", T.LongType())]
-                )
-            )
-            .parquet(out_dir)
-            .select(*[f.name for f in out_fields])
-        )
-        return out.localCheckpoint(eager=True) if owned else out
-    finally:
-        if owned:
-            _remove(base)
-
-
-def streaming_dedup_minhash(
-    spark: SparkSession, sf_dir: str, base: str | None = None
-) -> DataFrame:
-    """Incremental NEAR-dup admission under Structured Streaming: new
-    documents (source = src0) arrive as a file stream; each
-    micro-batch is MinHash-banded against the STATIC corpus
-    (stream-static shape, same operator body as the batch
-    `dedup_incremental_minhash`: lsh_candidates_cross + exact-Jaccard
-    verify at J >= 0.5), and admitted doc_ids append to the sink.
-
-    No cross-batch state is needed — admission is new-doc × corpus
-    only, so the bounded result equals the batch query under ANY
-    batch slicing (each doc's verdict depends only on itself and the
-    static corpus). At 100 TB the corpus band rows are a persisted
-    band-hash-partitioned index re-probed per trigger; the corpus is
-    signed once, never per batch.
-    """
-    from gmall_realtime_flink_spark.operators.dedup import (
-        jaccard_verify,
-        lsh_candidates_cross,
-        minhash_signatures,
-    )
-
-    docs_schema = warehouse_stream_schema(spark, sf_dir, "documents")
-    corpus = (
-        spark.read.parquet(table_path(sf_dir, "documents"))
-        .filter(F.col("source") != "src0")
-        .select("doc_id", "text")
-        .persist()
-    )
-    # persist = the "signed once" claim: without it each foreachBatch
-    # re-executes the md5-heavy signature lineage over the whole
-    # corpus (N re-signings for N micro-batches)
-    corpus_sigs = minhash_signatures(corpus).persist()
-
-    def admit(batch_df: DataFrame) -> DataFrame:
-        new = batch_df.filter(F.col("source") == "src0")
-        cand = lsh_candidates_cross(
-            minhash_signatures(new), corpus_sigs
-        ).select(
-            F.col("new_id").alias("doc_a"), F.col("old_id").alias("doc_b")
-        )
-        docs_union = new.select("doc_id", "text").unionByName(
-            corpus.select("doc_id", "text")
-        )
-        rejected = (
-            jaccard_verify(cand, docs_union, threshold=0.5)
-            .select(F.col("doc_a").alias("doc_id"))
-            .distinct()
-        )
-        return new.select("doc_id").join(rejected, "doc_id", "left_anti")
-
-    try:
-        return _run_admission(
-            spark, sf_dir, base, "documents", "admitted", admit,
-            [docs_schema["doc_id"]],
-        )
-    finally:
-        corpus_sigs.unpersist()
-        corpus.unpersist()
-
-
-def streaming_dedup_semantic(
-    spark: SparkSession, sf_dir: str, base: str | None = None
-) -> DataFrame:
-    """Semantic (SemDeDup) admission under Structured Streaming — the
-    embedding-space member of the streaming dedup family (exact /
-    MinHash / substring): new vectors (the top decile by vec_id, the
-    dedup_incremental id-split convention) arrive as a file stream;
-    each micro-batch is assigned to FROZEN prefix-trained centroids
-    (a pure broadcast-K scan) and verdicted against the prefix's
-    stored SURVIVORS only.
-
-    Verdict = same-cell survivor with cosine >= threshold — new×new
-    batch pairs are deliberately out of scope so the verdict depends
-    only on (vector, static state) and the bounded result equals the
-    batch oracle under ANY micro-batch slicing (the same
-    slicing-invariance contract as streaming_dedup_substring; own-
-    batch pairs are the batch layer's `dedup_semantic_incremental`).
-
-    At 100 TB the admission state (K×dim centroids + the survivor
-    table, cell-partitioned) is built ONCE and persisted — per-trigger
-    cost is |batch|·K cosines plus the batch's survivor-cell pairs;
-    the stored corpus is never re-verdicted
-    (operators/similarity.semantic_admission_state / semantic_admit).
-    """
-    from gmall_realtime_flink_spark.operators.similarity import (
-        semantic_admission_state,
-        semantic_admit,
-    )
-
-    full = spark.read.parquet(table_path(sf_dir, "embeddings"))
-    split, cent, surv = semantic_admission_state(
-        full, threshold=0.4, split_frac=0.9
-    )
-    # persist = the "state built once" claim: without it each
-    # foreachBatch re-runs the whole prefix kmeans + survivor verdict.
-    # Materialize EAGERLY (count) before the stream starts: lazily,
-    # the first micro-batch pays the whole prefix kmeans + survivor
-    # build inside its trigger (measured at skew-sf1/8 slices: 25 s
-    # first trigger vs 0.9 s steady-state p50) and the latency story
-    # starts with an outlier that isn't admission cost at all.
-    cent = cent.persist()
-    surv = surv.persist()
-    cent.count()
-    surv.count()
-    try:
-        return _run_admission(
-            spark, sf_dir, base, "embeddings", "verdicts",
-            lambda b: semantic_admit(
-                b.filter(F.col("vec_id") >= F.lit(split)),
-                cent, surv, threshold=0.4, own_batch=False,
-            ),
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("cell", T.LongType()),
-                T.StructField("max_lower_sim", T.DoubleType()),
-                T.StructField("kept", T.BooleanType()),
-            ],
-        )
-    finally:
-        cent.unpersist()
-        surv.unpersist()
-
-
-def streaming_dedup_substring(
-    spark: SparkSession, sf_dir: str, base: str | None = None, k: int = 8
-) -> DataFrame:
-    """Exact-substring admission marking under Structured Streaming:
-    new documents (source = src0) arrive as a file stream; each
-    micro-batch's k-gram occurrences are probed (LEFT SEMI) against
-    the STATIC corpus's distinct gram-digest index, and the covered
-    positions merge into maximal spans (operators/dedup
-    spans_from_hits) appended per batch.
-
-    Verdict = new-doc grams PRESENT IN THE STATIC CORPUS only —
-    batch-internal (new x new) repeats are deliberately out of scope
-    here so the verdict depends only on (doc, static corpus) and the
-    bounded result equals the batch oracle under ANY micro-batch
-    slicing (the same slicing-invariance contract as
-    streaming_dedup_minhash; new x new repeats are the batch layer's
-    `dedup_substring_incremental`). Islands are computable per batch
-    because a file-stream row (one whole document) never splits
-    across micro-batches.
-
-    At 100 TB the corpus gram index is built ONCE (persisted here;
-    a gh-partitioned table in production) — per-trigger cost is the
-    batch's grams + one semi-join probe, proportional to ingest, not
-    corpus."""
-    from gmall_realtime_flink_spark.operators.dedup import (
-        spans_from_hits,
-        substring_gram_occurrences,
-    )
-
-    docs_schema = warehouse_stream_schema(spark, sf_dir, "documents")
-    corpus = (
-        spark.read.parquet(table_path(sf_dir, "documents"))
-        .filter(F.col("source") != "src0")
-        .select("doc_id", "text")
-    )
-    corpus_ghs = (
-        substring_gram_occurrences(corpus, k=k).select("gh").distinct()
-        .persist()
-    )
-
-    def admit(batch_df: DataFrame) -> DataFrame:
-        new = batch_df.filter(F.col("source") == "src0")
-        hits = substring_gram_occurrences(new, k=k).join(
-            corpus_ghs, "gh", "left_semi"
-        ).select("doc_id", "pos")
-        return spans_from_hits(hits, k)
-
-    try:
-        return _run_admission(
-            spark, sf_dir, base, "documents", "spans", admit,
-            [
-                docs_schema["doc_id"],
-                T.StructField("span_start", T.LongType()),
-                T.StructField("span_end", T.LongType()),
-                T.StructField("span_len", T.LongType()),
-            ],
-        )
-    finally:
-        corpus_ghs.unpersist()
-
-
-def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup under Structured Streaming — the incremental-ingest
-    form of the batch `dedup_exact`: documents arrive as a file stream
-    and a streaming groupBy on the content hash maintains
-    (keep_doc_id = min, dup_ct = count) state across micro-batches.
-    min() rather than dropDuplicates keeps the representative
-    deterministic regardless of arrival/partition order, so the
-    bounded result is bit-identical to the batch query. State is the
-    distinct-hash set — at 100 TB this runs keyed on a uniform
-    128-bit hash (skew-free) with RocksDB state off-heap.
-    """
-    docs_dir = stage_table_dir(sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(
-            warehouse_stream_schema(spark, sf_dir, "documents")
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    agg = stream.groupBy(F.md5("text").alias("content_hash")).agg(
-        F.min("doc_id").alias("keep_doc_id"),
-        F.count(F.lit(1)).alias("dup_ct"),
-    )
-    return run_bounded(
-        agg, spark, output_mode="complete", inputs=[docs_dir]
-    )
-
-
 def streaming_route_config_reload(
     spark: SparkSession,
     events_dir: str,
@@ -1219,64 +898,6 @@ def streaming_route_config_reload(
         _remove(ckpt)
 
 
-def streaming_multimodal_features(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Multimodal feature extraction under Structured Streaming: the
-    documents arrive as a file stream, the binary payload is attached
-    and features are extracted by the SAME Arrow-batched mapInPandas
-    as the batch `multimodal_features` (one transform body, two
-    engines) — the continuous-ingest form of the media pipeline. The
-    stateless mapInPandas runs inside each micro-batch plan; no state,
-    no watermark needed."""
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_payload,
-        extract_features,
-    )
-
-    docs_dir = stage_table_dir(sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(
-            warehouse_stream_schema(spark, sf_dir, "documents")
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    return run_bounded(
-        extract_features(attach_payload(stream)), spark, inputs=[docs_dir]
-    )
-
-
-def streaming_multimodal_decode(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """REAL media decode under Structured Streaming: documents arrive
-    as a file stream, per-doc PNG payloads are staged and decoded by
-    the SAME Arrow-batched mapInPandas kernels as the batch
-    `multimodal_decode_png` (attach_png_payload -> decode_media_stats
-    — one codec body, two engines). Stateless inside each
-    micro-batch; the decode is a narrow transform so continuous
-    ingest decodes at file-arrival parallelism with no shuffle."""
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_png_payload,
-        decode_media_stats,
-    )
-
-    docs_dir = stage_table_dir(sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(
-            warehouse_stream_schema(spark, sf_dir, "documents")
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    return run_bounded(
-        decode_media_stats(attach_png_payload(stream)),
-        spark,
-        inputs=[docs_dir],
-    )
-
-
 def streaming_purchase_dim_temporal(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1320,32 +941,3 @@ def streaming_purchase_dim_temporal(
         ),
     )
     return run_bounded(joined, spark, inputs=[path])
-
-
-def streaming_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML main-content extraction under Structured Streaming: docs
-    arrive as a file stream, pages are staged and block-classified by
-    the SAME Arrow mapInPandas kernels as the batch doc_html_extract
-    (attach_html_payload -> extract_main_text — one parser body, two
-    engines). Stateless inside each micro-batch and slicing-invariant
-    by construction: per-doc verdicts depend only on that doc's page,
-    so continuous ingest extracts at file-arrival parallelism with no
-    shuffle and no state."""
-    from gmall_realtime_flink_spark.operators.html import (
-        attach_html_payload,
-        extract_main_text,
-    )
-
-    docs_dir = stage_table_dir(sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(
-            warehouse_stream_schema(spark, sf_dir, "documents")
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    return run_bounded(
-        extract_main_text(attach_html_payload(stream)),
-        spark,
-        inputs=[docs_dir],
-    )

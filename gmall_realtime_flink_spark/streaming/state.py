@@ -161,88 +161,3 @@ def jump_detect_stream(
         "user_id",
         F.date_format("last.ts", TS_FMT).alias("jump_ts"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Streaming sequence packing (beyond-reference: continuous-ingest
-# training-batch construction; batch analogue operators/packing.py)
-# ---------------------------------------------------------------------------
-
-PACK_OUT = "doc_id long, bucket int, n_tokens int, pack_id long"
-PACK_STATE = "next_pack long, tokens_used long"
-
-
-def _pack_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Greedy packing with bucket-keyed state: (current pack ordinal,
-    tokens already in it) survives micro-batches, so a pack keeps
-    filling across arrivals. Within a batch rows are ordered by the
-    content-stable sort key for determinism; ACROSS batches order is
-    arrival order — streaming packing is an online algorithm, so its
-    assignment legitimately differs from the batch operator's
-    global-hash-order packing (budget semantics are identical and
-    pytest-pinned; no SQL oracle is claimed)."""
-    rows = _concat_sorted(pdfs, by=["sort_key", "doc_id"])
-    if rows.empty:
-        return
-    if state.exists:
-        next_pack, used = state.get
-    else:
-        next_pack, used = 0, 0
-    budget = int(rows["budget"].iloc[0])
-    out_pack = []
-    for n in rows["n_tokens"]:
-        n = int(n)
-        if used > 0 and used + n > budget:
-            next_pack += 1
-            used = 0
-        out_pack.append(next_pack)
-        used += n
-    state.update((int(next_pack), int(used)))
-    yield pd.DataFrame(
-        {
-            "doc_id": rows["doc_id"],
-            "bucket": rows["bucket"].astype("int32"),
-            "n_tokens": rows["n_tokens"].astype("int32"),
-            "pack_id": out_pack,
-        }
-    )
-
-
-def pack_stream(
-    docs: DataFrame,
-    budget_tokens: int = 256,
-    n_buckets: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming greedy sequence packing: documents are hash-bucketed
-    (same deterministic bucket as the batch operator), and per-bucket
-    state carries the open pack across micro-batches — the
-    continuous-ingest form of operators/packing.pack_documents.
-
-    Online vs batch: this is TRUE first-fit (a doc that would
-    overflow the open pack closes it and starts the next), whereas
-    the batch operator uses the cumulative-cut formulation — both
-    respect the budget bound, and the streaming form never skips
-    pack ids. At 100 TB: bucket = state partition key; state is two
-    longs per bucket.
-    """
-    from gmall_realtime_flink_spark.operators.packing import _ws_tokens
-    from gmall_realtime_flink_spark.operators.sampling import hash_bucket
-
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        hash_bucket(F.col(id_col), n_buckets).cast("int").alias("bucket"),
-        F.md5(F.col(id_col).cast("string")).alias("sort_key"),
-        F.size(_ws_tokens(F.col(text_col))).alias("n_tokens"),
-        F.lit(budget_tokens).alias("budget"),
-    )
-    return base.groupBy("bucket").applyInPandasWithState(
-        _pack_fn,
-        outputStructType=PACK_OUT,
-        stateStructType=PACK_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -9,7 +9,7 @@ first full-registry run against it failed 21 of 165 entries (ANSI
 divide-by-zero, int64 overflow at magnitude outliers, null-event-time
 window divergence, null-swallowing sentinel filters, float32
 underflow ordering, kernels without NULL contracts —
-ADVERSARIAL_r08.json / SCALE.md round-8 notes).
+artifacts/r08/ADVERSARIAL_r08.json / SCALE.md round-8 notes).
 
 This module keeps exactly those 21 regression surfaces under the
 DuckDB hash gate on every pytest run, against a corpus generated
@@ -50,7 +50,6 @@ ONCE_FAILING = [
     # NULL-payload kernel contracts
     "multimodal_features",
     "multimodal_frame_sample",
-    "streaming_multimodal_features",
     # null-swallowing sentinel filters; streaming null event time
     "streaming_user_jump",
     "streaming_uv_dropdup_wm",

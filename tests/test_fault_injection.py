@@ -20,8 +20,6 @@ import os
 import subprocess
 import sys
 
-import pytest
-
 RETRY_SCRIPT = r"""
 import os, sys
 sys.path.insert(0, os.environ["REPO_DIR"])
@@ -116,69 +114,3 @@ def test_results_identical_under_task_retry(sf_dir):
     # retry noise) — guard against the harness silently not retrying
     assert "injected failure" in (proc.stderr + proc.stdout)
 
-
-def test_admission_sink_crash_between_write_and_commit(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """The streaming near-dup admission sink claims effectively-once
-    via its batch_id dir overwrite. Detonate the claim:
-    crash AFTER the batch's parquet commit but BEFORE the source
-    offset commits (the at-least-once window), restart against the
-    SAME checkpoint/sink dirs, and require the final admitted set to
-    equal a clean run's — the replayed batch must REPLACE its own
-    partition, not append duplicates."""
-    from gmall_realtime_flink_spark.streaming import jobs, sinks
-    from pyspark.errors import StreamingQueryException
-
-    clean = sorted(
-        r["doc_id"]
-        for r in jobs.streaming_dedup_minhash(spark, sf_dir).collect()
-    )
-    assert clean, "clean run admitted nothing — test corpus unusable"
-
-    base = str(tmp_path / "admission")
-    detonated = {"n": 0}
-
-    def bomb(out_dir: str, batch_id: int) -> None:
-        detonated["n"] += 1
-        raise RuntimeError("injected crash between write and commit")
-
-    monkeypatch.setattr(sinks, "FAULT_AFTER_WRITE", bomb)
-    with pytest.raises(StreamingQueryException):
-        jobs.streaming_dedup_minhash(spark, sf_dir, base=base)
-    monkeypatch.undo()
-    assert detonated["n"] == 1
-    # data IS on disk from the crashed attempt (that's the hazard)
-    import glob
-
-    assert glob.glob(os.path.join(base, "admitted", "batch_id=*/*.parquet"))
-
-    # restart: offsets were never committed, the batch REPLAYS, and
-    # the overwrite replaces its own batch_id dir
-    out = jobs.streaming_dedup_minhash(spark, sf_dir, base=base)
-    replayed = sorted(r["doc_id"] for r in out.collect())
-    assert replayed == clean
-
-
-def test_substring_stream_restart_is_idempotent(spark, sf_dir, tmp_path):
-    """streaming_dedup_substring's sink uses the same batch_id dir
-    overwrite as the admission sink; a rerun against the SAME base
-    (checkpoint + sink dirs) must find nothing new to process and
-    leave the span set byte-identical — restart idempotency."""
-    from gmall_realtime_flink_spark.streaming import jobs
-
-    base = str(tmp_path / "substr")
-    first = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.span_len)
-        for r in jobs.streaming_dedup_substring(
-            spark, sf_dir, base=base
-        ).collect()
-    )
-    rerun = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.span_len)
-        for r in jobs.streaming_dedup_substring(
-            spark, sf_dir, base=base
-        ).collect()
-    )
-    assert first == rerun
-    assert first, "no spans at all — corpus unusable for this test"

@@ -11,7 +11,7 @@ from gmall_realtime_flink_spark.functions.compat import (
     rename_snake_to_camel,
     snake_to_camel,
 )
-from gmall_realtime_flink_spark.operators.dedup import tokenize_mixed
+from gmall_realtime_flink_spark.functions.cjk import tokenize_mixed
 
 
 def test_snake_to_camel():

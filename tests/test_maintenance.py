@@ -1,69 +1,15 @@
-"""Storage-layout maintenance: compaction + clustering, verified at
-the filesystem level (file counts, parquet row-group statistics)."""
+"""Storage layout, verified at the filesystem level: schema evolution,
+backfill overwrites and the bucketed-table cache of warehouse tables,
+and the permutation-preserving training-shard write."""
 
 from __future__ import annotations
 
 import glob
 import os
 
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from gmall_realtime_flink_spark.catalog import load
-from gmall_realtime_flink_spark.operators.maintenance import (
-    clustered_write,
-    compact_parquet,
-)
-
-
-def test_compact_parquet_shrinks_file_count(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    # simulate a streaming sink's small-files output: 64 shards
-    load(spark, sf_dir, "events").repartition(64).write.parquet(src)
-    assert len(glob.glob(os.path.join(src, "*.parquet"))) == 64
-
-    n = compact_parquet(spark, src, dst, target_bytes=1 << 30)
-    files = glob.glob(os.path.join(dst, "*.parquet"))
-    assert n == 1 and len(files) == 1
-    assert (
-        spark.read.parquet(dst).count()
-        == load(spark, sf_dir, "events").count()
-    )
-
-
-def test_clustered_write_bounds_rowgroup_ranges(spark, sf_dir, tmp_path):
-    """After clustering on user_id, a point-lookup band intersects few
-    files: every file covers a disjoint user_id range (vs. every file
-    covering the whole range in arrival order)."""
-    dst = str(tmp_path / "clustered")
-    events = load(spark, sf_dir, "events").select("user_id", "event_type")
-    clustered_write(events, dst, "user_id", n_files=8)
-
-    files = sorted(glob.glob(os.path.join(dst, "*.parquet")))
-    assert len(files) >= 4  # range partitioner may merge tiny bands
-    ranges = []
-    for f in files:
-        md = pq.read_metadata(f)
-        lo = min(
-            md.row_group(i).column(0).statistics.min
-            for i in range(md.num_row_groups)
-        )
-        hi = max(
-            md.row_group(i).column(0).statistics.max
-            for i in range(md.num_row_groups)
-        )
-        ranges.append((lo, hi))
-    ranges.sort()
-    # disjoint bands: each file's max stays below the next file's min
-    for (lo_a, hi_a), (lo_b, hi_b) in zip(ranges, ranges[1:]):
-        assert hi_a <= lo_b
-
-    # and Spark's scan prunes: a one-user filter reads back correctly
-    # through the pruned layout (correctness of the rewrite)
-    one = spark.read.parquet(dst).filter(F.col("user_id") == 13)
-    want = events.filter(F.col("user_id") == 13)
-    assert one.count() == want.count()
 
 
 def test_dim_schema_evolution_merge(spark, sf_dir, tmp_path):
@@ -123,30 +69,6 @@ def test_dynamic_partition_overwrite_backfill(spark, sf_dir, tmp_path):
     assert after.filter(F.col("dt") == d2).count() == before_d2
 
 
-def test_retention_purge_drops_oldest_partitions(spark, sf_dir, tmp_path):
-    from gmall_realtime_flink_spark.operators.maintenance import (
-        retention_purge,
-    )
-
-    dst = str(tmp_path / "facts")
-    events = load(spark, sf_dir, "events").withColumn(
-        "dt", F.date_format("ts", "yyyy-MM-dd")
-    )
-    events.write.partitionBy("dt").parquet(dst)
-    days = sorted(
-        d for d in __import__("os").listdir(dst) if d.startswith("dt=")
-    )
-    if len(days) < 2:
-        import pytest
-
-        pytest.skip("single-day testdata")
-    purged = retention_purge(dst, keep=1)
-    assert purged == days[:-1]
-    left = spark.read.parquet(dst).select("dt").distinct().collect()
-    # partition discovery infers dt as DATE — compare stringified
-    assert {str(r["dt"]) for r in left} == {days[-1].split("=", 1)[1]}
-
-
 def test_write_training_shards_roundtrips_permutation(spark, sf_dir, tmp_path):
     """The sharded corpus read back per shard, in file row order, must
     reproduce the corpus_shuffle permutation exactly — shard
@@ -177,58 +99,6 @@ def test_write_training_shards_roundtrips_permutation(spark, sf_dir, tmp_path):
         pos_list = [r["pos"] for r in rows]
         assert sorted(pos_list) == list(range(1, len(pos_list) + 1))
     assert seen == want
-
-
-def test_zorder_prunes_on_both_columns(spark, tmp_path):
-    """Z-order layout: footer min/max stats must prune files for a
-    narrow predicate on EITHER z-column — the multi-column win a
-    single-column range cluster can't give (its non-lead column spans
-    the full domain in every file)."""
-    from gmall_realtime_flink_spark.operators.maintenance import (
-        clustered_write,
-        zorder_write,
-    )
-
-    df = (
-        spark.range(256 * 256)
-        .selectExpr(
-            "cast(id % 256 as long) AS x",
-            "cast(id div 256 as long) AS y",
-        )
-    )
-
-    def overlapping_files(path, col_idx, lo, hi):
-        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        hit = 0
-        for f in files:
-            md = pq.read_metadata(f)
-            fmin = min(
-                md.row_group(i).column(col_idx).statistics.min
-                for i in range(md.num_row_groups)
-            )
-            fmax = max(
-                md.row_group(i).column(col_idx).statistics.max
-                for i in range(md.num_row_groups)
-            )
-            if fmax >= lo and fmin <= hi:
-                hit += 1
-        return hit, len(files)
-
-    zdir = str(tmp_path / "zorder")
-    zorder_write(df, zdir, ["x", "y"], n_files=16, bits=8)
-    for col in (0, 1):  # x then y: both must prune
-        hit, total = overlapping_files(zdir, col, 0, 15)
-        assert total >= 8
-        assert hit <= total // 2, (col, hit, total)
-
-    # control: single-column cluster on x cannot prune on y
-    cdir = str(tmp_path / "xcluster")
-    clustered_write(df, cdir, "x", n_files=16)
-    hit, total = overlapping_files(cdir, 1, 0, 15)
-    assert hit == total  # every file spans the full y domain
-
-    # layout is a permutation, not a filter
-    assert spark.read.parquet(zdir).count() == 256 * 256
 
 
 def test_bucketed_table_rebuilds_on_stale_fingerprint(spark, tmp_path):

@@ -170,13 +170,7 @@ def _reader(entry: str):
     [
         (("streaming_unique_visit", "streaming_uv_dropdup"), 200),
         (
-            (
-                "streaming_cdc_route",
-                "streaming_dedup_minhash",
-                "streaming_dedup_semantic",
-                "streaming_dedup_substring",
-                "streaming_route_config_reload",
-            ),
+            ("streaming_cdc_route", "streaming_route_config_reload"),
             10,
         ),
     ],

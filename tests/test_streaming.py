@@ -666,83 +666,6 @@ def test_route_config_reload_between_batches(spark, sf_dir):
     assert len(b1) == half2["event_type"].isin(["view", "click"]).sum()
 
 
-def test_pack_stream_first_fit_across_batches(spark, sf_dir):
-    """Streaming sequence packing: per-bucket state (open pack ordinal
-    + fill) must survive micro-batches. The expected assignment is
-    recomputed exactly in pandas from the known arrival order (file
-    order, content-stable sort within each batch) and compared
-    row-for-row; budget bound asserted independently."""
-    import pandas as pd
-    import hashlib
-
-    from gmall_realtime_flink_spark.streaming.state import pack_stream
-
-    docs = pq.read_table(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
-    ).to_pandas()
-    half = len(docs) // 2
-    tmp = tempfile.mkdtemp(prefix="docs_pack_stream_")
-    import pyarrow as pa_
-
-    for i, part in enumerate((docs.iloc[:half], docs.iloc[half:])):
-        p = os.path.join(tmp, f"part-{i:03d}.parquet")
-        pq.write_table(pa_.Table.from_pandas(part, preserve_index=False), p)
-        # pin arrival order (the expected-assignment replay assumes it)
-        os.utime(p, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    stream = (
-        spark.readStream.schema(
-            spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-            .select("doc_id", "text")
-            .schema
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(tmp)
-    )
-    budget, n_buckets = 256, 8
-    got = jobs.run_bounded(
-        pack_stream(stream, budget_tokens=budget, n_buckets=n_buckets),
-        spark,
-    ).toPandas()
-
-    # expected: exact first-fit per bucket over (batch, sort_key, doc_id)
-    def md5(s):
-        return hashlib.md5(str(s).encode()).hexdigest()
-
-    exp_rows = {}
-    state = {}
-    for batch_idx, part in enumerate((docs.iloc[:half], docs.iloc[half:])):
-        p = part.copy()
-        p["bucket"] = [int(md5(i)[:2], 16) % n_buckets for i in p["doc_id"]]
-        p["sort_key"] = [md5(i) for i in p["doc_id"]]
-        p["n_tokens"] = [len(str(t).split()) for t in p["text"]]
-        p = p.sort_values(["bucket", "sort_key", "doc_id"])
-        for b, grp in p.groupby("bucket"):
-            pack, used = state.get(b, (0, 0))
-            for _, r in grp.iterrows():
-                n = int(r["n_tokens"])
-                if used > 0 and used + n > budget:
-                    pack += 1
-                    used = 0
-                exp_rows[int(r["doc_id"])] = (b, pack)
-                used += n
-            state[b] = (pack, used)
-
-    assert len(got) == len(docs)
-    for _, r in got.iterrows():
-        assert exp_rows[int(r["doc_id"])] == (
-            int(r["bucket"]),
-            int(r["pack_id"]),
-        )
-    # budget bound + dense ids (true first-fit never skips)
-    for (_, _), grp in got.groupby(["bucket", "pack_id"]):
-        if len(grp) > 1:
-            assert int(grp["n_tokens"].sum()) <= budget
-    for _, grp in got.groupby("bucket"):
-        ids = sorted(grp["pack_id"].unique())
-        assert ids == list(range(len(ids)))
-
-
 def test_session_checkpoint_commit_confs(spark):
     """get_spark checkpoints RocksDB state as changelogs and writes
     checkpoint files through the FileSystem-based manager, a class this
@@ -902,37 +825,6 @@ def test_sorted_split_mtimes_strictly_increase(sf_dir, tmp_path):
     assert all(b - a >= 1.0 for a, b in zip(mtimes, mtimes[1:])), mtimes
     assert os.path.getmtime(sentinel) >= mtimes[-1] + 1.0
 
-
-def test_semantic_admission_streaming_vs_incremental(spark, sf_dir):
-    """The two admission scopes relate by construction: the streaming
-    form compares only against stored survivors, the batch incremental
-    form ADDITIONALLY against lower-id own-batch vectors — so every
-    vector the incremental form keeps, the streaming form keeps too
-    (fewer comparators can only raise max_lower_sim never), cells are
-    identical (same frozen centroids), and any divergence is a vector
-    whose nearest dup is inside its own batch."""
-    from gmall_realtime_flink_spark.plans import REGISTRY
-
-    inc = {
-        r.vec_id: r
-        for r in REGISTRY["dedup_semantic_incremental"]
-        .builder(spark, sf_dir)
-        .collect()
-    }
-    stream = {
-        r.vec_id: r
-        for r in REGISTRY["streaming_dedup_semantic"]
-        .builder(spark, sf_dir)
-        .collect()
-    }
-    assert inc.keys() == stream.keys() and inc, "same admitted id set"
-    for vid, ri in inc.items():
-        rs = stream[vid]
-        assert ri.cell == rs.cell, (vid, ri.cell, rs.cell)
-        if ri.kept:
-            assert rs.kept, f"{vid}: incremental kept but streaming dropped"
-        if ri.max_lower_sim is not None and rs.max_lower_sim is not None:
-            assert rs.max_lower_sim <= ri.max_lower_sim + 1e-12
 
 def test_state_bytes_per_key_regression_gate(spark, tmp_path):
     """State-size regression gate (VERDICT r12 item 7): SCALE.md's

@@ -1,6 +1,5 @@
 """Time EVERY registry entry once (noop sink) to rank optimization
-targets across the whole declared-query surface, not just the headline
-set.
+targets across the whole declared-query surface.
 
 Usage: python tools/bench_registry.py [sf_dir] [out.json] [--reps N]
 
@@ -78,8 +77,8 @@ def main() -> None:
             sc.setJobDescription(name)
             for _ in range(reps):
                 # fresh build per rep so a lazy localCheckpoint inside
-                # the builder cannot warm later reps (bench.py has the
-                # same rule; plan_shape reads the last rep's df)
+                # the builder cannot warm later reps (plan_shape reads
+                # the last rep's df)
                 df = spec.builder(spark, sf_dir)
                 t0 = time.perf_counter()
                 df.write.format("noop").mode("overwrite").save()

@@ -15,18 +15,15 @@ from gmall_realtime_flink_spark.plans import REGISTRY  # noqa: E402
 
 def main() -> None:
     n = len(REGISTRY)
-    n_head = sum(1 for s in REGISTRY.values() if s.headline)
     lines = [
         "# QUERIES — the full registry (auto-generated from plans/REGISTRY)",
         "",
         f"All {n} entries are `queries()` keys with DuckDB `oracle_sql()`",
-        "twins, hash-checked by `tests/test_oracle.py` locally; the driver",
-        "additionally hash-checks the registry head (first 50, curated in",
-        f"`plans/__init__.py`) at sf0.01. {n_head} are bench headline queries.",
+        "twins, hash-checked by `tests/test_oracle.py`.",
         "Regenerate with `python tools/gen_queries.py`.",
         "",
-        "| Query | Tags | Headline | What it does |",
-        "|---|---|---|---|",
+        "| Query | Tags | What it does |",
+        "|---|---|---|",
     ]
     for name in sorted(REGISTRY):
         s = REGISTRY[name]
@@ -35,8 +32,7 @@ def main() -> None:
             doc = doc[:417] + "..."
         doc = doc.replace("|", "\\|")
         tags = ", ".join(s.tags or ())
-        head = "✓" if s.headline else ""
-        lines.append(f"| `{name}` | {tags} | {head} | {doc} |")
+        lines.append(f"| `{name}` | {tags} | {doc} |")
     out = os.path.join(os.path.dirname(__file__), "..", "QUERIES.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")

@@ -34,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
-from tools.verify_head import vhash  # noqa: E402
+from tools.measure_skew import vhash  # noqa: E402
 
 SF1 = ".local/skewemb_sf1"
 SF10 = ".local/skewemb_sf10"

@@ -33,7 +33,7 @@ C. The same join via `salted_join` (operators/joins.py): the manual
    stream-stream join where AQE never runs). Correctness: salted
    result hash == plain result hash.
 
-D. Oracle gate on the skewed corpus: the three headline entries
+D. Oracle gate on the skewed corpus: the three QUERIES entries
    hash-compared against DuckDB on the SAME skewed parquet — skew
    must not change answers, only plans.
 

@@ -1,8 +1,8 @@
 """Aggregate-tier oracle compare for queries whose RESULT is too big
 to collect.
 
-The standard harness (tools/verify_head.py) hash-compares full result
-sets driver-side — right for the driver's sf0.01 gate, impossible when
+The standard harness (tests/test_oracle.py) hash-compares full result
+sets driver-side — right at test scale, impossible when
 a scale run makes the *result itself* enormous (dedup_simhash_hamming
 at sf1 emits 154.7M pairs on the degenerate 31-word corpus: nearly
 every doc pair is hamming-close). This tier compares IN-ENGINE
