@@ -23,10 +23,8 @@ dashboard publisher) as an idiomatic Apache Spark engine:
   (plans/datapipe.py) are registry entries too: dedup (exact /
   MinHash-LSH banded / SimHash / n-gram Jaccard — operators/dedup.py,
   textstats.py), similarity search (brute-force cosine top-k +
-  sign-bucketed ANN — operators/similarity.py), multimodal binary
-  columns with Arrow-batched feature extraction
-  (operators/multimodal.py), and text analysis (language ID, quality
-  scoring, token stats).
+  sign-bucketed ANN — operators/similarity.py) and text analysis
+  (language ID, quality scoring, token stats).
 
 Scale design notes live in docstrings next to each operator and in
 ``SCALE.md`` at the repo root.

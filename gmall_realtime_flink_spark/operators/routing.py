@@ -60,11 +60,6 @@ def route(df: DataFrame, routing: Mapping[str, str], key_col: str,
     return df.withColumn("sink_table", expr)
 
 
-def prune_columns(df: DataFrame, keep: Sequence[str]) -> DataFrame:
-    """P7: config-driven column pruning (TableProcessFunction.java:231-246)."""
-    return df.select(*[c for c in df.columns if c in set(keep)])
-
-
 def route_with_config(
     df: DataFrame,
     config_df: DataFrame,

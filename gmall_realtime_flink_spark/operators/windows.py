@@ -38,17 +38,6 @@ def stamp_window_bounds(df: DataFrame, window_col: str = "w") -> DataFrame:
     ).drop(window_col)
 
 
-def stamp_emit_time(df: DataFrame, col_name: str = "ts") -> DataFrame:
-    """W7: processing-time result stamp (`UNIX_TIMESTAMP()*1000 ts`,
-    ProvinceStatsSqlApp.java:59; `new Date().getTime()`,
-    ProductStatsApp.java:308). Nondeterministic by definition — keep it
-    out of oracle-hashed outputs; stamp inside foreachBatch for sinks.
-    """
-    return df.withColumn(
-        col_name, (F.unix_timestamp(F.current_timestamp()) * 1000)
-    )
-
-
 def distinct_count_col(
     col: str | Column, mode: str = "exact", rsd: float = 0.05
 ) -> Column:

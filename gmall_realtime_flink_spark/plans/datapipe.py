@@ -1,5 +1,5 @@
 """Large-scale training-data pipeline queries (beyond the reference):
-dedup, similarity search, text analysis, multimodal — over the
+dedup, similarity search and text analysis — over the
 `documents` and `embeddings` tables.
 
 Cross-engine determinism: every hash is md5 (identical hex in Spark
@@ -24,10 +24,6 @@ from gmall_realtime_flink_spark.operators.dedup import (
     shingles,
     tokenize,
 )
-from gmall_realtime_flink_spark.operators.multimodal import (
-    attach_payload,
-    extract_features,
-)
 from gmall_realtime_flink_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_bucketed,
@@ -44,23 +40,23 @@ from gmall_realtime_flink_spark.plans.registry import register
 
 def _spread_docs(d: DataFrame) -> DataFrame:
     """Round-robin spread of the narrow (doc_id, text) rows to the
-    cluster's core count before a per-document Python decode kernel
-    (guide §2.5 "input skew: one huge unsplittable file ...
-    repartition immediately after the read" / §2.6 idle capacity):
+    cluster's core count before doc_html_extract's per-document
+    Python parse (guide §2.5 "input skew: one huge unsplittable file
+    ... repartition immediately after the read" / §2.6 idle capacity):
     the docs table arrives as a single-row-group parquet split at the
-    bench SFs, so every downstream mapInPandas codec otherwise runs in
-    ONE task while the other cores idle. Scale-adaptive — the target
-    count is defaultParallelism, not a constant — and the exchange
-    moves only the two narrow driver columns the payload generators
-    need (guide §2.3 project-before-exchange; the synthesized payload
-    bytes are created AFTER the exchange, so they never cross it).
+    bench SFs, so the mapInPandas extractor otherwise runs in ONE task
+    while the other cores idle. Scale-adaptive — the target count is
+    defaultParallelism, not a constant — and the exchange moves only
+    the two narrow columns the page generator needs (guide §2.3
+    project-before-exchange; the staged HTML is created AFTER the
+    exchange, so it never crosses it).
 
     Conditional: when the scan already yields >= defaultParallelism
     splits (any production-sized table), the exchange is skipped
     entirely — the spread exists for unsplittable small inputs, not as
     a constant tax on scans that parallelize by themselves. The
-    probe-and-repartition itself lives in operators/spread.py (one
-    shared home, r14 — see that module for the Connect caveat)."""
+    probe-and-repartition itself lives in operators/spread.py (see
+    that module for the Connect caveat)."""
     from gmall_realtime_flink_spark.operators.spread import spread_to_cores
 
     return spread_to_cores(d.select("doc_id", "text"))
@@ -432,32 +428,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     return lsh_candidates(minhash_signatures(d), max_bucket=8)
-
-
-def dedup_minhash_lsh_xxh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION LSH posture — what a real 100 TB deployment
-    runs: xxhash64 signatures (one JVM 64-bit hash per shingle vs
-    md5's hex-string construction; measured 1.9x end-to-end at sf1)
-    plus the max_bucket=200 hot-bucket guard (399.6M -> 30.4M
-    candidate pairs at sf10 on the degenerate corpus). The md5
-    default exists only to be bit-reproducible in DuckDB for the
-    oracle gate; nothing else about the plan differs — same single
-    (band, band_hash) exchange, same distinct pair output
-    (operators/dedup.lsh_candidates).
-
-    NOT in the oracle registry (xxhash64 has no DuckDB equivalent, and
-    the registry's every-entry-has-an-oracle invariant is worth more
-    than one more rows-only entry); correctness is pinned by the
-    oracle-exact md5 twin (dedup_minhash_lsh_capped) plus
-    test_minhash_xxhash64_fast_path; tools/bench_registry.py times it
-    with every other entry.
-    """
-    d = load(spark, sf_dir, "documents")
-    return lsh_candidates(
-        minhash_signatures(d, hash_impl="xxhash64"),
-        hash_impl="xxhash64",
-        max_bucket=200,
-    )
 
 
 @register(
@@ -882,33 +852,6 @@ def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Multimodal binary-column plumbing (operators/multimodal.py)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "multimodal_features",
-    oracle="""
-    SELECT doc_id,
-           octet_length(encode(text))::INT AS n_bytes,
-           unicode(text)::INT AS first_cp,
-           md5(text) AS payload_md5
-    FROM documents
-    """,
-    doc="Multimodal plumbing: binary payload column + typed metadata "
-    "struct, feature extraction via Arrow-batched mapInPandas over a "
-    "byte-level payload that keeps every value oracle-checkable. "
-    "Real decodes live in the sibling entries: multimodal_decode_"
-    "stats (BMP/PPM/WAV), multimodal_decode_png, "
-    "multimodal_decode_gif.",
-    tags=("multimodal", "pandas-udf"),
-)
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return extract_features(attach_payload(d))
-
-
-# ---------------------------------------------------------------------------
 # Dedup: cluster candidates into components (operators/dedup.py)
 # ---------------------------------------------------------------------------
 
@@ -1131,454 +1074,6 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir, "embeddings")
     return cosine_topk_ivf(e, query_id=0, k=10, n_cells=8, nprobe=2)
-
-
-@register(
-    "multimodal_frame_sample",
-    oracle="""
-    SELECT d.doc_id, i::INT AS frame_idx,
-           (1 + (i * greatest(length(d.text) - 16, 0)) // 3)::INT AS frame_off,
-           md5(substr(d.text,
-                      1 + (i * greatest(length(d.text) - 16, 0)) // 3,
-                      16)) AS frame_md5
-    FROM documents d, generate_series(0, 3) AS g(i)
-    """,
-    doc="Multimodal frame sampling: 1->N keyframe fan-out inside an "
-    "Arrow-batched mapInPandas (operators/multimodal.sample_frames) — "
-    "evenly-spaced deterministic offsets stand in for codec keyframe "
-    "seeks; schema/batching/fan-out are the production shape.",
-    tags=("multimodal", "pandas-udf"),
-)
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.multimodal import sample_frames
-
-    d = load(spark, sf_dir, "documents")
-    return sample_frames(attach_payload(d))
-
-
-@register(
-    "multimodal_decode_stats",
-    oracle="""
-    WITH m AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             length(text) AS len,
-             doc_id % 3 AS k
-      FROM documents),
-    dims AS (
-      SELECT *,
-             CASE WHEN k = 0 THEN (1 + len % 13)::INT
-                  WHEN k = 1 THEN (1 + len % 11)::INT END AS width,
-             CASE WHEN k = 0 THEN (1 + doc_id % 7)::INT
-                  WHEN k = 1 THEN (1 + doc_id % 5)::INT END AS height,
-             CASE WHEN k = 2 THEN (16 + len % 49)::BIGINT END AS n_samp
-      FROM m)
-    SELECT doc_id,
-           CASE WHEN text IS NULL THEN NULL
-                WHEN k = 0 THEN 'bmp' WHEN k = 1 THEN 'ppm'
-                ELSE 'wav' END AS fmt,
-           CASE WHEN text IS NULL THEN NULL ELSE width END AS width,
-           CASE WHEN text IS NULL THEN NULL ELSE height END AS height,
-           CASE WHEN text IS NULL THEN NULL
-                WHEN k = 2 THEN 1 ELSE 3 END AS channels,
-           CASE WHEN text IS NULL OR k != 2 THEN NULL
-                ELSE (8000 + ((doc_id // 3) % 3) * 4000)::INT
-                END AS sample_rate,
-           CASE WHEN text IS NULL THEN NULL
-                WHEN k = 2 THEN n_samp
-                ELSE (width * height * 3)::BIGINT END AS n_values,
-           CASE WHEN text IS NULL THEN NULL
-                WHEN k = 2 THEN (
-                  SELECT sum(((p * 3 + i * 7) % 256 - 128) * 256)::BIGINT
-                  FROM unnest(generate_series(0, n_samp - 1)) AS t(i))
-                ELSE (p * width * height * 3)::BIGINT END AS value_sum,
-           CASE WHEN text IS NULL THEN NULL
-                WHEN k = 2 THEN md5(array_to_string(
-                  list_transform(generate_series(0, n_samp - 1),
-                    i -> (((p * 3 + i * 7) % 256 - 128) * 256)::VARCHAR),
-                  ','))
-                ELSE md5(repeat(chr(p), (width * height * 3)::INT))
-                END AS content_md5
-    FROM dims
-    """,
-    doc="REAL media decode over a binary column: payloads are "
-    "spec-correct BMP (24bpp, 4-byte stride, bottom-up rows), PPM "
-    "(P6) and WAV (PCM16 mono, RIFF chunk walk) built "
-    "deterministically from (doc_id, text); the decoder "
-    "(operators/multimodal.decode_media) dispatches on MAGIC BYTES "
-    "and genuinely parses headers/strides/chunks — the oracle "
-    "recomputes every expected stat (dims, rate, value sums, pixel/"
-    "sample md5) from the documents table, so an echoing decoder or "
-    "a stride/padding bug hash-fails. Arrow mapInPandas end to end; "
-    "bytes never per-row Python. Compressed formats (JPEG/MP4…) stay "
-    "an honest NotImplementedError (no codec libs in the sandbox).",
-    tags=("multimodal", "pandas-udf", "decode"),
-)
-def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_media_payload,
-        decode_media_stats,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    return decode_media_stats(attach_media_payload(d))
-
-
-@register(
-    "multimodal_decode_png",
-    oracle="""
-    WITH m AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             length(text) AS len,
-             doc_id % 3 AS k
-      FROM documents),
-    dims AS (
-      SELECT *,
-             (1 + len % 9)::INT AS width,
-             (1 + doc_id % 6)::INT AS height,
-             CASE WHEN k = 0 THEN 1 ELSE 3 END AS ch
-      FROM m)
-    SELECT doc_id,
-           CASE WHEN text IS NULL THEN NULL ELSE 'png' END AS fmt,
-           CASE WHEN text IS NULL THEN NULL ELSE width END AS width,
-           CASE WHEN text IS NULL THEN NULL ELSE height END AS height,
-           CASE WHEN text IS NULL THEN NULL ELSE ch END AS channels,
-           NULL::INT AS sample_rate,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (width * height * ch)::BIGINT END AS n_values,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (p * width * height * ch)::BIGINT END AS value_sum,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE md5(repeat(chr(p), (width * height * ch)::INT))
-                END AS content_md5
-    FROM dims
-    """,
-    doc="REAL PNG decode over a binary column — the one 'compressed' "
-    "format this sandbox can genuinely decode, because PNG's codec is "
-    "DEFLATE + CRC-32 (both stdlib zlib): full chunk walk with "
-    "per-chunk CRC verification, multi-IDAT concatenation, inflate, "
-    "all five scanline filters (encoder CYCLES 0..4 per row, so a "
-    "wrong Sub/Up/Average/Paeth reconstruction corrupts every later "
-    "row and hash-fails), and PLTE palette expansion (index stream "
-    "alternates 0/1; both entries hold the constant, so the lookup is "
-    "exercised while the oracle recomputes the expanded pixels). "
-    "Gray (ch 1) / truecolor RGB (ch 3) / paletted round-robin by "
-    "doc_id %% 3; dims + pixel value derived from (doc_id, text) so "
-    "DuckDB recomputes dims, channel count, value sum and pixel md5 "
-    "from the documents table alone. Arrow mapInPandas end to end. "
-    "JPEG/MP4/MP3 stay an honest NotImplementedError (their codecs "
-    "genuinely don't exist in this environment). "
-    "operators/multimodal.py:_decode_png.",
-    tags=("multimodal", "pandas-udf", "decode", "png"),
-)
-def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_png_payload,
-        decode_media_stats,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    return decode_media_stats(attach_png_payload(d))
-
-
-@register(
-    "multimodal_decode_gif",
-    oracle="""
-    WITH m AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             length(text) AS len
-      FROM documents),
-    dims AS (
-      SELECT *,
-             (1 + len % 7)::INT AS width,
-             (1 + doc_id % 5)::INT AS height
-      FROM m)
-    SELECT doc_id,
-           CASE WHEN text IS NULL THEN NULL ELSE 'gif' END AS fmt,
-           CASE WHEN text IS NULL THEN NULL ELSE width END AS width,
-           CASE WHEN text IS NULL THEN NULL ELSE height END AS height,
-           CASE WHEN text IS NULL THEN NULL ELSE 3 END AS channels,
-           NULL::INT AS sample_rate,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (width * height * 3)::BIGINT END AS n_values,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (p * width * height * 3)::BIGINT END AS value_sum,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE md5(repeat(chr(p), (width * height * 3)::INT))
-                END AS content_md5
-    FROM dims
-    """,
-    doc="REAL GIF decode over a binary column — the second compressed "
-    "format decodable without any codec library: LZW is pure table "
-    "arithmetic (variable-width codes, LSB-first packing, CLEAR/EOI, "
-    "12-bit cap), implemented from the GIF89a spec in "
-    "operators/multimodal.py (_lzw_decode; pinned against the "
-    "published minimal 1x1-white-pixel GIF bytes, not just our own "
-    "encoder). The staged payloads carry a varying index stream "
-    "through a constant-valued color table, so LZW + palette lookup "
-    "are exercised while DuckDB recomputes dims, value sum and pixel "
-    "md5 from the documents table; odd doc_ids are INTERLACED (the "
-    "4-pass row shuffle must be undone — a deinterlace bug reorders "
-    "rows and, with varying indices through a constant palette, "
-    "still yields the right md5, which is why the ROUNDTRIP pytest "
-    "uses gradient palettes where it would not). Arrow mapInPandas "
-    "end to end. JPEG/MP4/MP3 remain honest NotImplementedError.",
-    tags=("multimodal", "pandas-udf", "decode", "gif"),
-)
-def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_gif_payload,
-        decode_media_stats,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    return decode_media_stats(attach_gif_payload(d))
-
-
-@register(
-    "multimodal_decode_jpeg",
-    oracle="""
-    WITH m AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             length(text) AS len
-      FROM documents),
-    dims AS (
-      SELECT *,
-             (1 + len % 10)::INT AS width,
-             (1 + doc_id % 8)::INT AS height
-      FROM m)
-    SELECT doc_id,
-           CASE WHEN text IS NULL THEN NULL ELSE 'jpeg' END AS fmt,
-           CASE WHEN text IS NULL THEN NULL ELSE width END AS width,
-           CASE WHEN text IS NULL THEN NULL ELSE height END AS height,
-           CASE WHEN text IS NULL THEN NULL ELSE 1 END AS channels,
-           NULL::INT AS sample_rate,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (width * height)::BIGINT END AS n_values,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (p * width * height)::BIGINT END AS value_sum,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE md5(repeat(chr(p), (width * height)::INT))
-                END AS content_md5
-    FROM dims
-    """,
-    doc="REAL baseline JPEG decode over a binary column — the third "
-    "compressed format decoded without any codec library "
-    "(operators/jpeg.py, stdlib + numpy): full marker walk, DQT/DHT "
-    "parsing (canonical Huffman tables read from the FILE, built by "
-    "the encoder from the image's own symbol histogram), entropy "
-    "decode with 0xFF00 un-stuffing and DRI/RSTn restart "
-    "resynchronisation, DC prediction, run-length AC / EOB / ZRL, "
-    "dequant, de-zig-zag, vectorised numpy IDCT, level shift. JPEG "
-    "is lossy, so the ORACLE payloads are uniform-gray images whose "
-    "blocks are DC-only: with dc_step=8 the constant survives "
-    "encode->decode bit-exactly (8*(p-128) divisible by the step), "
-    "while gradients/noise carry the bounded-error pytest "
-    "(tests/test_functions.py). A third of payloads embed restart "
-    "markers. Arithmetic/12-bit raise by name; progressive decodes "
-    "for real (multimodal_decode_jpeg_progressive). Arrow "
-    "mapInPandas end to end.",
-    tags=("multimodal", "pandas-udf", "decode", "jpeg"),
-)
-def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_jpeg_payload,
-        decode_media_stats,
-    )
-
-    d = _spread_docs(load(spark, sf_dir, "documents"))
-    return decode_media_stats(attach_jpeg_payload(d))
-
-
-@register(
-    "multimodal_decode_jpeg_progressive",
-    oracle="""
-    WITH m AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             length(text) AS len
-      FROM documents),
-    dims AS (
-      SELECT *,
-             (1 + len % 12)::INT AS width,
-             (1 + doc_id % 7)::INT AS height
-      FROM m)
-    SELECT doc_id,
-           CASE WHEN text IS NULL THEN NULL ELSE 'jpeg' END AS fmt,
-           CASE WHEN text IS NULL THEN NULL ELSE width END AS width,
-           CASE WHEN text IS NULL THEN NULL ELSE height END AS height,
-           CASE WHEN text IS NULL THEN NULL ELSE 1 END AS channels,
-           NULL::INT AS sample_rate,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (width * height)::BIGINT END AS n_values,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (p * width * height)::BIGINT END AS value_sum,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE md5(repeat(chr(p), (width * height)::INT))
-                END AS content_md5
-    FROM dims
-    """,
-    doc="REAL progressive JPEG decode (SOF2, T.81 Annex G) — the "
-    "codec long tail the r12 verdict named: multi-scan coefficient "
-    "accumulation across spectral-selection bands and successive-"
-    "approximation bit planes (first DC at Al=1, EOB-run-coded first "
-    "AC, raw-bit DC refinement, the AC refinement correction-bit "
-    "protocol), one reconstruction at EOI. Progressive reorganises "
-    "only the entropy layer, so pytest pins the STRONG contract — "
-    "progressive encode of the same coefficients decodes "
-    "bit-identically to the sequential twin on noise/gradient/edge "
-    "images — while this entry's uniform-gray payloads keep the "
-    "DC-exact symbolic oracle. Arithmetic coding and 12-bit stay "
-    "honest named gaps. Arrow mapInPandas end to end.",
-    tags=("multimodal", "pandas-udf", "decode", "jpeg"),
-)
-def multimodal_decode_jpeg_progressive(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_progressive_jpeg_payload,
-        decode_media_stats,
-    )
-
-    d = _spread_docs(load(spark, sf_dir, "documents"))
-    return decode_media_stats(attach_progressive_jpeg_payload(d))
-
-
-@register(
-    "multimodal_decode_video",
-    oracle="""
-    WITH m AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             length(text) AS len
-      FROM documents),
-    dims AS (
-      SELECT *,
-             (1 + len % 9)::INT AS width,
-             (1 + doc_id % 6)::INT AS height,
-             (1 + doc_id % 4)::INT AS nf
-      FROM m),
-    v AS (
-      SELECT *,
-             list_transform(generate_series(0, nf - 1),
-                            i -> 32 + ((p + i * 17) % 95)) AS fvals,
-             list_transform(generate_series(0, nf - 1),
-                            i -> 40 + (i % 3)) AS durs
-      FROM dims)
-    SELECT doc_id,
-           CASE WHEN text IS NULL THEN NULL ELSE 'mp4' END AS fmt,
-           CASE WHEN text IS NULL THEN NULL ELSE width END AS width,
-           CASE WHEN text IS NULL THEN NULL ELSE height END AS height,
-           CASE WHEN text IS NULL THEN NULL ELSE nf END AS n_frames,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (list_aggregate(durs, 'sum') * 1000)::BIGINT
-                END AS duration_us,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (list_aggregate(fvals, 'sum')
-                      * width * height)::BIGINT
-                END AS pixel_sum,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE md5(array_to_string(list_transform(
-                       fvals, q -> repeat(chr(q::INT), width * height)),
-                       ''))
-                END AS frames_md5
-    FROM v
-    """,
-    doc="REAL MP4 video decode over a binary column — the "
-    "ISO-BMFF/MP4 container walk (operators/mp4.py, pure stdlib from "
-    "ISO/IEC 14496-12): box tree parse (32/64-bit sizes), video-track "
-    "selection by hdlr, and the full sample-table resolution — "
-    "stts run-length durations, stsc chunk mapping, stsz sizes, "
-    "stco/co64 ABSOLUTE offsets — turning the blob into per-frame "
-    "byte ranges, each decoded by the in-repo baseline JPEG codec "
-    "(MJPEG: the one video codec decodable without codec libs; "
-    "avc1/hev1 raise by name — the container walk is identical for "
-    "them, which is the production swap point). Staged payloads "
-    "vary EVERY lever: per-frame values (wrong offset/chunk/size "
-    "decodes the wrong value and hash-fails via the ordered "
-    "frames_md5), variable durations (multi-entry stts), "
-    "mdat-first vs moov-first layouts by doc parity (different "
-    "absolute offsets), 2-chunk stsc above 2 frames. DuckDB "
-    "recomputes frame count, exact integer duration, pixel sum and "
-    "the concatenated-frame md5 symbolically from documents. The "
-    "sample-table walk is also why frame SAMPLING at 100 TB reads "
-    "only the bytes of the frames it keeps. Arrow mapInPandas, "
-    "narrow transform, no shuffle.",
-    tags=("multimodal", "pandas-udf", "decode", "video"),
-)
-def multimodal_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_mp4_payload,
-        video_frame_stats,
-    )
-
-    d = _spread_docs(load(spark, sf_dir, "documents"))
-    return video_frame_stats(attach_mp4_payload(d))
-
-
-@register(
-    "multimodal_audio_features",
-    oracle="""
-    WITH m AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             (8000 + ((doc_id // 3) % 3) * 4000)::INT AS rate,
-             (16 + length(text) % 49)::BIGINT AS n
-      FROM documents),
-    s AS (
-      SELECT doc_id, p, rate, n,
-             CASE WHEN text IS NULL THEN NULL
-                  ELSE list_transform(
-                    generate_series(0, (n - 1)::INT),
-                    i -> (((p * 3 + i * 7) % 256 - 128) * 256)::BIGINT)
-                  END AS samples
-      FROM m)
-    SELECT doc_id,
-           CASE WHEN samples IS NULL THEN NULL ELSE rate END
-             AS sample_rate,
-           CASE WHEN samples IS NULL THEN NULL ELSE n END AS n_samples,
-           CASE WHEN samples IS NULL THEN NULL
-                ELSE (SELECT count(*) FROM unnest(
-                        generate_series(1, (n - 1)::INT)) AS t(i)
-                      WHERE samples[i] * samples[i + 1] < 0)::BIGINT
-                END AS zero_crossings,
-           CASE WHEN samples IS NULL THEN NULL
-                ELSE (SELECT sum(x * x)
-                      FROM unnest(samples) AS u(x))::BIGINT
-                END AS sum_sq,
-           CASE WHEN samples IS NULL THEN NULL
-                ELSE (SELECT max(abs(x))
-                      FROM unnest(samples) AS u(x))::INT
-                END AS peak_abs,
-           CASE WHEN samples IS NULL THEN NULL
-                ELSE (n * 1000000) // rate END AS duration_us
-    FROM s
-    """,
-    doc="Audio signal analysis over REAL decoded WAV payloads "
-    "(operators/multimodal.audio_features): zero-crossing count "
-    "(strict sign-product rule s[i-1]*s[i] < 0), total energy "
-    "(sum of squares), peak amplitude, exact integer duration_us = "
-    "n*1e6 // rate. Every feature is integer arithmetic over the "
-    "PCM16 samples, and the payload generator derives the samples "
-    "deterministically from (doc_id, text), so DuckDB recomputes all "
-    "five features symbolically (1-indexed list access; DuckDB "
-    "integer division matches Python floor-div for these positives). "
-    "The RIFF chunk walk + PCM16 unpack must be byte-correct for any "
-    "of it to hash-match. Arrow mapInPandas, numpy-vectorised; "
-    "narrow transform, no shuffle.",
-    tags=("multimodal", "pandas-udf", "audio"),
-)
-def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_wav_payload,
-        audio_features,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    return audio_features(attach_wav_payload(d))
 
 
 @register(
@@ -5461,236 +4956,6 @@ def doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnow_fingerprints(load(spark, sf_dir, "documents"))
 
 
-@register(
-    "multimodal_mp3_headers",
-    oracle="""
-    WITH m3 AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             (doc_id % 3)::INT AS ri
-      FROM documents),
-    m3d AS (
-      SELECT doc_id, text, p,
-             [44100, 48000, 32000][ri + 1] AS rate,
-             1 + p % 6 AS nf
-      FROM m3),
-    m3f AS (
-      SELECT doc_id, text, rate, nf,
-             list_transform(generate_series(0, nf - 1),
-               i -> [32,40,48,56,64,80,96,112,128,160,192,224,256,320]
-                    [((p + i * 5) % 14) + 1]) AS kbps
-      FROM m3d)
-    SELECT doc_id,
-           CASE WHEN text IS NULL THEN NULL ELSE 'mp3' END AS fmt,
-           CASE WHEN text IS NULL THEN NULL ELSE nf::INT END AS n_frames,
-           CASE WHEN text IS NULL THEN NULL ELSE rate::INT END
-             AS sample_rate,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (nf * (1152 * 1000000 // rate))::BIGINT
-                END AS duration_us,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE list_aggregate(kbps, 'sum')::BIGINT
-                END AS bitrate_kbps_sum,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE ((CASE WHEN doc_id % 2 = 0 THEN 27 ELSE 0 END)
-                      + list_aggregate(list_transform(kbps,
-                          k -> 144000 * k // rate), 'sum')
-                      + nf // 2)::BIGINT
-                END AS total_bytes
-    FROM m3f
-    """,
-    doc="MP3 stream metadata over a binary column via the REAL "
-    "MPEG-1 Layer III frame-header walk (ISO/IEC 11172-3 §2.4: "
-    "11-bit sync + version/layer/bitrate-index/sample-rate-index/"
-    "padding per header, frameLen = 144*bitrate/sampleRate + pad, "
-    "ID3v2 skipped by syncsafe size) — the audio analogue of the "
-    "MP4 container walk: duration/bitrate/frame stats WITHOUT "
-    "decoding audio (polyphase+MDCT synthesis needs a real codec "
-    "and raises by name). Staged payloads vary every parse lever: "
-    "per-frame bitrate (VBR — headers re-read every frame), padding "
-    "parity, sample rate by doc, ID3 tag by doc parity; DuckDB "
-    "recomputes frame count, exact integer duration (1152 samples/"
-    "frame), bitrate sum and TOTAL BYTE LENGTH symbolically — a "
-    "single mis-stepped frame boundary breaks total_bytes. Arrow "
-    "mapInPandas, narrow, no shuffle; at 100 TB the walk is "
-    "O(frames) header reads + skips, not O(payload). "
-    "operators/multimodal.py:parse_mp3.",
-    tags=("multimodal", "pandas-udf", "audio"),
-)
-def multimodal_mp3_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_mp3_payload,
-        mp3_frame_stats,
-    )
-
-    d = _spread_docs(load(spark, sf_dir, "documents"))
-    return mp3_frame_stats(attach_mp3_payload(d))
-
-
-def _ima_steps_literal() -> str:
-    """The 89-entry IMA step table as a DuckDB list literal, built
-    from the SAME constant the decoder uses so they cannot drift."""
-    from gmall_realtime_flink_spark.operators.multimodal import _IMA_STEPS
-
-    return "[" + ",".join(str(s) for s in _IMA_STEPS) + "]"
-
-
-@register(
-    "multimodal_audio_adpcm",
-    oracle="""
-    WITH RECURSIVE ap AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             (8000 + (doc_id % 3) * 4000)::INT AS rate
-      FROM documents),
-    ab AS (
-      SELECT doc_id, p, rate, unnest(generate_series(0, p % 3)) AS b
-      FROM ap WHERE text IS NOT NULL),
-    st AS (
-      -- t = 0 is the block-header sample; 16 nibble steps follow
-      SELECT doc_id, p, b, 0 AS t,
-             ((p + 7*b) * 191) % 4096 - 2048 AS pred,
-             (p + 11*b) % 89 AS idx
-      FROM ab
-      UNION ALL
-      SELECT doc_id, p, b, t + 1,
-             CASE WHEN nib >= 8 THEN greatest(pred - delta, -32768)
-                  ELSE least(pred + delta, 32767) END,
-             least(greatest(idx + idxadj, 0), 88)
-      FROM (
-        SELECT doc_id, p, b, t, pred, idx, nib,
-               step // 8 + (nib % 2) * (step // 4)
-                 + ((nib // 2) % 2) * (step // 2)
-                 + ((nib // 4) % 2) * step AS delta,
-               ([-1,-1,-1,-1,2,4,6,8])[(nib % 8) + 1] AS idxadj
-        FROM (
-          SELECT doc_id, p, b, t, pred, idx,
-                 (p + 3 * (b * 16 + t)) % 16 AS nib,
-                 ({_IMA_STEPS_LIT})[idx + 1] AS step
-          FROM st WHERE t < 16) s1) s2),
-    sm AS (SELECT doc_id, b * 17 + t AS pos, pred AS v FROM st),
-    feat AS (
-      SELECT doc_id, count(*)::BIGINT AS n, sum(v * v)::BIGINT AS sum_sq,
-             max(abs(v))::INT AS peak_abs
-      FROM sm GROUP BY doc_id),
-    zc AS (
-      SELECT doc_id, count(*)::BIGINT AS z FROM (
-        SELECT doc_id, v,
-               lag(v) OVER (PARTITION BY doc_id ORDER BY pos) AS pv
-        FROM sm) q WHERE pv * v < 0 GROUP BY doc_id)
-    SELECT a.doc_id,
-           CASE WHEN a.text IS NULL THEN NULL ELSE a.rate END
-             AS sample_rate,
-           f.n AS n_samples,
-           CASE WHEN a.text IS NULL THEN NULL ELSE coalesce(z.z, 0) END
-             AS zero_crossings,
-           f.sum_sq, f.peak_abs,
-           CASE WHEN a.text IS NULL THEN NULL
-                ELSE f.n * 1000000 // a.rate END AS duration_us
-    FROM ap a LEFT JOIN feat f USING (doc_id)
-    LEFT JOIN zc z USING (doc_id)
-    """.replace("{_IMA_STEPS_LIT}", _ima_steps_literal()),
-    doc="Audio features over a REAL compressed audio codec: IMA "
-    "ADPCM (DVI4; WAVE format tag 0x0011) decoded from the 1992 IMA "
-    "spec — per-block state restart from the 4-byte header (the "
-    "seek/resync property that makes ADPCM splittable at 100 TB: "
-    "blocks decode independently, so a task can start at any block "
-    "boundary), low-nibble-first expansion, the 89-entry step table "
-    "with bit-weighted delta reconstruction and int16/index "
-    "clamping. The ORACLE EMULATES THE FULL STATE MACHINE in SQL — "
-    "a recursive CTE advances (predictor, index) through all 16 "
-    "nibble steps of every block of every doc, then recomputes "
-    "zero-crossings/energy/peak/duration from the emulated samples "
-    "— so a single wrong table step, clamp or nibble order anywhere "
-    "hash-fails. All integer arithmetic end-to-end. Arrow "
-    "mapInPandas, narrow, no shuffle. "
-    "operators/multimodal.py:decode_ima_adpcm_blocks.",
-    tags=("multimodal", "pandas-udf", "audio", "decode"),
-)
-def multimodal_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_adpcm_payload,
-        audio_features,
-    )
-
-    d = _spread_docs(load(spark, sf_dir, "documents"))
-    return audio_features(attach_adpcm_payload(d))
-
-
-@register(
-    "multimodal_audio_flac",
-    # deliberately IDENTICAL to the multimodal_audio_features oracle:
-    # FLAC is lossless, so the decoded samples must equal the same
-    # symbolic _media_params formula the PCM WAV entry stages — the
-    # entire codec (bit reader, CRC-8/16, Rice + escape residuals,
-    # fixed predictors, STREAMINFO md5) sits between the payload and
-    # this truth.
-    oracle="""
-    WITH m AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             (8000 + ((doc_id // 3) % 3) * 4000)::INT AS rate,
-             (16 + length(text) % 49)::BIGINT AS n
-      FROM documents),
-    s AS (
-      SELECT doc_id, p, rate, n,
-             CASE WHEN text IS NULL THEN NULL
-                  ELSE list_transform(
-                    generate_series(0, (n - 1)::INT),
-                    i -> (((p * 3 + i * 7) % 256 - 128) * 256)::BIGINT)
-                  END AS samples
-      FROM m)
-    SELECT doc_id,
-           CASE WHEN samples IS NULL THEN NULL ELSE rate END
-             AS sample_rate,
-           CASE WHEN samples IS NULL THEN NULL ELSE n END AS n_samples,
-           CASE WHEN samples IS NULL THEN NULL
-                ELSE (SELECT count(*) FROM unnest(
-                        generate_series(1, (n - 1)::INT)) AS t(i)
-                      WHERE samples[i] * samples[i + 1] < 0)::BIGINT
-                END AS zero_crossings,
-           CASE WHEN samples IS NULL THEN NULL
-                ELSE (SELECT sum(x * x)
-                      FROM unnest(samples) AS u(x))::BIGINT
-                END AS sum_sq,
-           CASE WHEN samples IS NULL THEN NULL
-                ELSE (SELECT max(abs(x))
-                      FROM unnest(samples) AS u(x))::INT
-                END AS peak_abs,
-           CASE WHEN samples IS NULL THEN NULL
-                ELSE (n * 1000000) // rate END AS duration_us
-    FROM s
-    """,
-    doc="Audio features over REAL FLAC payloads — a recognized "
-    "real-world lossless codec implemented from the public spec "
-    "(RFC 9639) with stdlib only (operators/flac.py): STREAMINFO "
-    "parse, frame walk with CRC-8 header and CRC-16 frame "
-    "verification, VERBATIM/CONSTANT/FIXED(0-4) subframe decode, "
-    "Rice residuals including the escape-to-raw code, fixed- AND "
-    "quantized-LPC-predictor reconstruction (signed coefficients at "
-    "any precision, arithmetic shift), and the STREAMINFO MD5 check "
-    "over the reconstructed stream. Staged subframe types cycle per "
-    "doc so the corpus exercises every FIXED order, an order-2 LPC "
-    "predictor and both residual codings; LOSSLESSNESS IS THE "
-    "ORACLE LEVER — the DuckDB SQL recomputes the same symbolic "
-    "features as the PCM WAV entry, and only a bit-exact decode "
-    "matches it. Stereo decorrelation raises by name (the "
-    "production-codec swap point). FLAC frames "
-    "restart from verbatim warm-up, so a 100 TB reader splits on "
-    "frame boundaries like the ADPCM block restart. Arrow "
-    "mapInPandas, narrow, no shuffle.",
-    tags=("multimodal", "pandas-udf", "audio", "decode"),
-)
-def multimodal_audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_flac_payload,
-        audio_features,
-    )
-
-    d = _spread_docs(load(spark, sf_dir, "documents"))
-    return audio_features(attach_flac_payload(d))
-
-
 def _gopher_stop_literal() -> str:
     from gmall_realtime_flink_spark.operators.textstats import (
         GOPHER_STOPWORDS,
@@ -5830,7 +5095,7 @@ def doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "entity or flipped verdict anywhere hash-fails. Arrow "
     "mapInPandas, narrow, no shuffle. "
     "operators/html.py:extract_main_text.",
-    tags=("datapipe", "multimodal", "pandas-udf", "curation"),
+    tags=("datapipe", "pandas-udf", "curation"),
 )
 def doc_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_realtime_flink_spark.operators.html import (
@@ -5899,74 +5164,3 @@ def bpe_compression_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 1_000_000.0
         ).alias("tokens_per_word"),
     )
-
-
-@register(
-    "multimodal_audio_flac_stereo",
-    oracle="""
-    WITH fs AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             (8000 + ((doc_id // 3) % 3) * 4000)::INT AS rate,
-             (16 + length(text) % 49)::BIGINT AS n
-      FROM documents),
-    ch AS (
-      SELECT doc_id, text, p, rate, n,
-             CASE WHEN text IS NULL THEN NULL
-                  ELSE list_transform(generate_series(0, (n - 1)::INT),
-                    i -> (((p * 3 + i * 7) % 256 - 128) * 256)::BIGINT)
-                  END AS lch,
-             CASE WHEN text IS NULL THEN NULL
-                  ELSE list_transform(generate_series(0, (n - 1)::INT),
-                    i -> (((p * 5 + i * 11) % 256 - 128) * 256)::BIGINT)
-                  END AS rch
-      FROM fs)
-    SELECT doc_id,
-           CASE WHEN lch IS NULL THEN NULL ELSE rate END AS sample_rate,
-           CASE WHEN lch IS NULL THEN NULL ELSE n END AS n_samples,
-           CASE WHEN lch IS NULL THEN NULL
-                ELSE (SELECT count(*) FROM unnest(
-                        generate_series(1, (n - 1)::INT)) AS t(i)
-                      WHERE lch[i] * lch[i + 1] < 0)::BIGINT END AS zc_l,
-           CASE WHEN rch IS NULL THEN NULL
-                ELSE (SELECT count(*) FROM unnest(
-                        generate_series(1, (n - 1)::INT)) AS t(i)
-                      WHERE rch[i] * rch[i + 1] < 0)::BIGINT END AS zc_r,
-           CASE WHEN lch IS NULL THEN NULL
-                ELSE (SELECT sum(x * x) FROM unnest(lch) AS u(x))::BIGINT
-                END AS sum_sq_l,
-           CASE WHEN rch IS NULL THEN NULL
-                ELSE (SELECT sum(x * x) FROM unnest(rch) AS u(x))::BIGINT
-                END AS sum_sq_r,
-           CASE WHEN lch IS NULL THEN NULL
-                ELSE (SELECT max(abs(x)) FROM unnest(lch) AS u(x))::INT
-                END AS peak_l,
-           CASE WHEN rch IS NULL THEN NULL
-                ELSE (SELECT max(abs(x)) FROM unnest(rch) AS u(x))::INT
-                END AS peak_r,
-           CASE WHEN lch IS NULL THEN NULL
-                ELSE (n * 1000000) // rate END AS duration_us
-    FROM ch
-    """,
-    doc="Per-channel audio features over STEREO FLAC with real "
-    "inter-channel decorrelation (the final FLAC named gap closed): "
-    "frames cycle left-side / right-side / mid-side / independent "
-    "assignments per doc, the side channel decodes at 17 bits, and "
-    "mid/side reconstruction recovers the parity bit per RFC 9639 "
-    "§4.2 — then both channels' zero-crossings/energy/peak are "
-    "integer-recomputed symbolically by the oracle from the two "
-    "staged sample formulas. A single wrong decorrelation transform, "
-    "bit-depth or interleave order anywhere hash-fails (and the "
-    "STREAMINFO MD5 over the interleaved stream fails first). Arrow "
-    "mapInPandas, narrow, no shuffle. "
-    "operators/flac.py:encode_flac_stereo.",
-    tags=("multimodal", "pandas-udf", "audio", "decode"),
-)
-def multimodal_audio_flac_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_flac_stereo_payload,
-        stereo_audio_features,
-    )
-
-    d = _spread_docs(load(spark, sf_dir, "documents"))
-    return stereo_audio_features(attach_flac_stereo_payload(d))

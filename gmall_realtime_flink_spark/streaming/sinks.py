@@ -45,14 +45,6 @@ def route_writer(base_dir: str, route_col: str = "sink_table") -> BatchSink:
     return write
 
 
-def console_sink(stream_df: DataFrame, num_rows: int = 20):
-    """S13: debug console sink (the reference's `.print()` calls,
-    e.g. BaseLogAPP.java:191-193). Dev-only."""
-    return stream_df.writeStream.format("console").option(
-        "numRows", str(num_rows)
-    )
-
-
 def append_writer(path: str) -> BatchSink:
     """S7: result-table append sink (ClickHouse analogue)."""
 

@@ -47,9 +47,6 @@ ONCE_FAILING = [
     "province_stats_sql",
     "daily_gmv_moving_7d",
     "segment_running_total",
-    # NULL-payload kernel contracts
-    "multimodal_features",
-    "multimodal_frame_sample",
     # null-swallowing sentinel filters; streaming null event time
     "streaming_user_jump",
     "streaming_uv_dropdup_wm",

@@ -942,425 +942,6 @@ def test_semantic_dedup_numpy_empty_seed_degrades_gracefully(spark):
         assert got_np == [] and got_expr == []
 
 
-def test_decode_media_parses_foreign_bytes():
-    """decode_media must be a real parser, not an echo of the payload
-    generator: hand-built payloads (top-down BMP, PPM with commentless
-    multi-digit dims, WAV with an extra chunk BEFORE data) decode
-    correctly, and compressed/unknown magics fail honestly."""
-    import struct
-
-    import pytest as _pytest
-
-    from gmall_realtime_flink_spark.operators.multimodal import decode_media
-
-    # BMP with NEGATIVE height (top-down row order) and stride padding:
-    # 2x2 px, rows are 6 bytes + 2 padding. Top row pixels 1, bottom 2.
-    w, h = 2, 2
-    stride = 8
-    header = struct.pack("<2sIHHI", b"BM", 54 + stride * h, 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, w, -h, 1, 24, 0,
-                       stride * h, 0, 0, 0, 0)
-    rows = bytes([1] * 6) + b"\x00\x00" + bytes([2] * 6) + b"\x00\x00"
-    d = decode_media(header + info + rows)
-    assert (d["width"], d["height"]) == (2, 2)
-    # top-down file: first stored row IS the top row; padding stripped
-    assert d["values"] == bytes([1] * 6 + [2] * 6)
-
-    # PPM with multi-digit dims and newline/space mixing
-    d = decode_media(b"P6\n12 1\n255\n" + bytes(range(36)))
-    assert (d["width"], d["height"]) == (12, 1)
-    assert d["values"] == bytes(range(36))
-
-    # WAV with a LIST chunk between fmt and data (chunk walk, not
-    # fixed offsets) and an odd-sized chunk (word alignment)
-    samples = struct.pack("<3h", 10, -20, 30)
-    wav = (
-        struct.pack("<4sI4s", b"RIFF", 4 + 24 + 12 + 5 + 1 + 14, b"WAVE")
-        + struct.pack("<4sI", b"fmt ", 16)
-        + struct.pack("<HHIIHH", 1, 1, 22050, 44100, 2, 16)
-        + struct.pack("<4sI", b"LIST", 5) + b"INFOx" + b"\x00"  # odd+pad
-        + struct.pack("<4sI", b"data", 6) + samples
-    )
-    d = decode_media(wav)
-    assert d["sample_rate"] == 22050 and d["values"] == [10, -20, 30]
-
-    # PNG now REALLY decodes (stdlib zlib) — a truncated body is a
-    # parse error, not a codec gap
-    with _pytest.raises(ValueError):
-        decode_media(b"\x89PNG\r\n\x1a\n....")
-    # MP4 now REALLY parses (ISO-BMFF walk) — a box that declares a
-    # size past EOF is a parse error, not a codec gap (the named
-    # NotImplementedError for avc1/moof is covered in the mp4 tests)
-    with _pytest.raises(ValueError):
-        decode_media(b"\x00\x00\x00\x18ftypmp42")
-    with _pytest.raises(ValueError):
-        decode_media(b"ZZZZZZZZ")
-    # stereo / non-PCM / deep BMP are named, not silently misread
-    with _pytest.raises(NotImplementedError):
-        decode_media(
-            struct.pack("<4sI4s", b"RIFF", 40, b"WAVE")
-            + struct.pack("<4sI", b"fmt ", 16)
-            + struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)
-            + struct.pack("<4sI", b"data", 0)
-        )
-
-
-def test_png_codec_roundtrip_all_filters_and_color_types():
-    """The PNG decoder is a REAL codec (stdlib zlib: inflate + CRC):
-    gradient images — where every filter produces different bytes —
-    round-trip bit-exactly through all five scanline filters (the
-    encoder cycles 0..4 per row) for gray/RGB/RGBA, palette indices
-    expand through PLTE, CRC corruption and truncation fail loudly,
-    and unsupported spec corners (Adam7, 16-bit) raise honestly."""
-    import struct
-    import zlib
-
-    import pytest as _pytest
-
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        _PNG_SIG,
-        _png_chunk,
-        decode_media,
-        encode_png,
-    )
-
-    w, h = 7, 11  # h > 5 -> every filter type appears at least twice
-    for ctype, ch in ((0, 1), (2, 3), (6, 4)):
-        px = bytes(
-            ((x * 3 + c) * 5 + y * 13) % 256
-            for y in range(h) for x in range(w) for c in range(ch)
-        )
-        d = decode_media(encode_png(w, h, px, color_type=ctype))
-        assert d["fmt"] == "png" and (d["width"], d["height"]) == (w, h)
-        assert d["channels"] == ch and d["values"] == px
-
-    # palette: varying index stream expands through PLTE to RGB
-    pal = bytes([10, 20, 30, 200, 100, 50, 7, 8, 9])
-    idx = bytes((x * y) % 3 for y in range(h) for x in range(w))
-    d = decode_media(encode_png(w, h, idx, color_type=3, palette=pal))
-    assert d["channels"] == 3
-    assert d["values"] == b"".join(pal[3 * i : 3 * i + 3] for i in idx)
-
-    # CRC corruption is detected (flip a byte inside IHDR data)
-    good = bytearray(encode_png(3, 3, bytes(27), color_type=2))
-    good[16] ^= 0xFF
-    with _pytest.raises(ValueError, match="CRC"):
-        decode_media(bytes(good))
-
-    # foreign bytes: a minimal single-IDAT filter-0 PNG not produced
-    # by our encoder (parser, not echo)
-    raw = b"\x00" + bytes([5, 6, 7])  # 1x1 RGB, filter 0
-    foreign = (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 2, 0, 0, 0))
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-    assert decode_media(foreign)["values"] == bytes([5, 6, 7])
-
-    # honest gaps: sub-byte depths (1/2/4) stay NotImplementedError;
-    # an out-of-spec interlace method is a loud parse error.
-    # (Adam7 and 16-bit decode for REAL since r13 —
-    # test_png_adam7_and_16bit_roundtrip.)
-    for depth, interlace, exc in (
-        (4, 0, _pytest.raises(NotImplementedError)),
-        (1, 0, _pytest.raises(NotImplementedError)),
-        (8, 2, _pytest.raises(ValueError, match="interlace")),
-    ):
-        bad = (
-            _PNG_SIG
-            + _png_chunk(
-                b"IHDR",
-                struct.pack(">IIBBBBB", 1, 1, depth, 2, 0, 0, interlace),
-            )
-            + _png_chunk(b"IDAT", zlib.compress(b"\x00\x00\x00\x00"))
-            + _png_chunk(b"IEND", b"")
-        )
-        with exc:
-            decode_media(bad)
-
-    # paletted without PLTE is a parse error
-    noplte = (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 3, 0, 0, 0))
-        + _png_chunk(b"IDAT", zlib.compress(b"\x00\x00"))
-        + _png_chunk(b"IEND", b"")
-    )
-    with _pytest.raises(ValueError, match="PLTE"):
-        decode_media(noplte)
-
-
-def test_gif_codec_roundtrip_and_foreign_bytes():
-    """The GIF decoder is a REAL LZW codec: gradient-palette images
-    round-trip sequential AND interlaced (a deinterlace bug reorders
-    rows of DIFFERENT colors here, so it cannot hide), the famous
-    published 1x1-white-pixel GIF decodes byte-for-byte (parser, not
-    an echo of our encoder), extension blocks are skipped, and
-    truncated pixel data fails loudly."""
-    import pytest as _pytest
-
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        _lzw_decode,
-        _lzw_encode,
-        decode_media,
-        encode_gif,
-    )
-
-    # LZW alone: repetitive stream forces code-width growth; 30k
-    # random symbols overflow the 12-bit table and force a mid-stream
-    # CLEAR/reset on the encoder side
-    import random as _random
-
-    rep = bytes([1, 2, 3, 0] * 8000)
-    assert _lzw_decode(2, _lzw_encode(2, rep)) == rep
-    rnd = _random.Random(1)
-    big = bytes(rnd.randrange(4) for _ in range(30000))
-    assert _lzw_decode(2, _lzw_encode(2, big)) == big
-
-    pal = bytes([10, 20, 30, 200, 100, 50, 7, 8, 9, 0, 0, 0])
-    for interlace in (False, True):
-        for w, h in ((1, 1), (7, 11), (16, 3), (5, 17)):
-            idx = bytes(
-                (x * 3 + y * 5) % 4 for y in range(h) for x in range(w)
-            )
-            d = decode_media(encode_gif(w, h, idx, pal, interlace=interlace))
-            assert d["fmt"] == "gif" and d["channels"] == 3
-            assert (d["width"], d["height"]) == (w, h)
-            assert d["values"] == b"".join(
-                pal[3 * i : 3 * i + 3] for i in idx
-            ), (w, h, interlace)
-
-    # published minimal GIF (1x1, white, from the GIF89a literature):
-    # GCE extension present -> the skip path runs on foreign bytes too
-    tiny = bytes.fromhex(
-        "474946383961010001008000"  # header + LSD (GCT, 2 entries)
-        "00ffffff000000"            # bg/aspect + GCT white,black
-        "2c000000000100010000"      # image descriptor 1x1
-        "0202440100"                # min code 2, LZW data
-        "3b"                        # trailer
-    )
-    d = decode_media(tiny)
-    assert (d["width"], d["height"]) == (1, 1)
-    assert d["values"] == b"\xff\xff\xff"  # palette entry 0 = white
-
-    # truncated pixel data is a parse error, not silence
-    trunc = encode_gif(4, 4, bytes(16), bytes([1, 2, 3] * 4))
-    # chop the LZW sub-block content in half
-    with _pytest.raises(ValueError):
-        decode_media(trunc[:30] + b"\x01\x04\x00\x3b")
-
-
-def test_jpeg_codec_exactness_bounded_error_and_honest_gaps():
-    """Baseline JPEG (operators/jpeg.py) is a REAL lossy codec with
-    three verifiable contracts: (1) uniform images are DC-only and
-    survive encode->decode BIT-EXACTLY with dc_step=8 — the property
-    the oracle entry rests on; (2) at unit quant steps, arbitrary
-    content round-trips within a tight error bound (gray ±2, RGB ±8
-    from YCbCr rounding) — a wrong Huffman/IDCT/zig-zag would blow
-    these bounds up catastrophically, not marginally; (3) restart
-    markers resynchronise (predictor resets included in the table
-    histogram); and non-baseline streams raise by name."""
-    import random as _random
-
-    import numpy as np
-    import pytest as _pytest
-
-    from gmall_realtime_flink_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-    from gmall_realtime_flink_spark.operators.multimodal import decode_media
-
-    # (1) uniform exactness incl. non-multiple-of-8 dims and restarts
-    for p in (0, 77, 128, 255):
-        for w, h in ((1, 1), (8, 8), (13, 9), (24, 17)):
-            d = decode_media(encode_jpeg(w, h, bytes([p]) * (w * h)))
-            assert d["fmt"] == "jpeg" and d["channels"] == 1
-            assert d["values"] == bytes([p]) * (w * h), (p, w, h)
-    d = decode_jpeg(
-        encode_jpeg(40, 16, bytes([99]) * 640, restart_interval=2)
-    )
-    assert d["values"] == bytes([99]) * 640
-
-    # (2) bounded error on gradients and noise at unit quant
-    rnd = _random.Random(3)
-    for trial in range(4):
-        w, h = rnd.randint(1, 33), rnd.randint(1, 33)
-        ch = rnd.choice([1, 3])
-        px = bytes(rnd.randrange(256) for _ in range(w * h * ch))
-        d = decode_jpeg(
-            encode_jpeg(w, h, px, channels=ch, dc_step=1, ac_step=1)
-        )
-        err = np.abs(
-            np.frombuffer(d["values"], np.uint8).astype(int)
-            - np.frombuffer(px, np.uint8).astype(int)
-        )
-        assert err.max() <= (2 if ch == 1 else 8), (w, h, ch, err.max())
-
-    # (3) restart markers with varying content
-    w, h = 40, 16  # 10 MCUs
-    px = bytes((x * 3 + y * 9) % 256 for y in range(h) for x in range(w))
-    d = decode_jpeg(
-        encode_jpeg(w, h, px, dc_step=1, ac_step=1, restart_interval=3)
-    )
-    err = np.abs(
-        np.frombuffer(d["values"], np.uint8).astype(int)
-        - np.frombuffer(px, np.uint8).astype(int)
-    )
-    assert err.max() <= 2
-
-    # honest gaps: lossless (SOF3) named — progressive (SOF2) decodes
-    # for REAL since r13 (test_jpeg_progressive_equals_sequential) —
-    # and a truncated stream is loud
-    good = bytearray(encode_jpeg(8, 8, bytes(64)))
-    sof = good.find(b"\xff\xc0")
-    lossless = bytes(good[:sof]) + b"\xff\xc3" + bytes(good[sof + 2 :])
-    with _pytest.raises(NotImplementedError, match="SOF"):
-        decode_jpeg(lossless)
-    with _pytest.raises(ValueError):
-        decode_jpeg(bytes(good[:20]))
-
-
-def test_jpeg_progressive_equals_sequential():
-    """Progressive JPEG (SOF2, T.81 Annex G) reorganises only the
-    entropy layer, so the contract is exact: a progressive encode of
-    the same quantized coefficients must decode BIT-IDENTICALLY to
-    its sequential twin — across noise (AC refinement correction
-    bits), smooth gradients (long EOB runs), flat fields (DC-only),
-    and hard edges (ZRL + newly-significant mid-band), gray and RGB,
-    odd dims. Uniform images stay DC-exact through the progressive
-    path (the oracle lever)."""
-    import random
-
-    from gmall_realtime_flink_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    rnd = random.Random(41)
-    for trial in range(25):
-        w, h = rnd.randint(1, 33), rnd.randint(1, 33)
-        ch = rnd.choice([1, 3])
-        kind = trial % 4
-        if kind == 0:
-            px = bytes(rnd.randrange(256) for _ in range(w * h * ch))
-        elif kind == 1:
-            px = bytes(
-                ((x * 3 + y * 2) % 256)
-                for y in range(h) for x in range(w * ch)
-            )
-        elif kind == 2:
-            px = bytes([rnd.randrange(256)]) * (w * h * ch)
-        else:
-            px = bytes(
-                (255 if x > w * ch // 2 else 0)
-                for y in range(h) for x in range(w * ch)
-            )
-        seq = decode_jpeg(encode_jpeg(w, h, px, channels=ch))
-        prog = decode_jpeg(
-            encode_jpeg_progressive(w, h, px, channels=ch)
-        )
-        assert seq["values"] == prog["values"], (trial, w, h, ch, kind)
-
-    for p in (32, 77, 126):
-        d = decode_jpeg(encode_jpeg_progressive(6, 4, bytes([p]) * 24))
-        assert d["values"] == bytes([p]) * 24, p
-
-
-def test_codec_robustness_fixes_r13():
-    """Round-13 ADVICE regressions: (1) T.81 B.1.1.2 — 0xFF fill
-    bytes before a marker are legal padding, foreign encoders emit
-    them; (2) Annex K — the all-ones codeword of the deepest length
-    is reserved (Kraft sum < 1) so 1-bit padding never decodes as a
-    real symbol; (3) a corrupt GIF whose LZW indices exceed the color
-    table fails LOUDLY instead of yielding a short values buffer."""
-    import pytest as _pytest
-
-    from gmall_realtime_flink_spark.operators.jpeg import (
-        _huff_from_freq,
-        decode_jpeg,
-        encode_jpeg,
-    )
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        decode_media,
-        encode_gif,
-    )
-
-    # (1) fill bytes: inject extra 0xFF padding before each marker of
-    # a known-good stream; decode must be byte-identical
-    px = bytes((x * 7 + y * 3) % 256 for y in range(16) for x in range(16))
-    good = encode_jpeg(16, 16, px)
-    ref = decode_jpeg(good)
-    padded = bytearray(good[:2])  # SOI itself must open the stream
-    i = 2
-    while i < len(good) - 1:
-        if good[i] == 0xFF and good[i + 1] not in (0x00,):  # real marker
-            padded += b"\xff\xff\xff"  # three fill bytes
-            padded += good[i : i + 2]
-            i += 2
-            if good[i - 1] == 0xDA:  # rest is entropy data + EOI
-                padded += good[i:]
-                break
-        else:
-            padded.append(good[i])
-            i += 1
-    got = decode_jpeg(bytes(padded))
-    assert got["values"] == ref["values"]
-
-    # (2) all-ones reservation: for any frequency histogram the
-    # canonical table must be INCOMPLETE (Kraft sum < 1)
-    for freq in (
-        {0: 1},
-        {0: 5, 1: 3},
-        {i: 1 for i in range(8)},          # balanced -> complete tree
-        {i: 2 ** i for i in range(10)},    # skewed depths
-    ):
-        counts, symbols = _huff_from_freq(freq)
-        kraft = sum(
-            c * 2.0 ** -(l + 1) for l, c in enumerate(counts)
-        )
-        assert kraft < 1.0, freq
-        assert sorted(symbols) == sorted(freq)
-
-    # (3) GIF out-of-range palette index: encode with an 8-entry
-    # table, then patch the LSD to declare only 4 entries (strip 12
-    # palette bytes) — the LZW stream still yields index 5, which
-    # must now be a LOUD parse error, not a short values buffer
-    pal8 = bytes([1, 2, 3] * 8)
-    ok = bytearray(encode_gif(2, 2, bytes([0, 1, 5, 2]), pal8))
-    ok[10] = 0x80 | 1  # GCT size field: 2^(1+1) = 4 entries
-    bad = bytes(ok[:13]) + bytes(ok[13 : 13 + 12]) + bytes(ok[13 + 24 :])
-    with _pytest.raises(ValueError, match="out of range"):
-        decode_media(bad)
-
-
-def test_png_codec_property_roundtrip():
-    """Hypothesis: arbitrary small images round-trip for every color
-    type — dims and content drawn randomly, encoder filter cycle
-    exercised at every height."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        decode_media,
-        encode_png,
-    )
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        st.integers(1, 12), st.integers(1, 12),
-        st.sampled_from([0, 2, 6]), st.randoms(use_true_random=False),
-    )
-    def check(w, h, ctype, rnd):
-        ch = {0: 1, 2: 3, 6: 4}[ctype]
-        px = bytes(rnd.randrange(256) for _ in range(w * h * ch))
-        d = decode_media(encode_png(w, h, px, color_type=ctype))
-        assert d["values"] == px and d["channels"] == ch
-
-    check()
-
-
 def test_semantic_dedup_resplit_recovers_capped_drops(spark):
     """Hot-cell re-split (VERDICT r11 item 3): over-cap cells are
     re-clustered by a second kmeans and deduped within (cell,
@@ -1484,167 +1065,6 @@ def test_url_canonicalization_and_domain_budget(spark):
     assert out[6].is_canonical and not out[6].kept
 
 
-def test_mp4_container_walk_and_mjpeg_decode():
-    """The MP4 decoder is a REAL ISO-BMFF parser: both mdat-first and
-    moov-first layouts resolve the same frames through absolute stco
-    offsets; per-frame values, variable stts durations and 2-chunk
-    stsc all round-trip; fragmented files and real video codecs raise
-    by name; corrupt sample tables fail loudly."""
-    import struct
-
-    import pytest as _pytest
-
-    from gmall_realtime_flink_spark.operators.jpeg import encode_jpeg
-    from gmall_realtime_flink_spark.operators.mp4 import (
-        decode_mp4,
-        encode_mp4_mjpeg,
-    )
-    from gmall_realtime_flink_spark.operators.multimodal import decode_media
-
-    w, h = 6, 4
-    vals = [40, 90, 70, 120]
-    frames = [encode_jpeg(w, h, bytes([v]) * (w * h)) for v in vals]
-    durs = [40, 41, 42, 40]
-    for mdat_first in (True, False):
-        mp4 = encode_mp4_mjpeg(frames, w, h, durs, mdat_first=mdat_first)
-        d = decode_mp4(mp4)
-        assert d["n_frames"] == 4 and (d["width"], d["height"]) == (w, h)
-        assert d["durations"] == durs and d["timescale"] == 1000
-        assert d["frame_values"] == [bytes([v]) * (w * h) for v in vals]
-        # decode_media dispatches on the ftyp magic
-        assert decode_media(mp4)["fmt"] == "mp4"
-
-    mp4 = encode_mp4_mjpeg(frames, w, h, durs)
-
-    # real-codec 4cc raises BY NAME (container walk still succeeded)
-    avc = mp4.replace(b"jpeg", b"avc1", 1)
-    with _pytest.raises(NotImplementedError, match="avc1"):
-        decode_mp4(avc)
-
-    # fragmented flag: a top-level moof is an honest named gap
-    moof = mp4 + struct.pack(">I", 8) + b"moof"
-    with _pytest.raises(NotImplementedError, match="moof"):
-        decode_mp4(moof)
-
-    # corrupt stsz: inflate the first sample size -> frame overruns /
-    # misparses; either way the decode must be LOUD, not wrong
-    idx = mp4.index(b"stsz")
-    bad = bytearray(mp4)
-    struct.pack_into(">I", bad, idx + 12 + 4, len(frames[0]) + 9999)
-    with _pytest.raises((ValueError, NotImplementedError)):
-        decode_mp4(bytes(bad))
-
-    # truncated file
-    with _pytest.raises(ValueError):
-        decode_mp4(mp4[: len(mp4) // 2])
-
-
-def test_png_adam7_and_16bit_roundtrip():
-    """Round-13 closes the last PNG gaps: Adam7 interlace (seven
-    independently filtered sub-images scattered back to the grid —
-    random content means a pass-geometry or scatter bug lands wrong
-    pixels) and 16-bit depth (big-endian samples, bpp-aware
-    unfiltering, int-list output like WAV). Invalid combos still
-    raise: 16-bit palette is illegal per spec."""
-    import random
-    import struct
-
-    import pytest as _pytest
-
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        decode_media,
-        encode_png,
-    )
-
-    rnd = random.Random(23)
-    for ctype in (0, 2, 6):
-        ch = {0: 1, 2: 3, 6: 4}[ctype]
-        for w, h in ((1, 1), (7, 5), (8, 8), (13, 11), (3, 17)):
-            px = bytes(rnd.randrange(256) for _ in range(w * h * ch))
-            d = decode_media(
-                encode_png(w, h, px, color_type=ctype, interlace=True)
-            )
-            assert d["values"] == px, (ctype, w, h)
-
-    pal = bytes(rnd.randrange(256) for _ in range(12))
-    idx = bytes(rnd.randrange(4) for _ in range(9 * 6))
-    d = decode_media(
-        encode_png(9, 6, idx, color_type=3, palette=pal, interlace=True)
-    )
-    assert d["values"] == b"".join(pal[3 * i : 3 * i + 3] for i in idx)
-
-    for ctype in (0, 2):
-        ch = {0: 1, 2: 3}[ctype]
-        for inter in (False, True):
-            w, h = 6, 5
-            samples = [rnd.randrange(65536) for _ in range(w * h * ch)]
-            px = struct.pack(f">{len(samples)}H", *samples)
-            d = decode_media(
-                encode_png(
-                    w, h, px, color_type=ctype, depth=16, interlace=inter
-                )
-            )
-            assert d["values"] == samples and d["channels"] == ch
-
-    with _pytest.raises((NotImplementedError, AssertionError)):
-        encode_png(2, 2, bytes(8), color_type=3, palette=pal, depth=16)
-
-
-def test_mp3_frame_walk_and_failure_modes():
-    """The MP3 header walk is REAL ISO 11172-3 arithmetic: ID3v2
-    syncsafe skip, VBR per-frame bitrate re-read, frameLen =
-    144*bitrate/rate + padding; corrupt structure fails loudly and
-    codec gaps raise by name."""
-    import struct as _s  # noqa: F401
-
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        _MP3_BITRATES,
-        encode_mp3_frames,
-        parse_mp3,
-    )
-
-    import pytest as _pytest
-
-    b = encode_mp3_frames(6, "a winnowed document body")  # even: ID3
-    d = parse_mp3(b)
-    assert b[:3] == b"ID3" and d["fmt"] == "mp3"
-    assert d["total_bytes"] == len(b)
-    assert d["duration_us"] == d["n_frames"] * (
-        1152 * 1_000_000 // d["sample_rate"]
-    )
-
-    # hand-built 2-frame VBR stream: 64 kbps then 160 kbps @ 32000
-    def frame(br_idx, sr_idx, pad):
-        kbps = _MP3_BITRATES[br_idx - 1]
-        rate = (44100, 48000, 32000)[sr_idx]
-        flen = 144000 * kbps // rate + pad
-        return bytes(
-            [0xFF, 0xFB, (br_idx << 4) | (sr_idx << 2) | (pad << 1), 0]
-        ) + b"\x00" * (flen - 4)
-
-    vbr = frame(5, 2, 0) + frame(10, 2, 1)
-    d = parse_mp3(vbr)
-    assert d["n_frames"] == 2
-    assert d["bitrate_kbps_sum"] == 64 + 160
-    assert d["sample_rate"] == 32000
-
-    with _pytest.raises(ValueError, match="lost frame sync"):
-        parse_mp3(frame(5, 2, 0) + b"\x00\x00\x00\x00")
-    with _pytest.raises(ValueError, match="truncated frame"):
-        parse_mp3(frame(5, 2, 0)[:-1])
-    with _pytest.raises(ValueError, match="forbidden bitrate"):
-        parse_mp3(bytes([0xFF, 0xFB, 0xF0, 0]) + b"\x00" * 100)
-    with _pytest.raises(ValueError, match="reserved sample-rate"):
-        parse_mp3(bytes([0xFF, 0xFB, (5 << 4) | 0x0C, 0]) + b"\x00" * 400)
-    with _pytest.raises(NotImplementedError, match="free-format"):
-        parse_mp3(bytes([0xFF, 0xFB, 0x08, 0]) + b"\x00" * 100)
-    # MPEG-2 (version bits 10) is a named gap, not a misparse
-    with _pytest.raises(NotImplementedError, match="MPEG-1"):
-        parse_mp3(bytes([0xFF, 0xF3, 0x52, 0]) + b"\x00" * 400)
-    with _pytest.raises(ValueError, match="syncsafe"):
-        parse_mp3(b"ID3\x03\x00\x00\x00\x00\x00\x80" + b"\x00" * 40)
-
-
 def test_winnow_fingerprints_guarantee_and_tie_rule(spark):
     """Winnowing invariants (Schleimer et al. 2003): shared
     substrings >= k+w-1 chars share a fingerprint; identical docs
@@ -1715,135 +1135,6 @@ def test_bm25_scores_rank_term_frequency(spark):
     assert q2[0]["doc_id"] == 4 and q2[0]["rk"] == 1
 
 
-def test_ima_adpcm_codec_roundtrip_and_failure_modes():
-    """The IMA ADPCM decoder is the real 1992 state machine: known
-    nibble sequences reconstruct through the step table with
-    clamping; each block restarts from its own header; corrupt
-    structure fails loudly and non-mono raises by name."""
-    import struct as _s
-
-    import pytest as _pytest
-
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        _IMA_STEPS,
-        decode_adpcm_wav,
-        decode_ima_adpcm_blocks,
-        decode_media,
-        encode_ima_adpcm_wav,
-    )
-
-    # hand-run the spec: pred=0, idx=0 (step 7), nibble 3 ->
-    # delta = 7>>3 + 7>>2 + 7>>1 = 0+1+3 = 4, idx += -1 -> clamp 0
-    vals = decode_ima_adpcm_blocks(_s.pack("<hBB", 0, 0, 0) + b"\x03", 5)
-    assert vals == [0, 4, 4]  # second nibble 0: delta = 7>>3 = 0
-    # nibble 0xB = 8|3: sign bit -> subtract the same delta
-    vals = decode_ima_adpcm_blocks(_s.pack("<hBB", 100, 0, 0) + b"\xbb", 5)
-    assert vals[1] == 96
-    # sample clamp at the top step: nibble 7 at step 32767 ->
-    # delta = 4095+8191+16383+32767 = 61436 -> clamps to int16 max
-    vals = decode_ima_adpcm_blocks(
-        _s.pack("<hBB", 0, 88, 0) + b"\x77", 5
-    )
-    assert _IMA_STEPS[88] == 32767 and vals[1] == 32767 == vals[2]
-
-    # block restart: decoding two blocks equals decoding each alone
-    b1 = _s.pack("<hBB", 500, 10, 0) + bytes([0x21, 0x43, 0x65, 0x87])
-    b2 = _s.pack("<hBB", -800, 40, 0) + bytes([0x0F, 0x2D, 0x4B, 0x69])
-    assert decode_ima_adpcm_blocks(b1 + b2, 8) == (
-        decode_ima_adpcm_blocks(b1, 8) + decode_ima_adpcm_blocks(b2, 8)
-    )
-
-    # staged WAV round-trips through decode_media dispatch
-    wav = encode_ima_adpcm_wav(7, "adpcm staging text")
-    d = decode_media(wav)
-    assert d["fmt"] == "wav-adpcm" and len(d["values"]) % 17 == 0
-
-    with _pytest.raises(ValueError, match="step index"):
-        decode_ima_adpcm_blocks(_s.pack("<hBB", 0, 90, 0) + b"\x00", 5)
-    with _pytest.raises(ValueError, match="truncated block"):
-        decode_ima_adpcm_blocks(b"\x00\x01", 5)
-    with _pytest.raises(ValueError, match="blockAlign"):
-        decode_ima_adpcm_blocks(b"\x00\x00\x00\x00", 4)
-    # stereo ADPCM is a named gap
-    stereo = bytearray(wav)
-    fmt_off = wav.index(b"fmt ") + 8
-    _s.pack_into("<H", stereo, fmt_off + 2, 2)
-    with _pytest.raises(NotImplementedError, match="mono"):
-        decode_adpcm_wav(bytes(stereo))
-    # fact count beyond decoded data is corrupt, not silently padded
-    fact_off = wav.index(b"fact") + 8
-    bad = bytearray(wav)
-    _s.pack_into("<I", bad, fact_off, 10_000)
-    with _pytest.raises(ValueError, match="fact count"):
-        decode_adpcm_wav(bytes(bad))
-
-
-def test_flac_codec_roundtrip_crc_and_failure_modes():
-    """The FLAC decoder is a real spec implementation: lossless
-    round-trip across every staged subframe type, CRC-8/CRC-16 and
-    STREAMINFO-MD5 corruption all fail loudly, LPC/stereo raise by
-    name."""
-    import struct as _s
-
-    import pytest as _pytest
-
-    from gmall_realtime_flink_spark.operators.flac import (
-        crc8,
-        crc16,
-        decode_flac,
-        encode_flac,
-    )
-    from gmall_realtime_flink_spark.operators.multimodal import decode_media
-
-    # published CRC check values ("123456789" in ASCII):
-    # CRC-8/SMBUS (poly 0x07, init 0) = 0xF4;
-    # CRC-16/BUSS aka ARC without reflection (0x8005, init 0) = 0xFEE8
-    assert crc8(b"123456789") == 0xF4
-    assert crc16(b"123456789") == 0xFEE8
-
-    samples = [((37 * 3 + i * 7) % 256 - 128) * 256 for i in range(40)]
-    for seed in range(7):  # VERBATIM + FIXED 0..4 + LPC lead frame
-        b = encode_flac(12000, samples, type_seed=seed)
-        d = decode_flac(b)
-        assert d["values"] == samples and d["sample_rate"] == 12000
-    assert decode_media(b)["fmt"] == "flac"  # magic dispatch
-
-    # CONSTANT subframe via the decoder (hand-built not needed:
-    # all-equal block would need a custom encoder path; instead
-    # corrupt integrity levers on a good stream)
-    good = bytearray(encode_flac(8000, samples, type_seed=2))
-    bad = bytearray(good)
-    bad[-3] ^= 0x01  # flip a bit inside the last frame body
-    with _pytest.raises(ValueError, match="CRC-16"):
-        decode_flac(bytes(bad))
-    # corrupt the stored MD5 -> decode succeeds bitwise but the
-    # stream-level integrity check trips
-    bad = bytearray(good)
-    bad[8 + 18] ^= 0xFF  # STREAMINFO md5 field (4 magic + 4 hdr + 18)
-    with _pytest.raises(ValueError, match="MD5"):
-        decode_flac(bytes(bad))
-    # truncated / foreign bytes
-    with _pytest.raises(ValueError, match="fLaC"):
-        decode_flac(b"ZZZZ")
-    # a header CRC-8 flip is caught before any subframe decode
-    # frame starts right after 4 + (4+34) metadata bytes
-    fstart = 4 + 4 + 34
-    bad = bytearray(good)
-    bad[fstart + 2] ^= 0x10  # block-size/sample-rate nibble byte
-    with _pytest.raises(ValueError, match="CRC-8|sync|reserved"):
-        decode_flac(bytes(bad))
-
-    # LPC decodes for real now (seed 6 stages an order-2 quantized
-    # predictor); a NEGATIVE LPC shift is rejected, not misapplied —
-    # craft one by re-encoding with a patched writer is overkill;
-    # instead corrupt the shift field of a staged LPC frame and
-    # expect SOME loud failure (shift/CRC/MD5 — never silence)
-    lpc = bytearray(encode_flac(8000, samples, type_seed=6))
-    lpc[fstart + 6 + 5] ^= 0x40
-    with _pytest.raises(ValueError):
-        decode_flac(bytes(lpc))
-
-
 def test_gopher_rules_flags(spark):
     """Each Gopher rule trips on its own violation; a clean doc
     passes all seven."""
@@ -1902,175 +1193,6 @@ def test_html_extraction_rules_and_entities():
     joined = " ".join(t for t, _ in blocks[1:-2])  # content paras
     for w in ("alpha", "<b>eta", "&", "gamma"):
         assert w in joined
-
-
-def test_adpcm_batched_kernel_matches_scalar(spark):
-    """The cross-block vectorised ADPCM kernel is bit-identical to
-    the scalar reference decoder — locally over varied payloads, and
-    through Spark as the full audio_features twin."""
-    import numpy as np
-
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        attach_adpcm_payload,
-        audio_features,
-        audio_features_adpcm_batched,
-        decode_adpcm_wav,
-        decode_ima_adpcm_batched,
-        encode_ima_adpcm_wav,
-    )
-
-    payloads = [
-        encode_ima_adpcm_wav(i, f"doc {i} body {'y' * (i % 23)}")
-        for i in range(60)
-    ]
-    for pl, b in zip(payloads, decode_ima_adpcm_batched(payloads)):
-        s = np.asarray(decode_adpcm_wav(pl)["values"], dtype=np.int64)
-        assert b["sum_sq"] == int(np.dot(s, s))
-        assert b["zero_crossings"] == int(
-            np.count_nonzero(s[:-1] * s[1:] < 0)
-        )
-
-    rows = [(i, f"spark doc {i} {'z' * (i % 17)}") for i in range(40)]
-    rows.append((99, None))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    staged = attach_adpcm_payload(df)
-    a = {r["doc_id"]: r.asDict() for r in audio_features(staged).collect()}
-    b = {
-        r["doc_id"]: r.asDict()
-        for r in audio_features_adpcm_batched(staged).collect()
-    }
-    assert a == b and a[99]["sum_sq"] is None
-
-
-def test_flac_stereo_decorrelation_roundtrip():
-    """All four stereo channel assignments reconstruct losslessly,
-    including mid/side parity recovery; channel-count disagreement
-    between frame and STREAMINFO fails loudly."""
-    import random
-
-    import pytest as _pytest
-
-    from gmall_realtime_flink_spark.operators.flac import (
-        decode_flac,
-        encode_flac_stereo,
-    )
-
-    rng = random.Random(23)
-    for n in (1, 16, 33):
-        for seed in range(4):
-            lch = [rng.randint(-32768, 32767) for _ in range(n)]
-            rch = [rng.randint(-32768, 32767) for _ in range(n)]
-            d = decode_flac(encode_flac_stereo(32000, lch, rch, seed))
-            assert d["channels"] == 2
-            assert d["values"][0::2] == lch and d["values"][1::2] == rch
-    # odd L+R exercises the mid/side parity bit specifically
-    d = decode_flac(encode_flac_stereo(8000, [7], [4], 2))  # mid/side
-    assert d["values"] == [7, 4]
-    # a mono frame inside a stereo stream is a loud structure error
-    b = bytearray(encode_flac_stereo(8000, [1] * 16, [2] * 16, 3))
-    fstart = 4 + 4 + 34
-    b[fstart + 3] = (b[fstart + 3] & 0x0F) | 0x00  # assignment -> mono
-    with _pytest.raises(ValueError):
-        decode_flac(bytes(b))
-
-
-def test_flac_fast_kernels_match_bitwise_reference():
-    """The table-driven CRCs and the span-slicing bit reader must be
-    bit-identical to the per-bit spec definitions on random data,
-    including mid-byte starts, unary runs spanning zero bytes, and
-    the exhausted / runaway failure modes."""
-    import random as _random
-
-    import pytest as _pytest
-
-    from gmall_realtime_flink_spark.operators.flac import (
-        _BitReader,
-        crc8,
-        crc16,
-    )
-
-    def ref_crc8(data):
-        crc = 0
-        for byte in data:
-            crc ^= byte
-            for _ in range(8):
-                crc = (
-                    ((crc << 1) ^ 0x07) & 0xFF
-                    if crc & 0x80
-                    else (crc << 1) & 0xFF
-                )
-        return crc
-
-    def ref_crc16(data):
-        crc = 0
-        for byte in data:
-            crc ^= byte << 8
-            for _ in range(8):
-                crc = (
-                    ((crc << 1) ^ 0x8005) & 0xFFFF
-                    if crc & 0x8000
-                    else (crc << 1) & 0xFFFF
-                )
-        return crc
-
-    rng = _random.Random(42)
-    for n in (0, 1, 2, 7, 64, 513):
-        data = bytes(rng.randrange(256) for _ in range(n))
-        assert crc8(data) == ref_crc8(data)
-        assert crc16(data) == ref_crc16(data)
-
-    class RefReader:
-        def __init__(self, data, pos=0):
-            self.data, self.byte, self.bit = data, pos, 0
-
-        def read(self, bits):
-            v = 0
-            for _ in range(bits):
-                if self.byte >= len(self.data):
-                    raise ValueError("exhausted")
-                v = (v << 1) | ((self.data[self.byte] >> (7 - self.bit)) & 1)
-                self.bit += 1
-                if self.bit == 8:
-                    self.bit, self.byte = 0, self.byte + 1
-            return v
-
-        def read_unary(self):
-            q = 0
-            while self.read(1) == 0:
-                q += 1
-            return q
-
-    for trial in range(200):
-        data = bytes(
-            rng.choice((0, 0, rng.randrange(256))) for _ in range(40)
-        )
-        fast, ref = _BitReader(data), RefReader(data)
-        ops = []
-        try:
-            while True:
-                if rng.random() < 0.3:
-                    v = ref.read_unary()
-                    ops.append(("unary", v, ref.byte, ref.bit))
-                else:
-                    w = rng.randrange(1, 20)
-                    v = ref.read(w)
-                    ops.append((w, v, ref.byte, ref.bit))
-        except ValueError:
-            ops.append(("end", None, None, None))
-        for op, want, rb, rbit in ops:
-            if op == "end":
-                with _pytest.raises(ValueError):
-                    while True:
-                        fast.read(8)
-                break
-            got = fast.read_unary() if op == "unary" else fast.read(op)
-            assert got == want
-            assert (fast.byte, fast.bit) == (rb, rbit)
-
-    # runaway unary: >2^20 zero bits then a terminator still raises
-    big = bytes(1 << 18) + b"\x01"
-    with _pytest.raises(ValueError, match="runaway"):
-        _BitReader(big).read_unary()
 
 
 def test_shingles_total_on_short_arrays(spark):

@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from gmall_realtime_flink_spark.catalog import load
@@ -101,14 +103,42 @@ def test_write_training_shards_roundtrips_permutation(spark, sf_dir, tmp_path):
     assert seen == want
 
 
-def test_bucketed_table_rebuilds_on_stale_fingerprint(spark, tmp_path):
+@pytest.fixture
+def drop_new_tables(spark):
+    """The bucketed tables a test builds over a tmp corpus are keyed on
+    its path, so no later run reuses them: remove what the test added
+    to the warehouse dir. Each new table is dropped from the catalog
+    and its dir and fingerprint marker are deleted. The test calls it
+    last and gets back the entries still new (none); teardown calls it
+    again, so a failing test leaves nothing behind either."""
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+    def entries() -> set[str]:
+        return set(os.listdir(wh)) if os.path.isdir(wh) else set()
+
+    before = entries()
+
+    def drop() -> set[str]:
+        for entry in entries() - before:
+            path = os.path.join(wh, entry)
+            if entry.endswith(".fingerprint.json"):
+                os.remove(path)
+            else:
+                spark.sql(f"DROP TABLE IF EXISTS `{entry}`")
+                shutil.rmtree(path, ignore_errors=True)
+        return entries() - before
+
+    yield drop
+    drop()
+
+
+def test_bucketed_table_rebuilds_on_stale_fingerprint(
+    spark, tmp_path, drop_new_tables
+):
     """catalog.bucketed_table must detect a CHANGED source file (size/
     mtime fingerprint) and rebuild instead of serving the stale
     layout; unchanged sources reuse files without rewriting."""
-    import shutil
     import time
-
-    from pyspark.sql import functions as F
 
     from gmall_realtime_flink_spark.catalog import bucketed_table
 
@@ -135,17 +165,14 @@ def test_bucketed_table_rebuilds_on_stale_fingerprint(spark, tmp_path):
     shutil.copy(part2, tmp_path / "lineitem.parquet")
     t3 = bucketed_table(spark, sf, "lineitem", ("l_partkey",), n_buckets=4)
     assert t3.count() == 50
+    assert drop_new_tables() == set()
 
 
-def test_bucketed_table_specs_coexist(spark, tmp_path):
+def test_bucketed_table_specs_coexist(spark, tmp_path, drop_new_tables):
     """Two DIFFERENT bucketing specs of the same table must land in
     distinct tables (bucket_cols is part of the key — ADVICE r9:
     otherwise alternating callers thrash a full drop-and-rewrite per
     call because the shared fingerprint never matches both specs)."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
     from gmall_realtime_flink_spark.catalog import bucketed_table
 
     sf = str(tmp_path)
@@ -178,3 +205,4 @@ def test_bucketed_table_specs_coexist(spark, tmp_path):
     assert again.count() == 60
     for f, m in mtimes_before.items():
         assert os.path.getmtime(f) == m, f"rebuild thrash on {f}"
+    assert drop_new_tables() == set()

@@ -1,18 +1,22 @@
-"""Every package module is reachable from the package's entry points.
+"""Every package module is reachable from the package's entry points,
+and every package function is named by some caller.
 
 A module that only its own test imports is dead weight: nothing the
 warehouse or the publisher runs depends on it, yet it costs review and
-Tier-1 time. The scan is static (ast over every import statement,
-function-local ones included), so it needs no Spark session.
+Tier-1 time. A function that nothing names at all is the same waste at
+a smaller grain. The scans are static (ast over every file, function-
+local imports included), so they need no Spark session.
 """
 
 from __future__ import annotations
 
 import ast
+from collections import Counter
 from pathlib import Path
 
 PKG = "gmall_realtime_flink_spark"
-PKG_DIR = Path(__file__).resolve().parents[1] / PKG
+REPO = Path(__file__).resolve().parents[1]
+PKG_DIR = REPO / PKG
 
 # the registry (publisher reads and streaming entries), the warehouse
 # chain, and the session, catalog and oracle every caller goes through
@@ -75,3 +79,44 @@ def test_every_module_is_reachable_from_an_entry_point():
         todo.extend(_imported(mods[name], mods))
     orphans = sorted(set(mods) - seen)
     assert not orphans, f"modules no entry point imports: {orphans}"
+
+
+def _names(tree: ast.AST) -> list[str]:
+    """Every identifier the tree names: a load or store of a bare name,
+    an attribute access, or an import (its name and its alias)."""
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.append(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.append(node.attr)
+        elif isinstance(node, ast.alias):
+            out.append(node.name.rpartition(".")[2])
+            if node.asname:
+                out.append(node.asname)
+    return out
+
+
+def test_every_package_function_is_named_by_a_caller():
+    """A top-level `def` in the package must be named somewhere other
+    than its own body: in the package, `tests/`, `tools/` or
+    `perfbench/`. Decorated defs are exempt — registry entries are
+    reached through `@register`, not by name — and so are the WIRING
+    modules, whose builders are the deployment's to call."""
+    mods = _modules()
+    wiring = {mods[f"{PKG}.{m}"] for m in WIRING}
+    files = [p for d in (PKG_DIR, REPO / "tests", REPO / "tools", REPO / "perfbench")
+             for p in d.rglob("*.py")]
+    trees = {p: ast.parse(p.read_text()) for p in files}
+    named = Counter(name for tree in trees.values() for name in _names(tree))
+    orphans = []
+    for path, tree in trees.items():
+        if PKG_DIR not in path.parents or path in wiring:
+            continue
+        for node in tree.body:
+            if (isinstance(node, ast.FunctionDef | ast.AsyncFunctionDef)
+                    and not node.decorator_list
+                    # a recursive call in its own body is not a caller
+                    and named[node.name] == _names(node).count(node.name)):
+                orphans.append(f"{path.relative_to(REPO)}::{node.name}")
+    assert not orphans, f"functions nothing names: {sorted(orphans)}"

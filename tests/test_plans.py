@@ -658,24 +658,15 @@ def test_winnow_zero_keyed_exchange_arrow_kernel(spark, sf_dir):
 
 
 def test_media_decode_entries_spread_not_keyed(spark, sf_dir):
-    """Heavy per-document decode kernels (JPEG/video/FLAC/MP3/ADPCM/
-    HTML) run behind ONE round-robin spread of the narrow (doc_id,
-    text) rows (r13 optimization: the docs table is a single
-    unsplittable split at bench SFs, so the codec otherwise runs in
-    one task — guide §2.5). The spread must stay round-robin (never
-    hashpartitioning — there is no key) and singular, and the plan
-    must stay join-free: payload bytes are synthesized AFTER the
-    exchange so the shuffle carries only the two driver columns."""
-    for name in (
-        "multimodal_mp3_headers",
-        "multimodal_audio_adpcm",
-        "multimodal_audio_flac",
-        "multimodal_audio_flac_stereo",
-        "multimodal_decode_jpeg",
-        "multimodal_decode_jpeg_progressive",
-        "multimodal_decode_video",
-        "doc_html_extract",
-    ):
+    """The one heavy per-document kernel left, the HTML extractor, runs
+    behind ONE round-robin spread of the narrow (doc_id, text) rows
+    (the docs table is a single unsplittable split at bench SFs, so
+    the kernel otherwise runs in one task — guide §2.5). The spread
+    must stay round-robin (never hashpartitioning — there is no key)
+    and singular, and the plan must stay join-free: the staged pages
+    are synthesized AFTER the exchange so the shuffle carries only
+    the two driver columns."""
+    for name in ("doc_html_extract",):
         plan = plan_of(spark, sf_dir, name)
         # <= 1, not == 1: the spread is CONDITIONAL (skipped when the
         # docs scan already yields >= defaultParallelism splits, e.g.
@@ -688,24 +679,6 @@ def test_media_decode_entries_spread_not_keyed(spark, sf_dir):
         )
         assert "hashpartitioning" not in plan, f"{name} keyed shuffle"
         assert "Join" not in plan
-
-
-def test_light_media_entries_stay_unspread(spark, sf_dir):
-    """Light per-document kernels (metadata extraction, BMP/PPM/WAV,
-    vectorized PNG/GIF) measured FASTER without the spread (the
-    per-task overhead of 32 Python workers exceeds the kernel work at
-    any SF), so their plans must stay exchange-free — the r13
-    measurement that split the family is pinned here."""
-    for name in (
-        "multimodal_features",
-        "multimodal_frame_sample",
-        "multimodal_decode_stats",
-        "multimodal_decode_png",
-        "multimodal_decode_gif",
-        "multimodal_audio_features",
-    ):
-        plan = plan_of(spark, sf_dir, name)
-        assert "Exchange" not in plan, f"{name} shuffles"
 
 
 def test_reliable_checkpoint_knob(spark, sf_dir, monkeypatch):

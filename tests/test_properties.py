@@ -958,27 +958,3 @@ def test_bpe_train_merges_matches_reference(spark, words, n):
         for r in bpe_train_merges(df, n_merges=n).collect()
     )
     assert got == _ref_bpe(wf, n)
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    bpp=st.sampled_from([1, 2, 3, 4]),
-    npix=st.integers(min_value=1, max_value=60),
-    data=st.randoms(use_true_random=False),
-)
-def test_png_unfilter_vectorized_equals_scalar(bpp, npix, data):
-    """The numpy/specialised unfilter paths must reconstruct byte-
-    identically to the RFC 2083 reference loop for every filter type
-    on arbitrary rows (uint8 wraparound, lane cumsum, abs-free Paeth
-    predictor are each easy to get subtly wrong)."""
-    from gmall_realtime_flink_spark.operators.multimodal import (
-        _png_unfilter_row,
-        _png_unfilter_row_scalar,
-    )
-
-    n = bpp * npix
-    filt = bytes(data.randrange(256) for _ in range(n))
-    prev = bytes(data.randrange(256) for _ in range(n))
-    for ftype in range(5):
-        assert _png_unfilter_row(ftype, filt, prev, bpp) == \
-            _png_unfilter_row_scalar(ftype, filt, prev, bpp)
