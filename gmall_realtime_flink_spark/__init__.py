@@ -21,10 +21,9 @@ dashboard publisher) as an idiomatic Apache Spark engine:
   asserts hold the two forms equal on bounded input;
 - beyond the reference surface, batch training-data curation reads
   (plans/datapipe.py) are registry entries too: dedup (exact /
-  MinHash-LSH banded / SimHash / n-gram Jaccard — operators/dedup.py,
-  textstats.py), similarity search (brute-force cosine top-k +
-  sign-bucketed ANN — operators/similarity.py) and text analysis
-  (language ID, quality scoring, token stats).
+  MinHash-LSH banded / n-gram Jaccard — operators/dedup.py) and
+  similarity search (brute-force cosine top-k + sign-bucketed ANN —
+  operators/similarity.py).
 
 Scale design notes live in docstrings next to each operator and in
 ``SCALE.md`` at the repo root.

@@ -1,6 +1,6 @@
 """Fuzzy-dedup operators for large-scale text corpora: MinHash-LSH and
 n-gram Jaccard (the exact-dedup and fingerprint operators live in
-plans/datapipe.py; SimHash in operators/textstats.py).
+plans/datapipe.py).
 
 Beyond-reference components (the reference dedups only visitors, ST2);
 these are the corpus-dedup primitives a training-data pipeline needs.

@@ -1,5 +1,5 @@
 """Large-scale training-data pipeline queries (beyond the reference):
-dedup, similarity search and text analysis — over the
+dedup, similarity search and corpus statistics — over the
 `documents` and `embeddings` tables.
 
 Cross-engine determinism: every hash is md5 (identical hex in Spark
@@ -30,36 +30,7 @@ from gmall_realtime_flink_spark.operators.similarity import (
     embedding_near_dup_pairs,
     knn_self_join,
 )
-from gmall_realtime_flink_spark.operators.textstats import (
-    lang_id,
-    quality_score,
-    simhash,
-)
 from gmall_realtime_flink_spark.plans.registry import register
-
-
-def _spread_docs(d: DataFrame) -> DataFrame:
-    """Round-robin spread of the narrow (doc_id, text) rows to the
-    cluster's core count before doc_html_extract's per-document
-    Python parse (guide §2.5 "input skew: one huge unsplittable file
-    ... repartition immediately after the read" / §2.6 idle capacity):
-    the docs table arrives as a single-row-group parquet split at the
-    bench SFs, so the mapInPandas extractor otherwise runs in ONE task
-    while the other cores idle. Scale-adaptive — the target count is
-    defaultParallelism, not a constant — and the exchange moves only
-    the two narrow columns the page generator needs (guide §2.3
-    project-before-exchange; the staged HTML is created AFTER the
-    exchange, so it never crosses it).
-
-    Conditional: when the scan already yields >= defaultParallelism
-    splits (any production-sized table), the exchange is skipped
-    entirely — the spread exists for unsplittable small inputs, not as
-    a constant tax on scans that parallelize by themselves. The
-    probe-and-repartition itself lives in operators/spread.py (see
-    that module for the Connect caveat)."""
-    from gmall_realtime_flink_spark.operators.spread import spread_to_cores
-
-    return spread_to_cores(d.select("doc_id", "text"))
 
 
 # shared oracle CTEs for the minhash family (word 2-gram shingles,
@@ -223,144 +194,6 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("pair"),
     )
     return pairs.groupBy("pair").agg(F.sum("f").alias("pair_count"))
-
-
-def _bpe_oracle_sql(n_merges: int) -> str:
-    """Unrolled DuckDB mirror of the iterative BPE trainer: one CTE
-    block per merge level — pair counts, deterministic argmax, then
-    greedy re-segmentation expressed as gaps-and-islands over (word,
-    position) rows (merge starts are the ODD ranks inside each island
-    of consecutive pair hits, which reproduces the non-overlapping
-    left-to-right scan, including the floor(run/2) behavior when both
-    pair symbols are equal)."""
-    parts = ["""
-    WITH toks AS (
-      SELECT unnest(list_filter(
-               regexp_split_to_array(lower(text), '[^a-z]+'),
-               x -> length(x) > 0)) AS w
-      FROM documents),
-    seg0 AS (
-      SELECT w, count(*)::BIGINT AS f, string_split(w, '') AS syms
-      FROM toks GROUP BY w)"""]
-    for i in range(1, n_merges + 1):
-        p = i - 1
-        parts.append(f"""
-    pairs{i} AS (
-      SELECT f, syms[j] AS pa, syms[j+1] AS pb
-      FROM (SELECT f, syms, unnest(generate_series(1, len(syms)-1)) AS j
-            FROM seg{p})),
-    best{i} AS (
-      SELECT pa, pb, pa || pb AS m, sum(f)::BIGINT AS c
-      FROM pairs{i} GROUP BY pa, pb
-      ORDER BY c DESC, pa ASC, pb ASC LIMIT 1),
-    pos{i} AS (
-      SELECT w, f, j, syms[j] AS s
-      FROM (SELECT w, f, syms, unnest(generate_series(1, len(syms))) AS j
-            FROM seg{p})),
-    cand{i} AS (
-      SELECT pp.w, pp.f, pp.j, pp.s,
-             coalesce(pp.s = b.pa AND
-               lead(pp.s) OVER (PARTITION BY pp.w ORDER BY pp.j) = b.pb,
-               false) AS isp
-      FROM pos{i} pp CROSS JOIN best{i} b),
-    isl{i} AS (
-      SELECT *, j - row_number() OVER (PARTITION BY w, isp ORDER BY j) AS blk
-      FROM cand{i}),
-    mk{i} AS (
-      SELECT w, f, j, s,
-             isp AND (row_number() OVER
-               (PARTITION BY w, isp, blk ORDER BY j) % 2 = 1) AS mstart,
-             lead(s) OVER (PARTITION BY w ORDER BY j) AS ns
-      FROM isl{i}),
-    seg{i} AS (
-      SELECT w, f,
-             list(CASE WHEN mstart THEN s || ns ELSE s END ORDER BY j) AS syms
-      FROM (SELECT *, coalesce(lag(mstart) OVER (PARTITION BY w ORDER BY j),
-                               false) AS consumed
-            FROM mk{i})
-      WHERE NOT consumed
-      GROUP BY w, f)""")
-    return ",".join(parts)
-
-
-def _bpe_merges_oracle(n_merges: int) -> str:
-    union = "\n      UNION ALL ".join(
-        f"SELECT {i} AS step, pa AS lhs, pb AS rhs, m AS merged, "
-        f"c AS pair_count FROM best{i}"
-        for i in range(1, n_merges + 1)
-    )
-    return _bpe_oracle_sql(n_merges) + f"\n    {union}"
-
-
-def _bpe_segment_oracle(n_merges: int) -> str:
-    return _bpe_oracle_sql(n_merges) + f"""
-    SELECT sym AS subword,
-           sum(f)::BIGINT AS n_tokens,
-           count(DISTINCT w)::BIGINT AS n_words
-    FROM (SELECT w, f, unnest(syms) AS sym FROM seg{n_merges})
-    GROUP BY sym"""
-
-
-@register(
-    "bpe_train_merges",
-    oracle=_bpe_merges_oracle(5),
-    doc="Iterative BPE merge TRAINING (Sennrich et al. 2016) — the "
-    "full learn-loop, not just merge step 0: N times, take the "
-    "argmax adjacent pair over the distinct-word frequency table and "
-    "greedily re-segment every word. 100 TB path: the corpus "
-    "collapses to the vocabulary in ONE shuffle; each iteration is "
-    "O(vocab) — a vocab-sized pair groupBy plus a no-shuffle array "
-    "fold — and exactly one row (the argmax) reaches the driver per "
-    "step. Oracle: the same five levels unrolled as gaps-and-islands "
-    "SQL; equivalence to a single-node reference BPE is "
-    "property-tested on random corpora.",
-    tags=("datapipe", "text", "tokenizer"),
-)
-def bpe_train_merges_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import (
-        bpe_train_merges,
-    )
-
-    return bpe_train_merges(_word_freqs(spark, sf_dir), n_merges=5)
-
-
-def _word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.dedup import tokenize
-
-    d = load(spark, sf_dir, "documents")
-    return (
-        d.select(F.explode(tokenize(F.col("text"))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("f"))
-    )
-
-
-@register(
-    "bpe_segment",
-    oracle=_bpe_segment_oracle(5),
-    doc="BPE tokenizer APPLY (the train->apply pair with "
-    "bpe_train_merges): run the learned 5-rule merge list over the "
-    "word table and emit the resulting SUBWORD vocabulary — token "
-    "count (occurrences weighted by word frequency) and the number "
-    "of distinct words each subword appears in. This is the "
-    "tokenizer a curation pipeline ships downstream: segmentation "
-    "itself is the no-shuffle aggregate fold per word; the only "
-    "shuffles are the one corpus word count and the vocab-sized "
-    "subword groupBy. Oracle: the same unrolled 5-level chain, "
-    "aggregated over the final segmentation table.",
-    tags=("datapipe", "text", "tokenizer"),
-)
-def bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import (
-        bpe_segment_words,
-    )
-
-    seg = bpe_segment_words(_word_freqs(spark, sf_dir), n_merges=5)
-    ex = seg.select("w", "f", F.explode("syms").alias("subword"))
-    return ex.groupBy("subword").agg(
-        F.sum("f").alias("n_tokens"),
-        F.countDistinct("w").alias("n_words"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -607,58 +440,6 @@ def corpus_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SimHash fingerprinting (operators/textstats.py)
-# ---------------------------------------------------------------------------
-
-# the oracle mirrors textstats.simhash bit-for-bit: vote for bit b is
-# +1/-1 from bit (b%4) of hex digit (b//4) of md5(token)
-
-
-def _simhash_sums(bits: int) -> str:
-    return ",\n        ".join(
-        f"sum(CASE WHEN ((strpos('0123456789abcdef', substr(m, {b // 4 + 1}, 1)) - 1)"
-        f" >> {b % 4}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
-        for b in range(bits)
-    )
-
-
-def _simhash_fp(bits: int) -> str:
-    return " + ".join(
-        f"(CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(bits)
-    )
-
-
-_SIMHASH_SUMS = _simhash_sums(16)
-_SIMHASH_FP = _simhash_fp(16)
-
-
-@register(
-    "doc_simhash",
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                                x -> length(x) > 0)) AS tok
-      FROM documents),
-    h AS (SELECT doc_id, md5(tok) AS m FROM tok),
-    s AS (
-      SELECT doc_id,
-        {_SIMHASH_SUMS}
-      FROM h GROUP BY doc_id)
-    SELECT doc_id, ({_SIMHASH_FP})::BIGINT AS simhash FROM s
-    """,
-    doc="SimHash 16-bit fingerprint: per-bit +1/-1 token votes from md5 "
-    "bits, sign -> bit. One explode + one doc-id shuffle (partial agg "
-    "collapses to |docs| rows pre-exchange). Near-dup search = "
-    "hamming distance on fingerprints (bit_count(a ^ b)).",
-    tags=("dedup", "simhash", "text"),
-)
-def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return simhash(d)
-
-
-# ---------------------------------------------------------------------------
 # Similarity search over embeddings (operators/similarity.py)
 # ---------------------------------------------------------------------------
 
@@ -775,80 +556,6 @@ def similarity_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     return embedding_near_dup_pairs(e, threshold=0.4)  # bits auto-scaled
-
-
-# ---------------------------------------------------------------------------
-# Language ID + quality scoring (operators/textstats.py)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "doc_langid",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id, text,
-             list_distinct(list_filter(
-               regexp_split_to_array(lower(text), '[^a-z]+'),
-               x -> length(x) > 0)) AS dt
-      FROM documents),
-    s AS (
-      SELECT doc_id, text,
-        len(list_intersect(dt, ['the','and','of','to','in','is','that','it','for','was'])) AS s_en,
-        len(list_intersect(dt, ['der','die','und','ist','das','nicht','mit','ein','auf','sie'])) AS s_de,
-        len(list_intersect(dt, ['le','la','les','et','des','est','dans','que','pour','une'])) AS s_fr,
-        len(list_intersect(dt, ['el','los','las','y','es','una','por','para','con','como'])) AS s_es
-      FROM d)
-    SELECT doc_id,
-           CASE WHEN regexp_matches(text, '[一-鿿]') THEN 'zh'
-                WHEN s_en = mx THEN 'en'
-                WHEN s_de = mx THEN 'de'
-                WHEN s_fr = mx THEN 'fr'
-                ELSE 'es' END AS pred_lang,
-           mx AS stopword_hits
-    FROM (SELECT *, greatest(s_en, s_de, s_fr, s_es) AS mx FROM s)
-    """,
-    doc="Language ID heuristic: CJK-script check, else stopword-overlap "
-    "argmax with fixed tie order. Pure narrow JVM expressions.",
-    tags=("text", "langid"),
-)
-def doc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return lang_id(d)
-
-
-@register(
-    "doc_quality",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id, text,
-             list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                         x -> length(x) > 0) AS toks
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-             length(text) AS n_chars,
-             len(toks) AS n_tokens,
-             round(len(list_filter(toks, t -> list_contains(
-               ['the','and','of','to','in','is','that','it','for','was'], t)))::DOUBLE
-               / len(toks), 6) AS stopword_ratio,
-             round(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))::DOUBLE
-               / length(text), 6) AS punct_ratio,
-             round(length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE
-               / length(text), 6) AS digit_ratio
-      FROM d)
-    SELECT doc_id, n_chars, n_tokens, stopword_ratio, punct_ratio, digit_ratio,
-           round(0.4 * stopword_ratio
-                 + 0.3 * (least(n_tokens, 100) / 100.0)
-                 + 0.3 * (1.0 - punct_ratio), 6) AS quality_score
-    FROM m
-    """,
-    doc="Quality scoring: length / stopword / punctuation / digit "
-    "ratios + composite score. All rounded for cross-engine parity.",
-    tags=("text", "quality"),
-)
-def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return quality_score(d)
 
 
 # ---------------------------------------------------------------------------
@@ -1216,249 +923,6 @@ def doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= 3)
         .select("doc_id", "term", "tfidf", "rk")
     )
-
-
-@register(
-    "dedup_simhash_hamming",
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                                x -> length(x) > 0)) AS tok
-      FROM documents),
-    h AS (SELECT doc_id, md5(tok) AS m FROM tok),
-    s AS (
-      SELECT doc_id,
-        {_SIMHASH_SUMS}
-      FROM h GROUP BY doc_id),
-    fp AS (SELECT doc_id, ({_SIMHASH_FP})::BIGINT AS simhash FROM s),
-    banded AS (
-      SELECT doc_id, simhash, i AS band,
-             (simhash >> (i * 4)) & 15 AS bv
-      FROM fp, generate_series(0, 3) AS g(i)),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             a.simhash AS sh_a, b.simhash AS sh_b
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id)
-    SELECT doc_a, doc_b, bit_count(xor(sh_a, sh_b))::INT AS hamming
-    FROM pairs
-    WHERE bit_count(xor(sh_a, sh_b)) <= 3
-    """,
-    doc="SimHash near-dup pairs by banded pigeonhole (completes the "
-    "dedup family: exact, MinHash-LSH+Jaccard, SimHash+hamming, "
-    "embedding-cosine): hamming <= 3 over 16 bits guarantees a shared "
-    "4-bit band, so candidates are a self-equi-join on (band, value) "
-    "— one shuffle, never all-pairs — then bit_count(a^b) verifies "
-    "exactly (operators/textstats.simhash_near_pairs). SCALE GUARD: "
-    "with only 2^16 fingerprint values, pigeonhole forces >= "
-    "C(n,2)/2^16 hamming-0 OUTPUT pairs on ANY corpus (n=100k -> "
-    ">=76k pairs minimum; n=500k -> >=1.9B; measured 243.5M at 50k "
-    "zipf docs), so the builder raises past SIMHASH16_MAX_DOCS "
-    "(100k) docs, pointing at dedup_simhash_hamming_wide (48-bit, "
-    "collision space 2.8e14 — the production posture). Override for "
-    "scale-tier harnesses: SPARK_GRAFT_ALLOW_SIMHASH16=1.",
-    tags=("dedup", "simhash", "lsh"),
-)
-def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import (
-        simhash_near_pairs,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    _guard_simhash16_corpus_size(d)
-    return simhash_near_pairs(simhash(d))
-
-
-# 16-bit SimHash output-volume cliff: >= C(n,2)/2^16 pairs at any n.
-# 100k docs is where the pigeonhole floor alone passes ~76k pairs and
-# the measured curve (zipf corpora) is already in the hundreds of
-# millions; past it the entry's OUTPUT is quadratic by construction.
-SIMHASH16_MAX_DOCS = 100_000
-
-
-def _guard_simhash16_corpus_size(docs: DataFrame) -> None:
-    """Refuse to run the 16-bit SimHash form on a corpus where its
-    output is pigeonhole-quadratic. docs.count() on a freshly-loaded
-    parquet frame is metadata-only (row-group counts, no scan). The
-    moments-tier verification harness measures the cliff deliberately
-    and sets SPARK_GRAFT_ALLOW_SIMHASH16=1 to bypass."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_ALLOW_SIMHASH16") == "1":
-        return
-    n = docs.count()
-    if n > SIMHASH16_MAX_DOCS:
-        floor_pairs = n * (n - 1) // 2 // (1 << 16)
-        raise ValueError(
-            f"dedup_simhash_hamming (16-bit) on {n:,} docs: pigeonhole "
-            f"forces >= C(n,2)/2^16 = {floor_pairs:,} hamming-0 output "
-            f"pairs regardless of corpus — intrinsically quadratic past "
-            f"{SIMHASH16_MAX_DOCS:,} docs. Use dedup_simhash_hamming_wide "
-            f"(48-bit) instead, or set SPARK_GRAFT_ALLOW_SIMHASH16=1 to "
-            f"override for measurement harnesses."
-        )
-
-
-@register(
-    "dedup_simhash_hamming_wide",
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                                x -> length(x) > 0)) AS tok
-      FROM documents),
-    h AS (SELECT doc_id, md5(tok) AS m FROM tok),
-    s AS (
-      SELECT doc_id,
-        {_simhash_sums(48)}
-      FROM h GROUP BY doc_id),
-    fp AS (SELECT doc_id, ({_simhash_fp(48)})::BIGINT AS simhash FROM s),
-    banded AS (
-      SELECT doc_id, simhash, i AS band,
-             (simhash >> (i * 12)) & 4095 AS bv
-      FROM fp, generate_series(0, 3) AS g(i)),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             a.simhash AS sh_a, b.simhash AS sh_b
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id)
-    SELECT doc_a, doc_b, bit_count(xor(sh_a, sh_b))::INT AS hamming
-    FROM pairs
-    WHERE bit_count(xor(sh_a, sh_b)) <= 3
-    """,
-    doc="Production-width SimHash near-dup pairs (48-bit fingerprint, "
-    "4x12-bit pigeonhole bands, hamming <= 3). The 16-bit form's "
-    "output is intrinsically quadratic past ~100k docs: with only "
-    "2^16 fingerprint values, pigeonhole alone forces >= C(n,2)/2^16 "
-    "hamming-0 pairs REGARDLESS of corpus (measured: 243.5M pairs at "
-    "50k zipf docs; >= 1.9B at 500k docs) — an operator property, not "
-    "a corpus or engine limit. At 48 bits the space is 2.8e14, "
-    "identical-fingerprint collisions vanish, and pair volume tracks "
-    "true near-duplicates (near-linear on realistic corpora), so this "
-    "is the posture a 100 TB dedup pass runs. Same md5-derived votes, "
-    "same band-then-verify plan; only the width scales.",
-    tags=("dedup", "simhash", "lsh", "production"),
-)
-def dedup_simhash_hamming_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import (
-        simhash_near_pairs,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    return simhash_near_pairs(simhash(d, bits=48), bits=48, bands=4)
-
-
-SIMHASH_CAP = 200  # same production cap as the LSH xxh path
-
-
-@register(
-    "dedup_simhash_hamming_wide_capped",
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                                x -> length(x) > 0)) AS tok
-      FROM documents),
-    h AS (SELECT doc_id, md5(tok) AS m FROM tok),
-    s AS (
-      SELECT doc_id,
-        {_simhash_sums(48)}
-      FROM h GROUP BY doc_id),
-    fp AS (SELECT doc_id, ({_simhash_fp(48)})::BIGINT AS simhash FROM s),
-    banded AS (
-      SELECT doc_id, simhash, i AS band,
-             (simhash >> (i * 12)) & 4095 AS bv
-      FROM fp, generate_series(0, 3) AS g(i)),
-    -- the symbolic cap: only buckets of <= {SIMHASH_CAP} fingerprints join
-    small AS (
-      SELECT band, bv FROM banded
-      GROUP BY band, bv HAVING count(*) <= {SIMHASH_CAP}),
-    capped AS (
-      SELECT x.* FROM banded x JOIN small USING (band, bv)),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             a.simhash AS sh_a, b.simhash AS sh_b
-      FROM capped a JOIN capped b
-        ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id)
-    SELECT doc_a, doc_b, bit_count(xor(sh_a, sh_b))::INT AS hamming
-    FROM pairs
-    WHERE bit_count(xor(sh_a, sh_b)) <= 3
-    """,
-    doc="Production posture of the 48-bit SimHash pass: band buckets "
-    f"larger than {SIMHASH_CAP} fingerprints are dropped before the "
-    "self-join (operators/textstats.simhash_near_pairs max_bucket — "
-    "the same guard as lsh_candidates). Fingerprint entropy comes "
-    "from token content, so a low-entropy corpus collapses millions "
-    "of docs onto few fingerprints and the UNCAPPED band join's "
-    "output goes quadratic: measured at sf100 (5M docs, 31-word "
-    "vocabulary) the uncapped join spilled >50 GB of shuffle while "
-    "the signature pass ran 46 s / 0.3 GB. Hot buckets at that "
-    "density are boilerplate, not near-dups worth emitting. The cap "
-    "is mirrored symbolically in the oracle (HAVING count <= cap), "
-    "so the entry stays hash-exact at every SF.",
-    tags=("dedup", "simhash", "lsh", "production", "scale"),
-)
-def dedup_simhash_hamming_wide_capped(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import (
-        simhash_near_pairs,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    return simhash_near_pairs(
-        simhash(d, bits=48), bits=48, bands=4, max_bucket=SIMHASH_CAP
-    )
-
-
-@register(
-    "doc_redact_pii",
-    oracle="""
-    WITH aug AS (
-      SELECT doc_id,
-             lower(text || ' contact user' || doc_id ||
-                   '@example.com or +1-555-' || (1000 + doc_id % 9000))
-               AS t
-      FROM documents),
-    e AS (
-      SELECT doc_id,
-             len(regexp_extract_all(t,
-                 '[a-z0-9._%+\\-]+@[a-z0-9.\\-]+\\.[a-z]{2,}')) AS n_emails,
-             regexp_replace(t, '[a-z0-9._%+\\-]+@[a-z0-9.\\-]+\\.[a-z]{2,}',
-                            '<EMAIL>', 'g') AS t
-      FROM aug)
-    SELECT doc_id, n_emails,
-           len(regexp_extract_all(t, '\\+?[0-9]{1,2}-[0-9]{3}-[0-9]{3,}'))
-             AS n_phones,
-           md5(regexp_replace(t, '\\+?[0-9]{1,2}-[0-9]{3}-[0-9]{3,}',
-                              '<PHONE>', 'g')) AS redacted_md5
-    FROM e
-    """,
-    doc="PII redaction (training-data scrub): email/phone patterns -> "
-    "typed placeholders, per-doc counts + redacted fingerprint "
-    "(operators/textstats.redact_pii, JVM regex). The corpus has no "
-    "real PII, so each doc gets a DETERMINISTIC doc_id-derived contact "
-    "suffix inside the query before scrubbing — the redaction is "
-    "exercised non-vacuously on every row and both engines scrub the "
-    "identical augmented text.",
-    tags=("text", "pii", "redaction"),
-)
-def doc_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import redact_pii
-
-    d = load(spark, sf_dir, "documents")
-    aug = d.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id"),
-            F.lit("@example.com or +1-555-"),
-            (F.lit(1000) + F.col("doc_id") % 9000),
-        ).alias("text"),
-    )
-    return redact_pii(aug)
 
 
 @register(
@@ -2080,350 +1544,6 @@ def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _synthetic_url() -> "F.Column":
-    """Deterministic MESSY url column derived from doc_id (the
-    testdata is driver-generated and read-only, so the url column a
-    real crawl corpus carries is synthesized in-query — identically
-    on both engines; swap in the real column and everything below is
-    unchanged). Semantic parts (scheme kind, site, path, param
-    values) derive from PAGE; cosmetic mess (case, www, param order,
-    tracking params, fragments) derives from DOC — so refetches of
-    the same page (two per decade of doc_ids) only collide AFTER
-    canonicalization, which is the operator under test."""
-    did = F.col("doc_id")
-    page = F.when(did % 10 < 2, did - (did % 10)).otherwise(did)
-    sch = F.when(page % 3 == 0, F.lit("https")).otherwise(F.lit("http"))
-    dom = F.concat(F.lit("docs.site"), (page % 20).cast("string"),
-                   F.lit(".com"))
-    pa = F.concat(F.lit("a="), (page % 7).cast("string"))
-    pb = F.concat(F.lit("b="), (page % 5).cast("string"))
-    q = F.when(did % 2 == 0, F.concat(pb, F.lit("&"), pa)).otherwise(
-        F.concat(pa, F.lit("&"), pb))
-    q = F.when(did % 5 == 0, F.concat(q, F.lit("&utm_source=feed"))).otherwise(q)
-    return F.concat(
-        F.when(did % 2 == 0, F.upper(sch)).otherwise(sch),
-        F.lit("://"),
-        F.when(did % 2 == 0, F.lit("WWW.")).otherwise(F.lit("")),
-        F.when(did % 4 < 2, F.upper(dom)).otherwise(dom),
-        F.lit("/p/"), page.cast("string"),
-        F.lit("?"), q,
-        F.when(did % 3 == 0,
-               F.concat(F.lit("#s"), (did % 4).cast("string"))
-               ).otherwise(F.lit("")),
-    )
-
-
-_URL_ORACLE_CTES = r"""
-    uu AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 10 < 2 THEN doc_id - (doc_id % 10)
-                  ELSE doc_id END AS page
-      FROM documents WHERE doc_id IS NOT NULL),
-    u2 AS (
-      SELECT doc_id,
-        (CASE WHEN doc_id % 2 = 0 THEN upper(sch) ELSE sch END) || '://' ||
-        (CASE WHEN doc_id % 2 = 0 THEN 'WWW.' ELSE '' END) ||
-        (CASE WHEN doc_id % 4 < 2 THEN upper(dom) ELSE dom END) ||
-        '/p/' || page::VARCHAR || '?' || q ||
-        (CASE WHEN doc_id % 3 = 0 THEN '#s' || (doc_id % 4)::VARCHAR
-              ELSE '' END) AS url
-      FROM (
-        SELECT doc_id, page,
-          CASE WHEN page % 3 = 0 THEN 'https' ELSE 'http' END AS sch,
-          'docs.site' || (page % 20)::VARCHAR || '.com' AS dom,
-          CASE WHEN doc_id % 2 = 0
-            THEN 'b=' || (page % 5)::VARCHAR || '&a=' || (page % 7)::VARCHAR
-            ELSE 'a=' || (page % 7)::VARCHAR || '&b=' || (page % 5)::VARCHAR
-          END
-          || CASE WHEN doc_id % 5 = 0 THEN '&utm_source=feed' ELSE '' END AS q
-        FROM uu)),
-    cparts AS (
-      SELECT doc_id,
-        lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS sch,
-        regexp_replace(lower(regexp_extract(url, '://([^/?#]+)', 1)),
-                       '^www\.', '') AS hostn,
-        regexp_extract(url, '://[^/?#]+([^?#]*)', 1) AS pth,
-        regexp_extract(url, '^[^#]*\?([^#]*)', 1) AS qs
-      FROM u2),
-    curl AS (
-      SELECT doc_id,
-        sch || '://' || hostn || pth ||
-          CASE WHEN cq <> '' THEN '?' || cq ELSE '' END AS canonical_url,
-        regexp_extract(hostn, '([^.]+\.[^.]+)$', 1) AS domain
-      FROM (SELECT *, array_to_string(list_sort(list_filter(
-              string_split(qs, '&'),
-              p -> length(p) > 0 AND NOT starts_with(p, 'utm_'))),
-              '&') AS cq
-            FROM cparts)),
-    uflag AS (
-      SELECT doc_id, canonical_url, domain,
-             doc_id = min(doc_id) OVER (PARTITION BY canonical_url)
-               AS is_canonical
-      FROM curl),
-    uranked AS (
-      SELECT *, CASE WHEN is_canonical THEN
-          row_number() OVER (PARTITION BY domain, is_canonical
-                             ORDER BY doc_id)
-        ELSE 0 END AS domain_rank
-      FROM uflag)
-"""
-
-
-@register(
-    "doc_domain_budget",
-    oracle=f"""
-    WITH {_URL_ORACLE_CTES}
-    SELECT doc_id, canonical_url, domain, is_canonical, domain_rank,
-           (is_canonical AND domain_rank <= 15) AS kept
-    FROM uranked
-    """,
-    doc="URL/domain-grain curation (RefinedWeb/C4-style, between "
-    "exact dedup and mixing): canonicalize every URL — lowercase "
-    "scheme+host, strip www., drop fragments, drop utm_* tracking "
-    "params, sort the rest — with pure JVM regex; dedup at canonical-"
-    "URL grain (refetches of the same page collide only after "
-    "canonicalization); cap each registered domain at 15 docs "
-    "(lowest ids win). Doc-grain audit output: every doc gets a "
-    "verdict. 100 TB path: two shuffles (canonical-url window, "
-    "domain window), both string-keyed; mega-domain skew is AQE or "
-    "broadcast-the-cut territory (operators/urls.py docstring). The "
-    "url column is synthesized deterministically from doc_id because "
-    "the testdata is read-only — a real corpus supplies its own.",
-    tags=("datapipe", "curation"),
-)
-def doc_domain_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.urls import domain_budget
-
-    d = load(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
-    return domain_budget(
-        d.select("doc_id", _synthetic_url().alias("url")), budget=15
-    )
-
-
-def _model_score_oracle_cte() -> str:
-    """DuckDB mirror of operators/textstats.quality_model_score: the
-    same frozen weight vector (embedded as a list literal), the same
-    md5 two-hex-digit hashing trick, the same integer half-up mean."""
-    from gmall_realtime_flink_spark.operators.textstats import (
-        MODEL_DIM,
-        frozen_model_weights,
-    )
-
-    wlit = "[" + ", ".join(str(v) for v in frozen_model_weights()) + "]"
-    return f"""
-    mt AS (
-      SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                                x -> length(x) > 0)) AS tok
-      FROM documents),
-    mw AS (
-      SELECT doc_id,
-             ({wlit})[
-               ((strpos('0123456789abcdef', substr(md5(tok), 1, 1)) - 1) * 16
-                + strpos('0123456789abcdef', substr(md5(tok), 2, 1)) - 1)
-               % {MODEL_DIM} + 1]::BIGINT AS wv
-      FROM mt),
-    ms AS (
-      SELECT doc_id, count(*)::BIGINT AS n_tokens,
-             ((2 * sum(wv) + count(*)) // (2 * count(*)))::BIGINT AS micro
-      FROM mw GROUP BY doc_id)"""
-
-
-@register(
-    "doc_curation_funnel",
-    oracle=f"""
-    WITH {_model_score_oracle_cte()},
-    d AS (
-      SELECT doc_id, text,
-             list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                         x -> length(x) > 0) AS toks
-      FROM documents),
-    q AS (
-      SELECT doc_id, length(text) AS nc,
-             round(0.4 * round(len(list_filter(toks, t -> list_contains(
-                     ['the','and','of','to','in','is','that','it','for','was'],
-                     t)))::DOUBLE / len(toks), 6)
-                   + 0.3 * (least(len(toks), 100) / 100.0)
-                   + 0.3 * (1.0 - round(length(regexp_replace(
-                       text, '[A-Za-z0-9\\s]', '', 'g'))::DOUBLE
-                       / length(text), 6)), 6) AS qs
-      FROM d),
-    r AS (
-      SELECT doc_id,
-             round(1.0 - count(DISTINCT tok)::DOUBLE / count(*), 6) AS rep
-      FROM (SELECT doc_id, unnest(toks) AS tok FROM d) GROUP BY 1),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(
-               generate_series(1, len(toks) - 2),
-               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS sh
-      FROM d WHERE len(toks) >= 3),
-    contam AS (
-      SELECT DISTINCT s.doc_id
-      FROM sh s JOIN (SELECT DISTINCT sh FROM sh WHERE doc_id % 50 = 0) ev
-        ON s.sh = ev.sh
-      WHERE s.doc_id % 50 <> 0),
-    f AS (
-      SELECT q.doc_id,
-             (q.nc >= 150) AS s1,
-             (q.nc >= 150 AND q.qs >= 0.45) AS s2,
-             (q.nc >= 150 AND q.qs >= 0.45 AND r.rep <= 0.6) AS s3,
-             (q.nc >= 150 AND q.qs >= 0.45 AND r.rep <= 0.6
-              AND q.doc_id % 50 <> 0
-              AND q.doc_id NOT IN (SELECT doc_id FROM contam)) AS s4,
-             (q.nc >= 150 AND q.qs >= 0.45 AND r.rep <= 0.6
-              AND q.doc_id % 50 <> 0
-              AND q.doc_id NOT IN (SELECT doc_id FROM contam)
-              AND q.doc_id IN (SELECT doc_id FROM ms WHERE micro > 500000))
-               AS s5
-      FROM q LEFT JOIN r ON q.doc_id = r.doc_id),
-    agg AS (
-      SELECT count(*)::BIGINT AS n0,
-             sum(CASE WHEN s1 THEN 1 ELSE 0 END)::BIGINT AS n1,
-             sum(CASE WHEN s2 THEN 1 ELSE 0 END)::BIGINT AS n2,
-             sum(CASE WHEN s3 THEN 1 ELSE 0 END)::BIGINT AS n3,
-             sum(CASE WHEN s4 THEN 1 ELSE 0 END)::BIGINT AS n4,
-             sum(CASE WHEN s5 THEN 1 ELSE 0 END)::BIGINT AS n5
-      FROM f)
-    SELECT 'length'          AS stage, n0 AS in_ct, n1 AS out_ct, n0 - n1 AS dropped_ct FROM agg
-    UNION ALL
-    SELECT 'quality',         n1, n2, n1 - n2 FROM agg
-    UNION ALL
-    SELECT 'repetition',      n2, n3, n2 - n3 FROM agg
-    UNION ALL
-    SELECT 'decontamination', n3, n4, n3 - n4 FROM agg
-    UNION ALL
-    SELECT 'model_filter',    n4, n5, n4 - n5 FROM agg
-    """,
-    doc="End-to-end curation funnel — the composed training-data "
-    "pipeline: length floor → composite quality floor → repetition "
-    "ceiling → eval-holdout decontamination → classifier model "
-    "filter (doc_quality_model_score as the fifth stage — the "
-    "heuristics-then-model ordering every real pipeline uses, cheap "
-    "filters first so the model scores fewer docs), with per-stage "
-    "in/out/dropped counts (each stage sees only survivors of the "
-    "previous ones). Plan: each metric branch (quality / repetition / "
-    "contamination) runs its own pruned (doc_id, text) scan with "
-    "explode only under partial aggs, then joins back at |docs| grain; "
-    "the funnel itself is one 1-row agg unpivoted with stack. At "
-    "100 TB you'd stage the tokenized corpus (or the per-doc metric "
-    "table) once and derive every flag from it — here the branches "
-    "re-scan because a registry query must stay side-effect-free; the "
-    "scans are narrow and embarrassingly parallel either way.",
-    tags=("datapipe", "quality", "pipeline"),
-)
-def doc_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import (
-        quality_model_score,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    q = quality_score(d).select("doc_id", "n_chars", "quality_score")
-    mkeep = (
-        quality_model_score(d)
-        .filter(F.col("keep"))
-        .select("doc_id")
-        .withColumn("is_model_keep", F.lit(True))
-    )
-    toks = _doc_tokens(d)
-    rep = _per_token_counts(toks).groupBy("doc_id").agg(
-        F.round(
-            1.0 - F.count("*").cast("double") / F.sum("ct").cast("double"),
-            6,
-        ).alias("rep")
-    )
-    sh = _distinct_shingle_rows(toks)
-    ev = _eval_shingle_set(sh)
-    contam = (
-        sh.filter(F.col("doc_id") % EVAL_SPLIT_MOD != 0)
-        .join(F.broadcast(ev), F.col("sh") == F.col("esh"), "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("is_contam", F.lit(True))
-    )
-    f = (
-        q.join(rep, "doc_id", "left")
-        .join(contam, "doc_id", "left")
-        .join(mkeep, "doc_id", "left")
-        .select(
-            (F.col("n_chars") >= 150).alias("s1"),
-            (
-                (F.col("n_chars") >= 150)
-                & (F.col("quality_score") >= 0.45)
-            ).alias("s2"),
-            (
-                (F.col("n_chars") >= 150)
-                & (F.col("quality_score") >= 0.45)
-                & (F.col("rep") <= 0.6)
-            ).alias("s3"),
-            (
-                (F.col("n_chars") >= 150)
-                & (F.col("quality_score") >= 0.45)
-                & (F.col("rep") <= 0.6)
-                & (F.col("doc_id") % EVAL_SPLIT_MOD != 0)
-                & F.coalesce(F.col("is_contam"), F.lit(False)).__invert__()
-            ).alias("s4"),
-            (
-                (F.col("n_chars") >= 150)
-                & (F.col("quality_score") >= 0.45)
-                & (F.col("rep") <= 0.6)
-                & (F.col("doc_id") % EVAL_SPLIT_MOD != 0)
-                & F.coalesce(F.col("is_contam"), F.lit(False)).__invert__()
-                & F.coalesce(F.col("is_model_keep"), F.lit(False))
-            ).alias("s5"),
-        )
-    )
-    one = lambda c: F.sum(F.when(F.col(c), 1).otherwise(0))  # noqa: E731
-    agg = f.agg(
-        F.count("*").alias("n0"),
-        one("s1").alias("n1"),
-        one("s2").alias("n2"),
-        one("s3").alias("n3"),
-        one("s4").alias("n4"),
-        one("s5").alias("n5"),
-    )
-    return agg.selectExpr(
-        "stack(5, "
-        "'length', n0, n1, n0 - n1, "
-        "'quality', n1, n2, n1 - n2, "
-        "'repetition', n2, n3, n2 - n3, "
-        "'decontamination', n3, n4, n3 - n4, "
-        "'model_filter', n4, n5, n4 - n5"
-        ") AS (stage, in_ct, out_ct, dropped_ct)"
-    )
-
-
-@register(
-    "doc_quality_model_score",
-    oracle=f"""
-    WITH {_model_score_oracle_cte()}
-    SELECT doc_id, n_tokens,
-           micro::DOUBLE / 1000000.0 AS model_score,
-           micro > 500000 AS keep
-    FROM ms
-    """,
-    doc="Classifier-based quality filtering (fastText-style model "
-    "inference — the step between heuristic filters and training in "
-    "a real curation pipeline): hash every token into 64 buckets "
-    "(hashing trick), look up a FROZEN linear weight per bucket "
-    "(broadcast-variable analogue: a plan literal), score each doc "
-    "by the integer half-up mean weight, threshold at 0.5. Sigmoid "
-    "omitted — the linear score is monotone in the logistic "
-    "probability, and integer arithmetic keeps the oracle exact. "
-    "100 TB path: one explode + one doc-keyed shuffle with map-side "
-    "partial agg (shuffled volume |docs| rows); weights ride with "
-    "the plan, never a join.",
-    tags=("datapipe", "quality"),
-)
-def doc_quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import (
-        quality_model_score,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    return quality_model_score(d)
-
-
 @register(
     "similarity_topk_filtered",
     oracle="""
@@ -2784,8 +1904,8 @@ _KMEANS_DYN_CTES = _kmeans_dyn_ctes()
     "cosine >= 0.4). Output is the per-vector verdict (vec_id, cell, "
     "max_lower_sim, kept). The expr fold is the oracle surface; "
     "semantic_dedup_numpy is the BLAS production twin (parity-pinned, "
-    "benched). Completes the dedup ladder: exact / MinHash / SimHash "
-    "/ PPJoin / substring are lexical, this is the semantic tier.",
+    "benched). Completes the dedup ladder: exact / MinHash / PPJoin / "
+    "substring are lexical, this is the semantic tier.",
     tags=("datapipe", "dedup", "similarity", "kmeans"),
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2813,7 +1933,7 @@ SEMDEDUP_CAP = 2048
     WITH {_KMEANS_DYN_CTES},
     cellct AS (
       SELECT cell, count(*) AS ct FROM assign GROUP BY cell),
-    -- the symbolic cap (dedup_simhash_hamming_wide_capped's HAVING
+    -- the symbolic cap (dedup_minhash_lsh_capped's HAVING
     -- pattern): only cells of <= {SEMDEDUP_CAP} members enter the
     -- quadratic in-cell pair block
     small AS (SELECT cell FROM cellct WHERE ct <= {SEMDEDUP_CAP}),
@@ -2842,7 +1962,7 @@ SEMDEDUP_CAP = 2048
     "(2× target) are excluded from the pair stage; their members "
     "keep kept=TRUE verdicts flagged cell_capped=TRUE — honest "
     "not-deduped, routable to a re-split pass — exactly the "
-    "max_bucket guard of the lexical LSH/SimHash family, mirrored "
+    "max_bucket guard of the lexical LSH family, mirrored "
     "symbolically in the oracle (HAVING ct <= cap) so the entry is "
     "hash-exact at every SF. On the driver corpora no cell trips the "
     "cap (verdicts identical to dedup_semantic); the skewed-emb "
@@ -4753,414 +3873,3 @@ def doc_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     return hll_cardinality(d.select(F.col("text").alias("item")))
-
-
-# ---------------------------------------------------------------------------
-# DSIR importance weighting / BM25 retrieval / winnowing fingerprints
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "doc_dsir_select",
-    oracle="""
-    WITH dt AS (
-      SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                                x -> length(x) > 0)) AS tok
-      FROM documents),
-    db AS (
-      SELECT doc_id,
-             ((strpos('0123456789abcdef', substr(md5(tok), 1, 1)) - 1) * 16
-              + strpos('0123456789abcdef', substr(md5(tok), 2, 1)) - 1)
-             % 64 AS bucket,
-             coalesce(doc_id % 7 = 0, FALSE) AS is_t
-      FROM dt),
-    dc AS (
-      SELECT bucket, count(*)::BIGINT AS ct_r,
-             sum(CASE WHEN is_t THEN 1 ELSE 0 END)::BIGINT AS ct_t
-      FROM db GROUP BY bucket),
-    tt AS (SELECT sum(ct_r)::BIGINT AS t_r, sum(ct_t)::BIGINT AS t_t FROM dc),
-    lw AS (
-      SELECT bucket,
-             CAST(round(ln(((ct_t + 1) * (t_r + 64))::DOUBLE
-                           / ((ct_r + 1) * (t_t + 64))::DOUBLE)
-                        * 1000000.0) AS BIGINT) AS lm
-      FROM dc CROSS JOIN tt),
-    ds AS (
-      SELECT doc_id, count(*)::BIGINT AS n_tokens, sum(lm)::BIGINT AS wm
-      FROM db JOIN lw USING (bucket) GROUP BY doc_id)
-    SELECT doc_id, n_tokens,
-           wm::DOUBLE / 1000000.0 AS weight,
-           wm > 0 AS selected
-    FROM ds
-    """,
-    doc="DSIR importance weighting (Xie et al. 2023, 'Data Selection "
-    "for Language Models via Importance Resampling' — the "
-    "domain-matching selection step between heuristic filters and "
-    "training): hashed bag-of-words distributions for a target "
-    "domain (the deterministic doc_id%7==0 subset standing in for "
-    "Wikipedia) vs the raw corpus, add-one smoothed; each doc is "
-    "weighted by its total log importance ratio and `selected` marks "
-    "target-leaning docs (weight > 0). The per-BUCKET log ratio is "
-    "integer-micro-snapped at 64-row grain so every cross-row "
-    "reduction is an exact integer sum (doc_lm_surprisal device); "
-    "the bucket-weight table broadcasts back onto the (doc, bucket) "
-    "count table like the frozen model weights of "
-    "doc_quality_model_score. At 100 TB: ONE corpus scan collapsing "
-    "to (doc, bucket, count) — at most 64 rows per doc — then "
-    "bucket totals and the per-doc integer score both derive from "
-    "that table (r13: the old second scan removed); nothing "
-    "quadratic, no Python. operators/textstats.py:dsir_weights.",
-    tags=("datapipe", "curation", "sampling"),
-)
-def doc_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import dsir_weights
-
-    return dsir_weights(load(spark, sf_dir, "documents"))
-
-
-def _bm25_queries_values() -> str:
-    """VALUES rows for the frozen BM25 query workload, generated from
-    the SAME literal the Spark side uses so they cannot drift."""
-    from gmall_realtime_flink_spark.operators.textstats import BM25_QUERIES
-
-    return ", ".join(
-        f"('{qid}', '{t}')" for qid, ts in BM25_QUERIES for t in ts
-    )
-
-
-@register(
-    "bm25_topk",
-    oracle="""
-    WITH q(qid, term) AS (VALUES {_BM25_VALUES}),
-    bt AS (
-      SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                                x -> length(x) > 0)) AS tok
-      FROM documents WHERE doc_id IS NOT NULL),
-    bdl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM bt GROUP BY doc_id),
-    bc AS (SELECT count(*)::BIGINT AS n_docs, sum(dl)::BIGINT AS t_tokens
-           FROM bdl),
-    btf AS (
-      SELECT doc_id, tok AS term, count(*)::BIGINT AS tf
-      FROM bt WHERE tok IN (SELECT DISTINCT term FROM q)
-      GROUP BY doc_id, tok),
-    bdf AS (SELECT term, count(*)::BIGINT AS df FROM btf GROUP BY term),
-    bidf AS (
-      SELECT term,
-             CAST(round(ln(1.0 + (n_docs::DOUBLE - df::DOUBLE + 0.5)
-                                  / (df::DOUBLE + 0.5)) * 1000000.0)
-                  AS BIGINT) AS idf_micro
-      FROM bdf CROSS JOIN bc),
-    bsc AS (
-      SELECT t.doc_id, t.term,
-             (2 * (i.idf_micro * 22 * t.tf * 100000)
-              + (1000000 * t.tf + 300000
-                 + (9 * ((2 * 1000000 * d.dl * c.n_docs + c.t_tokens)
-                         // (2 * c.t_tokens)) + 5) // 10))
-             // (2 * (1000000 * t.tf + 300000
-                      + (9 * ((2 * 1000000 * d.dl * c.n_docs + c.t_tokens)
-                              // (2 * c.t_tokens)) + 5) // 10)) AS sm
-      FROM btf t JOIN bdl d USING (doc_id)
-      CROSS JOIN bc c JOIN bidf i USING (term)),
-    bqd AS (
-      SELECT q.qid, s.doc_id, sum(s.sm)::BIGINT AS score_micro
-      FROM bsc s JOIN q ON s.term = q.term
-      GROUP BY q.qid, s.doc_id),
-    brk AS (
-      SELECT qid, doc_id, score_micro,
-             row_number() OVER (PARTITION BY qid
-                                ORDER BY score_micro DESC, doc_id)
-               AS rk
-      FROM bqd)
-    SELECT qid, doc_id, score_micro::DOUBLE / 1000000.0 AS score, rk
-    FROM brk WHERE rk <= 10
-    """.replace("{_BM25_VALUES}", _bm25_queries_values()),
-    doc="Okapi BM25 top-k retrieval (Robertson & Sparck Jones; the "
-    "k1=1.2/b=0.75 canonical form) for a frozen 4-query workload "
-    "over the corpus — the retrieval primitive of RAG indexing and "
-    "eval-set mining. Every transcendental is snapped to integer "
-    "micros at TINY grain (idf per term — 10 rows; dl/avgdl per doc "
-    "via an exact integer half-up ratio), after which the "
-    "per-(doc,term) BM25 score is ONE exact integer half-up "
-    "division and all cross-row reductions are integer sums — no "
-    "float ever crosses a row boundary (doc_lm_surprisal device). "
-    "Plan (r13): dl and every per-term tf come out of ONE explode + "
-    "ONE doc-keyed agg (count(*) + one conditional sum per query "
-    "term, map-side combined) unpivoted by stack — the old form's "
-    "second tokenize pass and second exchange are gone; df/idf/"
-    "scores derive from the vocab-sized tf table and the per-query "
-    "rank runs over candidates only. operators/textstats.py:"
-    "bm25_topk.",
-    tags=("datapipe", "retrieval", "text"),
-)
-def bm25_topk_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import bm25_topk
-
-    return bm25_topk(load(spark, sf_dir, "documents"))
-
-
-@register(
-    "doc_winnow_fingerprint",
-    oracle="""
-    WITH wd AS (
-      SELECT doc_id, lower(text) AS lt FROM documents
-      WHERE text IS NOT NULL AND length(text) >= 9),
-    wk AS (
-      SELECT doc_id, (length(lt) - 5)::BIGINT AS n_grams,
-             list_transform(generate_series(1, (length(lt) - 5)::BIGINT),
-               p -> ('0x' || substr(md5(substr(lt, p::INT, 6)), 1, 8))::BIGINT
-                    * 2097152 + (2097151 - p)) AS keys
-      FROM wd),
-    sel AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               generate_series(4, n_grams),
-               e -> list_aggregate(list_slice(keys, (e - 3)::INT, e::INT),
-                                   'min'))) AS mks
-      FROM wk),
-    fp AS (
-      SELECT doc_id, len(mks)::BIGINT AS n_fingerprints,
-             md5(array_to_string(
-               list_transform(
-                 list_sort(list_transform(mks, m ->
-                   (2097151 - m % 2097152) * 4294967296 + m // 2097152)),
-                 s -> (s // 4294967296)::VARCHAR || ':'
-                      || (s % 4294967296)::VARCHAR),
-               ',')) AS fp_md5
-      FROM sel)
-    SELECT doc_id, n_fingerprints, fp_md5 FROM fp
-    """,
-    doc="Winnowing document fingerprints (Schleimer, Wilkerson & "
-    "Aiken, SIGMOD 2003 — the MOSS local fingerprinting algorithm): "
-    "hash every 6-char k-gram, slide a 4-gram window, keep each "
-    "window's minimum hash with the rightmost-on-tie rule; distinct "
-    "selected (pos, hash) pairs are the fingerprint set (guarantee: "
-    "any match >= k+w-1 chars shares a fingerprint, density "
-    "~2/(w+1)). The tie rule is arithmetic, not procedural: key = "
-    "hash*2^21 + (2^21-1-pos), so plain min picks smallest hash "
-    "then largest position. fp_md5 digests the position-ordered "
-    "set — one wrong window-min anywhere hash-fails. Plan (r13): "
-    "winnowing is per-document local work, so the whole selection "
-    "runs in ONE Arrow kernel after a round-robin spread of the "
-    "narrow (id, text) rows — zero doc-keyed shuffles (the old expr "
-    "form paid a |grams| exchange + window sort + distinct + "
-    "collect_list sort). operators/textstats.py:winnow_fingerprints.",
-    tags=("datapipe", "dedup", "text"),
-)
-def doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import (
-        winnow_fingerprints,
-    )
-
-    return winnow_fingerprints(load(spark, sf_dir, "documents"))
-
-
-def _gopher_stop_literal() -> str:
-    from gmall_realtime_flink_spark.operators.textstats import (
-        GOPHER_STOPWORDS,
-    )
-
-    return "[" + ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS) + "]"
-
-
-@register(
-    "doc_gopher_rules",
-    oracle="""
-    WITH g AS (
-      SELECT doc_id, text,
-             list_filter(regexp_split_to_array(text, '\\s+'),
-                         x -> length(x) > 0) AS words,
-             string_split(text, chr(10)) AS lines
-      FROM documents WHERE text IS NOT NULL),
-    gm AS (
-      SELECT doc_id, text, words, lines,
-             len(words)::BIGINT AS nw,
-             coalesce(list_aggregate(list_transform(words,
-                        x -> length(x)), 'sum'), 0) AS wc,
-             (len(string_split(text, '#')) - 1
-              + len(string_split(text, '...')) - 1
-              + len(string_split(text, '…')) - 1) AS symbols,
-             len(lines) AS nl,
-             len(list_filter(lines,
-                 x -> regexp_matches(x, '^\\s*[-*•]'))) AS bl,
-             len(list_filter(lines,
-                 x -> regexp_matches(x, '(\\.\\.\\.|…)\\s*$'))) AS el,
-             len(list_filter(words,
-                 x -> regexp_matches(x, '[a-zA-Z]'))) AS aw,
-             len(list_distinct(list_filter(
-                 list_transform(words, x -> lower(x)),
-                 x -> list_contains({_GOPHER_STOPS}, x)))) AS sh
-      FROM g)
-    SELECT doc_id, nw AS n_words,
-           nw >= 50 AND nw <= 100000 AS r_wordcount,
-           wc >= 3 * nw AND wc <= 10 * nw AND nw > 0 AS r_meanlen,
-           symbols * 10 < nw AS r_symbols,
-           bl * 10 <= nl * 9 AS r_bullets,
-           el * 10 <= nl * 3 AS r_ellipsis,
-           aw * 5 >= nw * 4 AND nw > 0 AS r_alpha,
-           sh >= 2 AS r_stop,
-           (nw >= 50 AND nw <= 100000)
-             AND (wc >= 3 * nw AND wc <= 10 * nw AND nw > 0)
-             AND (symbols * 10 < nw)
-             AND (bl * 10 <= nl * 9)
-             AND (el * 10 <= nl * 3)
-             AND (aw * 5 >= nw * 4 AND nw > 0)
-             AND (sh >= 2) AS keep
-    FROM gm
-    """.replace("{_GOPHER_STOPS}", _gopher_stop_literal()),
-    doc="The published Gopher document-quality rules (Rae et al. "
-    "2021, Table A1 — the heuristic gate most open-source curation "
-    "pipelines reimplement): word-count bounds, mean-word-length "
-    "[3,10], symbol-to-word ratio, bullet-line and ellipsis-line "
-    "caps, alphabetic-word ratio, and the >=2-stop-words rule — "
-    "each emitted as its own flag plus the AND. Every ratio "
-    "threshold is CROSS-MULTIPLIED (3*n <= chars <= 10*n), so the "
-    "operator computes no float at all and the oracle is exact by "
-    "construction. Plan: pure JVM array/regex expressions over one "
-    "narrow scan — no explode, no shuffle, no Python; the cheap "
-    "stage-zero of the curation funnel at 100 TB. "
-    "operators/textstats.py:gopher_rules.",
-    tags=("datapipe", "quality"),
-)
-def doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import gopher_rules
-
-    return gopher_rules(load(spark, sf_dir, "documents"))
-
-
-@register(
-    "doc_html_extract",
-    oracle="""
-    WITH h AS (
-      SELECT doc_id, text,
-             32 + (('0x' || substr(md5(text), 1, 2))::INT % 95) AS p,
-             list_filter(regexp_split_to_array(text, '\\s+'),
-                         x -> length(x) > 0) AS words
-      FROM documents),
-    hp AS (
-      SELECT doc_id, text, words,
-             1 + p % 4 AS np, p % 2 = 0 AS il, len(words) AS nw
-      FROM h),
-    pb AS (
-      SELECT doc_id, text, np, nw,
-             list_transform(generate_series(0, np - 1),
-               i -> array_to_string(
-                      list_transform(
-                        generate_series(0,
-                          CASE WHEN nw > i THEN (nw - 1 - i) // np
-                               ELSE -1 END),
-                        j -> words[(i + 1 + j * np)::INT]),
-                      ' ')) AS ptexts,
-             list_transform(generate_series(0, np - 1),
-               i -> CASE WHEN i = 0 AND il AND nw > 0
-                         THEN length(words[1]) ELSE 0 END) AS plinks
-      FROM hp),
-    kb AS (
-      SELECT doc_id, text, np, nw, ptexts,
-             list_filter(generate_series(1, np),
-               k -> length(ptexts[k::INT]) >= 20
-                    AND 2 * plinks[k::INT] <= length(ptexts[k::INT]))
-               AS kept_ix
-      FROM pb)
-    SELECT doc_id,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE (3 + least(np, nw))::INT END AS n_blocks,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE len(kept_ix)::INT END AS n_kept,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE coalesce(list_aggregate(list_transform(kept_ix,
-                       k -> length(ptexts[k::INT])), 'sum'), 0)::BIGINT
-                END AS kept_chars,
-           CASE WHEN text IS NULL THEN NULL
-                -- array_to_string([]) is NULL in DuckDB, '' in the
-                -- kernel's join: coalesce to the empty string
-                ELSE md5(coalesce(array_to_string(list_transform(kept_ix,
-                       k -> ptexts[k::INT]), chr(10)), ''))
-                END AS extracted_md5
-    FROM kb
-    """,
-    doc="HTML boilerplate removal (the WARC->text main-content "
-    "extraction stage of a web-scrape pipeline — C4/RefinedWeb step "
-    "zero): a REAL stdlib-html.parser block parse over staged pages "
-    "(link-saturated nav/footer, the doc's words round-robin over N "
-    "content paragraphs — the first optionally carrying an inline "
-    "<a> that must be KEPT — and an always-too-short tag-cloud "
-    "block), classified by the two integer-exact jusText-lite rules: "
-    "block length >= 20 chars AND link density <= 1/2. Entities are "
-    "escaped on staging and unescaped by the parser, so hostile "
-    "corpora with &, <, > round-trip exactly. The oracle recomputes "
-    "every block verdict AND the md5 of the newline-joined kept text "
-    "symbolically from the page-structure formula — one mis-parsed "
-    "entity or flipped verdict anywhere hash-fails. Arrow "
-    "mapInPandas, narrow, no shuffle. "
-    "operators/html.py:extract_main_text.",
-    tags=("datapipe", "pandas-udf", "curation"),
-)
-def doc_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.html import (
-        attach_html_payload,
-        extract_main_text,
-    )
-
-    d = _spread_docs(load(spark, sf_dir, "documents"))
-    return extract_main_text(attach_html_payload(d))
-
-
-@register(
-    "bpe_compression_eval",
-    oracle=_bpe_oracle_sql(5) + """
-    SELECT count(*)::BIGINT AS vocab_words,
-           sum(f)::BIGINT AS corpus_words,
-           sum(f * length(w))::BIGINT AS chars_total,
-           sum(f * len(syms))::BIGINT AS bpe_tokens_total,
-           ((sum(f * len(syms)) * 1000000 // sum(f * length(w)))::BIGINT)
-             ::DOUBLE / 1000000.0 AS tokens_per_char,
-           ((sum(f * len(syms)) * 1000000 // sum(f))::BIGINT)
-             ::DOUBLE / 1000000.0 AS tokens_per_word
-    FROM seg5
-    """,
-    doc="Tokenizer compression / fertility evaluation (the metric a "
-    "tokenizer-training pipeline reports after bpe_train_merges): "
-    "corpus-weighted tokens-per-character and tokens-per-word of the "
-    "learned 5-merge segmentation — fertility is THE standard "
-    "tokenizer quality number (lower = better compression). One row "
-    "out; ratios are integer-micro floor divisions so the result is "
-    "exact cross-engine. Same scaling shape as the trainer: one "
-    "corpus shuffle to the vocabulary table, then O(vocab) "
-    "arithmetic. Oracle: the unrolled 5-level gaps-and-islands chain "
-    "aggregated once.",
-    tags=("datapipe", "text", "tokenizer"),
-)
-def bpe_compression_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.textstats import (
-        bpe_segment_words,
-    )
-
-    seg = bpe_segment_words(_word_freqs(spark, sf_dir), n_merges=5)
-    agg = seg.agg(
-        F.count("*").cast("long").alias("vocab_words"),
-        F.sum("f").cast("long").alias("corpus_words"),
-        F.sum(F.col("f") * F.length("w")).cast("long").alias("chars_total"),
-        F.sum(F.col("f") * F.size("syms"))
-        .cast("long")
-        .alias("bpe_tokens_total"),
-    )
-    return agg.select(
-        "vocab_words",
-        "corpus_words",
-        "chars_total",
-        "bpe_tokens_total",
-        (
-            F.expr("bpe_tokens_total * 1000000 DIV chars_total").cast(
-                "double"
-            )
-            / 1_000_000.0
-        ).alias("tokens_per_char"),
-        (
-            F.expr("bpe_tokens_total * 1000000 DIV corpus_words").cast(
-                "double"
-            )
-            / 1_000_000.0
-        ).alias("tokens_per_word"),
-    )

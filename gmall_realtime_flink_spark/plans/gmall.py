@@ -1020,7 +1020,7 @@ def display_log_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    as one unsplittable split at bench SFs, so spread the five
     #    narrow input columns round-robin to the core count — skipped
     #    whenever the scan already parallelizes (production-sized
-    #    inputs), same conditional as plans/datapipe._spread_docs.
+    #    inputs); see operators/spread.py.
     from gmall_realtime_flink_spark.operators.spread import spread_to_cores
 
     src = spread_to_cores(

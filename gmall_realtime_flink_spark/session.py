@@ -10,8 +10,9 @@ Scale notes (100 TB / 1000-executor design):
   cluster scale AQE's ``advisoryPartitionSizeInBytes`` governs the
   post-shuffle layout, so the static number matters little.
 - Arrow enabled: every pandas-UDF boundary (dedup sketches, the ST1
-  visitor-repair state function, the HTML extractor) and ``toPandas``
-  (the oracle compare) move columnar batches, not pickled rows.
+  visitor-repair state function, the ordered manifest reader) and
+  ``toPandas`` (the oracle compare) move columnar batches, not pickled
+  rows.
 - Session timezone pinned to UTC so event-time windows, date_format
   and the DuckDB oracle (UTC-naive timestamps) agree bit-for-bit.
 """

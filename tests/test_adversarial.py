@@ -35,8 +35,6 @@ ONCE_FAILING = [
     "similarity_recall_at_k",
     "similarity_recall_curve",
     "dedup_embedding_cosine",
-    "doc_quality",
-    "doc_curation_funnel",
     "embedding_quantize_int8",
     # invalid-vector exclusion + float32 underflow ordering
     "knn_graph",

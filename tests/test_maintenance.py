@@ -7,6 +7,7 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -187,17 +188,13 @@ def test_bucketed_table_specs_coexist(spark, tmp_path, drop_new_tables):
     assert by_part.count() == 60 and by_supp.count() == 60
 
     # alternate back: the first spec's table must still be current
-    # (reuse, not a rebuild) — its files were never clobbered
+    # (reuse, not a rebuild) — its files were never clobbered. Only
+    # the two tables built here: the warehouse dir may hold others.
     mtimes_before = {
         f: os.path.getmtime(f)
-        for f in glob.glob(
-            os.path.join(
-                spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-                    "file:"
-                ),
-                "lineitem_b4_*",
-                "*.parquet",
-            )
+        for f in (
+            urlparse(u).path
+            for u in by_part.inputFiles() + by_supp.inputFiles()
         )
     }
     assert mtimes_before, "expected bucketed files on disk"

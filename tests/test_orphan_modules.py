@@ -1,11 +1,13 @@
 """Every package module is reachable from the package's entry points,
-and every package function is named by some caller.
+and every top-level package function, class and constant is named by
+some caller.
 
 A module that only its own test imports is dead weight: nothing the
 warehouse or the publisher runs depends on it, yet it costs review and
-Tier-1 time. A function that nothing names at all is the same waste at
-a smaller grain. The scans are static (ast over every file, function-
-local imports included), so they need no Spark session.
+Tier-1 time. A function, class or constant that nothing names at all
+is the same waste at a smaller grain. The scans are static (ast over
+every file, function-local imports included), so they need no Spark
+session.
 """
 
 from __future__ import annotations
@@ -97,12 +99,29 @@ def _names(tree: ast.AST) -> list[str]:
     return out
 
 
+def _defined(node: ast.stmt) -> list[str]:
+    """The names a top-level statement defines that the guard checks:
+    an undecorated `def` or `class`, and every bare-name target of an
+    assignment except dunders (`__version__`, `__all__`)."""
+    if isinstance(node, ast.FunctionDef | ast.AsyncFunctionDef | ast.ClassDef):
+        return [] if node.decorator_list else [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [n.id for t in targets for n in ast.walk(t)
+            if isinstance(n, ast.Name) and not n.id.startswith("__")]
+
+
 def test_every_package_function_is_named_by_a_caller():
-    """A top-level `def` in the package must be named somewhere other
-    than its own body: in the package, `tests/`, `tools/` or
-    `perfbench/`. Decorated defs are exempt — registry entries are
-    reached through `@register`, not by name — and so are the WIRING
-    modules, whose builders are the deployment's to call."""
+    """A top-level `def`, `class` or assigned constant in the package
+    must be named somewhere other than its own statement: in the
+    package, `tests/`, `tools/` or `perfbench/`. Decorated defs and
+    classes are exempt — registry entries are reached through
+    `@register`, not by name — and so are dunder constants and the
+    WIRING modules, whose builders are the deployment's to call."""
     mods = _modules()
     wiring = {mods[f"{PKG}.{m}"] for m in WIRING}
     files = [p for d in (PKG_DIR, REPO / "tests", REPO / "tools", REPO / "perfbench")
@@ -114,9 +133,9 @@ def test_every_package_function_is_named_by_a_caller():
         if PKG_DIR not in path.parents or path in wiring:
             continue
         for node in tree.body:
-            if (isinstance(node, ast.FunctionDef | ast.AsyncFunctionDef)
-                    and not node.decorator_list
-                    # a recursive call in its own body is not a caller
-                    and named[node.name] == _names(node).count(node.name)):
-                orphans.append(f"{path.relative_to(REPO)}::{node.name}")
-    assert not orphans, f"functions nothing names: {sorted(orphans)}"
+            own = _names(node)
+            for name in _defined(node):
+                # a recursive call in its own body is not a caller
+                if named[name] == own.count(name):
+                    orphans.append(f"{path.relative_to(REPO)}::{name}")
+    assert not orphans, f"top-level names nothing names: {sorted(orphans)}"

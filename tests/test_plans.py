@@ -623,75 +623,17 @@ def test_similarity_topk_batch_plan_shape(spark, sf_dir):
     assert "BroadcastHashJoin" in ivf, "cell probe join not broadcast"
 
 
-def test_bm25_query_terms_broadcast_no_cartesian(spark, sf_dir):
-    """bm25_topk: the query-term table and the per-term idf table
-    must broadcast onto the token stream (the inverted-index probe
-    analogue), and nothing in the plan may be a cartesian product —
-    the 1-row corpus-stats join is a broadcast nested loop, which is
-    fine; a CartesianProduct is not."""
-    plan = plan_of(spark, sf_dir, "bm25_topk")
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_dsir_bucket_weights_broadcast(spark, sf_dir):
-    """doc_dsir_select: the 64-row bucket-weight table joins the
-    token stream as a broadcast, never a shuffle join keyed on
-    bucket (64 keys over billions of tokens would be the textbook
-    skew shuffle)."""
-    plan = plan_of(spark, sf_dir, "doc_dsir_select")
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_winnow_zero_keyed_exchange_arrow_kernel(spark, sf_dir):
-    """doc_winnow_fingerprint (r13 form): winnowing is per-document
-    local work, so the plan is a round-robin spread of the narrow
-    (id, text) rows into ONE Arrow kernel — no hashpartitioning
-    (the gram stream never crosses the wire at gram grain), no
-    window/sort, no join of any kind."""
-    plan = plan_of(spark, sf_dir, "doc_winnow_fingerprint")
-    assert "hashpartitioning" not in plan, "gram-grain shuffle is back"
-    assert "MapInArrow" in plan or "PythonMapInArrow" in plan
-    assert "Join" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_media_decode_entries_spread_not_keyed(spark, sf_dir):
-    """The one heavy per-document kernel left, the HTML extractor, runs
-    behind ONE round-robin spread of the narrow (doc_id, text) rows
-    (the docs table is a single unsplittable split at bench SFs, so
-    the kernel otherwise runs in one task — guide §2.5). The spread
-    must stay round-robin (never hashpartitioning — there is no key)
-    and singular, and the plan must stay join-free: the staged pages
-    are synthesized AFTER the exchange so the shuffle carries only
-    the two driver columns."""
-    for name in ("doc_html_extract",):
-        plan = plan_of(spark, sf_dir, name)
-        # <= 1, not == 1: the spread is CONDITIONAL (skipped when the
-        # docs scan already yields >= defaultParallelism splits, e.g.
-        # few-core hosts or multi-row-group parquet), so an exact
-        # count would pin the runtime environment, not the plan shape
-        # (r13 advice). What must hold everywhere: never more than one
-        # spread, never a keyed shuffle, never a join.
-        assert plan.count("RoundRobinPartitioning") <= 1, (
-            f"{name}: expected at most one round-robin spread"
-        )
-        assert "hashpartitioning" not in plan, f"{name} keyed shuffle"
-        assert "Join" not in plan
-
-
 def test_reliable_checkpoint_knob(spark, sf_dir, monkeypatch):
     """SPARK_GRAFT_CHECKPOINT=reliable swaps every lineage cut from
     executor-local localCheckpoint (fast; NOT fault-tolerant — a lost
     executor kills the job) to a reliable checkpoint() into a
     fault-tolerant directory (operators/lineage.cut_lineage, the
     production-posture knob). The two forms must be row-identical;
-    doc_dsir_select exercises a lazy cut (pb feeds three consumers)
-    end to end."""
+    dedup_minhash_lsh exercises a lazy cut end to end (lsh_candidates
+    cuts the band table, which feeds both sides of the self-join)."""
     from gmall_realtime_flink_spark.plans import REGISTRY
 
-    builder = REGISTRY["doc_dsir_select"].builder
+    builder = REGISTRY["dedup_minhash_lsh"].builder
     base = sorted(map(tuple, builder(spark, sf_dir).collect()))
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT", "reliable")
     rel = sorted(map(tuple, builder(spark, sf_dir).collect()))
@@ -699,12 +641,3 @@ def test_reliable_checkpoint_knob(spark, sf_dir, monkeypatch):
         "reliable mode must set a checkpoint dir"
     )
     assert rel == base
-
-
-def test_gopher_rules_zero_shuffle_single_scan(spark, sf_dir):
-    """doc_gopher_rules is a pure narrow projection: one scan, no
-    Exchange, no explode (Generate) — the stage-zero curation gate
-    must fuse into whatever reads it."""
-    plan = plan_of(spark, sf_dir, "doc_gopher_rules")
-    assert "Exchange" not in plan
-    assert "Generate" not in plan

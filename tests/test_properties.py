@@ -693,105 +693,6 @@ docs_strategy = st.lists(
 )
 
 
-@given(docs=docs_strategy, bits=st.sampled_from([16, 48]))
-@settings(max_examples=10, deadline=None)
-def test_simhash_banded_pairs_equal_bruteforce(spark, docs, bits):
-    """Pigeonhole completeness at BOTH widths: the banded self-join +
-    exact hamming verify must equal brute-force all-pairs hamming <= 3
-    for ANY corpus (hamming <= bands-1 guarantees a shared band). The
-    Python model recomputes fingerprints from md5 independently."""
-    import hashlib
-
-    from gmall_realtime_flink_spark.operators.textstats import (
-        simhash,
-        simhash_near_pairs,
-    )
-
-    frame = spark.createDataFrame(
-        [(i, " ".join(toks)) for i, toks in enumerate(docs)],
-        "doc_id long, text string",
-    )
-    got = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_near_pairs(
-            simhash(frame, bits=bits), bits=bits, bands=4
-        ).collect()
-    }
-
-    def fp(toks):
-        sums = [0] * bits
-        for t in toks:
-            m = hashlib.md5(t.encode()).hexdigest()
-            for b in range(bits):
-                bit = (int(m[b // 4], 16) >> (b % 4)) & 1
-                sums[b] += 1 if bit else -1
-        return sum((1 << b) for b in range(bits) if sums[b] > 0)
-
-    fps = {i: fp(toks) for i, toks in enumerate(docs)}
-    want = set()
-    for i in range(len(docs)):
-        for j in range(i + 1, len(docs)):
-            h = bin(fps[i] ^ fps[j]).count("1")
-            if h <= 3:
-                want.add((i, j, h))
-    assert got == want
-
-
-def test_simhash_guards():
-    """bits/bands parameter validation: out-of-range widths and bands
-    that don't tile the fingerprint must fail loudly (a silent partial
-    banding would break the pigeonhole completeness guarantee)."""
-    import pytest as _pytest
-
-    from gmall_realtime_flink_spark.operators.textstats import (
-        simhash,
-        simhash_near_pairs,
-    )
-
-    with _pytest.raises(ValueError, match="bits"):
-        simhash(None, bits=61)
-    with _pytest.raises(ValueError, match="bands must cover"):
-        simhash_near_pairs(None, bits=50, bands=4)
-    with _pytest.raises(ValueError, match="pigeonhole"):
-        simhash_near_pairs(None, max_hamming=4, bands=4)
-
-
-def test_simhash_max_bucket_cap_drops_only_hot_buckets(spark):
-    """The production cap (max_bucket) must be loss-free when every
-    band bucket fits under it, and must drop exactly the hot-bucket
-    pairs when it bites: 6 byte-identical docs share every band
-    (bucket size 6 > cap 5 -> all their pairs vanish), while a
-    distinct near-dup pair in small buckets survives any cap >= 2."""
-    from gmall_realtime_flink_spark.operators.textstats import (
-        simhash,
-        simhash_near_pairs,
-    )
-
-    rows = [(i, "alpha beta gamma delta") for i in range(6)]
-    rows += [(10, "omega psi chi phi"), (11, "omega psi chi rho")]
-    frame = spark.createDataFrame(rows, "doc_id long, text string")
-    fps = simhash(frame, bits=48)
-
-    uncapped = {
-        (r["doc_a"], r["doc_b"])
-        for r in simhash_near_pairs(fps, bits=48).collect()
-    }
-    loose = {
-        (r["doc_a"], r["doc_b"])
-        for r in simhash_near_pairs(fps, bits=48, max_bucket=100).collect()
-    }
-    tight = {
-        (r["doc_a"], r["doc_b"])
-        for r in simhash_near_pairs(fps, bits=48, max_bucket=5).collect()
-    }
-    assert loose == uncapped  # cap above every bucket: loss-free
-    clone_pairs = {(a, b) for a in range(6) for b in range(6) if a < b}
-    assert clone_pairs <= uncapped
-    assert tight.isdisjoint(clone_pairs)  # hot bucket dropped whole
-    if (10, 11) in uncapped:  # near-dup pair lives in size-2 buckets
-        assert (10, 11) in tight
-
-
 # --- exact substring dedup: operator vs brute-force reference ---------
 
 _substr_corpus = st.lists(
@@ -887,74 +788,3 @@ def test_substring_incremental_is_target_filtered_full(spark, docs):
         ).collect()
     }
     assert incr == full
-
-
-# ---------------------------------------------------------------------------
-# BPE merge training (operators/textstats.bpe_train_merges)
-# ---------------------------------------------------------------------------
-
-
-def _ref_bpe(word_freqs: dict, n: int) -> list:
-    """Single-node reference BPE (Sennrich et al. 2016 learn_bpe):
-    argmax pair with (count DESC, pair ASC) tie-break, greedy
-    non-overlapping left-to-right re-segmentation."""
-    seg = {w: tuple(w) for w in word_freqs}
-    res = []
-    for step in range(1, n + 1):
-        counts: dict = {}
-        for w, f in word_freqs.items():
-            s = seg[w]
-            for i in range(len(s) - 1):
-                counts[(s[i], s[i + 1])] = counts.get((s[i], s[i + 1]), 0) + f
-        if not counts:
-            break
-        (a, b), c = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        res.append((step, a, b, a + b, c))
-
-        def merge_word(s):
-            out, i = [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            return tuple(out)
-
-        seg = {w: merge_word(s) for w, s in seg.items()}
-    return res
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    words=st.lists(
-        st.tuples(
-            st.text(alphabet="abcd", min_size=1, max_size=8),
-            st.integers(min_value=1, max_value=9),
-        ),
-        min_size=1,
-        max_size=25,
-    ),
-    n=st.integers(min_value=1, max_value=4),
-)
-def test_bpe_train_merges_matches_reference(spark, words, n):
-    """The distributed trainer reproduces the single-node reference
-    BPE exactly on ANY corpus — argmax tie-breaks, the floor(run/2)
-    same-symbol overlap rule, and early stop when the vocabulary runs
-    out of adjacent pairs. The tiny 4-letter alphabet forces heavy
-    ties and same-symbol runs (the two places a distributed
-    re-implementation would diverge)."""
-    from gmall_realtime_flink_spark.operators.textstats import (
-        bpe_train_merges,
-    )
-
-    wf: dict = {}
-    for w, f in words:
-        wf[w] = wf.get(w, 0) + f
-    df = spark.createDataFrame(list(wf.items()), "w string, f long")
-    got = sorted(
-        (r.step, r.lhs, r.rhs, r.merged, r.pair_count)
-        for r in bpe_train_merges(df, n_merges=n).collect()
-    )
-    assert got == _ref_bpe(wf, n)

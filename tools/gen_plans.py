@@ -79,22 +79,12 @@ EXTRA = [
     "token_countmin",
     "doc_hll_cardinality",
     "dedup_jaccard_complete_capped",
-    "dedup_simhash_hamming_wide",
     "dedup_pagerank_capped",
     # r12: the re-split + batch-ANN family (plan pins in
     # tests/test_plans.py cite these shapes)
     "dedup_semantic_resplit",
     "similarity_topk_batch",
     "similarity_topk_ivf_batch",
-    # r13 session-2: retrieval/curation ops (plan pins in
-    # tests/test_plans.py cite these shapes); the media-decode
-    # entries are pinned Exchange-free there and add no skeleton
-    # beyond a scan + mapInPandas
-    "bm25_topk",
-    "doc_dsir_select",
-    "doc_winnow_fingerprint",
-    "doc_gopher_rules",
-    "doc_html_extract",
 ]
 
 
@@ -116,9 +106,8 @@ def abridge(plan: str, max_lines: int = 60) -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="gen_plans", cpus=8)
-    names = CORE + [n for n in EXTRA if n in REGISTRY]
     sections = []
-    for name in names:
+    for name in CORE + EXTRA:
         df = REGISTRY[name].builder(spark, sf_dir)
         # collect() (not a noop write) so THIS DataFrame's own
         # QueryExecution is the one that runs — its executedPlan is

@@ -3,11 +3,11 @@ to collect.
 
 The standard harness (tests/test_oracle.py) hash-compares full result
 sets driver-side — right at test scale, impossible when
-a scale run makes the *result itself* enormous (dedup_simhash_hamming
-at sf1 emits 154.7M pairs on the degenerate 31-word corpus: nearly
-every doc pair is hamming-close). This tier compares IN-ENGINE
-aggregates instead — neither engine ever materializes the result to
-the driver:
+a scale run makes the *result itself* enormous (dedup_minhash_lsh
+emits 4.0M candidate pairs at sf1 and 399.6M at sf10 on the
+degenerate 31-word corpus: nearly every doc pair shares a band). This
+tier compares IN-ENGINE aggregates instead — neither engine ever
+materializes the result to the driver:
 
   count(*), and per numeric column: sum, sum of squares (as exact
   DECIMAL/HUGEINT — no float accumulation), min, max.
@@ -106,10 +106,6 @@ def main() -> int:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else ".local/sf1"
     json_out = sys.argv[3] if len(sys.argv) > 3 else None
     free_gb = preflight_disk()
-
-    # This harness exists to measure output-quadratic entries (the
-    # 16-bit SimHash cliff) deliberately — bypass the builder guard.
-    os.environ.setdefault("SPARK_GRAFT_ALLOW_SIMHASH16", "1")
 
     from pyspark.sql import functions as F
 

@@ -16,9 +16,10 @@ OUTPUT-quadratic on the degenerate 31-word corpus: candidates
 measured 4.0M @ sf1 → 399.6M @ sf10, 100× per 10× docs, BASELINE.md
 round-5, so sf100 projects ~40B pairs — infeasible in EITHER engine
 and intrinsic to corpus+operator, not the plan) — PLUS the
-production datapipe/layout shapes (DATAPIPE_SF100 below): the sf100
-run is what discovered the r8 simhash spill, so the dedup / pack /
-shuffle / quality / quantization shapes get the same decade.
+production datapipe/layout shapes (DATAPIPE_SF100 below): a
+low-entropy corpus at sf100 exposes output-quadratic band joins that
+sf10 hides, so the dedup / pack / shuffle / quality / quantization
+shapes get the same decade.
 
 Usage: python tools/verify_sf100.py [sf_dir] [json_out] [--resume]
 --resume: reuse ok-entries from an existing json_out (same sf_dir)
@@ -85,7 +86,6 @@ DATAPIPE_SF100 = [
     "doc_lm_surprisal",
     "dedup_substring_spans",     # r9 operator: 3 linear shuffles
     "dedup_jaccard_complete_capped",
-    "dedup_simhash_hamming_wide_capped",
     "product_stats_bucketed",    # exchange-free layout twin (one-time
                                  # bucketed write, fingerprint-cached)
 ]
@@ -104,11 +104,6 @@ EXCLUDED = {
         "31-word corpus: 4.0M candidates @ sf1 -> 399.6M @ sf10 "
         "(measured, BASELINE.md) -> ~40B projected @ sf100; "
         "capped twin dedup_minhash_lsh_capped verified instead"
-    ),
-    "dedup_simhash_hamming_wide": (
-        "uncapped 48-bit band join spills at sf100 (measured r8: the "
-        "band-join output on the low-entropy corpus exceeds local "
-        "disk); capped twin verified instead (67 s at sf100, r8)"
     ),
     "knn_graph": (
         "every-vector top-3 at 2M vectors: auto_bits=11 -> 2048 "
