@@ -2,7 +2,7 @@
 pipelines (beyond-reference components: the reference engine has no
 corpus-preparation surface).
 
-All three follow the engine's determinism contract (see sampling.py):
+All three follow the engine's determinism contract:
 ordering and assignment key off md5 of the natural id — content-stable
 across runs, engines, partitionings and scale factors — never `rand()`
 or a partition-dependent Spark hash.
@@ -28,7 +28,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gmall_realtime_flink_spark.operators.sampling import hash_bucket
+def hash_bucket(id_col: Column, buckets: int = 256) -> Column:
+    """Deterministic bucket in [0, buckets): int(md5(id)[:2], 16) scaled.
+
+    Uses only the first byte of the digest when buckets <= 256 (the
+    common case); uniform because md5 bytes are uniform. The same
+    value is computable bit-identically in DuckDB via char arithmetic.
+    """
+    byte = F.conv(F.substring(F.md5(id_col.cast("string")), 1, 2), 16, 10).cast(
+        "long"
+    )
+    return (byte % buckets).alias("bucket")
 
 
 def _ws_tokens(text_col: Column) -> Column:

@@ -1,5 +1,5 @@
 """Large-scale training-data pipeline queries (beyond the reference):
-dedup, similarity search and corpus statistics — over the
+dedup, similarity search and training-batch packing over the
 `documents` and `embeddings` tables.
 
 Cross-engine determinism: every hash is md5 (identical hex in Spark
@@ -93,107 +93,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.groupBy(F.md5("text").alias("content_hash")).agg(
         F.min("doc_id").alias("keep_doc_id"), F.count(F.lit(1)).alias("dup_ct")
     )
-
-
-# ---------------------------------------------------------------------------
-# Text analysis
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "doc_fingerprint",
-    oracle="""
-    SELECT doc_id,
-           md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fingerprint
-    FROM documents
-    """,
-    doc="Document fingerprint: md5 over whitespace-normalized lowercase "
-    "text (content-defined identity for incremental dedup).",
-    tags=("text",),
-)
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    normalized = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
-    return d.select("doc_id", F.md5(normalized).alias("fingerprint"))
-
-
-@register(
-    "doc_token_count",
-    oracle="""
-    SELECT doc_id,
-           length(text) AS n_chars,
-           len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS n_tokens,
-           len(list_filter(regexp_split_to_array(text, '\\s+'), x -> length(x) > 0))
-             AS n_ws_tokens
-    FROM documents
-    """,
-    doc="Token counting: whitespace tokens + a BPE-ish lexical regex "
-    "(letters / digits / single punctuation) — all JVM-side regex, "
-    "no Python in the hot path.",
-    tags=("text",),
-)
-def doc_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    bpe_pat = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-    ws_tokens = F.filter(F.split(F.col("text"), r"\s+"), lambda x: F.length(x) > 0)
-    return d.select(
-        "doc_id",
-        F.length("text").alias("n_chars"),
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(bpe_pat), 0)).alias(
-            "n_tokens"
-        ),
-        F.size(ws_tokens).alias("n_ws_tokens"),
-    )
-
-
-@register(
-    "bpe_pair_counts",
-    oracle="""
-    WITH t AS (
-      SELECT unnest(list_filter(
-               regexp_split_to_array(lower(text), '[^a-z]+'),
-               x -> length(x) > 0)) AS w
-      FROM documents),
-    f AS (SELECT w, count(*)::BIGINT AS f FROM t GROUP BY w),
-    p AS (
-      SELECT f.f,
-             unnest(list_transform(generate_series(1, length(w) - 1),
-                                   i -> substr(w, i, 2))) AS pair
-      FROM f WHERE length(w) >= 2)
-    SELECT pair, sum(f)::BIGINT AS pair_count
-    FROM p GROUP BY pair
-    """,
-    doc="BPE merge-step pair frequencies (tokenizer-training prep): "
-    "adjacent character-pair counts weighted by word frequency — "
-    "argmax(pair_count) is the first merge a BPE trainer performs "
-    "(Sennrich et al. 2016). The classic scaling trick is built in: "
-    "the corpus collapses to the word-frequency table FIRST "
-    "(vocab-sized groupBy, map-side combined), and the pair explode "
-    "runs over DISTINCT words weighted by count — pair-pass cost is "
-    "O(vocabulary), not O(corpus tokens), so a 100 TB corpus with a "
-    "1M-word vocab pays the same pair pass as a 1 GB one. Output is "
-    "bounded by the pair alphabet (<= 26^2 at char level).",
-    tags=("datapipe", "text", "tokenizer"),
-)
-def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.dedup import tokenize
-
-    d = load(spark, sf_dir, "documents")
-    words = d.select(F.explode(tokenize(F.col("text"))).alias("w"))
-    f = words.groupBy("w").agg(F.count(F.lit(1)).alias("f"))
-    pairs = f.filter(F.length("w") >= 2).select(
-        "f",
-        F.explode(
-            # guarded: sequence(1, 0, 1) THROWS ("Illegal sequence
-            # boundaries") if a pushed-down/hoisted copy ever sees a
-            # 1-char word, so the bound check rides inside the expr
-            F.expr("CASE WHEN length(w) >= 2 THEN "
-                   "transform(sequence(1, length(w) - 1, 1), "
-                   "i -> substring(w, i, 2)) "
-                   "ELSE cast(array() as array<string>) END")
-        ).alias("pair"),
-    )
-    return pairs.groupBy("pair").agg(F.sum("f").alias("pair_count"))
 
 
 # ---------------------------------------------------------------------------
@@ -396,49 +295,6 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "corpus_mix_temperature",
-    oracle="""
-    WITH n AS (
-      SELECT source, count(*)::BIGINT AS n_docs FROM documents
-      GROUP BY source),
-    w AS (SELECT source, n_docs, sqrt(n_docs::DOUBLE) AS wt FROM n),
-    t AS (SELECT sum(CAST(wt AS DECIMAL(38,12)))::DOUBLE AS tot FROM w)
-    SELECT w.source, w.n_docs,
-           round(w.wt, 6) AS weight,
-           round(w.wt / t.tot, 6) + 0.0 AS share,
-           floor(round(w.wt / t.tot, 6) * 1000)::BIGINT AS target_docs
-    FROM w, t
-    """,
-    doc="Temperature-based mixture weights (alpha = 0.5, the "
-    "multilingual-LM upsampling rule p_s proportional to n_s^alpha): "
-    "per-source doc counts re-weighted by sqrt so small sources are "
-    "upsampled relative to raw proportion, with a 1000-doc budget "
-    "allocation. Complements corpus_mix_budget (hard per-source cap) "
-    "with the soft temperature mix. Deterministic cross-engine: "
-    "sqrt is IEEE-exact on identical doubles, the weight sum is an "
-    "exact DECIMAL(38,12) fold (order-independent), shares rounded "
-    "6dp. Plan: one groupBy(source) — |sources| rows ever after.",
-    tags=("datapipe", "sampling", "mixing"),
-)
-def corpus_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    n = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-    w = n.withColumn("wt", F.sqrt(F.col("n_docs").cast("double")))
-    tot = w.agg(
-        F.sum(F.col("wt").cast("decimal(38,12)")).cast("double").alias("tot")
-    )
-    return w.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "n_docs",
-        F.round("wt", 6).alias("weight"),
-        (F.round(F.col("wt") / F.col("tot"), 6) + F.lit(0.0)).alias("share"),
-        F.floor(F.round(F.col("wt") / F.col("tot"), 6) * 1000)
-        .cast("long")
-        .alias("target_docs"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Similarity search over embeddings (operators/similarity.py)
 # ---------------------------------------------------------------------------
@@ -565,12 +421,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the oracle computes min-reachable-id per node via a recursive CTE —
 # the declarative statement of what the iterative Spark propagation
 # converges to
-_HEXVAL = (
-    "((strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), 2, 1)) - 1)"
-)
-
-
 @register(
     "dedup_cluster",
     oracle=f"""
@@ -601,96 +451,8 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic split / stratified sampling / normalization
-# (operators/sampling.py)
+# IVF search, label centroids, edit-distance dedup, int8 quantization
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "doc_split",
-    oracle=f"""
-    SELECT doc_id,
-           CASE WHEN {_HEXVAL} < 12 THEN 'test'
-                WHEN {_HEXVAL} < 24 THEN 'val'
-                ELSE 'train' END AS split
-    FROM documents
-    """,
-    doc="Deterministic train/val/test split (90/5/5) keyed on "
-    "md5(doc_id) buckets — content-stable, partitioning-independent, "
-    "reproducible at any scale factor (operators/sampling.train_split).",
-    tags=("sampling", "split"),
-)
-def doc_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.sampling import train_split
-
-    d = load(spark, sf_dir, "documents")
-    return train_split(d).select("doc_id", "split")
-
-
-@register(
-    "doc_sample_stratified",
-    oracle=f"""
-    SELECT doc_id, lang FROM documents
-    WHERE {_HEXVAL} < CASE lang WHEN 'en' THEN 64 WHEN 'zh' THEN 192
-                      ELSE 128 END
-    """,
-    doc="Deterministic stratified downsample by language: en kept at "
-    "64/256, zh at 192/256, default 128/256 — hash-bucket filter on "
-    "the scan, no shuffle (operators/sampling.stratified_sample).",
-    tags=("sampling", "stratified"),
-)
-def doc_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.sampling import stratified_sample
-
-    d = load(spark, sf_dir, "documents")
-    return stratified_sample(
-        d, "lang", {"en": 64, "zh": 192}, default_rate=128
-    ).select("doc_id", "lang")
-
-
-@register(
-    "doc_sample_uniform_k",
-    oracle="""
-    SELECT doc_id, lang FROM (
-      SELECT doc_id, lang FROM documents
-      ORDER BY md5(doc_id::VARCHAR), doc_id
-      LIMIT 100)
-    """,
-    doc="Exactly-k uniform sample without replacement: the 100 rows "
-    "with the smallest md5(doc_id) — the content-stable equivalent "
-    "of reservoir sampling (bottom-k/KMV). Plan is "
-    "TakeOrderedAndProject: per-task k-row heaps merged at the "
-    "driver, no global sort, O(k) memory at any corpus size; "
-    "appending data later keeps the union's bottom-k a uniform "
-    "sample (KMV composability) "
-    "(operators/sampling.uniform_sample_k).",
-    tags=("datapipe", "sampling", "scale"),
-)
-def doc_sample_uniform_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.sampling import uniform_sample_k
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "lang")
-    return uniform_sample_k(d, "doc_id", k=100)
-
-
-@register(
-    "doc_normalize",
-    oracle="""
-    SELECT doc_id,
-           trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))
-             AS norm_text
-    FROM documents
-    """,
-    doc="Canonical text normalization (lowercase, punctuation runs to "
-    "single spaces, trimmed) — the pre-pass feeding exact dedup and "
-    "fingerprinting (operators/sampling.normalize_text).",
-    tags=("text", "normalize"),
-)
-def doc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.sampling import normalize_text
-
-    d = load(spark, sf_dir, "documents")
-    return d.select("doc_id", normalize_text(F.col("text")).alias("norm_text"))
 
 
 @register(
@@ -857,75 +619,6 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "doc_tfidf_top_terms",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                                x -> length(x) > 0)) AS term
-      FROM documents),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-    df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-    n AS (SELECT count(*) AS n_docs FROM documents)
-    SELECT doc_id, term, tfidf, rk FROM (
-      SELECT t.doc_id, t.term,
-             round(t.tf * ln((n.n_docs + 1.0) / (d.df + 1.0)), 6) AS tfidf,
-             row_number() OVER (
-               PARTITION BY t.doc_id
-               ORDER BY round(t.tf * ln((n.n_docs + 1.0) / (d.df + 1.0)), 6)
-                        DESC, t.term) AS rk
-      FROM tf t JOIN df d USING (term), n)
-    WHERE rk <= 3
-    """,
-    doc="TF-IDF top-3 terms per document (corpus-level text "
-    "featurization): tokenize -> per-(doc,term) tf -> per-term df "
-    "(one GROUP BY over the already-aggregated tf frame, never the "
-    "raw token stream) -> smoothed idf ln((N+1)/(df+1)) -> per-doc "
-    "top-3 via a window PARTITIONED by doc_id (bounded per-group "
-    "sort, no global sort). The doc-count scalar joins in as a "
-    "broadcast 1-row aggregate — no driver-side collect.",
-    tags=("text", "tfidf", "window"),
-)
-def doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from gmall_realtime_flink_spark.operators.dedup import tokenize
-
-    from gmall_realtime_flink_spark.operators.spread import spread_to_cores
-
-    d = load(spark, sf_dir, "documents")
-    # r14 (guide §2.4, §2.5): spread the narrow rows (the explode ran
-    # in the single scan task), and document frequency as a WINDOW
-    # count over the (doc, term) aggregate instead of groupBy +
-    # join-back — the old form consumed `tf` twice, executing the
-    # explode + agg once per consumer. df per row = count of tf rows
-    # sharing the term = distinct docs containing it, identical.
-    toks = spread_to_cores(d.select("doc_id", "text")).select(
-        "doc_id", F.explode(tokenize(F.col("text"))).alias("term")
-    )
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    n = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    tfidf = F.round(
-        F.col("tf")
-        * F.log((F.col("n_docs") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))),
-        6,
-    )
-    scored = (
-        tf.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("term"))
-        )
-        .crossJoin(F.broadcast(n))
-        .withColumn("tfidf", tfidf)
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "term")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", "term", "tfidf", "rk")
-    )
-
-
-@register(
     "dedup_edit_distance",
     oracle=f"""
     WITH {_MINHASH_CTES}
@@ -1056,24 +749,21 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 3 additions: decontamination, repetition, paragraph dedup, k-NN graph
+# Decontamination, span and substring dedup, k-NN graph
 # ---------------------------------------------------------------------------
 
-
-
-# shared builders for the decontamination / repetition family — the
-# curation funnel composes the SAME definitions, so a rule change
-# (shingle width, eval split, tokenizer) can't silently de-sync the
-# funnel's stage counts from the standalone queries
+# shared builders for the decontamination / span-dedup family — both
+# entries compose the SAME definitions, so a rule change (shingle
+# width, eval split, tokenizer) can't silently de-sync them
 EVAL_SPLIT_MOD = 50  # doc_id % 50 == 0 -> held-out eval slice
 
 
 def _doc_tokens(d: DataFrame) -> DataFrame:
     # deliberately NOT spread: of its consumers only span_dedup's
     # 8-gram explode is heavy (it spreads explicitly); the light
-    # two-level aggs (doc_repetition 0.37 s, doc_decontaminate
-    # 0.66 s) measured SLOWER behind a blanket spread (0.37 → 0.68 —
-    # the exchange exceeds the kernel, the r13 light-media lesson)
+    # two-level aggs (doc_decontaminate 0.66 s) measured SLOWER behind
+    # a blanket spread (the exchange exceeds the kernel, the r13
+    # light-media lesson)
     return d.select("doc_id", tokenize(F.col("text")).alias("toks"))
 
 
@@ -1090,14 +780,6 @@ def _eval_shingle_set(sh: DataFrame) -> DataFrame:
         sh.filter(F.col("doc_id") % EVAL_SPLIT_MOD == 0)
         .select(F.col("sh").alias("esh"))
         .distinct()
-    )
-
-
-def _per_token_counts(toks: DataFrame) -> DataFrame:
-    return (
-        toks.select("doc_id", F.explode("toks").alias("tok"))
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("ct"))
     )
 
 
@@ -1139,48 +821,6 @@ def doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(ev), F.col("sh") == F.col("esh"))
         .groupBy("doc_id")
         .agg(F.count("*").alias("hit_ct"))
-    )
-
-
-@register(
-    "doc_repetition",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                                x -> length(x) > 0)) AS tok
-      FROM documents),
-    per_tok AS (
-      SELECT doc_id, tok, count(*)::BIGINT AS ct FROM t GROUP BY 1, 2)
-    SELECT doc_id,
-           sum(ct)::BIGINT AS word_ct,
-           count(*)::BIGINT AS uniq_ct,
-           round(1.0 - count(*)::DOUBLE / sum(ct)::DOUBLE, 6) AS rep_ratio,
-           round(max(ct)::DOUBLE / sum(ct)::DOUBLE, 6) AS top_share
-    FROM per_tok
-    GROUP BY 1
-    """,
-    doc="Repetition quality signal: per-doc duplicate-word ratio and "
-    "top-token share (high values flag boilerplate / degenerate "
-    "generations — a standard pretraining quality filter). Plan: "
-    "explode → two-level agg; the (doc_id, tok) partial agg combines "
-    "map-side so the exchange carries distinct pairs, not raw tokens; "
-    "the second agg re-shuffles only |docs| keys. Ratios are one "
-    "double division of exact counts, rounded — cross-engine "
-    "deterministic.",
-    tags=("datapipe", "text", "quality"),
-)
-def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per_tok = _per_token_counts(_doc_tokens(load(spark, sf_dir, "documents")))
-    return per_tok.groupBy("doc_id").agg(
-        F.sum("ct").alias("word_ct"),
-        F.count("*").alias("uniq_ct"),
-        F.round(
-            1.0 - F.count("*").cast("double") / F.sum("ct").cast("double"), 6
-        ).alias("rep_ratio"),
-        F.round(
-            F.max("ct").cast("double") / F.sum("ct").cast("double"), 6
-        ).alias("top_share"),
     )
 
 
@@ -1494,54 +1134,6 @@ def dedup_substring_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     return knn_self_join(e, k=3)  # bits auto-scaled from corpus size
-
-
-@register(
-    "corpus_stats",
-    oracle="""
-    SELECT coalesce(source, '<all>') AS source,
-           coalesce(lang, '<all>') AS lang,
-           count(*)::BIGINT AS doc_ct,
-           sum(length(text))::BIGINT AS char_sum,
-           sum(len(regexp_extract_all(text,
-               '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')))::BIGINT AS token_sum
-    FROM documents
-    GROUP BY ROLLUP(source, lang)
-    -- Spark emits NO grand-total row over empty input (grouping
-    -- sets expand per-row; zero rows -> zero groups), ANSI/DuckDB
-    -- emit one all-NULL/0 row. HAVING count(*) > 0 is a no-op on
-    -- any non-empty input (every real group has >= 1 row) and
-    -- pins Spark's empty-input semantics cross-engine.
-    HAVING count(*) > 0
-    """,
-    doc="Corpus composition dashboard: doc / char / token totals at "
-    "(source, lang), per-source, and grand-total grain in ONE pass "
-    "(ROLLUP partial-aggregates each grain map-side — never three "
-    "scans). The BPE-ish token count is the same JVM regex as "
-    "doc_token_count, so totals reconcile with the per-doc view. "
-    "NULL grouping slots are labeled '<all>' (no real source/lang is "
-    "NULL in the corpus).",
-    tags=("datapipe", "text", "olap"),
-)
-def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    bpe_pat = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-    toks = F.size(F.regexp_extract_all(F.col("text"), F.lit(bpe_pat), 0))
-    return (
-        d.select("source", "lang", F.length("text").alias("nc"),
-                 toks.alias("nt"))
-        .rollup("source", "lang")
-        .agg(
-            F.count("*").alias("doc_ct"),
-            F.sum("nc").alias("char_sum"),
-            F.sum("nt").alias("token_sum"),
-        )
-        .select(
-            F.coalesce(F.col("source"), F.lit("<all>")).alias("source"),
-            F.coalesce(F.col("lang"), F.lit("<all>")).alias("lang"),
-            "doc_ct", "char_sum", "token_sum",
-        )
-    )
 
 
 @register(
@@ -2324,56 +1916,14 @@ def dedup_semantic_incremental(
     return semantic_dedup_incremental(e, threshold=0.4, split_frac=0.9)
 
 
-@register(
-    "split_leakage_check",
-    oracle=f"""
-    WITH {_MINHASH_CTES},
-    sp AS (
-      SELECT doc_id,
-             CASE WHEN {_HEXVAL} < 12 THEN 'test'
-                  WHEN {_HEXVAL} < 24 THEN 'val'
-                  ELSE 'train' END AS split
-      FROM documents)
-    SELECT a.split AS split_a, b.split AS split_b,
-           count(*)::BIGINT AS pair_ct
-    FROM cand c
-    JOIN sp a ON c.doc_a = a.doc_id
-    JOIN sp b ON c.doc_b = b.doc_id
-    GROUP BY 1, 2
-    """,
-    doc="Split-leakage audit: MinHash-LSH near-dup pairs bucketed by "
-    "which (train/val/test) splits their two sides land in — any "
-    "off-diagonal mass (a train⋈test pair) is evaluation leakage the "
-    "random split can't see, the reason dedup must run BEFORE "
-    "splitting. Composes doc_split's content-stable md5 buckets with "
-    "lsh_candidates; plan: the split stamp is a narrow per-row "
-    "expression joined onto |candidates| rows only, and the verdict "
-    "matrix is at most 3×3.",
-    tags=("datapipe", "dedup", "sampling"),
-)
-def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.sampling import train_split
-
-    d = load(spark, sf_dir, "documents")
-    cand = lsh_candidates(minhash_signatures(d))
-    sp = train_split(d.select("doc_id")).select("doc_id", "split")
-    a = sp.select(
-        F.col("doc_id").alias("a_id"), F.col("split").alias("split_a")
-    )
-    b = sp.select(
-        F.col("doc_id").alias("b_id"), F.col("split").alias("split_b")
-    )
-    return (
-        cand.join(a, cand["doc_a"] == a["a_id"])
-        .join(b, cand["doc_b"] == b["b_id"])
-        .groupBy("split_a", "split_b")
-        .agg(F.count("*").alias("pair_ct"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Chunking / shuffling / packing (training-batch construction)
 # ---------------------------------------------------------------------------
+
+_HEXVAL = (
+    "((strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), 1, 1)) - 1) * 16"
+    " + strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), 2, 1)) - 1)"
+)
 
 _WS_TOKS = (
     "list_filter(regexp_split_to_array(trim(text), '\\s+'),"
@@ -2443,7 +1993,7 @@ def corpus_shuffle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH b AS (
       SELECT doc_id,
              md5(doc_id::VARCHAR) AS sort_key,
-             (({_HEXVAL.replace('doc_id', 'doc_id')}) % 32)::INT AS bucket,
+             (({_HEXVAL}) % 32)::INT AS bucket,
              len({_WS_TOKS})::INT AS n_tokens
       FROM documents),
     c AS (
@@ -2469,6 +2019,11 @@ def doc_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_realtime_flink_spark.operators.packing import pack_documents
 
     return pack_documents(load(spark, sf_dir, "documents"))
+
+
+# ---------------------------------------------------------------------------
+# Incremental and graph dedup, recall diagnostics, hard negatives
+# ---------------------------------------------------------------------------
 
 
 @register(
@@ -2504,82 +2059,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = fp.filter(F.col("source") != "src0").select("fingerprint")
     return new.join(corpus, "fingerprint", "left_anti").select(
         "doc_id", "fingerprint"
-    )
-
-
-@register(
-    "doc_common_token_score",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, unnest(list_filter(
-               regexp_split_to_array(lower(text), '[^a-z]+'),
-               x -> length(x) > 0)) AS tok
-      FROM documents),
-    df AS (
-      SELECT tok, count(DISTINCT doc_id) AS df
-      FROM toks GROUP BY tok),
-    n AS (SELECT count(*) AS n_docs FROM documents),
-    per_doc AS (
-      SELECT t.doc_id, sum(d.df)::BIGINT AS df_sum,
-             count(*)::BIGINT AS n_toks
-      FROM toks t JOIN df d ON t.tok = d.tok
-      GROUP BY t.doc_id)
-    SELECT p.doc_id, p.n_toks,
-           round(p.df_sum::DOUBLE / (p.n_toks * n.n_docs), 6)
-             AS common_token_score
-    FROM per_doc p, n
-    """,
-    doc="Corpus-relative commonness score — the deterministic stand-in "
-    "for LM-perplexity quality filtering (CCNet-style): the mean "
-    "document frequency of a doc's tokens, scaled by corpus size. "
-    "High = ordinary prose, low = gibberish/jargon. Integer-exact by "
-    "construction (one integer df sum per doc, a single final "
-    "division, round 6) — a log-prob variant would hang bit-parity on "
-    "ln() ulps, the recurring cross-engine failure mode. Plan: explode "
-    "→ distinct → df agg → tok-keyed join back → doc agg; every "
-    "shuffle keys on uniform tokens/doc_ids, the df table is "
-    "|vocab|-sized (joinable or broadcastable at any corpus scale). "
-    "Token-less docs have no rows to score and are absent, as in the "
-    "oracle.",
-    tags=("datapipe", "text", "quality"),
-)
-def doc_common_token_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from gmall_realtime_flink_spark.operators.spread import spread_to_cores
-
-    d = load(spark, sf_dir, "documents")
-    # r14 (guide §2.4, §2.5): one execution of the token explode
-    # (spread to the core count) collapsed to (doc, tok, ct); document
-    # frequency is a WINDOW count over that table (rows per tok =
-    # distinct docs containing it — the old distinct+groupBy), and the
-    # old join-back becomes sum(df·ct) ≡ the old per-occurrence
-    # sum(df) exactly (integer arithmetic throughout).
-    toks = spread_to_cores(d.select("doc_id", "text")).select(
-        "doc_id", F.explode(tokenize(F.col("text"))).alias("tok")
-    )
-    ct_tab = toks.groupBy("doc_id", "tok").agg(
-        F.count(F.lit(1)).alias("ct")
-    )
-    n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    per_doc = (
-        ct_tab.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("tok"))
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum(F.col("df") * F.col("ct")).alias("df_sum"),
-            F.sum("ct").alias("n_toks"),
-        )
-    )
-    return per_doc.crossJoin(F.broadcast(n_docs)).select(
-        "doc_id",
-        "n_toks",
-        F.round(
-            F.col("df_sum").cast("double")
-            / (F.col("n_toks") * F.col("n_docs")),
-            6,
-        ).alias("common_token_score"),
     )
 
 
@@ -2963,102 +2442,6 @@ def similarity_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "doc_sample_per_group",
-    oracle="""
-    SELECT doc_id, lang, rk FROM (
-      SELECT doc_id, lang,
-             row_number() OVER (
-               PARTITION BY lang
-               ORDER BY md5(doc_id::VARCHAR), doc_id)::INT AS rk
-      FROM documents)
-    WHERE rk <= 20
-    """,
-    doc="Balanced per-group subsample: exactly min(20, |group|) docs "
-    "per language, chosen by content-stable md5 order — the "
-    "deterministic reservoir (a real reservoir sample is RNG- and "
-    "order-dependent; hash order gives the same sample on every run, "
-    "engine, and partitioning). Complements the rate-based "
-    "doc_sample_stratified with an exact-count guarantee. Plan: one "
-    "shuffle on the group key, per-group rank, filter — the window "
-    "never sees more than a group's rows.",
-    tags=("datapipe", "sampling", "stratified"),
-)
-def doc_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    d = load(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id"
-    )
-    return (
-        d.select("doc_id", "lang")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 20)
-    )
-
-
-@register(
-    "events_anomaly_zscore",
-    oracle="""
-    WITH s AS (
-      SELECT event_type,
-             count(*) AS n,
-             sum(CAST(value AS DECIMAL(38,8))) AS sv,
-             sum(CAST(value AS DECIMAL(38,8)) * CAST(value AS DECIMAL(38,8)))
-               AS svv
-      FROM events GROUP BY event_type),
-    m AS (
-      SELECT event_type, n,
-             sv::DOUBLE / n AS mean,
-             sqrt((svv::DOUBLE - sv::DOUBLE * sv::DOUBLE / n) / n) AS std
-      FROM s)
-    SELECT e.event_id, e.event_type,
-           round((e.value - m.mean) / m.std, 6) AS z
-    FROM events e JOIN m ON e.event_type = m.event_type
-    WHERE m.std > 0
-      AND abs((e.value - m.mean) / m.std) > 3
-    """,
-    doc="Value-anomaly flagging: per-event-type z-score, emitting "
-    "events beyond 3 sigma (outlier quarantine before a measure "
-    "enters training data). Deterministic across engines because the "
-    "moments are DECIMAL-exact sums (float accumulation order never "
-    "matters) that are cast to DOUBLE BEFORE any division — decimal "
-    "division scale rules differ between engines (found at sf0.1: a "
-    "1-ulp mean shift flipped a 6dp rounding), while double IEEE ops "
-    "on identical operands in identical order are bit-equal, and "
-    "sqrt is exactly rounded — unlike ln/exp, whose last-ulp "
-    "differences are the recurring cross-engine failure mode. Plan: one partial-agg "
-    "shuffle for the |event_type|-row moments table, broadcast back "
-    "onto the scan — the fact side never shuffles.",
-    tags=("datapipe", "quality", "diagnostics"),
-)
-def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "events")
-    v = F.col("value").cast("decimal(38,8)")
-    s = e.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(v).alias("sv"),
-        F.sum(v * v).alias("svv"),
-    )
-    sv_d = F.col("sv").cast("double")
-    svv_d = F.col("svv").cast("double")
-    n_d = F.col("n").cast("double")
-    m = s.select(
-        "event_type",
-        (sv_d / n_d).alias("mean"),
-        F.sqrt((svv_d - sv_d * sv_d / n_d) / n_d).alias("std"),
-    )
-    z = (F.col("value") - F.col("mean")) / F.col("std")
-    return (
-        e.join(F.broadcast(m), "event_type")
-        .filter((F.col("std") > 0) & (F.abs(z) > 3))
-        .select(
-            "event_id", "event_type", F.round(z, 6).alias("z")
-        )
-    )
-
-
-@register(
     "dedup_survivors",
     oracle=f"""
     WITH RECURSIVE {_MINHASH_CTES},
@@ -3099,157 +2482,6 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.join(
         dropped, d["doc_id"] == dropped["dropped_id"], "left_anti"
     ).select("doc_id", "lang", "source")
-
-
-@register(
-    "token_heavy_hitters",
-    oracle="""
-    WITH toks AS (
-      SELECT unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                                x -> length(x) > 0)) AS token
-      FROM documents),
-    c AS (SELECT token, count(*)::BIGINT AS cnt FROM toks GROUP BY token),
-    t AS (SELECT count(*)::BIGINT AS total FROM toks)
-    SELECT token, cnt FROM c, t WHERE cnt * 30 > total * 1
-    """,
-    doc="EXACT frequent tokens (frequency > 1/30 of the corpus) via "
-    "the sketch-prefilter + exact-confirm pattern "
-    "(operators/sketches.py): per-partition Misra-Gries summaries "
-    "(bounded state, mergeable-summaries batch merge — Agarwal et "
-    "al., PODS'12) produce a no-false-negative candidate set; the "
-    "exact pass counts ONLY candidate rows (broadcast semi-join, "
-    "map-side combine). The oracle is the naive full groupBy — "
-    "identical output, but at 100 TB the naive form shuffles one "
-    "row per distinct token (billions for web text) while the "
-    "two-pass form shuffles <= |candidates| rows per partition. "
-    "Threshold compare is integer (cnt*30 > n), no float boundary.",
-    tags=("datapipe", "text", "sketch", "scale"),
-)
-def token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fractions import Fraction
-
-    from gmall_realtime_flink_spark.operators.dedup import tokenize
-    from gmall_realtime_flink_spark.operators.sketches import (
-        heavy_hitters_exact,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    # deliberately NOT spread (r14, measured then reverted): a
-    # conditional round-robin spread of the text rows made the whole
-    # entry SLOWER (steady build+confirm 1.35 → 1.81 s) — the
-    # single-partition MG sketch is one vectorized pandas
-    # value_counts (C speed), so 32 Python-worker startups plus the
-    # exchange exceed the kernel, and the JVM confirm pass paid the
-    # exchange too (the r13 light-media lesson at token grain)
-    toks = d.select(
-        F.explode(tokenize(F.col("text"))).alias("token")
-    )
-    return heavy_hitters_exact(toks, "token", Fraction(1, 30))
-
-
-@register(
-    "doc_sample_token_budget",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id,
-             len(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                             x -> length(x) > 0))::BIGINT AS w,
-             md5(doc_id::VARCHAR) AS h
-      FROM documents),
-    c AS (
-      SELECT doc_id, w,
-             coalesce(sum(w) OVER (ORDER BY h, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb,
-             sum(w) OVER () AS total
-      FROM w)
-    SELECT doc_id, w AS weight, cb::BIGINT AS cum_before
-    FROM c WHERE (cb * 200) // total < ((cb + w) * 200) // total
-    """,
-    doc="Deterministic token-budget sampling (~200 docs, probability "
-    "proportional to token count): systematic PPS over the cumulative "
-    "token axis in content-stable md5 order — the 'sample N tokens "
-    "from this corpus slice' primitive of training-data mixing. The "
-    "oracle's global window is the semantics; the Spark plan "
-    "(operators/sampling.systematic_sample_by_weight) computes the "
-    "SAME prefix sum distributed: 256 md5-prefix buckets whose order "
-    "equals global hash order, per-bucket parallel windows, bucket "
-    "offsets from a window over 256 metadata rows only — no global "
-    "single-partition WindowExec ever sees data. Stride selection is "
-    "all-integer ((cum*k) div total), no float boundary.",
-    tags=("datapipe", "sampling", "scale"),
-)
-def doc_sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.dedup import tokenize
-    from gmall_realtime_flink_spark.operators.sampling import (
-        systematic_sample_by_weight,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    weighted = d.select(
-        "doc_id", F.size(tokenize(F.col("text"))).alias("n_tok")
-    )
-    return systematic_sample_by_weight(
-        weighted, "doc_id", "n_tok", k=200
-    )
-
-
-@register(
-    "corpus_mix_budget",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, source,
-             len(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                             x -> length(x) > 0))::BIGINT AS w,
-             md5(doc_id::VARCHAR) AS h
-      FROM documents),
-    c AS (
-      SELECT doc_id, source, w,
-             coalesce(sum(w) OVER (PARTITION BY source ORDER BY h, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS cb
-      FROM w)
-    SELECT doc_id, source, w AS n_tok, cb::BIGINT AS cum_before
-    FROM c WHERE cb < 800
-    """,
-    doc="Per-source token-budget cap (data mixing): each source "
-    "contributes documents in content-stable md5 order until its "
-    "800-token budget is exhausted — the 'cap domain X at N tokens' "
-    "primitive of training-mixture construction (the greedy prefix "
-    "rule: a doc is kept iff tokens before it are under budget, so "
-    "every engine and partitioning picks the identical prefix). "
-    "Plan: ONE shuffle on source; the prefix-sum window partitions "
-    "by source — parallel across sources, never a global window. At "
-    "100 TB with few giant sources, split the window key to "
-    "(source, md5-prefix bucket) exactly as systematic_sample_by_"
-    "weight does; the per-source form is the readable default.",
-    tags=("datapipe", "sampling", "mixing", "scale"),
-)
-def corpus_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from gmall_realtime_flink_spark.operators.dedup import tokenize
-
-    d = load(spark, sf_dir, "documents")
-    w = d.select(
-        "doc_id",
-        "source",
-        F.size(tokenize(F.col("text"))).cast("long").alias("w"),
-        F.md5(F.col("doc_id").cast("string")).alias("h"),
-    )
-    win = (
-        Window.partitionBy("source")
-        .orderBy("h", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        w.select(
-            "doc_id",
-            "source",
-            F.col("w").alias("n_tok"),
-            F.coalesce(F.sum("w").over(win), F.lit(0)).alias("cum_before"),
-        )
-        .filter(F.col("cum_before") < 800)
-    )
 
 
 @register(
@@ -3434,136 +2666,6 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "doc_lm_surprisal",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                         x -> length(x) > 0) AS toks
-      FROM documents),
-    v AS (
-      SELECT count(DISTINCT w)::BIGINT AS vsz
-      FROM (SELECT unnest(toks) AS w FROM t)),
-    bg AS (
-      SELECT doc_id,
-             unnest(list_transform(generate_series(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i+1])) AS b
-      FROM t WHERE len(toks) >= 2),
-    bgf AS (SELECT doc_id, b, string_split(b, ' ')[1] AS w1 FROM bg),
-    c12 AS (SELECT b, count(*)::BIGINT AS c12 FROM bgf GROUP BY 1),
-    c1 AS (SELECT string_split(b, ' ')[1] AS w1, sum(c12)::BIGINT AS c1
-           FROM c12 GROUP BY 1),
-    sc AS (
-      SELECT doc_id,
-             CAST(round(-log2((c12.c12 + 1.0) / (c1.c1 + v.vsz))
-                        * 1000000.0) AS BIGINT) AS sm
-      FROM bgf JOIN c1 USING (w1) JOIN c12 USING (b) CROSS JOIN v)
-    SELECT doc_id,
-           count(*)::BIGINT AS n_bigrams,
-           ((2 * sum(sm) + count(*)) // (2 * count(*)))::DOUBLE
-             / 1000000.0 AS avg_surprisal
-    FROM sc GROUP BY doc_id
-    """,
-    doc="Bigram-LM surprisal scoring (the CCNet-style perplexity "
-    "quality filter): train add-one-smoothed bigram counts on the "
-    "corpus itself, score every document by its mean per-bigram "
-    "surprisal -log2 P(w2|w1) — high mean surprisal = improbable "
-    "word sequences = boilerplate/garbled text a quality gate drops. "
-    "Cross-engine hash determinism: each bigram's surprisal is "
-    "snapped to an INTEGER micro-bit count (round(x*1e6) -> BIGINT) "
-    "BEFORE the per-doc sum, so the reduction is exact-integer "
-    "(order-independent across partitionings and engines), and the "
-    "mean is integer HALF-UP ((2*sum+n) div (2n)) — per-doc means "
-    "land exactly on .5e-6 ties with probability ~1/n (the 6dp sum "
-    "is divided by small n), and double-rounding such ties is where "
-    "engines disagree (measured: 8/50k docs at sf1), so the tie is "
-    "decided in integer arithmetic; the only remaining float step is "
-    "one correctly-rounded int->double division. Plan: ONE "
-    "corpus-grain bigram count agg (map-side combinable); the "
-    "unigram count table is derived FROM it at vocabulary grain "
-    "(c(w1) = sum of c(w1,·)) rather than a third corpus "
-    "scan+explode; then two equi-joins back onto the exploded bigram "
-    "stream — at 100 TB both count tables are vocabulary-sized "
-    "(≪ corpus), broadcastable for natural-language vocabularies; "
-    "the heavy-tailed bigram key is AQE skew-join territory "
-    "otherwise. V rides as a broadcast scalar.",
-    tags=("datapipe", "text", "quality", "scale"),
-)
-def doc_lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.dedup import tokenize
-
-    from pyspark.sql import Window
-
-    from gmall_realtime_flink_spark.operators.spread import spread_to_cores
-
-    d = load(spark, sf_dir, "documents")
-    # r14 (guide §2.5): spread the narrow rows — the token/bigram
-    # explodes otherwise run inside the single scan task at bench SFs
-    t = spread_to_cores(d.select("doc_id", "text")).select(
-        "doc_id", tokenize(F.col("text")).alias("toks")
-    )
-    vsz = t.select(F.explode("toks").alias("w")).agg(
-        F.countDistinct("w").cast("long").alias("vsz")
-    )
-    bgf = (
-        t.filter(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                # guarded like operators/dedup.shingles: sequence is
-                # descending for size < 2, so element_at would see
-                # index 0 if an optimizer copy runs before the filter
-                F.expr(
-                    "CASE WHEN size(toks) >= 2 THEN "
-                    "transform(sequence(1, size(toks) - 1), "
-                    "i -> concat(element_at(toks, i), ' ', "
-                    "element_at(toks, i + 1))) "
-                    "ELSE cast(array() as array<string>) END"
-                )
-            ).alias("b"),
-        )
-        .withColumn("w1", F.split(F.col("b"), " ").getItem(0))
-    )
-    # r14 (guide §2.4): both count tables as WINDOW counts over the
-    # bigram rows instead of groupBy + join-back — the old form
-    # consumed `bgf` twice (the c12 build side and the scored probe
-    # side, with c1 a further derivation of c12), executing the
-    # bigram explode multiple times per action. Per row: c12 = count
-    # of rows sharing the bigram (the old groupBy count); c1 = count
-    # of rows sharing w1, which equals sum_b c12(w1, b) exactly (both
-    # count every bigram occurrence starting with w1). One execution,
-    # two keyed exchanges, no joins.
-    scored = (
-        bgf.withColumn(
-            "c12", F.count(F.lit(1)).over(Window.partitionBy("b"))
-        )
-        .withColumn(
-            "c1", F.count(F.lit(1)).over(Window.partitionBy("w1"))
-        )
-        .crossJoin(F.broadcast(vsz))
-        .select(
-            "doc_id",
-            F.round(
-                -F.log2(
-                    (F.col("c12") + F.lit(1.0))
-                    / (F.col("c1") + F.col("vsz"))
-                )
-                * F.lit(1000000.0)
-            )
-            .cast("long")
-            .alias("sm"),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_bigrams"),
-        (
-            F.expr("CAST((2 * sum(sm) + count(*)) DIV (2 * count(*)) AS DOUBLE)")
-            / F.lit(1000000.0)
-        ).alias("avg_surprisal"),
-    )
-
-
-@register(
     "dedup_incremental_minhash",
     oracle=f"""
     WITH {_MINHASH_CTES},
@@ -3621,59 +2723,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return new.select("doc_id").join(rejected, "doc_id", "left_anti")
-
-
-@register(
-    "doc_quality_tiers",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, unnest(list_filter(
-               regexp_split_to_array(lower(text), '[^a-z]+'),
-               x -> length(x) > 0)) AS tok
-      FROM documents),
-    df AS (
-      SELECT tok, count(DISTINCT doc_id) AS df
-      FROM toks GROUP BY tok),
-    n AS (SELECT count(*) AS n_docs FROM documents),
-    per_doc AS (
-      SELECT t.doc_id, sum(d.df)::BIGINT AS df_sum,
-             count(*)::BIGINT AS n_toks
-      FROM toks t JOIN df d ON t.tok = d.tok
-      GROUP BY t.doc_id),
-    sc AS (
-      SELECT p.doc_id,
-             round(p.df_sum::DOUBLE / (p.n_toks * n.n_docs), 6) AS score
-      FROM per_doc p, n),
-    r AS (
-      SELECT doc_id, score,
-             row_number() OVER (ORDER BY score, doc_id) AS rk,
-             count(*) OVER () AS nn
-      FROM sc)
-    SELECT doc_id, score, ((rk - 1) * 4) // nn + 1 AS tier FROM r
-    """,
-    doc="Global quality-quartile assignment (curriculum / mixture "
-    "construction: 'train on the top tier first', 'cap tier 4 at N "
-    "tokens'): every doc gets tier 1-4 by its EXACT global rank on "
-    "the commonness quality score, ties broken by doc_id. The oracle "
-    "is the naive global row_number window; the engine computes the "
-    "SAME rank distributed (operators/sampling.quality_tiers): "
-    "scores quantize into 256 monotone range cells, per-cell counts "
-    "aggregate map-side, running offsets window over <=256 metadata "
-    "rows only, and the per-row rank window is PARTITIONED by cell — "
-    "the corpus never crosses a single-partition WindowExec. The "
-    "same decomposition as the PPS sampler, here over a "
-    "data-dependent sort key. Tier arithmetic is all-integer "
-    "(((rank-1)*4) div N), no float quantile interpolation to "
-    "disagree on.",
-    tags=("datapipe", "text", "quality", "sampling", "scale"),
-)
-def doc_quality_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.sampling import quality_tiers
-
-    scored = doc_common_token_score(spark, sf_dir).select(
-        "doc_id", F.col("common_token_score").alias("score")
-    )
-    return quality_tiers(scored, score_col="score", id_col="doc_id")
 
 
 @register(
@@ -3751,125 +2800,3 @@ def doc_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("novelty"),
     )
 
-
-_CM_BYTE = (
-    "((strpos('0123456789abcdef', substr(md5(r::VARCHAR || '|' || item), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5(r::VARCHAR || '|' || item), 2, 1)) - 1)"
-)
-
-
-@register(
-    "token_countmin",
-    oracle=f"""
-    WITH toks AS (
-      SELECT unnest(list_filter(
-               regexp_split_to_array(lower(text), '[^a-z]+'),
-               x -> length(x) > 0)) AS item
-      FROM documents),
-    rows_ AS (SELECT unnest([0, 1, 2, 3]) AS r),
-    cells AS (
-      SELECT r, bucket, count(*)::BIGINT AS cell_ct FROM (
-        SELECT item, r, {_CM_BYTE} AS bucket FROM toks, rows_)
-      GROUP BY r, bucket),
-    exact AS (
-      SELECT item, count(*)::BIGINT AS exact_ct FROM toks GROUP BY item
-      ORDER BY exact_ct DESC, item LIMIT 10),
-    probes AS (
-      SELECT item, exact_ct, r, {_CM_BYTE} AS bucket FROM exact, rows_)
-    SELECT p.item, p.exact_ct,
-           min(c.cell_ct)::BIGINT AS cm_estimate,
-           (min(c.cell_ct) - p.exact_ct)::BIGINT AS overestimate
-    FROM probes p JOIN cells c ON p.r = c.r AND p.bucket = c.bucket
-    GROUP BY p.item, p.exact_ct
-    """,
-    doc="Count-Min sketch frequency estimation with a built-in "
-    "accuracy probe: the 4×256 counter grid aggregates the token "
-    "stream map-side to AT MOST d·w rows regardless of corpus size — "
-    "the constant-memory frequency structure for unbounded streams, "
-    "complementing the Misra-Gries heavy-hitters sketch "
-    "(token_heavy_hitters). The top-10 exact tokens are then "
-    "estimated from the grid (min over rows) and reported against "
-    "truth; overestimate is provably >= 0 (CM never underestimates), "
-    "visible per row in the gated output. Bucket = first md5 byte of "
-    "the salted token — the one hash both engines produce "
-    "bit-identically; all counts integer "
-    "(operators/sketches.countmin_estimates).",
-    tags=("datapipe", "text", "sketch", "scale"),
-)
-def token_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.dedup import tokenize
-    from gmall_realtime_flink_spark.operators.sketches import (
-        countmin_estimates,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(F.explode(tokenize(F.col("text"))).alias("tok"))
-    return countmin_estimates(toks, item_col="tok")
-
-
-_HLL_ALPHA = 0.7213 / (1.0 + 1.079 / 256)
-
-_HLL_RHO = """
-      CASE WHEN length(regexp_extract(substr(md5(item), 3, 15), '^0*')) = 15
-           THEN 61
-           ELSE length(regexp_extract(substr(md5(item), 3, 15), '^0*')) * 4
-                + CASE substr(regexp_replace(substr(md5(item), 3, 15),
-                              '^0*', ''), 1, 1)
-                    WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
-                    WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
-                    WHEN '7' THEN 1 ELSE 0 END
-                + 1 END
-"""
-
-
-@register(
-    "doc_hll_cardinality",
-    oracle=f"""
-    WITH it AS (SELECT text AS item FROM documents),
-    regs AS (
-      SELECT ((strpos('0123456789abcdef', substr(md5(item), 1, 1)) - 1) * 16
-              + strpos('0123456789abcdef', substr(md5(item), 2, 1)) - 1)
-               % 256 AS bucket,
-             max({_HLL_RHO}) AS mx
-      FROM it GROUP BY 1),
-    full_ AS (
-      SELECT r.range AS bucket, coalesce(regs.mx, 0) AS M
-      FROM range(256) r LEFT JOIN regs ON r.range = regs.bucket),
-    agg AS (
-      SELECT sum(1::BIGINT << (40 - least(M, 40)))::BIGINT AS s,
-             sum(CASE WHEN M = 0 THEN 1 ELSE 0 END)::BIGINT AS v_zero
-      FROM full_),
-    truth AS (SELECT count(DISTINCT item)::BIGINT AS exact_distinct FROM it)
-    SELECT 256::BIGINT AS m,
-           a.v_zero,
-           round(CAST({_HLL_ALPHA!r} AS DOUBLE) * 65536.0 * 1099511627776.0 / a.s::DOUBLE, 4)
-             + 0.0 AS raw_estimate,
-           t.exact_distinct,
-           round((CAST({_HLL_ALPHA!r} AS DOUBLE) * 65536.0 * 1099511627776.0 / a.s::DOUBLE
-                  - t.exact_distinct) / t.exact_distinct, 4) + 0.0
-             AS rel_error
-    FROM agg a, truth t
-    """,
-    doc="HyperLogLog distinct-count estimate over document texts, "
-    "with the exact count as an accuracy probe — completing the "
-    "sketch triad (Misra-Gries heavy hitters, Count-Min frequencies, "
-    "HLL cardinality). Registers derive from md5 hex by pure "
-    "string/integer work (bucket = first byte; rho = 1 + leading "
-    "zero bits of the next 60 bits via a leading-zero-chars count + "
-    "16-way CASE); empty buckets materialize through a range join; "
-    "the harmonic sum is EXACT integer (2^(40-min(M,40)) summed as "
-    "BIGINT <= 2^47, so the int->double cast is exact) — the only "
-    "float is one final alpha*m^2*2^40/sum division from identical "
-    "literals. The linear-counting small-range correction is left to "
-    "the consumer (it is HLL's only transcendental; v_zero is "
-    "reported). At 100 TB the register agg map-side-combines to "
-    "<= 256 rows; the exact-distinct probe is the only corpus-scale "
-    "shuffle and is dropped in production "
-    "(operators/sketches.hll_cardinality).",
-    tags=("datapipe", "text", "sketch", "scale"),
-)
-def doc_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.sketches import hll_cardinality
-
-    d = load(spark, sf_dir, "documents")
-    return hll_cardinality(d.select(F.col("text").alias("item")))

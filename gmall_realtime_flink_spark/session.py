@@ -9,8 +9,9 @@ Scale notes (100 TB / 1000-executor design):
 - ``spark.sql.shuffle.partitions`` is a local-mode default only; at
   cluster scale AQE's ``advisoryPartitionSizeInBytes`` governs the
   post-shuffle layout, so the static number matters little.
-- Arrow enabled: every pandas-UDF boundary (dedup sketches, the ST1
-  visitor-repair state function, the ordered manifest reader) and
+- Arrow enabled: every pandas-UDF boundary (the numpy similarity and
+  semantic-dedup kernels, the ST1 visitor-repair state function, the
+  ordered manifest reader) and
   ``toPandas`` (the oracle compare) move columnar batches, not pickled
   rows.
 - Session timezone pinned to UTC so event-time windows, date_format

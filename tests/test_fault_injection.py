@@ -1,12 +1,13 @@
 """Task-retry fault injection: determinism claims executed, not argued.
 
 salted_join's docstring argues its shard must be a content hash
-because "a re-executed task must re-salt identically"; the PPS sampler
-argues its selection is content-stable under any partitioning. Those
-claims are about TASK RETRY — so this test actually retries tasks: a
-pass-through Arrow kernel throws on every FIRST attempt of its
-partition, `spark.task.maxFailures=3` lets Spark re-execute, and the
-result must equal the clean run bit-for-bit.
+because "a re-executed task must re-salt identically"; the chain's DWM
+order-wide interval join must emit the same wide rows however often a
+task of either input runs. Those claims are about TASK RETRY — so this
+test actually retries tasks: a pass-through Arrow kernel throws on
+every FIRST attempt of its partition, `spark.task.maxFailures=3` lets
+Spark re-execute, and the result must equal the clean run
+bit-for-bit.
 
 Runs in a subprocess with its own SparkContext: the shared test
 session is `local[N]` (maxFailures=1 — any task failure fails the
@@ -26,7 +27,6 @@ sys.path.insert(0, os.environ["REPO_DIR"])
 
 from pyspark import TaskContext
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 # local[4, 3]: 4 threads, 3 task attempts — the retry harness
 spark = (
@@ -80,20 +80,15 @@ assert retried == clean, (
 )
 print(f"salted_join: {len(clean)} rows identical under retry", flush=True)
 
-# --- systematic PPS sampling under retry -------------------------------
-from gmall_realtime_flink_spark.operators.sampling import (
-    systematic_sample_by_weight,
-)
+# --- the DWM order-wide interval join under retry -----------------------
+from gmall_realtime_flink_spark.streaming.jobs import order_wide
 
-docs = spark.read.parquet(
-    os.path.join(sf_dir, "documents.parquet")
-).select("doc_id", F.length("text").alias("w"))
-clean_s = rows(systematic_sample_by_weight(docs, "doc_id", "w", k=50))
-retried_s = rows(
-    systematic_sample_by_weight(faulty(docs), "doc_id", "w", k=50)
-)
-assert retried_s == clean_s, "PPS sample changed under task retry"
-print(f"pps_sample: {len(clean_s)} rows identical under retry", flush=True)
+all_orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+clean_w = rows(order_wide(all_orders, lineitem))
+retried_w = rows(order_wide(faulty(all_orders), faulty(lineitem)))
+assert retried_w == clean_w, "order_wide changed under task retry"
+print(f"order_wide: {len(clean_w)} rows identical under retry", flush=True)
 spark.stop()
 """
 
@@ -109,7 +104,7 @@ def test_results_identical_under_task_retry(sf_dir):
         timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
-    assert "salted_join" in proc.stdout and "pps_sample" in proc.stdout
+    assert "salted_join" in proc.stdout and "order_wide" in proc.stdout
     # the injected failures actually happened (stderr carries the task
     # retry noise) — guard against the harness silently not retrying
     assert "injected failure" in (proc.stderr + proc.stdout)

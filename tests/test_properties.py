@@ -206,26 +206,6 @@ def test_star_contraction_logarithmic_rounds_on_chain(spark):
     assert got == {(i, 0) for i in range(1, n)}
 
 
-def test_train_split_deterministic_and_partition_independent(spark, sf_dir):
-    """A document's split must be a pure function of its id: identical
-    across runs and across any repartitioning (the property that keeps
-    train/test stable when the corpus is re-ingested)."""
-    from gmall_realtime_flink_spark.catalog import load
-    from gmall_realtime_flink_spark.operators.sampling import train_split
-
-    d = load(spark, sf_dir, "documents")
-    a = {r["doc_id"]: r["split"] for r in train_split(d).select("doc_id", "split").collect()}
-    b = {
-        r["doc_id"]: r["split"]
-        for r in train_split(d.repartition(13)).select("doc_id", "split").collect()
-    }
-    assert a == b
-    # fractions near 90/5/5 (md5 uniformity; loose tolerance at sf0.001)
-    n = len(a)
-    frac_train = sum(1 for v in a.values() if v == "train") / n
-    assert 0.80 <= frac_train <= 0.97
-
-
 def test_kmeans_improves_quantizer_objective(spark, sf_dir):
     """Lloyd training must improve the IVF coarse quantizer: the mean
     best-centroid cosine of the corpus rises monotonically from the
@@ -486,107 +466,6 @@ def test_ivf_recall_monotone_in_nprobe(spark, sf_dir):
     assert [n for n, _ in rows] == [1, 2, 4]
     recalls = [r for _, r in rows]
     assert recalls == sorted(recalls), recalls
-
-
-@given(
-    items=st.lists(
-        st.sampled_from(["a", "b", "c", "d", "e", "f", "g", "h"]),
-        min_size=1,
-        max_size=300,
-    ),
-    parts=st.sampled_from([1, 3, 7]),
-)
-@settings(max_examples=15, deadline=None)
-def test_heavy_hitters_exact_matches_counter(spark, items, parts):
-    """Two-pass Misra-Gries heavy hitters must equal the exact
-    frequency filter (count/n > phi) for ANY stream and ANY
-    partitioning — the sketch pass may differ per layout, the
-    confirmed result may not."""
-    from collections import Counter
-    from fractions import Fraction
-
-    from gmall_realtime_flink_spark.operators.sketches import (
-        heavy_hitters_exact,
-    )
-
-    phi = Fraction(1, 4)
-    df = spark.createDataFrame(
-        [(x,) for x in items], "token string"
-    ).repartition(parts)
-    got = {
-        (r["token"], r["cnt"])
-        for r in heavy_hitters_exact(df, "token", phi).collect()
-    }
-    n = len(items)
-    want = {
-        (tok, c)
-        for tok, c in Counter(items).items()
-        if c * phi.denominator > n * phi.numerator
-    }
-    assert got == want
-
-
-def test_misra_gries_candidates_cover_heavy_items(spark):
-    """The per-partition MG union must contain every item with global
-    frequency > 1/(capacity+1) — on an adversarial stream where the
-    heavy item is diluted by many distinct light items."""
-    from gmall_realtime_flink_spark.operators.sketches import (
-        misra_gries_candidates,
-    )
-
-    # 30% heavy item + 70% all-distinct noise, shuffled deterministically
-    rows = ["hot"] * 300 + [f"noise{i}" for i in range(700)]
-    rows = [rows[i] for i in sorted(range(len(rows)), key=lambda i: (i * 131) % 1000)]
-    df = spark.createDataFrame([(x,) for x in rows], "token string").repartition(5)
-    summary = misra_gries_candidates(df, "token", 4).collect()
-    cands = {r["token"] for r in summary if r["token"] is not None}
-    assert "hot" in cands
-    # sentinel rows must reconstruct the exact stream size
-    assert sum(r["__pn"] for r in summary if r["token"] is None) == 1000
-
-
-@given(
-    weights=st.lists(
-        st.integers(min_value=0, max_value=50), min_size=1, max_size=120
-    ),
-    k=st.sampled_from([1, 5, 17]),
-    parts=st.sampled_from([1, 4]),
-)
-@settings(max_examples=15, deadline=None)
-def test_systematic_sample_matches_python_model(spark, weights, k, parts):
-    """Distributed-prefix-sum PPS sampling must equal the sequential
-    model (cumsum in (md5(id), id) order, keep rows whose weight
-    interval crosses a stride boundary) for ANY weights, k, and
-    partitioning."""
-    import hashlib
-
-    from gmall_realtime_flink_spark.operators.sampling import (
-        systematic_sample_by_weight,
-    )
-
-    total = sum(weights)
-    if total == 0:
-        return
-    df = spark.createDataFrame(
-        [(i, w) for i, w in enumerate(weights)], "id long, w long"
-    ).repartition(parts)
-    got = {
-        (r["id"], r["weight"], r["cum_before"])
-        for r in systematic_sample_by_weight(df, "id", "w", k=k).collect()
-    }
-
-    order = sorted(
-        range(len(weights)),
-        key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i),
-    )
-    want, cb = set(), 0
-    for i in order:
-        w = weights[i]
-        if (cb * k) // total < ((cb + w) * k) // total:
-            want.add((i, w, cb))
-        cb += w
-    assert got == want
-    assert len(want) <= k
 
 
 @given(

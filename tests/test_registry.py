@@ -32,9 +32,11 @@ PARTITION_INVARIANCE_SAMPLE = [
     "dedup_cluster",          # iterative propagation
     "corpus_shuffle",         # partitioned rank
     "doc_pack",               # partitioned running sum
+    "segment_running_total",  # partitioned running sum over a decimal
+    "daily_gmv_moving_7d",    # RANGE-frame window
     "user_sessions_native",   # session windows + ordinal
-    "doc_lm_surprisal",       # decimal-snapped float reduction
-    "doc_quality_tiers",      # bucketed exact global rank
+    "order_wide",             # interval join (DWM order-wide)
+    "payment_wide",           # asymmetric interval join (DWM payment-wide)
 ]
 
 

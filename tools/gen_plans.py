@@ -56,7 +56,6 @@ EXTRA = [
     "doc_chunk_pack",
     "dedup_pagerank",
     "dedup_incremental",
-    "doc_common_token_score",
     "order_customer_salted",
     "user_sessions_native",
     "purchase_dim_temporal_join",
@@ -67,17 +66,10 @@ EXTRA = [
     "brand_price_iqr_udaf",
     "dedup_minhash_lsh_capped",
     "similarity_recall_curve",
-    "token_heavy_hitters",
-    "doc_sample_token_budget",
-    "corpus_mix_budget",
     "dedup_jaccard_complete",
     "contrastive_hard_negatives",
-    "doc_lm_surprisal",
     "dedup_incremental_minhash",
-    "doc_quality_tiers",
     "doc_novelty_score",
-    "token_countmin",
-    "doc_hll_cardinality",
     "dedup_jaccard_complete_capped",
     "dedup_pagerank_capped",
     # r12: the re-split + batch-ANN family (plan pins in
@@ -91,6 +83,11 @@ EXTRA = [
 def abridge(plan: str, max_lines: int = 60) -> str:
     out = []
     for line in plan.splitlines():
+        # mask Spark's session-global expression ids (`col#27`) and
+        # exchange ids (`plan_id=95`): they shift whenever an earlier
+        # section's plan changes, so unmasked they churn every section
+        line = re.sub(r"#\d+", "#_", line)
+        line = re.sub(r"plan_id=\d+", "plan_id=_", line)
         # elide long bracketed field lists but keep operator + keys
         line = re.sub(r"\[([^\]]{90,})\]", "[...]", line)
         line = line.rstrip()

@@ -80,10 +80,6 @@ DATAPIPE_SF100 = [
     "similarity_topk_bucketed",
     "doc_pack",
     "corpus_shuffle",
-    "doc_quality_tiers",
-    "doc_split",
-    "doc_tfidf_top_terms",
-    "doc_lm_surprisal",
     "dedup_substring_spans",     # r9 operator: 3 linear shuffles
     "dedup_jaccard_complete_capped",
     "product_stats_bucketed",    # exchange-free layout twin (one-time
