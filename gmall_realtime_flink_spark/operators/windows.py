@@ -38,28 +38,6 @@ def stamp_window_bounds(df: DataFrame, window_col: str = "w") -> DataFrame:
     ).drop(window_col)
 
 
-def distinct_count_col(
-    col: str | Column, mode: str = "exact", rsd: float = 0.05
-) -> Column:
-    """A3 distinct-count strategy for streaming windowed aggs, where
-    plain `countDistinct` is unsupported (SURVEY §7.3).
-
-    mode="exact": `size(collect_set(col))` — bit-exact (the oracle-
-    gated default), but state per (window, key) grows with the set, so
-    a hot key's window state is unbounded in the distinct cardinality.
-    mode="approx": `approx_count_distinct` — HyperLogLog++ with
-    relative standard deviation `rsd`; constant-size sketch state per
-    (window, key), the 100 TB posture for hot keys (SCALE.md A3/A4).
-    Both are incremental-merge aggregates, so partial (map-side)
-    aggregation applies either way.
-    """
-    if mode == "exact":
-        return F.size(F.collect_set(col))
-    if mode == "approx":
-        return F.approx_count_distinct(col, rsd)
-    raise ValueError(f"distinct mode must be exact|approx, got {mode!r}")
-
-
 def tumble_agg(
     df: DataFrame,
     ts_col: str,

@@ -3,7 +3,7 @@
 Every warehouse read — the publisher's reads over the DWS layer
 (gmall), the TPC-H-style OLAP reads (olap) and the streaming jobs run
 to completion (streaming_jobs) — and every batch curation read
-(datapipe: dedup, similarity and packing) is exposed as a named
+(datapipe: dedup and similarity) is exposed as a named
 `QuerySpec`: a PySpark builder `(spark, sf_dir) -> DataFrame` and an
 equivalent DuckDB oracle SQL string over the same parquet tables. The driver contract
 (`__spark_entry__.py`) and the local test harness

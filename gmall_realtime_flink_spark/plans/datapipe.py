@@ -1,6 +1,6 @@
 """Large-scale training-data pipeline queries (beyond the reference):
-dedup, similarity search and training-batch packing over the
-`documents` and `embeddings` tables.
+dedup and similarity search over the `documents` and `embeddings`
+tables.
 
 Cross-engine determinism: every hash is md5 (identical hex in Spark
 and DuckDB); every float output is rounded; minhash "min" is taken
@@ -1917,111 +1917,6 @@ def dedup_semantic_incremental(
 
 
 # ---------------------------------------------------------------------------
-# Chunking / shuffling / packing (training-batch construction)
-# ---------------------------------------------------------------------------
-
-_HEXVAL = (
-    "((strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), 2, 1)) - 1)"
-)
-
-_WS_TOKS = (
-    "list_filter(regexp_split_to_array(trim(text), '\\s+'),"
-    " x -> length(x) > 0)"
-)
-
-
-@register(
-    "doc_chunk",
-    oracle=f"""
-    WITH d AS (
-      SELECT doc_id, {_WS_TOKS} AS toks FROM documents),
-    c AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(0, greatest(len(toks) - 17, 0), 48))
-               AS start
-      FROM d WHERE len(toks) > 0)
-    SELECT doc_id,
-           start // 48 AS chunk_id,
-           array_to_string(toks[start + 1 : start + 64], ' ') AS chunk_text,
-           len(toks[start + 1 : start + 64])::INT AS n_tokens
-    FROM c
-    """,
-    doc="Sliding-window token chunking (64-token chunks, 16-token "
-    "overlap) for context-length-bounded training samples "
-    "(operators/packing.chunk_documents). Narrow per-row explode — "
-    "tokens never leave the row, zero shuffles at any scale.",
-    tags=("datapipe", "packing", "chunk"),
-)
-def doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.packing import chunk_documents
-
-    return chunk_documents(load(spark, sf_dir, "documents"))
-
-
-@register(
-    "corpus_shuffle",
-    oracle="""
-    WITH s AS (
-      SELECT doc_id,
-             md5('42|' || doc_id::VARCHAR) AS sort_key,
-             (((strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), 1, 1)) - 1) * 16
-               + strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), 2, 1)) - 1) % 8)::INT
-               AS shard
-      FROM documents)
-    SELECT doc_id, shard,
-           row_number() OVER (PARTITION BY shard ORDER BY sort_key, doc_id)::INT AS pos,
-           sort_key
-    FROM s
-    """,
-    doc="Deterministic corpus shuffle as (shard, position): "
-    "content-stable md5 sort key, shard = hash bucket mod 8, rank "
-    "within shard (operators/packing.corpus_shuffle). One shuffle on "
-    "the shard key, per-shard sort — never a global ORDER BY; the "
-    "same permutation on every run, engine, and partitioning.",
-    tags=("datapipe", "packing", "shuffle"),
-)
-def corpus_shuffle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.packing import corpus_shuffle
-
-    return corpus_shuffle(load(spark, sf_dir, "documents"))
-
-
-@register(
-    "doc_pack",
-    oracle=f"""
-    WITH b AS (
-      SELECT doc_id,
-             md5(doc_id::VARCHAR) AS sort_key,
-             (({_HEXVAL}) % 32)::INT AS bucket,
-             len({_WS_TOKS})::INT AS n_tokens
-      FROM documents),
-    c AS (
-      SELECT doc_id, bucket, n_tokens,
-             sum(n_tokens) OVER (PARTITION BY bucket ORDER BY sort_key, doc_id
-                                 ROWS UNBOUNDED PRECEDING) AS cum
-      FROM b)
-    SELECT doc_id, bucket, n_tokens,
-           ((cum - n_tokens) // 256)::BIGINT AS pack_id
-    FROM c
-    """,
-    doc="Greedy sequence packing to a 256-token budget: docs are "
-    "hash-bucketed (32 buckets), ordered by content-stable hash within "
-    "the bucket, and cut into packs where the running token count "
-    "crosses the budget (operators/packing.pack_documents). The "
-    "data-parallel packing compromise: a global first-fit is "
-    "sequential, so packs are bucket-local — one shuffle on the "
-    "bucket key, partitioned-window running sum, O(1 doc) efficiency "
-    "loss per bucket boundary.",
-    tags=("datapipe", "packing"),
-)
-def doc_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.packing import pack_documents
-
-    return pack_documents(load(spark, sf_dir, "documents"))
-
-
-# ---------------------------------------------------------------------------
 # Incremental and graph dedup, recall diagnostics, hard negatives
 # ---------------------------------------------------------------------------
 
@@ -2193,62 +2088,6 @@ def dedup_pagerank_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     cand = lsh_candidates(minhash_signatures(d), max_bucket=8)
     return _integer_pagerank(cand)
-
-
-@register(
-    "doc_chunk_pack",
-    oracle=f"""
-    WITH d AS (
-      SELECT doc_id, {_WS_TOKS} AS toks FROM documents),
-    c AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(0, greatest(len(toks) - 17, 0), 48))
-               AS start
-      FROM d WHERE len(toks) > 0),
-    chunks AS (
-      SELECT doc_id || '|' || (start // 48) AS chunk_key,
-             len(toks[start + 1 : start + 64])::INT AS n_tokens
-      FROM c),
-    b AS (
-      SELECT chunk_key, n_tokens,
-             md5(chunk_key) AS sort_key,
-             (((strpos('0123456789abcdef', substr(md5(chunk_key), 1, 1)) - 1) * 16
-               + strpos('0123456789abcdef', substr(md5(chunk_key), 2, 1)) - 1) % 32)::INT
-               AS bucket
-      FROM chunks),
-    cum AS (
-      SELECT chunk_key, bucket, n_tokens,
-             sum(n_tokens) OVER (PARTITION BY bucket ORDER BY sort_key, chunk_key
-                                 ROWS UNBOUNDED PRECEDING) AS cum
-      FROM b)
-    SELECT chunk_key, bucket, n_tokens,
-           ((cum - n_tokens) // 256)::BIGINT AS pack_id
-    FROM cum
-    """,
-    doc="The composed context-window construction pipeline: documents "
-    "→ 64/16-overlap chunks (chunk_documents) → 256-token greedy packs "
-    "(pack_documents keyed on the composite doc|chunk id). The two "
-    "operators compose as plain DataFrames — the chunk explode stays "
-    "narrow, the pack adds its single bucket-key exchange, nothing "
-    "else; the end-to-end plan is scan → explode → exchange → "
-    "running-sum, which is the minimum any distributed chunk-then-pack "
-    "can do.",
-    tags=("datapipe", "packing", "pipeline"),
-)
-def doc_chunk_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_realtime_flink_spark.operators.packing import (
-        chunk_documents,
-        pack_documents,
-    )
-
-    chunks = chunk_documents(load(spark, sf_dir, "documents")).select(
-        F.concat_ws("|", "doc_id", "chunk_id").alias("chunk_key"),
-        "chunk_text",
-    )
-    return pack_documents(
-        chunks, budget_tokens=256, n_buckets=32,
-        id_col="chunk_key", text_col="chunk_text",
-    )
 
 
 @register(

@@ -10,8 +10,7 @@ Scale notes (100 TB / 1000-executor design):
   cluster scale AQE's ``advisoryPartitionSizeInBytes`` governs the
   post-shuffle layout, so the static number matters little.
 - Arrow enabled: every pandas-UDF boundary (the numpy similarity and
-  semantic-dedup kernels, the ST1 visitor-repair state function, the
-  ordered manifest reader) and
+  semantic-dedup kernels, the ST1 visitor-repair state function) and
   ``toPandas`` (the oracle compare) move columnar batches, not pickled
   rows.
 - Session timezone pinned to UTC so event-time windows, date_format

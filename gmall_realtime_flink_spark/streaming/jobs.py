@@ -20,13 +20,11 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import time
 import uuid
 from collections.abc import Iterable
 
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -303,39 +301,6 @@ def stage_table_with_sentinel(sf_dir: str, table: str, key: int = -1) -> str:
     return tmp
 
 
-def fill_sorted_split_dir(
-    out: str, sf_dir: str, table: str, n_files: int, key: int = -1
-) -> None:
-    """fill_table_dir's ORDERED form: the table is written into `out` as
-    `n_files` event-time-sorted parquet slices (strictly increasing
-    mtimes, so the file source consumes them in time order) plus the
-    far-future sentinel last. This is the monotone-event-time contract
-    a per-key-ordered Kafka topic provides: a stream-stream join's
-    watermark advances every batch, so its state evicts continuously
-    instead of ballooning toward the whole corpus.
-
-    Slice/sentinel ordering is enforced with EXPLICIT os.utime stamps
-    (strictly increasing whole seconds, all in the past), not write
-    timing: on filesystems with coarse (1 s) mtime granularity,
-    back-to-back writes can tie and replay out of order, silently
-    voiding the monotone-event-time contract."""
-    ts_col = FACT_SENTINEL_COLS[table][1]
-    t = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
-    t = t.take(pc.sort_indices(t, sort_keys=[(ts_col, "ascending")]))
-    per = (t.num_rows + n_files - 1) // n_files
-    base = time.time() - n_files - 10  # past, 1 s apart, sentinel last
-    for k in range(n_files):
-        sl = t.slice(k * per, per)
-        if sl.num_rows == 0:
-            break
-        p = os.path.join(out, f"part-{k:03d}.parquet")
-        pq.write_table(sl, p)
-        os.utime(p, (base + k,) * 2)
-    sp = os.path.join(out, "part-999-sentinel.parquet")
-    _write_fact_sentinel(sf_dir, table, key, sp)
-    os.utime(sp, (base + n_files + 1,) * 2)
-
-
 def fact_streams(
     spark: SparkSession, sf_dir: str, o_dir: str, l_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -581,20 +546,11 @@ def streaming_product_stats_enriched(
     return out.filter(F.col("stt") < SENTINEL_CUTOFF)
 
 
-def streaming_visitor_stats(
-    spark: SparkSession, sf_dir: str, distinct_mode: str = "exact"
-) -> DataFrame:
-    """A1/A2/A3 under Structured Streaming: keyed 10 s tumble with a
-    switchable distinct-count strategy (operators/windows.
-    distinct_count_col): "exact" (collect_set — the oracle-gated
-    default; exact countDistinct is unsupported on streaming aggs,
-    SURVEY §7.3) or "approx" (HLL++ sketch, constant state per window
-    key — the hot-key 100 TB posture; accuracy pinned by
-    test_streaming_distinct_modes_agree)."""
-    from gmall_realtime_flink_spark.operators.windows import (
-        distinct_count_col,
-        tumble_agg,
-    )
+def streaming_visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A1/A2/A3 under Structured Streaming: keyed 10 s tumble with an
+    exact streaming-safe distinct count, size(collect_set) — exact
+    countDistinct is unsupported on streaming aggs (SURVEY §7.3)."""
+    from gmall_realtime_flink_spark.operators.windows import tumble_agg
 
     path = events_with_sentinel(spark, sf_dir, gap_ms=0)
     events = stream_events(spark, path)
@@ -605,7 +561,7 @@ def streaming_visitor_stats(
         keys=["event_type"],
         aggs=[
             F.count(F.lit(1)).alias("pv_ct"),
-            distinct_count_col("user_id", distinct_mode).alias("uv_ct"),
+            F.size(F.collect_set("user_id")).alias("uv_ct"),
             F.round(
                 F.sum(F.col("value").cast("decimal(28,4)")), 2
             ).cast("double").alias("dur_sum"),
@@ -617,21 +573,12 @@ def streaming_visitor_stats(
     )
 
 
-def streaming_visitor_stats_sliding(
-    spark: SparkSession, sf_dir: str, distinct_mode: str = "exact"
-) -> DataFrame:
+def streaming_visitor_stats_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping windows under Structured Streaming: window(ts, 30s,
     slide 10s) keyed by event_type — every event contributes to 3
     overlapping windows; state = open windows only, closed by
-    watermark passage exactly as tumble windows. Distinct strategy is
-    flag-switchable like every streaming distinct site (A3):
-    "exact" collect_set (oracle-gated default) or "approx" HLL++
-    (constant state per open window — 3× the open-window count here,
-    the hot-key posture for overlapping windows)."""
-    from gmall_realtime_flink_spark.operators.windows import (
-        distinct_count_col,
-    )
-
+    watermark passage exactly as tumble windows. Distinct count as in
+    every streaming distinct site (A3): size(collect_set)."""
     path = events_with_sentinel(spark, sf_dir, gap_ms=0)
     events = stream_events(spark, path)
     agg = (
@@ -641,7 +588,7 @@ def streaming_visitor_stats_sliding(
         )
         .agg(
             F.count(F.lit(1)).alias("pv_ct"),
-            distinct_count_col("user_id", distinct_mode).alias("uv_ct"),
+            F.size(F.collect_set("user_id")).alias("uv_ct"),
         )
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
@@ -703,39 +650,27 @@ def streaming_view_click_join(
     return out
 
 
-def streaming_stats_sql(
-    spark: SparkSession, sf_dir: str, distinct_mode: str = "exact"
-) -> DataFrame:
+def streaming_stats_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4+A4/A5 under streaming: the Flink-SQL-app shape
     (RT/app/dws/ProvinceStatsSqlApp.java:45-61, KeywordStatsApp.java:56-88)
     — a watermarked stream registered as a temp view, aggregated by a
-    spark.sql TUMBLE with a flag-switchable streaming-safe distinct
-    (A3): "exact" size(collect_set) — COUNT(DISTINCT) is unsupported
-    on streaming aggs — or "approx" approx_count_distinct (HLL++,
-    constant per-window-key state, the hot-key posture). The 2 s
-    watermark is W5's bounded SQL delay. The SQL text is just another
-    front-end: Catalyst compiles it to the same streaming physical
-    plan as the DataFrame form."""
-    if distinct_mode == "exact":
-        uv_expr = "size(collect_set(user_id))"
-    elif distinct_mode == "approx":
-        uv_expr = "approx_count_distinct(user_id, 0.05)"
-    else:
-        raise ValueError(
-            f"distinct mode must be exact|approx, got {distinct_mode!r}"
-        )
+    spark.sql TUMBLE with a streaming-safe distinct (A3),
+    size(collect_set) — COUNT(DISTINCT) is unsupported on streaming
+    aggs. The 2 s watermark is W5's bounded SQL delay. The SQL text is
+    just another front-end: Catalyst compiles it to the same streaming
+    physical plan as the DataFrame form."""
     path = events_with_sentinel(spark, sf_dir, gap_ms=0)
     events = stream_events(spark, path, watermark="2 seconds")
     agg = spark.sql(
-        f"""
+        """
         SELECT date_format(window.start, 'yyyy-MM-dd HH:mm:ss') AS stt,
                date_format(window.end, 'yyyy-MM-dd HH:mm:ss') AS edt,
                event_type,
                count(*) AS pv_ct,
-               {uv_expr} AS uv_ct,
+               size(collect_set(user_id)) AS uv_ct,
                CAST(round(sum(CAST(value AS DECIMAL(28,4))), 2) AS DOUBLE)
                  AS amount
-        FROM {{events_stream}}
+        FROM {events_stream}
         GROUP BY window(ts, '10 seconds'), event_type
         """,
         events_stream=events,

@@ -39,8 +39,8 @@ Execution: like the reference's independently deployed jobs, the
 queries run concurrently in one application. A job's query starts
 once every job producing one of its inputs has finished, at most
 MAX_RUNNING at once and only one of them in its first micro-batch
-(_run_jobs). Every operator is a JVM one — no job of the bulk posture
-starts a Python worker.
+(_run_jobs). Every operator is a JVM one — no job starts a Python
+worker.
 
 Every layer is oracle-checked: the pytest topology test asserts each
 DWD/DWM layer row-equals its batch operator and each DWS output
@@ -218,8 +218,8 @@ class _BatchLatencyListener:
 
 
 # ----------------------------------------------------------------------
-# One run of the chain: where its layers live, the schema each
-# producer wrote, and its replay posture.
+# One run of the chain: where its layers live and the schema each
+# producer wrote.
 # ----------------------------------------------------------------------
 
 # The event time a layer's consumers watermark on (the fact layers'
@@ -232,32 +232,14 @@ _EVENT_TIME = {
 
 
 class _Run:
-    """Per-run state of build_warehouse_layers.
+    """Per-run state of build_warehouse_layers. One replay contract:
+    each ODS fact table is one file plus its sentinel, and every
+    consumer takes whatever its input holds — fewest, largest
+    micro-batches, lowest total cost. Event-time disorder is left to
+    the operators' watermarks and state."""
 
-    Two replay postures:
-    - bulk (`ordered_slices` 0, the default): each ODS fact table is one
-      file plus its sentinel, and every consumer takes whatever its
-      input holds — fewest, largest micro-batches, lowest total cost.
-    - ordered manifest replay (`ordered_slices` N): the ODS fact tables
-      are staged as N event-time-sorted slices, read one slice per
-      trigger (the monotone-ingest contract of a per-key-ordered Kafka
-      topic), so the join layers' watermarks advance every batch and
-      their state evicts continuously. Layer writers keep
-      `defaultParallelism` tasks and publish a per-batch ordered
-      manifest after each write; consumers trigger on manifests, one
-      whole upstream batch at a time in batch order, so a 0 s
-      watermark never strands part of a batch behind a trigger
-      boundary. The DWD CDC envelope is rebalanced to the same task
-      count: a one-slice batch scans as only a handful of splits, and
-      its from_json parse is the batch's costly phase.
-    """
-
-    def __init__(
-        self, spark: SparkSession, sf_dir: str, base: str, ordered_slices: int
-    ) -> None:
+    def __init__(self, spark: SparkSession, sf_dir: str, base: str) -> None:
         self.spark, self.sf_dir, self.base = spark, sf_dir, base
-        self.ordered = ordered_slices
-        self.tasks = spark.sparkContext.defaultParallelism
         self.schemas = {
             f"ods_{topic}": jobs.warehouse_stream_schema(spark, sf_dir, table)
             for topic, table in (
@@ -265,10 +247,6 @@ class _Run:
                 ("order_detail", "lineitem"),
             )
         }
-        # last manifest mtime per layer: the consumer's file source
-        # orders by modification time, so adjacent batches must never
-        # tie (sub-ms batches happen on empty flushes)
-        self.manifest_ns: dict[str, int] = {}
         self.stopping = threading.Event()  # set once _run_jobs winds down
         self.ods = self._stage_ods()
 
@@ -301,12 +279,7 @@ class _Run:
             os.makedirs(d)
         jobs.fill_events_dir(ods["log"], self.sf_dir, gap_ms=JUMP_GAP_MS)
         for topic, table in (("order_info", "orders"), ("order_detail", "lineitem")):
-            if self.ordered:
-                jobs.fill_sorted_split_dir(
-                    ods[topic], self.sf_dir, table, self.ordered
-                )
-            else:
-                jobs.fill_table_dir(ods[topic], self.sf_dir, table)
+            jobs.fill_table_dir(ods[topic], self.sf_dir, table)
         with open(record + ".tmp", "w") as f:
             json.dump(ods, f)
         os.replace(record + ".tmp", record)
@@ -328,96 +301,33 @@ class _Run:
                 ),
             )
         if name.startswith("ods_"):
-            reader = spark.readStream.schema(self.schemas[name])
-            if self.ordered:
-                reader = reader.option("maxFilesPerTrigger", 1)
-            return reader.parquet(self.ods[name[len("ods_"):]])
-        if self.ordered:
-            df = self._manifest_stream(name)
-        else:
-            df = (
-                spark.readStream.schema(
-                    T.StructType(
-                        [
-                            *self.schemas[name].fields,
-                            T.StructField("batch_id", T.LongType()),
-                        ]
-                    )
-                )
-                .parquet(self.dir(name))
-                .drop("batch_id")
+            return spark.readStream.schema(self.schemas[name]).parquet(
+                self.ods[name[len("ods_"):]]
             )
+        df = (
+            spark.readStream.schema(
+                T.StructType(
+                    [
+                        *self.schemas[name].fields,
+                        T.StructField("batch_id", T.LongType()),
+                    ]
+                )
+            )
+            .parquet(self.dir(name))
+            .drop("batch_id")
+        )
         ts = _EVENT_TIME.get(name)
         if ts is not None and ts != "ts":
             df = df.withColumn("ts", F.to_timestamp(ts))
         return df if ts is None else df.withWatermark("ts", "0 seconds")
-
-    def _manifest_stream(self, layer: str) -> DataFrame:
-        """Consume a layer through its ordered per-batch manifests: the
-        streamed 'topic' is the tiny _manifests directory (one JSON
-        file per upstream batch, mtime-ordered), taken ONE PER TRIGGER.
-        The manifest rows expand to the batch's parquet files inside
-        the trigger via mapInArrow (pyarrow reads the files
-        executor-side; repartition on path spreads them across tasks,
-        restoring the read parallelism the parallel writer produced).
-        The Arrow batches are cast to the layer's exact Spark schema so
-        types round-trip bit-identically."""
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        schema = self.schemas[layer]
-        target = to_arrow_schema(schema)
-
-        def expand(batches):
-            import pyarrow.parquet as pq
-
-            for rb in batches:
-                for row in rb.to_pylist():
-                    tbl = pq.read_table(row["path"]).select(target.names)
-                    yield from tbl.cast(target).to_batches()
-
-        return (
-            self.spark.readStream.schema("batch_id LONG, path STRING")
-            .option("maxFilesPerTrigger", 1)
-            .json(os.path.join(self.dir(layer), "_manifests"))
-            .repartition(self.tasks, "path")
-            .mapInArrow(expand, schema=schema)
-        )
 
     def write(self, layer: str, df: DataFrame, batch_id: int) -> None:
         """Effectively-once layer write through the idempotent batch
         writer: foreachBatch is at-least-once (a crash between the
         parquet write and the offset commit replays the micro-batch),
         so a replayed batch overwrites its OWN `batch_id=N` dir instead
-        of appending duplicates. Under the ordered posture the batch's
-        ordered manifest is published AFTER the data commit, so a
-        consumer triggering on it never sees a half-written batch."""
-        if self.ordered:
-            df = df.repartition(self.tasks)
+        of appending duplicates."""
         idempotent_batch_writer(self.dir(layer))(df, batch_id)
-        if self.ordered:
-            self.publish_manifest(layer, batch_id)
-
-    def publish_manifest(self, layer: str, batch_id: int) -> None:
-        """Atomically publish one batch's manifest: a JSON-lines file
-        naming every parquet file of the batch dir. A crash-replay
-        rewrites it under the same name; a consumer that already took
-        it ignores the rewrite by path. Its mtime is strictly greater
-        than this layer's previous manifest, so the consumer's
-        mtime-ordered listing replays batches in order even when two
-        batches finish within one clock tick."""
-        part = os.path.join(self.dir(layer), f"batch_id={batch_id}")
-        mdir = os.path.join(self.dir(layer), "_manifests")
-        os.makedirs(mdir, exist_ok=True)
-        path = os.path.join(mdir, f"batch-{batch_id}.json")
-        with open(path + ".tmp", "w") as f:
-            for name in sorted(os.listdir(part)):
-                if name.endswith(".parquet"):
-                    entry = {"batch_id": batch_id, "path": os.path.join(part, name)}
-                    f.write(json.dumps(entry) + "\n")
-        t = max(time.time_ns(), self.manifest_ns.get(layer, 0) + 2_000_000)
-        self.manifest_ns[layer] = t
-        os.utime(path + ".tmp", ns=(t, t))
-        os.replace(path + ".tmp", path)
 
     def seed(self, layer: str) -> None:
         """A layer that saw ZERO batches (empty upstream) must still be
@@ -467,7 +377,7 @@ def _cdc_envelope(run: _Run, order_info: DataFrame, order_detail: DataFrame):
     """DWD BaseDBApp: the CDC stream arrives as ONE envelope topic
     ({table, data-as-JSON}, exactly Maxwell's ods_base_db_m shape,
     BaseDBApp.java:63)."""
-    cdc = order_info.select(
+    return order_info.select(
         F.lit("order_info").alias("table"), F.to_json(F.struct("*")).alias("data")
     ).unionByName(
         order_detail.select(
@@ -475,7 +385,6 @@ def _cdc_envelope(run: _Run, order_info: DataFrame, order_detail: DataFrame):
             F.to_json(F.struct("*")).alias("data"),
         )
     )
-    return cdc.repartition(run.tasks) if run.ordered else cdc
 
 
 def _route_cdc(run: _Run, batch: DataFrame, layer: str) -> DataFrame:
@@ -493,8 +402,7 @@ def _route_cdc(run: _Run, batch: DataFrame, layer: str) -> DataFrame:
 def _seal(layer: str, row: dict, run: _Run) -> None:
     """A job whose operator swallows its sentinel gets an explicit
     far-future row of its own under the reserved batch_id=-1, written
-    after every real batch (in the ordered posture, its manifest replays
-    last — exactly its watermark-driver role). UserJumpApp: the sentinel
+    after every real batch. UserJumpApp: the sentinel
     user's last event is never followed, so no watermark ever passes its
     timeout. UniqueVisitApp: the sentinel's day window never closes. A
     one-row pyarrow file: a Spark job here would cost the chain ~2 s."""
@@ -509,8 +417,6 @@ def _seal(layer: str, row: dict, run: _Run) -> None:
     os.makedirs(part, exist_ok=True)
     schema = to_arrow_schema(run.schemas[layer])
     pq.write_table(pa.Table.from_pylist([row], schema=schema), path)
-    if run.ordered:
-        run.publish_manifest(layer, -1)
 
 
 _SENTINEL_TS = "2030-01-01 00:00:00"
@@ -771,20 +677,16 @@ def build_warehouse_layers(
     spark: SparkSession,
     sf_dir: str,
     base: str | None = None,
-    ordered_slices: int = 0,
 ) -> dict[str, str]:
     """Run the full 10-job chained topology; returns layer name -> dir.
 
-    `ordered_slices` selects the replay posture: 0 (default) is bulk,
-    N > 0 is ordered manifest replay over N ODS slices (_Run).
-
     The jobs run as a DAG of concurrent queries (_run_jobs): each starts
     once the producers of its inputs have finished, up to MAX_RUNNING at
-    once with one in its first micro-batch, in both postures. Every job has its own checkpoint directory,
-    so any job can restart from its offsets exactly as the independent
-    reference jobs do. Re-invoking with the SAME `base` is a
-    full-warehouse restart: every job resumes from its committed
-    offsets, finds no new input, and writes nothing — restart
+    once with one in its first micro-batch. Every job has its own
+    checkpoint directory, so any job can restart from its offsets
+    exactly as the independent reference jobs do. Re-invoking with the
+    SAME `base` is a full-warehouse restart: every job resumes from its
+    committed offsets, finds no new input, and writes nothing — restart
     idempotency of the whole DAG, pinned by
     tests/test_topology.py::test_topology_rerun_is_idempotent. A
     CRASHED run is also safe to restart: every layer sink overwrites
@@ -797,14 +699,12 @@ def build_warehouse_layers(
     (e.g. the crash-injection test) can't leave it registered on the
     shared SparkSession.
     """
-    if ordered_slices < 0:
-        raise ValueError(f"ordered_slices must be >= 0, got {ordered_slices}")
     if base is None:
         base = tempfile.mkdtemp(prefix="warehouse_")
     latency = _BatchLatencyListener()
     latency.attach(spark)
     try:
-        run = _Run(spark, sf_dir, base, ordered_slices)
+        run = _Run(spark, sf_dir, base)
         _run_jobs(run, latency.query_threads)
     finally:
         latency.detach_into(spark, LAYER_BATCH_MS)

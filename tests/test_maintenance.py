@@ -1,10 +1,8 @@
 """Storage layout, verified at the filesystem level: schema evolution,
-backfill overwrites and the bucketed-table cache of warehouse tables,
-and the permutation-preserving training-shard write."""
+backfill overwrites and the bucketed-table cache of warehouse tables."""
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 from urllib.parse import urlparse
@@ -70,38 +68,6 @@ def test_dynamic_partition_overwrite_backfill(spark, sf_dir, tmp_path):
     after = spark.read.parquet(dst)
     assert after.filter(F.col("dt") == d1).count() == redo_ct
     assert after.filter(F.col("dt") == d2).count() == before_d2
-
-
-def test_write_training_shards_roundtrips_permutation(spark, sf_dir, tmp_path):
-    """The sharded corpus read back per shard, in file row order, must
-    reproduce the corpus_shuffle permutation exactly — shard
-    assignment, within-shard order, and full coverage."""
-    from gmall_realtime_flink_spark.catalog import load
-    from gmall_realtime_flink_spark.operators.packing import (
-        corpus_shuffle,
-        write_training_shards,
-    )
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, out, n_shards=4)
-
-    want = {
-        (r["shard"], r["pos"]): r["doc_id"]
-        for r in corpus_shuffle(docs, n_shards=4).collect()
-    }
-    import glob
-
-    seen = {}
-    for shard_dir in sorted(glob.glob(out + "/shard=*")):
-        shard = int(shard_dir.rsplit("=", 1)[1])
-        # file row order IS the read order within one shard
-        rows = spark.read.parquet(shard_dir).select("pos", "doc_id").collect()
-        for r in rows:
-            seen[(shard, r["pos"])] = r["doc_id"]
-        pos_list = [r["pos"] for r in rows]
-        assert sorted(pos_list) == list(range(1, len(pos_list) + 1))
-    assert seen == want
 
 
 @pytest.fixture

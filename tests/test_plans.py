@@ -234,32 +234,6 @@ def test_decontaminate_probe_is_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_chunk_documents_is_narrow(spark, sf_dir):
-    """doc_chunk is a pure per-row explode: zero exchanges, zero
-    window operators — at 100 TB the chunking cost is the scan plus
-    the output write, nothing else."""
-    plan = plan_of(spark, sf_dir, "doc_chunk")
-    assert "Exchange" not in plan
-    assert "Window" not in plan
-    assert "Generate explode" in plan
-
-
-def test_corpus_shuffle_single_exchange_no_global_sort(spark, sf_dir):
-    """corpus_shuffle is one hash exchange on the shard key and a
-    per-shard sort — never a global (rangepartitioned) ORDER BY."""
-    plan = plan_of(spark, sf_dir, "corpus_shuffle")
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "rangepartitioning" not in plan
-
-
-def test_pack_documents_single_exchange(spark, sf_dir):
-    """doc_pack: one hash exchange on the bucket key for the
-    partitioned running sum; token counting stays on the scan side."""
-    plan = plan_of(spark, sf_dir, "doc_pack")
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "rangepartitioning" not in plan
-
-
 def test_incremental_dedup_anti_join_no_cartesian(spark, sf_dir):
     """dedup_incremental plans a LeftAnti hash join on the fingerprint
     (broadcast or shuffled both acceptable) — never a nested-loop

@@ -282,173 +282,6 @@ def test_knn_graph_matches_bruteforce_within_bucket(spark, sf_dir):
         assert got[ids[a]] == ids[best], f"vec {ids[a]}"
 
 
-def test_chunk_documents_covers_all_tokens(spark, sf_dir):
-    """Every source token position appears in >= 1 chunk; consecutive
-    chunks of one doc overlap by exactly `overlap` tokens while both
-    are full; chunk_ids are dense from 0."""
-    from gmall_realtime_flink_spark.operators.packing import chunk_documents
-
-    from gmall_realtime_flink_spark.catalog import load
-
-    docs = load(spark, sf_dir, "documents")
-    chunks = chunk_documents(docs, chunk_tokens=64, overlap=16).toPandas()
-    n_toks = {
-        r["doc_id"]: r["n"]
-        for r in docs.select(
-            "doc_id",
-            F.size(
-                F.filter(
-                    F.split(F.trim("text"), r"\s+"),
-                    lambda x: x != F.lit(""),
-                )
-            ).alias("n"),
-        ).collect()
-    }
-    stride = 64 - 16
-    for doc_id, grp in chunks.groupby("doc_id"):
-        grp = grp.sort_values("chunk_id")
-        assert list(grp["chunk_id"]) == list(range(len(grp)))
-        # coverage: last chunk must reach the final token
-        last_start = int(grp["chunk_id"].iloc[-1]) * stride
-        assert last_start + int(grp["n_tokens"].iloc[-1]) == n_toks[doc_id]
-        # no fully-contained tail chunk: the last chunk must extend
-        # past the previous chunk's end
-        if len(grp) > 1:
-            prev_end = int(grp["chunk_id"].iloc[-2]) * stride + 64
-            assert last_start + int(grp["n_tokens"].iloc[-1]) > prev_end
-
-
-def test_corpus_shuffle_is_partition_independent_permutation(spark, sf_dir):
-    from gmall_realtime_flink_spark.catalog import load
-    from gmall_realtime_flink_spark.operators.packing import corpus_shuffle
-
-    docs = load(spark, sf_dir, "documents")
-    a = corpus_shuffle(docs).toPandas()
-    b = corpus_shuffle(docs.repartition(7)).toPandas()
-    # permutation: every doc exactly once, positions dense per shard
-    assert sorted(a["doc_id"]) == sorted(
-        r[0] for r in docs.select("doc_id").collect()
-    )
-    for _, grp in a.groupby("shard"):
-        assert sorted(grp["pos"]) == list(range(1, len(grp) + 1))
-    # repartition-invariant (content-stable ordering, no rand())
-    key = ["doc_id", "shard", "pos"]
-    assert a[key].sort_values("doc_id").values.tolist() == (
-        b[key].sort_values("doc_id").values.tolist()
-    )
-
-
-def test_pack_documents_respects_budget(spark, sf_dir):
-    """No pack exceeds the token budget unless it holds a single
-    over-budget document; pack_ids are dense within a bucket."""
-    from gmall_realtime_flink_spark.catalog import load
-    from gmall_realtime_flink_spark.operators.packing import pack_documents
-
-    budget = 256
-    packed = pack_documents(
-        load(spark, sf_dir, "documents"), budget_tokens=budget
-    ).toPandas()
-    for (_, pack_id), grp in packed.groupby(["bucket", "pack_id"]):
-        total = int(grp["n_tokens"].sum())
-        # cumulative cut: a pack may be pushed over the budget only by
-        # the boundary-crossing doc — remove the largest member and
-        # the rest always fit
-        if len(grp) > 1:
-            assert total - int(grp["n_tokens"].max()) < budget
-    for _, grp in packed.groupby("bucket"):
-        # ids start at 0 and may skip only when a single doc spans
-        # multiple budgets (cumulative-cut semantics, see docstring)
-        ids = sorted(grp["pack_id"].unique())
-        assert ids[0] == 0
-        by_pack_max = grp.groupby("pack_id")["n_tokens"].sum()
-        for prev, nxt in zip(ids, ids[1:]):
-            if nxt - prev > 1:
-                assert int(by_pack_max[prev]) > (nxt - prev - 1) * budget
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    docs=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=10**6),
-            st.lists(
-                st.text(alphabet="abcxyz", min_size=1, max_size=5),
-                min_size=0,
-                max_size=200,
-            ),
-        ),
-        min_size=1,
-        max_size=12,
-        unique_by=lambda t: t[0],
-    )
-)
-def test_chunk_documents_matches_python_model(spark, docs):
-    """chunk_documents against a transparent pure-Python model on
-    ARBITRARY token lists (corpus data can't exercise the off-by-one
-    seams: n == chunk, n == chunk+1, n <= overlap, empty text)."""
-    from gmall_realtime_flink_spark.operators.packing import chunk_documents
-
-    chunk, overlap, stride = 64, 16, 48
-    df = spark.createDataFrame(
-        [(i, " ".join(toks)) for i, toks in docs], ["doc_id", "text"]
-    )
-    got = {
-        (r["doc_id"], r["chunk_id"]): (r["chunk_text"], r["n_tokens"])
-        for r in chunk_documents(
-            df, chunk_tokens=chunk, overlap=overlap
-        ).collect()
-    }
-    exp = {}
-    for i, toks in docs:
-        n = len(toks)
-        if n == 0:
-            continue
-        starts = list(range(0, max(n - overlap - 1, 0) + 1, stride))
-        for s in starts:
-            piece = toks[s : s + chunk]
-            exp[(i, s // stride)] = (" ".join(piece), len(piece))
-    assert got == exp
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    toks=st.lists(
-        st.integers(min_value=0, max_value=600), min_size=1, max_size=40
-    )
-)
-def test_pack_documents_matches_python_model(spark, toks):
-    """pack_documents against the cumulative-cut model on arbitrary
-    token counts (including zero-token and over-budget docs)."""
-    import hashlib
-
-    from gmall_realtime_flink_spark.operators.packing import pack_documents
-
-    budget, buckets = 256, 4
-    rows = [(i, " ".join(["w"] * n)) for i, n in enumerate(toks)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {
-        r["doc_id"]: (r["bucket"], r["n_tokens"], r["pack_id"])
-        for r in pack_documents(
-            df, budget_tokens=budget, n_buckets=buckets
-        ).collect()
-    }
-
-    def md5(s):
-        return hashlib.md5(str(s).encode()).hexdigest()
-
-    exp = {}
-    per_bucket = {}
-    for i, n in enumerate(toks):
-        b = int(md5(i)[:2], 16) % buckets
-        per_bucket.setdefault(b, []).append((md5(i), i, n))
-    for b, items in per_bucket.items():
-        cum = 0
-        for _, i, n in sorted(items):
-            cum += n
-            exp[i] = (b, n, (cum - n) // budget)
-    assert got == exp
-
-
 def test_ivf_recall_monotone_in_nprobe(spark, sf_dir):
     """Each wider probe set is a superset of the narrower one, so
     recall@k must be non-decreasing in nprobe — the property that makes

@@ -20,6 +20,18 @@ def test_every_entry_is_well_formed():
         assert spec.oracle, name
 
 
+def test_tool_name_lists_are_registered():
+    """The sf100 tier and the PLANS.md generator name registry entries
+    by string; a retired entry left in either list fails only when the
+    tool is next run, at scale. Every name must be registered."""
+    from tools.gen_plans import CORE, EXTRA
+    from tools.verify_sf100 import RUN_ORDER
+
+    for tool, names in (("verify_sf100", RUN_ORDER), ("gen_plans", CORE + EXTRA)):
+        missing = [n for n in names if n not in REGISTRY]
+        assert not missing, (tool, missing)
+
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -30,8 +42,7 @@ PARTITION_INVARIANCE_SAMPLE = [
     "dedup_minhash_lsh",      # banded self-join
     "similarity_topk",        # top-k rank
     "dedup_cluster",          # iterative propagation
-    "corpus_shuffle",         # partitioned rank
-    "doc_pack",               # partitioned running sum
+    "top_products_per_month", # partitioned row_number
     "segment_running_total",  # partitioned running sum over a decimal
     "daily_gmv_moving_7d",    # RANGE-frame window
     "user_sessions_native",   # session windows + ordinal

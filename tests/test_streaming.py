@@ -448,6 +448,48 @@ def test_jump_parity_multibatch(spark, sf_dir, split_events_dir):
     assert rows(got, cols) == rows(want, cols)
 
 
+def _split_fact_dir(sf_dir: str, table: str, n_files: int) -> str:
+    """`table` sorted by its event time and split into `n_files`
+    parquet files plus the key -1 far-future sentinel, with explicit
+    increasing mtimes so the file source takes them in time order."""
+    ts_col = jobs.FACT_SENTINEL_COLS[table][1]
+    t = pq.read_table(os.path.join(sf_dir, f"{table}.parquet")).sort_by(ts_col)
+    out = tempfile.mkdtemp(prefix=f"{table}_split_")
+    per = -(-t.num_rows // n_files)
+    paths = []
+    for k in range(n_files):
+        paths.append(os.path.join(out, f"part-{k:03d}.parquet"))
+        pq.write_table(t.slice(k * per, per), paths[-1])
+    paths.append(os.path.join(out, "part-999-sentinel.parquet"))
+    jobs._write_fact_sentinel(sf_dir, table, -1, paths[-1])
+    for i, p in enumerate(paths):
+        os.utime(p, (1_700_000_000 + i * 10,) * 2)
+    return out
+
+
+def test_order_wide_parity_multibatch(spark, sf_dir):
+    """J1 across triggers: orders and lineitem each arrive as 4
+    event-time-ordered files, one per trigger, so the interval join
+    buffers rows in state and matches them against later batches while
+    the watermarks evict the rest. The result equals the batch
+    `order_wide` entry."""
+    from gmall_realtime_flink_spark.plans.registry import REGISTRY
+
+    dirs = [_split_fact_dir(sf_dir, t, 4) for t in ("orders", "lineitem")]
+    orders, lineitem = (
+        spark.readStream.schema(jobs.warehouse_stream_schema(spark, sf_dir, t))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(d)
+        for t, d in zip(("orders", "lineitem"), dirs)
+    )
+    got = jobs.run_bounded(
+        jobs.order_wide(orders, lineitem), spark, inputs=dirs
+    ).filter(F.col("o_orderkey") >= 0)
+    want = REGISTRY["order_wide"].builder(spark, sf_dir)
+    assert want.count() > 0
+    assert rows(got, want.columns) == rows(want, want.columns)
+
+
 def test_basedb_streaming_dag_route_sinks_agg(spark, sf_dir, split_events_dir):
     """The full BaseDBApp topology (RT/app/dwd/BaseDBApp.java:76-113)
     run as ONE streaming DAG, multi-batch: CDC stream -> ETL filter ->
@@ -768,62 +810,6 @@ def test_stateful_checkpoint_recovery_across_restarts(
         .collect()
     )
     assert got == want
-
-
-@pytest.mark.parametrize(
-    "job_name, key",
-    [
-        ("streaming_visitor_stats", ("stt", "event_type")),
-        ("streaming_visitor_stats_sliding", ("stt", "event_type")),
-        ("streaming_stats_sql", ("stt", "event_type")),
-    ],
-)
-def test_streaming_distinct_modes_agree(spark, sf_dir, job_name, key):
-    """The switchable A3 distinct strategy, on EVERY streaming distinct
-    site (tumble, hopping, SQL front-end): approx mode (HLL++,
-    constant per-window-key state — the hot-key 100 TB posture) must
-    stay within the documented error of the exact collect_set default
-    on the same stream. rsd=0.05 ⇒ per-group relative error well under
-    15% at these cardinalities; most small groups are exact."""
-    job = getattr(jobs, job_name)
-    exact = {
-        tuple(r[k] for k in key): r["uv_ct"]
-        for r in job(spark, sf_dir).collect()
-    }
-    approx = {
-        tuple(r[k] for k in key): r["uv_ct"]
-        for r in job(spark, sf_dir, distinct_mode="approx").collect()
-    }
-    assert exact.keys() == approx.keys()
-    assert exact, "no windows produced"
-    for k, ev in exact.items():
-        av = approx[k]
-        assert abs(av - ev) <= max(2, 0.15 * ev), (k, ev, av)
-
-
-def test_sorted_split_mtimes_strictly_increase(sf_dir, tmp_path):
-    """The ordered-ingestion contract is the mtime order of the staged
-    slices (FileStreamSource replays oldest-first); ADVICE r9: a
-    coarse-mtime filesystem can tie back-to-back writes, so the stamps
-    are now EXPLICIT os.utime values — strictly increasing, sentinel
-    strictly last, regardless of write speed or fs granularity."""
-    import glob
-    import os
-
-    from gmall_realtime_flink_spark.streaming.jobs import (
-        fill_sorted_split_dir,
-    )
-
-    out = str(tmp_path)
-    fill_sorted_split_dir(out, sf_dir, "orders", 8)
-    slices = sorted(glob.glob(os.path.join(out, "part-[0-9][0-9][0-9].parquet")))
-    slices = [p for p in slices if not p.endswith("sentinel.parquet")]
-    sentinel = os.path.join(out, "part-999-sentinel.parquet")
-    assert os.path.exists(sentinel)
-    assert len(slices) >= 2
-    mtimes = [os.path.getmtime(p) for p in slices]
-    assert all(b - a >= 1.0 for a, b in zip(mtimes, mtimes[1:])), mtimes
-    assert os.path.getmtime(sentinel) >= mtimes[-1] + 1.0
 
 
 def test_state_bytes_per_key_regression_gate(spark, tmp_path):

@@ -321,8 +321,8 @@ def test_layer_batch_latency_percentiles_captured(spark, sf_dir, layers):
     distribution (p50/p95/max ms) via the StreamingQueryListener —
     wall seconds say what a layer costs, batch percentiles say what a
     consumer waits, and the 10 s-tumble SLA claim needs the latter.
-    No job's stateful operators drop a row behind their watermark: in
-    the bulk posture every input arrives whole or in event-time order.
+    No job's stateful operators drop a row behind their watermark:
+    every input arrives whole or in event-time order.
     Each of the 8 stateful jobs reports the time its state stores took
     to commit; the 2 stateless DWD jobs have no store and report 0."""
     stats = tp.LAYER_BATCH_MS
@@ -347,59 +347,6 @@ def test_layer_batch_latency_percentiles_captured(spark, sf_dir, layers):
             assert s["commit_ms"] == 0, (job, s)
         else:
             assert s["commit_ms"] > 0, (job, s)
-
-
-def test_topology_ordered_manifest_mode_matches_batch(spark, sf_dir, tmp_path):
-    """The ordered-manifest contract (VERDICT r12 item 3): writers keep
-    full task parallelism (multi-file batch partitions) and publish
-    per-batch ordered manifests; consumers trigger one whole batch at
-    a time in batch order. The DWS outputs must equal the batch
-    registry forms bit-for-bit, and no job may drop a row behind its
-    watermark — the silent loss an unordered replay of multi-file
-    batches would cause. The jobs run producer-ordered, as in bulk."""
-    from gmall_realtime_flink_spark.streaming.jobs import SENTINEL_CUTOFF
-
-    base = tmp_path / "wh"
-    base.mkdir()
-    log = _QueryLog(spark)
-    try:
-        layers = tp.build_warehouse_layers(
-            spark, sf_dir, base=str(base), ordered_slices=4
-        )
-    finally:
-        log.close()
-    _assert_producer_ordered(log)
-    for job, stats in tp.LAYER_BATCH_MS.items():
-        assert stats["dropped_by_watermark"] == 0, (job, stats)
-
-    # every layer carries manifests, and at least one batch partition
-    # really is multi-file (the parallelism the manifest unlocks)
-    multi = 0
-    for d in layers.values():
-        assert os.path.isdir(os.path.join(d, "_manifests")), d
-        for part in os.listdir(d):
-            if part.startswith("batch_id="):
-                n = len([
-                    f for f in os.listdir(os.path.join(d, part))
-                    if f.endswith(".parquet")
-                ])
-                multi = max(multi, n)
-    assert multi > 1, "no multi-file batch partition — knob inert?"
-
-    for layer, batch_name in [
-        ("dws_visitor_stats", "visitor_stats_union"),
-        ("dws_product_stats", "product_stats_union"),
-        ("dws_province_stats", "province_stats_sql"),
-        ("dws_keyword_stats", "keyword_stats_sql"),
-    ]:
-        got = (
-            spark.read.parquet(layers[layer])
-            .drop("batch_id")
-            .filter(F.col("stt") < SENTINEL_CUTOFF)
-        )
-        want = REGISTRY[batch_name].builder(spark, sf_dir)
-        cols = want.columns
-        assert _rows(got, cols) == _rows(want, cols), layer
 
 
 def test_bulk_chain_is_producer_ordered_and_stays_in_its_base(
@@ -429,14 +376,13 @@ def test_bulk_chain_is_producer_ordered_and_stays_in_its_base(
 
 
 def test_bulk_chain_plans_have_no_python_node(spark, sf_dir, tmp_path):
-    """In the bulk posture no job's query — its transform and each
-    output layer's route — has a Python-evaluated node, so the chain
-    starts no Python worker."""
+    """No job's query — its transform and each output layer's route —
+    has a Python-evaluated node, so the chain starts no Python worker."""
     python = re.compile(
         r"FlatMapGroupsInPandasWithState|MapInArrow|MapInPandas"
         r"|ArrowEvalPython|BatchEvalPython"
     )
-    run = tp._Run(spark, sf_dir, str(tmp_path), 0)
+    run = tp._Run(spark, sf_dir, str(tmp_path))
     for job in tp.JOBS:
         stream = job.transform(run, *[run.stream(n) for n in job.inputs])
         for layer in job.outputs:

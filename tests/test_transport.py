@@ -37,10 +37,7 @@ def _serve(lines: list[str], sock: socket.socket, done: threading.Event):
 
 
 def test_socket_transport_matches_file_transport(spark, sf_dir):
-    from gmall_realtime_flink_spark.operators.windows import (
-        distinct_count_col,
-        tumble_agg,
-    )
+    from gmall_realtime_flink_spark.operators.windows import tumble_agg
     from gmall_realtime_flink_spark.streaming.jobs import (
         SENTINEL_CUTOFF,
         streaming_visitor_stats,
@@ -89,7 +86,7 @@ def test_socket_transport_matches_file_transport(spark, sf_dir):
         keys=["event_type"],
         aggs=[
             F.count(F.lit(1)).alias("pv_ct"),
-            distinct_count_col("user_id", "exact").alias("uv_ct"),
+            F.size(F.collect_set("user_id")).alias("uv_ct"),
         ],
     ).select("stt", "edt", "event_type", "pv_ct", "uv_ct")
     q = (

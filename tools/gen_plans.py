@@ -50,10 +50,6 @@ EXTRA = [
     "span_dedup",
     "embedding_pq_codes",
     "similarity_topk_filtered",
-    "doc_chunk",
-    "corpus_shuffle",
-    "doc_pack",
-    "doc_chunk_pack",
     "dedup_pagerank",
     "dedup_incremental",
     "order_customer_salted",

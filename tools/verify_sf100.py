@@ -18,8 +18,8 @@ round-5, so sf100 projects ~40B pairs — infeasible in EITHER engine
 and intrinsic to corpus+operator, not the plan) — PLUS the
 production datapipe/layout shapes (DATAPIPE_SF100 below): a
 low-entropy corpus at sf100 exposes output-quadratic band joins that
-sf10 hides, so the dedup / pack / shuffle / quality / quantization
-shapes get the same decade.
+sf10 hides, so the dedup / similarity / quantization shapes get the
+same decade.
 
 Usage: python tools/verify_sf100.py [sf_dir] [json_out] [--resume]
 --resume: reuse ok-entries from an existing json_out (same sf_dir)
@@ -64,22 +64,9 @@ HEADLINE_SF100 = [
 
 # round-9 extension: production datapipe + layout shapes
 DATAPIPE_SF100 = [
-    "dedup_embedding_cosine_numpy",  # designed-linear (auto_bits keeps
-                                 # ~1024 rows/cell -> ~n*512 pair
-                                 # evals), verified via the BLAS
-                                 # production twin against the SAME
-                                 # oracle (VERDICT r9 item 4: the expr
-                                 # fold spent 1815 s here on work the
-                                 # twin does in 18 s; the fold stays
-                                 # cross-engine-verified at sf10).
-                                 # r11: the routed twin's FIRST actual
-                                 # sf100 run (r10 landed the routing
-                                 # unexecuted — VERDICT item 4)
     "label_centroids",
     "embedding_quantize_int8",
     "similarity_topk_bucketed",
-    "doc_pack",
-    "corpus_shuffle",
     "dedup_substring_spans",     # r9 operator: 3 linear shuffles
     "dedup_jaccard_complete_capped",
     "product_stats_bucketed",    # exchange-free layout twin (one-time
@@ -89,8 +76,8 @@ DATAPIPE_SF100 = [
 # actual execution order (see the r11 ordering note above): embedding
 # family first, big unchanged aggregates last
 RUN_ORDER = (
-    DATAPIPE_SF100[:4] + HEADLINE_SF100[:8]
-    + DATAPIPE_SF100[4:] + HEADLINE_SF100[8:]
+    DATAPIPE_SF100[:3] + HEADLINE_SF100[:8]
+    + DATAPIPE_SF100[3:] + HEADLINE_SF100[8:]
 )
 assert sorted(RUN_ORDER) == sorted(HEADLINE_SF100 + DATAPIPE_SF100)
 
@@ -122,9 +109,8 @@ EXCLUDED = {
         "expr-fold oracle surface demoted to sf10 (173 s there, "
         "cross-engine-verified): at sf100 it spends 1815 s computing "
         "what its parity-pinned BLAS twin does in 18 s (r9 measured, "
-        "bit-identical 6dp sum over the same 6.07M pairs) — "
-        "dedup_embedding_cosine_numpy carries this tier against the "
-        "same oracle SQL"
+        "bit-identical 6dp sum over the same 6.07M pairs); that twin "
+        "is retired, so this tier does not run the shape"
     ),
     "dedup_semantic": (
         "the ORACLE itself is infeasible at this decade: the SQL "
